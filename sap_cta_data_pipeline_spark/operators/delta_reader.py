@@ -41,7 +41,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table as t, table_path
 from ..registry import query
-from .sources import _scratch
+from .sources import _scratch, drain_to_memory
 
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 
@@ -1097,10 +1097,7 @@ def _cdf_file_plan(base: str, v_from: int, v_to: int) -> list[tuple]:
     """Per-file CDF emission plan for versions [v_from, v_to): tuples of
     (absolute file path, change_type-or-None, version). METADATA only —
     reads the commit JSONs, never a data file; the driver-side planning
-    half of the partition-based stream reader (round 14: the old
-    SimpleDataSourceStreamReader produced every data ROW driver-side;
-    now the driver plans splits and executors read them — guide §4
-    boundary / §5 driver)."""
+    half of the CDF stream tail."""
     log_dir = os.path.join(base, "_delta_log")
     plan: list[tuple] = []
     for v in range(v_from, v_to):
@@ -1128,109 +1125,56 @@ def _cdf_file_plan(base: str, v_from: int, v_to: int) -> list[tuple]:
     return plan
 
 
-def _make_cdf_stream_datasource():
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
+def _cdf_next_version(base: str, _seen: int) -> int:
+    """The first version not yet committed: the tail's latest offset."""
+    log_dir = os.path.join(base, "_delta_log")
+    vs = [int(m.group(1)) for f in os.listdir(log_dir) if (m := _COMMIT_RE.match(f))]
+    return (max(vs) + 1) if vs else 0
+
+
+def _read_cdf_split(split):
+    """Executor read of one emitted file: cdc files carry their own
+    _change_type; derived inserts/deletes stamp the plan's."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(split.path)
+    n = tbl.num_rows
+    ct = (
+        tbl.column("_change_type")
+        if "_change_type" in tbl.schema.names
+        else pa.array([split.change_type] * n, type=pa.string())
     )
-
-    class _CdfSplit(InputPartition):
-        def __init__(self, path: str, change_type: str | None, version: int):
-            self.path, self.change_type, self.version = path, change_type, version
-
-    class _CdfTailReader(DataSourceStreamReader):
-        """Offsets are {'version': next_unread}: each micro-batch drains
-        the commits that appeared since the last one. partitions() plans
-        ONE split per emitted file from the commit JSONs (metadata);
-        read() runs on EXECUTORS — it loads the file with pyarrow and
-        yields Arrow record batches, so no data row ever transits the
-        driver (round 14; the TaskContext guard pins it). Exactly-once
-        per version because partitions(start, end) is a pure function of
-        the immutable log — replaying any committed range plans the
-        identical splits."""
-
-        def __init__(self, base: str):
-            self._base = base
-
-        def initialOffset(self):
-            return {"version": 0}
-
-        def latestOffset(self):
-            log_dir = os.path.join(self._base, "_delta_log")
-            vs = [
-                int(m.group(1))
-                for f in os.listdir(log_dir)
-                if (m := _COMMIT_RE.match(f))
-            ]
-            return {"version": (max(vs) + 1) if vs else 0}
-
-        def partitions(self, start, end):
-            return [
-                _CdfSplit(path, ct, v)
-                for path, ct, v in _cdf_file_plan(
-                    self._base, start["version"], end["version"]
-                )
-            ]
-
-        def commit(self, end):
-            pass  # offsets derive from the immutable log; nothing to ack
-
-        @staticmethod
-        def _read_partition(partition):
-            # self-contained (pyarrow + stdlib only): executes on Python
-            # workers, where package imports must not be assumed
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(partition.path)
-            n = tbl.num_rows
-            ct = (
-                tbl.column("_change_type")
-                if "_change_type" in tbl.schema.names
-                else pa.array([partition.change_type] * n, type=pa.string())
-            )
-            out = pa.table(
-                {
-                    "n_nationkey": tbl.column("n_nationkey"),
-                    "n_name": tbl.column("n_name"),
-                    "n_regionkey": tbl.column("n_regionkey"),
-                    "_change_type": ct,
-                    "_commit_version": pa.array(
-                        [partition.version] * n, type=pa.int32()
-                    ),
-                }
-            )
-            return iter(out.to_batches())
-
-        def read(self, partition):
-            from pyspark import TaskContext
-
-            if TaskContext.get() is None:
-                raise RuntimeError(
-                    "delta_cdf_tail read() must run on an executor — "
-                    "batch rows must not transit the driver"
-                )
-            return self._read_partition(partition)
-
-    class DeltaCdfTailDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "delta_cdf_tail"
-
-        def schema(self) -> str:
-            return (
-                "n_nationkey int, n_name string, n_regionkey int, "
-                "_change_type string, _commit_version int"
-            )
-
-        def streamReader(self, schema):
-            return _CdfTailReader(self.options["path"])
-
-    return DeltaCdfTailDataSource
+    out = pa.table(
+        {
+            "n_nationkey": tbl.column("n_nationkey"),
+            "n_name": tbl.column("n_name"),
+            "n_regionkey": tbl.column("n_regionkey"),
+            "_change_type": ct,
+            "_commit_version": pa.array([split.version] * n, type=pa.int32()),
+        }
+    )
+    return iter(out.to_batches())
 
 
-_CDF_STREAM_RUNS = iter(range(1_000_000))
+def _make_cdf_stream_datasource():
+    """Offsets are {'version': next_unread}: each micro-batch drains the
+    commits that appeared since the last one, one split per emitted
+    file. Exactly-once per version because the plan is a pure function
+    of the immutable log."""
+    from ..streaming.tail import tail_source
+
+    return tail_source(
+        "delta_cdf_tail",
+        "n_nationkey int, n_name string, n_regionkey int, "
+        "_change_type string, _commit_version int",
+        key="version",
+        initial=0,
+        latest=_cdf_next_version,
+        plan=_cdf_file_plan,
+        fields=("path", "change_type", "version"),
+        read_partition=_read_cdf_split,
+    )
 
 
 @query(
@@ -1261,35 +1205,14 @@ def stream_delta_cdf_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     transaction log a VALID streaming source (and the design reason
     'stream from a lakehouse table' works at all). Run to completion
     against the CDF fixture through a real readStream → memory sink;
-    the oracle is the full 40-row change history. Round 14: the reader
-    is partition-based — the driver plans one split per emitted file
-    from the commit JSONs and EXECUTORS read them (Arrow batches), the
-    shape that holds at 100 TB; the TaskContext guard in read() pins
-    that no change row transits the driver."""
-    import shutil
-
-    from .sources import _scratch
-
+    the oracle is the full 40-row change history. The driver plans one
+    split per emitted file from the commit JSONs and EXECUTORS read them
+    (Arrow batches), the shape that holds at 100 TB; the TaskContext
+    guard in read() pins that no change row transits the driver."""
     base = _fixture_dir(spark, sf_dir, "delta_table_cdf", _build_cdf_fixture)
     spark.dataSource.register(_make_cdf_stream_datasource())
-    run = next(_CDF_STREAM_RUNS)
-    ckpt = _scratch(sf_dir, f"cdf_tail_ckpt_{run}")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    name = f"cdf_tail_out_{run}"
-    q = (
-        spark.readStream.format("delta_cdf_tail")
-        .option("path", base)
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    stream = spark.readStream.format("delta_cdf_tail").option("path", base).load()
+    return drain_to_memory(spark, sf_dir, stream, "cdf_tail")
 
 
 def _commit_ict_ms(log_dir: str, version: int) -> int | None:

@@ -49,7 +49,7 @@ from ..catalog import table_path
 from ..functions.avro_codec import read_container, write_container
 from ..registry import query
 from .delta_reader import _write_parquet_file
-from .sources import _scratch
+from .sources import _scratch, drain_to_memory
 
 # ------------------------------------------------------------- metadata
 
@@ -1172,29 +1172,21 @@ def sink_iceberg_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------ snapshots as a STREAMING source
 
 
-def _iceberg_appended_files(
-    base: str, after_seq: int, upto_seq: int | None = None
-) -> tuple[list[tuple], int]:
+def _iceberg_appended_files(base: str, after_seq: int, upto_seq: int) -> list[tuple]:
     """Per-file append plan for snapshots with after_seq <
-    sequence-number (<= upto_seq when bounded): (absolute data-file
-    path, snapshot-id) tuples plus the new high-water sequence.
-    METADATA only — manifest list + manifests, never a data file; the
-    driver-side planning half of the partition-based stream reader
-    (round 14: the old SimpleDataSourceStreamReader materialized every
-    appended ROW driver-side; now executors read the file splits —
-    guide §4 boundary / §5 driver)."""
+    sequence-number <= upto_seq: (absolute data-file path, snapshot-id)
+    tuples. METADATA only — manifest list + manifests, never a data
+    file; the driver-side planning half of the snapshot stream tail."""
     meta = _load_metadata(base)
     snaps = sorted(
         (
             s
             for s in meta.get("snapshots", [])
-            if s["sequence-number"] > after_seq
-            and (upto_seq is None or s["sequence-number"] <= upto_seq)
+            if after_seq < s["sequence-number"] <= upto_seq
         ),
         key=lambda s: s["sequence-number"],
     )
     plan: list[tuple] = []
-    hi = after_seq
     for s in snaps:
         _, manifests = read_container(_resolve_path(base, s["manifest-list"]))
         for m in manifests:
@@ -1210,94 +1202,47 @@ def _iceberg_appended_files(
                         s["snapshot-id"],
                     )
                 )
-        hi = s["sequence-number"]
-    return plan, hi
+    return plan
+
+
+def _latest_seq(base: str, _seen: int) -> int:
+    """The newest snapshot sequence number: the Iceberg tails' latest
+    offset."""
+    seqs = [s["sequence-number"] for s in _load_metadata(base).get("snapshots", [])]
+    return max(seqs) if seqs else 0
+
+
+def _read_append_split(split):
+    """Executor read of one appended data file, stamped with the
+    snapshot that appended it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(split.path, columns=["n_nationkey", "n_name", "n_regionkey"])
+    out = tbl.append_column(
+        "snapshot_id", pa.array([split.snapshot_id] * tbl.num_rows, type=pa.int64())
+    )
+    return iter(out.to_batches())
 
 
 def _make_iceberg_stream_datasource():
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
+    """Offsets are {'seq': last-read sequence-number} — snapshots are
+    immutable and sequence numbers only grow, so the split plan (one
+    split per appended data file) replays any committed range exactly,
+    the same argument as the Delta-CDF tail on Iceberg's snapshot
+    lattice."""
+    from ..streaming.tail import tail_source
+
+    return tail_source(
+        "iceberg_snapshot_tail",
+        "n_nationkey int, n_name string, n_regionkey int, snapshot_id bigint",
+        key="seq",
+        initial=0,
+        latest=_latest_seq,
+        plan=_iceberg_appended_files,
+        fields=("path", "snapshot_id"),
+        read_partition=_read_append_split,
     )
-
-    class _AppendSplit(InputPartition):
-        def __init__(self, path: str, snapshot_id: int):
-            self.path, self.snapshot_id = path, snapshot_id
-
-    class _SnapTailReader(DataSourceStreamReader):
-        """Offsets are {'seq': last-read sequence-number} — snapshots
-        are immutable and sequence numbers only grow, so
-        partitions(start, end) is a pure function of the manifests and
-        replays any committed range exactly (the same argument as the
-        Delta-CDF tail, on Iceberg's snapshot lattice). The driver
-        plans one split per appended data file; read() runs on
-        EXECUTORS (pyarrow → Arrow record batches) — no appended row
-        transits the driver (round 14; TaskContext guard pins it)."""
-
-        def __init__(self, base: str):
-            self._base = base
-
-        def initialOffset(self):
-            return {"seq": 0}
-
-        def latestOffset(self):
-            meta = _load_metadata(self._base)
-            seqs = [s["sequence-number"] for s in meta.get("snapshots", [])]
-            return {"seq": max(seqs) if seqs else 0}
-
-        def partitions(self, start, end):
-            plan, _ = _iceberg_appended_files(
-                self._base, start["seq"], end["seq"]
-            )
-            return [_AppendSplit(p, sid) for p, sid in plan]
-
-        def commit(self, end):
-            pass  # offsets derive from immutable snapshots; nothing to ack
-
-        @staticmethod
-        def _read_partition(partition):
-            # self-contained (pyarrow only): executes on Python workers
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(
-                partition.path, columns=["n_nationkey", "n_name", "n_regionkey"]
-            )
-            out = tbl.append_column(
-                "snapshot_id",
-                pa.array([partition.snapshot_id] * tbl.num_rows, type=pa.int64()),
-            )
-            return iter(out.to_batches())
-
-        def read(self, partition):
-            from pyspark import TaskContext
-
-            if TaskContext.get() is None:
-                raise RuntimeError(
-                    "iceberg_snapshot_tail read() must run on an executor — "
-                    "batch rows must not transit the driver"
-                )
-            return self._read_partition(partition)
-
-    class IcebergSnapTailDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "iceberg_snapshot_tail"
-
-        def schema(self) -> str:
-            return (
-                "n_nationkey int, n_name string, n_regionkey int, "
-                "snapshot_id bigint"
-            )
-
-        def streamReader(self, schema):
-            return _SnapTailReader(self.options["path"])
-
-    return IcebergSnapTailDataSource
-
-
-_SNAP_STREAM_RUNS = iter(range(1_000_000))
 
 
 @query(
@@ -1318,14 +1263,11 @@ def stream_iceberg_snapshot_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the lane certifies writer → streaming-reader end to end; the
     oracle pins every row to the snapshot that appended it. Snapshot
     immutability makes the partition plan an exact replay — the
-    recovery contract. Round 14: the reader is partition-based — the
-    driver plans one split per appended data file from the manifests
-    and EXECUTORS read them (Arrow batches), the shape that holds at
-    100 TB; the TaskContext guard in read() pins that no appended row
-    transits the driver. This is how production engines stream FROM
-    Iceberg (incremental append scan)."""
-    import shutil
-
+    recovery contract. The driver plans one split per appended data
+    file from the manifests and EXECUTORS read them (Arrow batches), the
+    shape that holds at 100 TB; the TaskContext guard in read() pins
+    that no appended row transits the driver. This is how production
+    engines stream FROM Iceberg (incremental append scan)."""
     base = _scratch(sf_dir, "iceberg_stream_sink")
     if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
         from ..catalog import load_table
@@ -1336,24 +1278,10 @@ def stream_iceberg_snapshot_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
             fh.write("ok")
     spark.dataSource.register(_make_iceberg_stream_datasource())
-    run = next(_SNAP_STREAM_RUNS)
-    ckpt = _scratch(sf_dir, f"iceberg_tail_ckpt_{run}")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    name = f"iceberg_tail_out_{run}"
-    q = (
-        spark.readStream.format("iceberg_snapshot_tail")
-        .option("path", base)
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
+    stream = (
+        spark.readStream.format("iceberg_snapshot_tail").option("path", base).load()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_to_memory(spark, sf_dir, stream, "iceberg_tail")
 
 
 def _build_iceberg_evo_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:

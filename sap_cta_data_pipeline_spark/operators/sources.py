@@ -14,7 +14,9 @@ FITS files; SURVEY.md §2-A).
 
 from __future__ import annotations
 
+import itertools
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +35,33 @@ def _scratch(sf_dir: str, name: str) -> str:
     # mode('overwrite') writes and read back partial data
     tag = os.path.basename(os.path.abspath(sf_dir.rstrip("/")))
     return os.path.join("/tmp", "sap_cta_scratch", f"pid{os.getpid()}", tag, name)
+
+
+#: Run numbers for streaming queries: each run gets a fresh checkpoint
+#: (so the offset log replays from initialOffset) and query name.
+STREAM_RUNS = itertools.count()
+
+
+def drain_to_memory(
+    spark: SparkSession, sf_dir: str, stream_df: DataFrame, tag: str
+) -> DataFrame:
+    """Run ``stream_df`` to completion into a memory sink under a fresh
+    checkpoint and return the collected result as a batch frame."""
+    run = next(STREAM_RUNS)
+    ckpt = _scratch(sf_dir, f"{tag}_ckpt_{run}")
+    shutil.rmtree(ckpt, ignore_errors=True)
+    name = f"{tag}_out_{run}"
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.table(name)
 
 
 _EVENTS_READ_SCHEMA = T.StructType(

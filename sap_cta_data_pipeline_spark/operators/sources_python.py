@@ -215,80 +215,35 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STREAM_N = 30
 _STREAM_BATCH = 10
-_STREAM_RUNS = iter(range(1_000_000))
 
 
 def _make_stream_datasource():
-    # deferred import: pyspark.sql.datasource exists only on Spark 4+
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
+    from ..streaming.tail import tail_source
+
+    # Local functions pickle by value, so a Python worker that unpickles
+    # this reader never imports the operator registry (pinned in
+    # tests/test_stream_tail_contract.py).
+    def latest(_path, seen: int) -> int:
+        # paced from the highest offset the engine has shown the reader
+        # (the checkpoint state after a restart), never from 0
+        return min(seen + _STREAM_BATCH, _STREAM_N)
+
+    def plan(_path, lo: int, hi: int) -> list[tuple]:
+        return [(lo, hi)]
+
+    def read_partition(split):
+        return iter([(j, j * j) for j in range(split.start, split.end)])
+
+    return tail_source(
+        "synthetic_telemetry_stream",
+        "reading_id bigint, reading_sq bigint",
+        key="i",
+        initial=0,
+        latest=latest,
+        plan=plan,
+        fields=("start", "end"),
+        read_partition=read_partition,
     )
-
-    class _RowRange(InputPartition):
-        def __init__(self, start: int, end: int) -> None:
-            self.start, self.end = start, end
-
-    class _TelemetryStreamReader(DataSourceStreamReader):
-        """Offset-tracked micro-batch reader: offsets are {'i': next_row};
-        each micro-batch admits up to _STREAM_BATCH rows (latestOffset is
-        the admission-control point of the partition-based API) and its
-        row range ships to EXECUTORS as an InputPartition — the driver
-        plans offsets only; no batch row transits it (round 14, guide §4
-        boundary — the SimpleDataSourceStreamReader form produced every
-        row driver-side). Replay = partitions(start, end) re-derived from
-        the immutable offset arithmetic, the recovery contract
-        Structured Streaming requires of a source.
-
-        Recovery note: latestOffset() paces from the highest offset the
-        ENGINE has shown us (partitions()/commit() — i.e. the checkpoint
-        state after a restart), never an internal counter alone, so a
-        restarted query resumes at the checkpointed offset instead of
-        replaying from 0."""
-
-        def __init__(self) -> None:
-            self._seen = 0
-
-        def initialOffset(self):
-            return {"i": 0}
-
-        def latestOffset(self):
-            nxt = min(self._seen + _STREAM_BATCH, _STREAM_N)
-            return {"i": nxt}
-
-        def partitions(self, start, end):
-            self._seen = max(self._seen, start["i"], end["i"])
-            if end["i"] <= start["i"]:
-                return []
-            return [_RowRange(start["i"], end["i"])]
-
-        def commit(self, end):
-            self._seen = max(self._seen, end["i"])
-
-        def read(self, partition):
-            from pyspark import TaskContext
-
-            if TaskContext.get() is None:
-                raise RuntimeError(
-                    "telemetry stream read() must run on an executor"
-                )
-            return iter(
-                [(j, j * j) for j in range(partition.start, partition.end)]
-            )
-
-    class TelemetryStreamDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "synthetic_telemetry_stream"
-
-        def schema(self) -> str:
-            return "reading_id bigint, reading_sq bigint"
-
-        def streamReader(self, schema):
-            return _TelemetryStreamReader()
-
-    return TelemetryStreamDataSource
 
 
 @query(
@@ -305,38 +260,20 @@ def source_python_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFra
     DataSource surface (batch read: source_python_datasource;
     two-phase-commit write: sink_python_datasource): a replayable
     offset-tracked source ("consume a feed Spark has no connector for")
-    producing {_STREAM_N} deterministic rows over 3 micro-batches —
-    the driver plans offset ranges, EXECUTORS generate the rows
-    (round 14: the Simple reader produced every row driver-side) —
-    drained to completion through a real readStream → memory-sink query
-    (fresh checkpoint per run so the offset log replays from
-    initialOffset) and returned as the collected batch result against a
-    full value oracle. The pure partitions(start, end) replay
-    contract — not the happy-path read() — is what makes the source
-    recovery-safe at scale; checkpoint recovery for this engine's
-    streams is separately pinned in tests/test_streaming_recovery.py."""
-    import shutil
-
-    from .sources import _scratch
+    producing 30 deterministic rows over 3 micro-batches — the driver
+    plans offset ranges, EXECUTORS generate the rows — drained to
+    completion through a real readStream → memory-sink query (fresh
+    checkpoint per run so the offset log replays from initialOffset)
+    and returned as the collected batch result against a full value
+    oracle. The pure partitions(start, end) replay contract — not the
+    happy-path read() — is what makes the source recovery-safe at scale;
+    checkpoint recovery for this engine's streams is separately pinned
+    in tests/test_streaming_recovery.py."""
+    from .sources import drain_to_memory
 
     spark.dataSource.register(_make_stream_datasource())
-    run = next(_STREAM_RUNS)
-    ckpt = _scratch(sf_dir, f"pystream_ckpt_{run}")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    name = f"pystream_out_{run}"
-    q = (
-        spark.readStream.format("synthetic_telemetry_stream")
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    stream = spark.readStream.format("synthetic_telemetry_stream").load()
+    return drain_to_memory(spark, sf_dir, stream, "pystream")
 
 
 @query(
@@ -362,11 +299,11 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from .sources import _scratch
+    from .sources import STREAM_RUNS, _scratch
 
     spark.dataSource.register(_make_stream_datasource())
     spark.dataSource.register(_make_sink_datasource())
-    run = next(_STREAM_RUNS)
+    run = next(STREAM_RUNS)
     out = _scratch(sf_dir, f"pystream_febatch_{run}")
     ckpt = os.path.join(out, "_ckpt")
     shutil.rmtree(out, ignore_errors=True)
@@ -422,31 +359,15 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     value oracle. The static side broadcasts exactly as it would in a
     batch join; stream-static joins need no watermark because the
     static side never adds rows to state."""
-    import shutil
-
-    from ..catalog import load_table as t
-    from .sources import _scratch
-
-    spark.dataSource.register(_make_stream_datasource())
-    run = next(_STREAM_RUNS)
-    ckpt = _scratch(sf_dir, f"pystream_enrich_ckpt_{run}")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    nation = t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    stream = spark.readStream.format("synthetic_telemetry_stream").load()
     from pyspark.sql import functions as F
 
+    from ..catalog import load_table as t
+    from .sources import drain_to_memory
+
+    spark.dataSource.register(_make_stream_datasource())
+    nation = t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    stream = spark.readStream.format("synthetic_telemetry_stream").load()
     enriched = stream.join(
         F.broadcast(nation), stream.reading_id % 25 == nation.n_nationkey
     ).select("reading_id", "n_name", "reading_sq")
-    name = f"pystream_enrich_{run}"
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_to_memory(spark, sf_dir, enriched, "pystream_enrich")

@@ -17,18 +17,16 @@ exists. This batch is the §2-K twin that drives it per micro-batch:
   function of the two endpoint manifests — the checkpoint-recovery
   contract, pinned.
 
-Row materialization is pyarrow on EXECUTORS (round 14: the driver
-resolves delete metadata to per-file position lists and ships splits;
-the old Simple reader produced every change row driver-side); the FILE
-SCOPE is still ``iceberg_changelog_plan``'s changed-files
-bound, so a micro-batch reads only the window's added/removed files and
-the carried files its changed deletes reference, never the table.
+Row materialization is pyarrow on EXECUTORS: the driver resolves delete
+metadata to per-file position lists and ships splits through the shared
+``streaming/tail.py`` reader. The FILE SCOPE is
+``iceberg_changelog_plan``'s changed-files bound, so a micro-batch reads
+only the window's added/removed files and the carried files its changed
+deletes reference, never the table.
 
 Scale: per micro-batch cost is O(window) — the plan is two manifest
-walks, emission reads only changed files. The SimpleDataSourceStream
-reader materializes via the driver (fine for CDC windows, which are
-metadata-to-GB scale); a partition-based reader shipping per-file
-splits to executors is the same offset contract at 100 TB.
+walks, emission reads only changed files, and the driver's share is
+O(files-in-window) delete metadata, never rows.
 """
 
 from __future__ import annotations
@@ -39,8 +37,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
-from .iceberg_reader import _load_metadata, iceberg_state
-from .sources import _scratch
+from .iceberg_reader import _latest_seq, _load_metadata, iceberg_state
+from .sources import _scratch, drain_to_memory
 from .surface54 import iceberg_changelog_plan
 
 
@@ -79,13 +77,10 @@ def _changelog_splits(base: str, from_sid: int | None, to_sid: int) -> list[tupl
     emits exactly the listed positions. ``from_sid=None`` is the
     bootstrap window: the snapshot's full live set as INSERTs.
 
-    Round 14: this is the driver-side planning half of the
-    partition-based stream reader — manifests and DELETE metadata
-    (position-delete files / DV blobs, KBs per data file by the puffin
-    module's scale contract) resolve to position lists here, and the
-    O(data) reads of the data files themselves happen on EXECUTORS
-    (guide §4 boundary / §5 driver; the old form materialized every
-    change row driver-side)."""
+    Manifests and DELETE metadata (position-delete files / DV blobs, KBs
+    per data file by the puffin module's scale contract) resolve to
+    position lists here on the driver; the O(data) reads of the data
+    files themselves happen on EXECUTORS."""
     splits: list[tuple] = []
 
     def _plan(files: list[dict], dels: dict, tag: str) -> None:
@@ -150,115 +145,61 @@ def _windows(base: str, after_seq: int, upto_seq: int | None):
         prev = s["snapshot-id"]
 
 
-def _make_changelog_tail_datasource():
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
+def _changelog_tail_plan(base: str, after_seq: int, upto_seq: int) -> list[tuple]:
+    """Every window in (after_seq, upto_seq] as _changelog_splits tuples."""
+    return [
+        split
+        for from_sid, snap in _windows(base, after_seq, upto_seq)
+        for split in _changelog_splits(base, from_sid, snap["snapshot-id"])
+    ]
+
+
+def _read_change_split(split):
+    """Executor read of one split: load the data file and apply the
+    keep/skip position filter, stamping change type and snapshot."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(split.path, columns=["n_nationkey", "n_name", "n_regionkey"])
+    if split.mode == "keep":
+        tbl = tbl.take(split.positions)
+    elif split.positions:
+        skip = set(split.positions)
+        tbl = tbl.take([i for i in range(tbl.num_rows) if i not in skip])
+    out = pa.table(
+        {
+            "n_nationkey": tbl.column("n_nationkey"),
+            "n_name": tbl.column("n_name"),
+            "n_regionkey": tbl.column("n_regionkey"),
+            "change_type": pa.array(
+                [split.change_type] * tbl.num_rows, type=pa.string()
+            ),
+            "commit_snapshot_id": pa.array(
+                [split.snapshot_id] * tbl.num_rows, type=pa.int64()
+            ),
+        }
     )
-
-    class _ChangeSplit(InputPartition):
-        def __init__(self, path, mode, positions, change_type, snapshot_id):
-            self.path, self.mode, self.positions = path, mode, positions
-            self.change_type, self.snapshot_id = change_type, snapshot_id
-
-    class _ChangelogTailReader(DataSourceStreamReader):
-        """Offsets are {'seq': last-drained sequence-number}; snapshot
-        immutability + the split plan being a pure function of the
-        endpoint manifests make partitions(start, end) an exact replay
-        (pinned in tests/test_surface65.py). The driver resolves delete
-        METADATA to per-file position lists (_changelog_splits); read()
-        runs on EXECUTORS — pyarrow loads the data file and applies the
-        keep/skip position filter there, so no change row transits the
-        driver (round 14; TaskContext guard pins it)."""
-
-        def __init__(self, base: str):
-            self._base = base
-
-        def initialOffset(self):
-            return {"seq": 0}
-
-        def latestOffset(self):
-            meta = _load_metadata(self._base)
-            seqs = [s["sequence-number"] for s in meta.get("snapshots", [])]
-            return {"seq": max(seqs) if seqs else 0}
-
-        def partitions(self, start, end):
-            splits: list[_ChangeSplit] = []
-            for from_sid, snap in _windows(
-                self._base, start["seq"], end["seq"]
-            ):
-                splits.extend(
-                    _ChangeSplit(*s)
-                    for s in _changelog_splits(
-                        self._base, from_sid, snap["snapshot-id"]
-                    )
-                )
-            return splits
-
-        def commit(self, end):
-            pass  # offsets derive from immutable snapshots
-
-        @staticmethod
-        def _read_partition(partition):
-            # self-contained (pyarrow only): executes on Python workers
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(
-                partition.path,
-                columns=["n_nationkey", "n_name", "n_regionkey"],
-            )
-            if partition.mode == "keep":
-                tbl = tbl.take(partition.positions)
-            elif partition.positions:
-                skip = set(partition.positions)
-                tbl = tbl.take(
-                    [i for i in range(tbl.num_rows) if i not in skip]
-                )
-            out = pa.table(
-                {
-                    "n_nationkey": tbl.column("n_nationkey"),
-                    "n_name": tbl.column("n_name"),
-                    "n_regionkey": tbl.column("n_regionkey"),
-                    "change_type": pa.array(
-                        [partition.change_type] * tbl.num_rows, type=pa.string()
-                    ),
-                    "commit_snapshot_id": pa.array(
-                        [partition.snapshot_id] * tbl.num_rows, type=pa.int64()
-                    ),
-                }
-            )
-            return iter(out.to_batches())
-
-        def read(self, partition):
-            from pyspark import TaskContext
-
-            if TaskContext.get() is None:
-                raise RuntimeError(
-                    "iceberg_changelog_tail read() must run on an executor — "
-                    "batch rows must not transit the driver"
-                )
-            return self._read_partition(partition)
-
-    class IcebergChangelogTailDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "iceberg_changelog_tail"
-
-        def schema(self) -> str:
-            return (
-                "n_nationkey int, n_name string, n_regionkey int, "
-                "change_type string, commit_snapshot_id bigint"
-            )
-
-        def streamReader(self, schema):
-            return _ChangelogTailReader(self.options["path"])
-
-    return IcebergChangelogTailDataSource
+    return iter(out.to_batches())
 
 
-_CHG_STREAM_RUNS = iter(range(1_000_000))
+def _make_changelog_tail_datasource():
+    """Offsets are {'seq': last-drained sequence-number}; snapshot
+    immutability + the split plan being a pure function of the endpoint
+    manifests make partitions(start, end) an exact replay (pinned in
+    tests/test_surface65.py)."""
+    from ..streaming.tail import tail_source
+
+    return tail_source(
+        "iceberg_changelog_tail",
+        "n_nationkey int, n_name string, n_regionkey int, "
+        "change_type string, commit_snapshot_id bigint",
+        key="seq",
+        initial=0,
+        latest=_latest_seq,
+        plan=_changelog_tail_plan,
+        fields=("path", "mode", "positions", "change_type", "snapshot_id"),
+        read_partition=_read_change_split,
+    )
 
 
 def _stream_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -299,28 +240,12 @@ def stream_iceberg_changelog_tail(spark: SparkSession, sf_dir: str) -> DataFrame
     position-delete commit arrives as a DELETE window — each row tagged
     with its committing snapshot — where the append-only tail would
     silently skip the delete. Value-oracled cell-by-cell; replay
-    exactness (readBetweenOffsets) and checkpoint recovery (restart
+    exactness (the partitions(start, end) plan) and checkpoint recovery (restart
     drains ONLY the post-stop window, no re-emit) are pinned in
     tests/test_surface65.py."""
-    import shutil
-
     base = _stream_fixture(spark, sf_dir)
     spark.dataSource.register(_make_changelog_tail_datasource())
-    run = next(_CHG_STREAM_RUNS)
-    ckpt = _scratch(sf_dir, f"iceberg_chg_tail_ckpt_{run}")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    name = f"iceberg_chg_tail_out_{run}"
-    q = (
-        spark.readStream.format("iceberg_changelog_tail")
-        .option("path", base)
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
+    stream = (
+        spark.readStream.format("iceberg_changelog_tail").option("path", base).load()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_to_memory(spark, sf_dir, stream, "iceberg_chg_tail")

@@ -33,8 +33,7 @@ asymmetries a format-switching user hits next:
   slices that instant's commit metadata names (never the table).
   Replay (the pure ``partitions(start, end)`` split plan) is exact
   because completed instants and their slices are immutable; slice
-  reads run on EXECUTORS (round 14 — the Simple reader produced every
-  row driver-side).
+  reads run on EXECUTORS.
 
 Scale: all three are change-bounded. The UPDATE scans the predicate
 column once (Catalyst prunes the rest) and rewrites only files with
@@ -53,7 +52,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-from .sources import _scratch
+from .sources import _scratch, drain_to_memory
 from .surface63 import _commit_cow_swap
 
 
@@ -353,12 +352,8 @@ def hudi_delete_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hudi_instant_files(base: str, instant: str) -> list[tuple]:
     """Slices WRITTEN at ``instant`` — Hudi incremental-query planning:
     (absolute slice path, instant) for every slice the commit metadata
-    names. METADATA only (one commit JSON), never a data file; the
-    driver-side planning half of the partition-based stream reader
-    (round 14: the old SimpleDataSourceStreamReader materialized every
-    incremental ROW driver-side; now executors read the slices and
-    apply the commit-time stamp filter — guide §4 boundary / §5
-    driver)."""
+    names. METADATA only (one commit JSON), never a data file; executors
+    read the slices and apply the commit-time stamp filter."""
     import json
 
     with open(os.path.join(base, ".hoodie", f"{instant}.commit")) as fh:
@@ -379,111 +374,63 @@ def _completed_instants(base: str, after: str) -> list[str]:
     )
 
 
-def _make_hudi_tail_datasource():
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
+def _hudi_latest_instant(base: str, _seen: str) -> str:
+    done = _completed_instants(base, "")
+    return done[-1] if done else ""
+
+
+def _hudi_tail_plan(base: str, after: str, upto: str) -> list[tuple]:
+    """One split per slice named by the instants in (after, upto]."""
+    return [
+        split
+        for ins in _completed_instants(base, after)
+        if ins <= upto
+        for split in _hudi_instant_files(base, ins)
+    ]
+
+
+def _read_slice_split(split):
+    """Executor read of one slice: the _hoodie_commit_time == instant
+    stamp filter drops the survivor rows earlier instants wrote."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(
+        split.path,
+        columns=["_hoodie_commit_time", "n_nationkey", "n_name", "n_regionkey"],
     )
-
-    class _SliceSplit(InputPartition):
-        def __init__(self, path: str, instant: str):
-            self.path, self.instant = path, instant
-
-    class _HudiTailReader(DataSourceStreamReader):
-        """Offsets are {'instant': last-drained commit time} — the
-        timeline's lexicographic-equals-numeric instant names ARE the
-        offset lattice. Completed instants and their slices are
-        immutable, so partitions(start, end) — one split per slice the
-        window's commit metadata names — replays any committed range
-        exactly. read() runs on EXECUTORS: pyarrow loads the slice and
-        the _hoodie_commit_time == instant stamp filter drops survivor
-        rows there, so no incremental row transits the driver
-        (round 14; TaskContext guard pins it)."""
-
-        def __init__(self, base: str):
-            self._base = base
-
-        def initialOffset(self):
-            return {"instant": ""}
-
-        def latestOffset(self):
-            done = _completed_instants(self._base, "")
-            return {"instant": done[-1] if done else ""}
-
-        def partitions(self, start, end):
-            splits: list[_SliceSplit] = []
-            for ins in _completed_instants(self._base, start["instant"]):
-                if ins > end["instant"]:
-                    break
-                splits.extend(
-                    _SliceSplit(p, i)
-                    for p, i in _hudi_instant_files(self._base, ins)
-                )
-            return splits
-
-        def commit(self, end):
-            pass  # offsets derive from the immutable timeline
-
-        @staticmethod
-        def _read_partition(partition):
-            # self-contained (pyarrow only): executes on Python workers
-            import pyarrow as pa
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(
-                partition.path,
-                columns=[
-                    "_hoodie_commit_time",
-                    "n_nationkey",
-                    "n_name",
-                    "n_regionkey",
-                ],
-            )
-            mine = tbl.filter(
-                pc.equal(tbl.column("_hoodie_commit_time"), partition.instant)
-            )
-            out = pa.table(
-                {
-                    "n_nationkey": mine.column("n_nationkey"),
-                    "n_name": mine.column("n_name"),
-                    "n_regionkey": mine.column("n_regionkey"),
-                    "commit_instant": pa.array(
-                        [partition.instant] * mine.num_rows, type=pa.string()
-                    ),
-                }
-            )
-            return iter(out.to_batches())
-
-        def read(self, partition):
-            from pyspark import TaskContext
-
-            if TaskContext.get() is None:
-                raise RuntimeError(
-                    "hudi_incremental_tail read() must run on an executor — "
-                    "batch rows must not transit the driver"
-                )
-            return self._read_partition(partition)
-
-    class HudiIncrementalTailDataSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "hudi_incremental_tail"
-
-        def schema(self) -> str:
-            return (
-                "n_nationkey int, n_name string, n_regionkey int, "
-                "commit_instant string"
-            )
-
-        def streamReader(self, schema):
-            return _HudiTailReader(self.options["path"])
-
-    return HudiIncrementalTailDataSource
+    mine = tbl.filter(pc.equal(tbl.column("_hoodie_commit_time"), split.instant))
+    out = pa.table(
+        {
+            "n_nationkey": mine.column("n_nationkey"),
+            "n_name": mine.column("n_name"),
+            "n_regionkey": mine.column("n_regionkey"),
+            "commit_instant": pa.array(
+                [split.instant] * mine.num_rows, type=pa.string()
+            ),
+        }
+    )
+    return iter(out.to_batches())
 
 
-_HUDI_STREAM_RUNS = iter(range(1_000_000))
+def _make_hudi_tail_datasource():
+    """Offsets are {'instant': last-drained commit time} — the
+    timeline's lexicographic-equals-numeric instant names ARE the offset
+    lattice. Completed instants and their slices are immutable, so the
+    split plan replays any committed range exactly."""
+    from ..streaming.tail import tail_source
+
+    return tail_source(
+        "hudi_incremental_tail",
+        "n_nationkey int, n_name string, n_regionkey int, commit_instant string",
+        key="instant",
+        initial="",
+        latest=_hudi_latest_instant,
+        plan=_hudi_tail_plan,
+        fields=("path", "instant"),
+        read_partition=_read_slice_split,
+    )
 
 
 def _build_hudi_tail_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -529,25 +476,9 @@ def stream_hudi_incremental_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     _hoodie_commit_time stamp gates — survivor rows belong to earlier
     windows). Value-oracled cell-by-cell; replay exactness and
     checkpoint recovery are pinned in tests/test_surface66.py."""
-    import shutil
-
     base = _build_hudi_tail_fixture(spark, sf_dir)
     spark.dataSource.register(_make_hudi_tail_datasource())
-    run = next(_HUDI_STREAM_RUNS)
-    ckpt = _scratch(sf_dir, f"hudi_incr_tail_ckpt_{run}")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    name = f"hudi_incr_tail_out_{run}"
-    q = (
-        spark.readStream.format("hudi_incremental_tail")
-        .option("path", base)
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
+    stream = (
+        spark.readStream.format("hudi_incremental_tail").option("path", base).load()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_to_memory(spark, sf_dir, stream, "hudi_incr_tail")

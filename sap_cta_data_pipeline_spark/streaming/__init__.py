@@ -1,1 +1,2 @@
-"""Structured Streaming twins of the §2-K batch-declared operators."""
+"""Structured Streaming: twins of the §2-K batch-declared operators
+(``twins``) and the one Python streaming tail source (``tail``)."""

@@ -26,27 +26,32 @@ def first_line(doc: str | None) -> str:
     return text
 
 
-def main() -> int:
+def render() -> str:
+    """The full OPERATORS.md text for the live registry."""
     by_module: dict[str, list[str]] = defaultdict(list)
     for key, fn in QUERIES.items():
         module = fn.__module__.rsplit(".", 1)[-1]
         by_module[module].append(key)
 
-    print("# OPERATORS — implemented inventory (generated by scripts/gen_operators_doc.py)")
-    print()
-    print(f"{len(QUERIES)} operators; {len(ORACLES)} with DuckDB value-hash oracles, "
-          f"{len(QUERIES) - len(ORACLES)} rows-only (approximate / hash-specific / iterative).")
-    print()
+    lines = [
+        "# OPERATORS — implemented inventory (generated by scripts/gen_operators_doc.py)",
+        "",
+        f"{len(QUERIES)} operators; {len(ORACLES)} with DuckDB value-hash oracles, "
+        f"{len(QUERIES) - len(ORACLES)} rows-only (approximate / hash-specific / iterative).",
+        "",
+    ]
     for module in sorted(by_module):
-        print(f"## {module}")
-        print()
-        print("| key | oracle | summary |")
-        print("| --- | --- | --- |")
+        lines += [f"## {module}", "", "| key | oracle | summary |", "| --- | --- | --- |"]
         for key in sorted(by_module[module]):
             lane = "SQL" if key in ORACLES else "rows"
             summary = first_line(QUERIES[key].__doc__).replace("|", "\\|")
-            print(f"| `{key}` | {lane} | {summary} |")
-        print()
+            lines.append(f"| `{key}` | {lane} | {summary} |")
+        lines.append("")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> int:
+    sys.stdout.write(render())
     return 0
 
 

@@ -1,10 +1,12 @@
 """SURVEY.md's "Running totals" line is the judge-facing contract count —
 it must never drift from the actual registry (it is hand-maintained per
 batch; this test makes staleness a red test instead of a judged defect).
-OPERATORS.md is generated, so only its header count is pinned."""
+OPERATORS.md is generated, so the whole file is pinned to the generator's
+output."""
 
 from __future__ import annotations
 
+import importlib.util
 import re
 from pathlib import Path
 
@@ -29,11 +31,19 @@ def test_survey_running_totals_match_registry():
 
 
 def test_operators_doc_header_matches_registry():
-    head = (REPO / "OPERATORS.md").read_text()[:300]
-    m = re.search(r"(\d+) operators; (\d+) with DuckDB value-hash oracles", head)
+    text = (REPO / "OPERATORS.md").read_text()
+    m = re.search(r"(\d+) operators; (\d+) with DuckDB value-hash oracles", text[:300])
     assert m
     assert int(m.group(1)) == len(QUERIES)
     assert int(m.group(2)) == len(ORACLES)
+    spec = importlib.util.spec_from_file_location(
+        "gen_operators_doc", REPO / "scripts" / "gen_operators_doc.py"
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    assert text == gen.render(), (
+        "OPERATORS.md is stale: python scripts/gen_operators_doc.py > OPERATORS.md"
+    )
 
 
 def _expand_batch_range(a: str, b: str) -> list[str]:
