@@ -40,113 +40,129 @@ from ..registry import query
 _JACCARD_T = 0.8
 _MAX_CC_ROUNDS = 25
 
-#: Per-task edge budget for the CC loops' shuffles (round 13, measured):
-#: every CC round is 5-7 tiny sequential AQE stages, so at small edge
-#: counts the wall is pure per-stage scheduling, not compute — the loop
-#: DOP is derived from the MEASURED edge count (the loop already counts
-#: edges every round via its convergence fingerprint) instead of running
-#: each stage at the session's full shuffle width. ~400k 16-byte edge
-#: rows per task keeps a task at a few MB / well under a second of hash
-#: work; the session's configured width stays the CEILING (we only
-#: shrink when the measured state is small — AQE-coalesce philosophy,
-#: applied where AQE's own coalescing cannot remove the per-stage
-#: replanning cost). Measured on the sf0.1 LSH graph (669k edges /
-#: 3.9k nodes): 4.72 s → 2.07 s; on the 10× dup-sparse graph (6.7M
-#: edges) DOP 16-32 stays optimal and the rule yields 17.
-_CC_EDGES_PER_TASK = 400_000
+
+def _link(comp, a, b):
+    """Merge the components joined by dense-id edges (a, b) into
+    ``comp``, a label array that is a star forest on entry and on return
+    (``comp[x]`` = the smallest dense id known connected to x). Each
+    round hooks every root under the smallest root across its edges
+    (hash-min on the label forest), then pointer-jumps until every tree
+    is a star again; it stops when both ends of every edge carry one
+    label."""
+    import numpy as np
+
+    while True:
+        ca, cb = comp[a], comp[b]
+        if np.array_equal(ca, cb):
+            return comp
+        m = np.minimum(ca, cb)
+        # ca/cb are roots (comp is a star forest), and labels only
+        # ever decrease, so hooking cannot form a cycle
+        np.minimum.at(comp, ca, m)
+        np.minimum.at(comp, cb, m)
+        while True:
+            jumped = comp[comp]
+            if np.array_equal(jumped, comp):
+                break
+            comp = jumped
 
 
-def _cc_loop_dop(n_edges: int, session_parts: int) -> int:
-    return max(1, min((n_edges + _CC_EDGES_PER_TASK - 1) // _CC_EDGES_PER_TASK,
-                      session_parts))
+def _star_forest(hi, lo):
+    """Connected components of one edge list, in numpy (``_link`` over
+    ``np.unique``-relabelled ids). Returns ``(node, comp)`` arrays with
+    one entry per distinct node seen that is not its own component
+    minimum, ``comp`` being that minimum — a star forest with exactly the
+    components of the input edges."""
+    import numpy as np
+
+    ids, inv = np.unique(
+        np.concatenate([np.asarray(hi, np.int64), np.asarray(lo, np.int64)]),
+        return_inverse=True,
+    )
+    comp = _link(np.arange(ids.size), inv[: len(hi)], inv[len(hi):])
+    moved = comp != np.arange(ids.size)
+    return ids[moved], ids[comp[moved]]
 
 
-#: Round 14 (ADVICE r13): serializes both CC loops' session-global
-#: shuffle-width mutation against concurrent/nested CC calls, so a
-#: clobbered width can never be "restored" to another loop's transient
-#: value. The conf form stays in BOTH loops because the locally-scoped
-#: alternative (explicit numbered keyed repartitions on every loop
-#: shuffle input) was measured and REJECTED: par in the isolated
-#: twostar harness but consistently slower end to end — propagation
-#: 3.0-3.5 s → 4.9-5.8 s, dedup_minhash_cluster 4.23 s → 4.8-5.15 s at
-#: sf0.1 in both orders — because explicit repartition nodes survive
-#: AQE and block the broadcast-join conversions the tiny label/min
-#: joins rely on, while the conf width also narrows the aggregates.
-#: Residual contract (documented, not lock-fixable): OTHER queries
-#: planned concurrently on the same session during a CC loop see the
-#: narrowed width — plan concurrent work on a separate session
-#: (`spark.newSession()`), which has its own SQLConf.
-import threading as _threading  # noqa: E402
+def _contract_partition(batches):
+    """mapInArrow body: one partition's (hi, lo) edges → its star forest."""
+    import numpy as np
+    import pyarrow as pa
 
-_CC_CONF_LOCK = _threading.Lock()
+    hi, lo = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for batch in batches:
+        hi.append(batch.column(0).to_numpy(zero_copy_only=False))
+        lo.append(batch.column(1).to_numpy(zero_copy_only=False))
+    node, comp = _star_forest(np.concatenate(hi), np.concatenate(lo))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(node, pa.int64()), pa.array(comp, pa.int64())], names=["hi", "lo"]
+    )
+
+
+def _contract(edges: DataFrame) -> DataFrame:
+    """Partition-local contraction: every task replaces its slice of the
+    ``(hi, lo)`` edges by that slice's star forest ``(node, comp-min)``.
+    The union of the per-task forests has the components of the input,
+    and at most partitions × nodes rows whatever the input's size or
+    duplication."""
+    return edges.select("hi", "lo").mapInArrow(
+        _contract_partition, "hi bigint, lo bigint"
+    )
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Hash-min connected components with pointer jumping: ``nodes`` has
-    one ``node`` column, ``edges`` is the SYMMETRIC (src, dst) relation;
-    returns (node, comp) with comp = min node id reachable. Each round
+    one ``node`` column, ``edges`` is the (src, dst) relation in either or
+    both directions; returns (node, comp) with comp = min node id
+    reachable. The edges are first contracted task-locally to a star
+    forest (``_contract``) and made symmetric again. Each round then
     (a) takes the min label over neighbors (hash-min) and (b) shortcuts
     comp ← comp[comp] (pointer jumping), so label chains collapse
-    exponentially — rounds ≈ O(log diameter), not diameter (91 s → s at
-    sf0.1 for the near-dup graph). Every step is a keyed join/agg over
-    the label table, eagerly localCheckpoint-ed so round R's plan stays
-    flat instead of nesting R joins deep; one scalar convergence count
-    per round crosses the driver — the iterative-algorithm lane."""
+    exponentially — rounds ≈ O(log diameter), not diameter. Every step
+    is a keyed join/agg over the label table, eagerly localCheckpoint-ed
+    so round R's plan stays flat instead of nesting R joins deep; one
+    scalar convergence count per round crosses the driver — the
+    iterative-algorithm lane."""
+    forest = _contract(
+        edges.select(F.col("src").alias("hi"), F.col("dst").alias("lo"))
+    )
+    edges = (
+        forest.select(F.col("hi").alias("src"), F.col("lo").alias("dst"))
+        .unionAll(forest.select(F.col("lo").alias("src"), F.col("hi").alias("dst")))
+        .localCheckpoint(eager=True)
+    )
     labels = nodes.select("node", F.col("node").alias("comp")).localCheckpoint(
         eager=True
     )
-    # loop DOP from the measured edge count (round 13): every round is a
-    # chain of tiny sequential stages whose wall at small edge counts is
-    # per-stage scheduling, not compute — see _CC_EDGES_PER_TASK. Unlike
-    # the two-star loop the edge table here is constant across rounds,
-    # so one count at entry (the edges are cached by every caller and
-    # round 1 would materialize them anyway) sizes the whole loop.
-    # Round 14 (ADVICE r13): the width mutation stays — the
-    # locally-scoped repartition variant measured 4.9-5.8 s vs
-    # 3.0-3.5 s at sf0.1 (explicit repartitions survive AQE and block
-    # its broadcast-join conversions; see _CC_CONF_LOCK) — but it is now
-    # serialized under _CC_CONF_LOCK so nested/concurrent CC calls can
-    # never restore each other's transient width; the restore is
-    # try/finally on every exit path as before.
-    spark = edges.sparkSession
-    with _CC_CONF_LOCK:
-        session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        try:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(_cc_loop_dop(edges.count(), session_parts)),
-            )
-            for _ in range(_MAX_CC_ROUNDS):
-                prop = (
-                    edges.join(labels, edges.src == labels.node)
-                    .groupBy("dst")
-                    .agg(F.min("comp").alias("nc"))
-                )
-                stepped = labels.join(prop, labels.node == prop.dst, "left").select(
-                    "node",
-                    F.least(F.col("comp"), F.coalesce(F.col("nc"), F.col("comp"))).alias("comp"),
-                )
-                # pointer jump: replace my label by my label's label (comp is
-                # monotone non-increasing, so comp[comp] ≤ comp always holds)
-                parent = stepped.select(
-                    F.col("node").alias("comp"), F.col("comp").alias("jump")
-                )
-                new_labels = (
-                    stepped.join(parent, "comp", "left")
-                    .select("node", F.coalesce(F.col("jump"), F.col("comp")).alias("comp"))
-                    .localCheckpoint(eager=True)
-                )
-                changed = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), "node")
-                    .filter(F.col("n.comp") != F.col("o.comp"))
-                    .count()
-                )
-                labels = new_labels
-                if changed == 0:
-                    break
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
+    for _ in range(_MAX_CC_ROUNDS):
+        prop = (
+            edges.join(labels, edges.src == labels.node)
+            .groupBy("dst")
+            .agg(F.min("comp").alias("nc"))
+        )
+        stepped = labels.join(prop, labels.node == prop.dst, "left").select(
+            "node",
+            F.least(F.col("comp"), F.coalesce(F.col("nc"), F.col("comp"))).alias("comp"),
+        )
+        # pointer jump: replace my label by my label's label (comp is
+        # monotone non-increasing, so comp[comp] ≤ comp always holds)
+        parent = stepped.select(
+            F.col("node").alias("comp"), F.col("comp").alias("jump")
+        )
+        new_labels = (
+            stepped.join(parent, "comp", "left")
+            .select("node", F.coalesce(F.col("jump"), F.col("comp")).alias("comp"))
+            .localCheckpoint(eager=True)
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "node")
+            .filter(F.col("n.comp") != F.col("o.comp"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            break
     return labels
 
 
@@ -205,9 +221,9 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     of size 1 with no exact dups are dropped (nothing to deduplicate).
 
     Distribution contract: every per-round operation is keyed on the node
-    id (join + min-agg over the reps-sized label table, edges table
-    reused each round from cache); rounds = component diameter; one
-    scalar convergence count per round crosses the driver. The oracle is
+    id (join + min-agg over the reps-sized label table, the contracted
+    edge table checkpointed once and reused each round); one scalar
+    convergence count per round crosses the driver. The oracle is
     the recursive-CTE min-reachable-label fixpoint — identical answer by
     induction on path length."""
     groups, edges = _neardup_graph(spark, sf_dir)
@@ -218,9 +234,10 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _neardup_graph(spark: SparkSession, sf_dir: str):
-    """Shared near-dup graph: exact-collapse groups + symmetric Jaccard
-    ≥ 0.8 edges between representatives (the dedup_cluster_cc pipeline up
-    to the CC step, reused by the two-star variant)."""
+    """Shared near-dup graph: exact-collapse groups + Jaccard ≥ 0.8
+    edges (da < db) between representatives (the dedup_cluster_cc
+    pipeline up to the CC step, reused by the two-star variant). One
+    direction suffices: both CC loops contract their input first."""
     docs = t(spark, sf_dir, "documents")
     fp = F.concat_ws(
         " ",
@@ -257,11 +274,7 @@ def _neardup_graph(spark: SparkSession, sf_dir: str):
         .filter(jac >= _JACCARD_T)
         .select("da", "db")
     )
-    edges = edges0.select(F.col("da").alias("src"), F.col("db").alias("dst")).unionAll(
-        edges0.select(F.col("db").alias("src"), F.col("da").alias("dst"))
-    )
-    edges = edges.cache()
-    return groups, edges
+    return groups, edges0.select(F.col("da").alias("src"), F.col("db").alias("dst"))
 
 
 def _cc_rollup(labels: DataFrame, groups: DataFrame) -> DataFrame:
@@ -278,9 +291,28 @@ def _cc_rollup(labels: DataFrame, groups: DataFrame) -> DataFrame:
     )
 
 
+def _checkpoint_fp(edges: DataFrame) -> tuple[DataFrame, tuple]:
+    """Eager localCheckpoint of a (hi, lo) edge state together with its
+    (count, sum, bit_xor)-of-xxhash64 fingerprint, which an Observation
+    collects inside the checkpoint job itself (no separate aggregate
+    job). A false-equal, which would end the loop before its fixed
+    point, needs a simultaneous 64-bit sum AND xor collision at equal
+    counts (~2^-128); a false-unequal only costs one more round."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    edges = edges.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64("hi", "lo")).alias("s"),
+        F.bit_xor(F.xxhash64("lo", "hi")).alias("x"),
+    ).localCheckpoint(eager=True)
+    r = obs.get
+    return edges, (r["n"], r["s"], r["x"])
+
+
 def connected_components_twostar(
-    nodes: DataFrame, edges: DataFrame, max_rounds: int = 15,
-    edges_unique: bool = False,
+    nodes: DataFrame, edges: DataFrame, max_rounds: int = 15
 ) -> tuple[DataFrame, int]:
     """Large-star/small-star connected components (Kiveris et al. 2014,
     "Connected Components in MapReduce and Beyond") — the O(log n)-round
@@ -292,115 +324,64 @@ def connected_components_twostar(
     tall structures, until the graph is a union of stars centered at the
     component minima. Every step is an edge-keyed groupBy + join (no
     label table at all — the edge list IS the state), localCheckpoint-ed
-    flat; one scalar convergence fingerprint per round crosses the
-    driver. Round-5 rework (profiled at sf0.1: the loop was 9.2 s of
-    dedup_minhash_cluster's wall): (a) the edge STATE is canonical
-    undirected (hi, lo) — every distinct/checkpoint moves half the rows
-    of the old symmetric form, and the directed views each phase needs
-    are derived by a shuffle-free union; (b) the fixed-point test is a
-    (count, sum, bit_xor)-of-xxhash64 fingerprint — one map-side-combined
-    aggregate over the already-checkpointed edges instead of the two
-    full exceptAll shuffles per round the old form paid (a false-equal
-    needs a simultaneous 64-bit sum AND xor collision at equal counts —
-    ~2^-128, far below any hardware error rate; false-unequal is
-    impossible, so labels are never wrong, only an infinitesimally
-    unlikely extra round saved). Returns (labels(node, comp),
-    rounds_used)."""
-
-    def _fp(ec: DataFrame) -> tuple:
-        r = ec.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("hi", "lo")).alias("s"),
-            F.bit_xor(F.xxhash64("lo", "hi")).alias("x"),
-        ).collect()[0]
-        return (r.n, r.s, r.x)
-
-    # the input distinct is defensive (duplicate edges never change the
-    # result — every step is a min — only the sizes downstream); callers
-    # whose edge feed is unique by construction (dedup_minhash_cluster's
-    # first-matching-band pairs) skip the corpus-pair shuffle entirely
-    edges = edges.select(
-        F.greatest("src", "dst").alias("hi"), F.least("src", "dst").alias("lo")
-    ).where(F.col("hi") != F.col("lo"))
-    if not edges_unique:
-        edges = edges.distinct()
-    edges = edges.localCheckpoint(eager=True)
-    fp = _fp(edges)
-    spark = edges.sparkSession
-    # Round 14 (ADVICE r13): the width mutation is serialized under
-    # _CC_CONF_LOCK (see the lock's comment: the locally-scoped
-    # repartition variant was measured and REJECTED — par in the
-    # isolated loop harness but +0.6-0.9 s on dedup_minhash_cluster at
-    # sf0.1 in both orders, because explicit repartitions survive AQE
-    # and block its broadcast-join conversions). The restore stays
-    # try/finally on every exit path.
-    _CC_CONF_LOCK.acquire()
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    flat. The edge state is canonical undirected (hi, lo); the directed
+    views each phase needs are derived by a shuffle-free union. The input
+    is first contracted task-locally to a star forest (``_contract``), so
+    the rounds iterate over at most partitions × nodes edges however
+    many (or however duplicated) the input edges are. The fixed-point
+    test is the fingerprint ``_checkpoint_fp`` observes inside each
+    round's checkpoint job. Returns (labels(node, comp), rounds_used)."""
+    edges, fp = _checkpoint_fp(
+        _contract(
+            edges.select(
+                F.greatest("src", "dst").alias("hi"), F.least("src", "dst").alias("lo")
+            ).where(F.col("hi") != F.col("lo"))
+        )
+    )
     rounds = 0
     converged = False
-    try:
-        for _ in range(max_rounds):
-            rounds += 1
-            # round DOP from the measured edge count (free: it's fp[0]) —
-            # re-derived every round because the edge set collapses
-            # geometrically, so round 1 may want the session width while
-            # round 3 wants a single task (see _CC_EDGES_PER_TASK)
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(_cc_loop_dop(fp[0], session_parts)),
+    for _ in range(max_rounds):
+        rounds += 1
+        # large-star: for each u, m = min(Γ(u) ∪ {u}); emit (v, m) for v > u
+        sym = edges.select(F.col("hi").alias("src"), F.col("lo").alias("dst")).unionAll(
+            edges.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
+        )
+        mins = sym.groupBy("src").agg(
+            F.least(F.min("dst"), F.col("src")).alias("m")
+        )
+        ls = (
+            sym.join(mins, "src")
+            .where(F.col("dst") > F.col("src"))
+            .select(F.col("dst").alias("a"), F.col("m").alias("b"))
+            .where(F.col("a") != F.col("b"))
+        )
+        # canonical large-star output doubles as small-star's ≤-neighbor
+        # view: (hi, lo) IS the (u, v ≤ u) directed edge set. `down`
+        # feeds two sub-trees (mins2 and the join), so it is checkpointed
+        # rather than re-running the large-star subtree twice.
+        down = ls.select(
+            F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
+        ).distinct().localCheckpoint(eager=True)
+        # small-star: for each u over its ≤-neighbors, m = min; emit
+        # (v, m) for every v ∈ Γ⁻(u) and (u, m)
+        mins2 = down.groupBy("hi").agg(F.min("lo").alias("m"))
+        ss_pairs = (
+            down.join(mins2, "hi")
+            .select(F.col("lo").alias("a"), F.col("m").alias("b"))
+            .unionAll(
+                mins2.select(F.col("hi").alias("a"), F.col("m").alias("b"))
             )
-            # large-star: for each u, m = min(Γ(u) ∪ {u}); emit (v, m) for v > u
-            sym = edges.select(F.col("hi").alias("src"), F.col("lo").alias("dst")).unionAll(
-                edges.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-            )
-            mins = sym.groupBy("src").agg(
-                F.least(F.min("dst"), F.col("src")).alias("m")
-            )
-            ls = (
-                sym.join(mins, "src")
-                .where(F.col("dst") > F.col("src"))
-                .select(F.col("dst").alias("a"), F.col("m").alias("b"))
-                .where(F.col("a") != F.col("b"))
-            )
-            # canonical large-star output doubles as small-star's ≤-neighbor
-            # view: (hi, lo) IS the (u, v ≤ u) directed edge set. `down`
-            # feeds two sub-trees (mins2 and the join), so it is always
-            # checkpointed — round 13 retired the old ≥100k stat gate:
-            # with the loop DOP now following the edge count, the extra
-            # materialization job is one tiny stage, strictly cheaper
-            # than re-running the whole large-star subtree (measured at
-            # sf0.1: 4.0 s → 3.3 s before the DOP change, still ahead
-            # after it).
-            down = ls.select(
+            .where(F.col("a") != F.col("b"))
+        )
+        edges, new_fp = _checkpoint_fp(
+            ss_pairs.select(
                 F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
-            ).distinct().localCheckpoint(eager=True)
-            # small-star: for each u over its ≤-neighbors, m = min; emit
-            # (v, m) for every v ∈ Γ⁻(u) and (u, m)
-            mins2 = down.groupBy("hi").agg(F.min("lo").alias("m"))
-            ss_pairs = (
-                down.join(mins2, "hi")
-                .select(F.col("lo").alias("a"), F.col("m").alias("b"))
-                .unionAll(
-                    mins2.select(F.col("hi").alias("a"), F.col("m").alias("b"))
-                )
-                .where(F.col("a") != F.col("b"))
-            )
-            new_edges = (
-                ss_pairs.select(
-                    F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
-                )
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            new_fp = _fp(new_edges)
-            edges = new_edges
-            if new_fp == fp:
-                converged = True
-                break
-            fp = new_fp
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
-        _CC_CONF_LOCK.release()
+            ).distinct()
+        )
+        if new_fp == fp:
+            converged = True
+            break
+        fp = new_fp
     if not converged:
         # exhausting max_rounds without a fixed point means the labels
         # below would be WRONG (a star forest was never reached) — fail

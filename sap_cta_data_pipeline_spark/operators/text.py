@@ -73,11 +73,10 @@ _SCORING_NUMPY_MAX = 250_000
 #: broadcast_blocks 6 → 39 over one run), so each lane RETIRES the
 #: previous invocations' broadcasts at entry. Contract this relies on
 #: (holds for every registered caller, the bench, and the test sweeps):
-#: a frame returned by a minhash lane is materialized before the next
-#: minhash-lane invocation on the same SparkContext — the cluster lane
-#: checkpoints its edges eagerly inside the invocation, and the
-#: pair/incremental frames are consumed by their callers before any
-#: re-invocation. destroy (not unpersist) because in local mode the
+#: a frame returned by the pair or incremental lane is materialized
+#: before the next invocation of either lane on the same SparkContext.
+#: dedup_minhash_cluster creates no matrix broadcast (it scores inside
+#: its bucket tasks). destroy (not unpersist) because in local mode the
 #: driver IS the only block manager and unpersist(false) removes
 #: nothing there.
 _NUMPY_TIER_BCS: list = []
@@ -423,11 +422,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scoring joins become keyed SHUFFLE_HASH joins (signature side
     builds the hash table — always far smaller than the quadratic pair
     stream). Exact Jaccard lives in dedup_near_jaccard;
-    this is the approximate lane. Round 5: the body lives in
-    ``_lsh_pairs_from_groups`` so ``dedup_minhash_cluster`` can feed its
-    own CACHED fingerprint groupBy — composed lanes were paying the
-    corpus pass twice (measured 3.1 s duplicated at the 10× bench
-    scale).
+    this is the approximate lane. The body lives in
+    ``_lsh_pairs_from_groups`` and the signature stage in
+    ``_signatures``, which ``dedup_minhash_cluster`` shares over its own
+    cached fingerprint groupBy.
 
     Round 4 (the both-scale bench caught the dup-dense 10× case): pair
     dedup is now the first-matching-band filter (no pair-stream
@@ -455,9 +453,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fingerprint_groups(docs: DataFrame) -> DataFrame:
     """Stage 1 of the MinHash lanes: exact collapse by canonical
     token-set fingerprint → (fp, rep_id, n_members), one row per
-    DISTINCT content. Shared so composed lanes (dedup_minhash_cluster)
-    can cache ONE corpus pass and feed it to both the pair pipeline and
-    their own node/member bookkeeping."""
+    DISTINCT content. Shared so dedup_minhash_cluster can cache ONE
+    corpus pass and feed it to both the signature stage and its own
+    node/member bookkeeping."""
     fingerprint = F.concat_ws(
         " ", F.array_sort(F.array_distinct(F.filter(F.split("text", " "), lambda x: x != "")))
     )
@@ -468,40 +466,28 @@ def _fingerprint_groups(docs: DataFrame) -> DataFrame:
     )
 
 
-def _lsh_pairs_from_groups(spark: SparkSession, groups: DataFrame) -> DataFrame:
-    """Stage 2 of dedup_minhash_lsh (see its docstring for the full
-    design history): signatures → banding → candidate join →
-    first-matching-band dedup → signature-estimate scoring."""
+def _signatures(groups: DataFrame) -> DataFrame:
+    """(rep_id, n_members, sig, bh) per fingerprint group: the 64 MinHash
+    minima and the 8 band hashes both MinHash lanes over fingerprint
+    groups start from. Empty-token docs (empty th array) drop out."""
     # one xxhash64 per token, then 64 in-row permutation minima — no
-    # explode, no shuffle; empty-token docs (empty th array) drop out just
-    # as they produced no signature rows in the agg formulation
+    # explode, no shuffle
     th_arr = F.transform(
         F.filter(F.split("fp", " "), lambda x: x != ""),
         lambda tk: F.pmod(F.xxhash64(tk), F.lit(_MINHASH_P)),
     )
     # the 64 permutation minima are ONE Arrow-batched pandas_udf doing a
-    # vectorized (64×t) multiply-add-mod + min per document (round 3).
-    # History: round 1 exploded to corpus token rows (a shuffle), round 2
-    # moved to 64 in-row array_min∘transform HOF expressions (shuffle-free
-    # but INTERPRETED — 64·t lambda evaluations per doc dominated the op
-    # at ~3.5s of the 6.3s solo time at sf0.1); the numpy form computes
-    # the identical int64 arithmetic ((a·h+b) mod p, h pre-reduced mod p
-    # JVM-side) at BLAS-free vectorized speed, ~10× less signature-stage
-    # wall. Same signatures bit-for-bit — the A/B and the pinned
-    # candidate-pair fixture test both verify.
+    # vectorized (64×t) multiply-add-mod + min per document ((a·h+b) mod
+    # p, h pre-reduced mod p JVM-side); interpreted array_min∘transform
+    # HOFs measured ~10× more signature-stage wall
     sig = _minhash_sig_udf()(F.col("th"))
-    # sigs fans out into 4 plan branches (bands ×2 join sides + 2
-    # broadcast lookups) — cache it or the parquet scan + fingerprint
-    # groupBy re-runs per branch. Tiny: one row per DISTINCT document.
-    # band hashes ride along with the signature row: needed for banding
-    # AND for the first-matching-band dedup below
     band_hashes = F.array(
         *[
             F.xxhash64(F.lit(band), F.slice("sig2", band * _BAND_ROWS + 1, _BAND_ROWS))
             for band in range(_N_BANDS)
         ]
     )
-    sigs = (
+    return (
         groups.select("rep_id", "n_members", th_arr.alias("th"))
         .filter(F.size("th") > 0)
         .select("rep_id", "n_members", sig.alias("sig2"))
@@ -511,8 +497,17 @@ def _lsh_pairs_from_groups(spark: SparkSession, groups: DataFrame) -> DataFrame:
             F.col("sig2").alias("sig"),
             band_hashes.alias("bh"),
         )
-        .cache()
     )
+
+
+def _lsh_pairs_from_groups(spark: SparkSession, groups: DataFrame) -> DataFrame:
+    """Stage 2 of dedup_minhash_lsh (see its docstring for the full
+    design history): signatures → banding → candidate join →
+    first-matching-band dedup → signature-estimate scoring."""
+    # sigs fans out into 4 plan branches (bands ×2 join sides + 2
+    # broadcast lookups) — cache it or the parquet scan + fingerprint
+    # groupBy re-runs per branch. Tiny: one row per DISTINCT document.
+    sigs = _signatures(groups).cache()
 
     # Candidate-stage parallelism is chosen from a MEASURED statistic
     # (the cached signature count — one scalar, AQE-style): the band
@@ -962,49 +957,171 @@ def dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("dedup_minhash_cluster")  # rows-only: composes the hash-specific LSH lane
+#: Closure edge test of the cluster lane: est = n_match/64 ≥ 0.8, the
+#: Jaccard target itself, not the pair lane's 0.75 reporting margin —
+#: transitive closure amplifies permissiveness (one sub-threshold edge
+#: glues two whole clusters; dedup_cluster_recall_eval measured pair
+#: precision 0.18 with 0.75 edges vs 0.849 at 0.8).
+_CLOSURE_MIN_MATCH = 52  # ceil(0.8 · _N_HASHES)
+
+#: Hot-bucket split of the cluster lane: a (band, bucket) with n members
+#: is cut into ceil(n / _BUCKET_BLOCK) blocks, and each (i ≤ j) block
+#: pair is its own shuffle key, so no key holds more than _BUCKET_BLOCK²
+#: pairs and a hot bucket's keys spread over the tasks (a dup-dense
+#: family collides in all 8 bands). Sized as a task granule: a
+#: 1024 × 1024 key of unrelated signatures scores in ~0.27 s on one core
+#: (4-vCPU VM); 256 made ~17 ms keys whose member replication cost more
+#: than it spread (dedup_minhash_cluster +0.55 s on a 5 000-doc corpus
+#: with 611-913-doc buckets, +1.5 s on the 10× dup-dense corpus).
+_BUCKET_BLOCK = 1024
+
+#: Signature pairs compared per numpy step inside a task (bounds the
+#: gathered (pairs × 64) int32 temporaries to a few MB).
+_PAIR_CHUNK = 1 << 15
+
+
+def _score_buckets(batches):
+    """mapInArrow body of the cluster lane. Rows are bucket members
+    keyed (band, bucket, bi, bj) with their block ``blk`` and int64[64]
+    ``sig``. Scores the in-block pairs of the task's keys — all pairs of
+    a diagonal key (bi == bj), block-bi × block-bj pairs otherwise —
+    and unions those with ≥ _CLOSURE_MIN_MATCH matching slots into a
+    task-local star forest, which is all it yields, as (src, dst). A
+    pair whose ends the forest already connects is not scored: its edge
+    could not change the components."""
+    import numpy as np
+    import pyarrow as pa
+
+    from .matching import _link
+
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    tbl = pa.Table.from_batches(batches)
+    band, bucket, bi, bj, blk, rep = (
+        tbl.column(c).to_numpy() for c in ("band", "bucket", "bi", "bj", "blk", "rep_id")
+    )
+    order = np.lexsort((blk, bj, bi, bucket, band))
+    band, bucket, bi, bj, blk, rep = (x[order] for x in (band, bucket, bi, bj, blk, rep))
+    sig = (
+        tbl.column("sig").combine_chunks().flatten().to_numpy()
+        .reshape(-1, _N_HASHES)[order]
+        .astype(np.int32)  # minima < 2^31 - 1
+    )
+    n = rep.size
+    pos = np.arange(n)
+
+    def run_ends(*keys):
+        # for every row, the end index of its run of equal keys
+        new = np.zeros(n, bool)
+        new[0] = True
+        for k in keys:
+            new[1:] |= k[1:] != k[:-1]
+        starts = np.flatnonzero(new)
+        return np.append(starts[1:], n)[np.cumsum(new) - 1]
+
+    # a cross key (bi < bj) holds block bi, then block bj (sorted by
+    # blk): block-bi rows pair with the block-bj rows, block-bj rows
+    # with nothing; a diagonal key pairs every row with the later rows
+    first = np.where(bi == bj, pos + 1, run_ends(band, bucket, bi, bj, blk))
+    cnt = run_ends(band, bucket, bi, bj) - first
+    cum = np.cumsum(cnt)
+    ids, node = np.unique(rep, return_inverse=True)
+    comp = np.arange(ids.size)
+    lo = 0
+    while lo < n:
+        hi = max(int(np.searchsorted(cum, cum[lo] - cnt[lo] + _PAIR_CHUNK, "right")), lo + 1)
+        c = cnt[lo:hi]
+        a = np.repeat(pos[lo:hi], c)
+        b = np.repeat(first[lo:hi], c) + np.arange(a.size) - np.repeat(np.cumsum(c) - c, c)
+        live = comp[node[a]] != comp[node[b]]
+        a, b = a[live], b[live]
+        ok = (sig[a] == sig[b]).sum(axis=1) >= _CLOSURE_MIN_MATCH
+        comp = _link(comp, node[a[ok]], node[b[ok]])
+        lo = hi
+    moved = comp != np.arange(ids.size)
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids[moved], pa.int64()), pa.array(ids[comp[moved]], pa.int64())],
+        names=["src", "dst"],
+    )
+
+
+def _bucket_forest(spark: SparkSession, sigs: DataFrame) -> DataFrame:
+    """Cluster-lane edge builder: the candidate pairs are exactly the
+    pairs sharing a (band, bucket) in any band, as in the pair lane, but
+    each bucket is verified where it lands. Band rows carry the 64-long
+    signature; singleton buckets drop; a bucket larger than _BUCKET_BLOCK
+    is cut into blocks and every member is replicated to the (i ≤ j)
+    block-pair keys of its block; one repartition on the key puts each
+    block pair in one task, and ``_score_buckets`` scores it with numpy
+    and emits only the task's star forest of verified edges. No
+    signature collect, broadcast, band self-join or pair-stream shuffle
+    exists; what leaves a task is at most one row per node it saw."""
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    by_bucket = Window.partitionBy("band", "bucket").orderBy("rep_id")
+    whole = by_bucket.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    members = (
+        sigs.select("rep_id", "sig", F.posexplode("bh").alias("band", "bucket"))
+        .select(
+            "*",
+            F.count(F.lit(1)).over(whole).alias("n"),
+            (F.row_number().over(by_bucket) - 1).alias("i"),
+        )
+        .filter(F.col("n") > 1)
+    )
+    n_blk = F.ceil(F.col("n") / F.lit(_BUCKET_BLOCK))
+    keyed = members.select(
+        "rep_id",
+        "sig",
+        "band",
+        "bucket",
+        (F.col("i") % n_blk).alias("blk"),
+        F.explode(F.sequence(F.lit(0).cast("long"), n_blk - 1)).alias("k"),
+    ).select(
+        "rep_id",
+        "sig",
+        "band",
+        "bucket",
+        "blk",
+        F.least("blk", "k").alias("bi"),
+        F.greatest("blk", "k").alias("bj"),
+    )
+    # numbered, so AQE cannot coalesce the scoring stage into one task
+    return keyed.repartition(n_parts, "band", "bucket", "bi", "bj").mapInArrow(
+        _score_buckets, "src bigint, dst bigint"
+    )
+
+
+@query("dedup_minhash_cluster")  # rows-only: minhash signatures are hash-impl-specific
 def dedup_minhash_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-form MinHash dedup — the documented swap for when pair
-    enumeration itself is the bottleneck (dedup_minhash_lsh's round-4
-    scale finding: dup-dense corpora have quadratically many near-dup
-    PAIRS, but only linearly many docs): LSH candidate pairs become
-    edges, large-star/small-star connected components collapse them in
-    O(log n) rounds, and the output is ONE row per representative —
-    (rep, cluster id, exact-dup member count, keeper flag), keeper =
-    min doc_id of the cluster. This is what a production dedup actually
-    writes at 100 TB: a doc→keeper mapping (linear), never the pair
-    list. Composes the two registered lanes verbatim, so it inherits
-    the minhash recall/precision measured by dedup_recall_eval and the
-    CC correctness pinned by the twostar oracle lane.
+    """Cluster-form MinHash dedup — the swap for when pair enumeration
+    itself is the bottleneck (dup-dense corpora have quadratically many
+    near-dup PAIRS, but only linearly many docs). The output is ONE row
+    per fingerprint representative — (rep, cluster id, exact-dup member
+    count, keeper flag), keeper = min doc_id of the cluster: the
+    doc→keeper mapping a production dedup writes at 100 TB, never the
+    pair list.
 
-    Edge threshold (round 4, driven by dedup_cluster_recall_eval): the
-    closure runs over pairs with est ≥ 0.8 — the actual Jaccard target —
-    NOT the pair lane's 0.75 candidate margin. Transitive closure
-    amplifies permissiveness (one sub-threshold edge glues two whole
-    clusters): with 0.75 edges the clustering measured pair-precision
-    0.18 at recall 0.996; at 0.8 it measures recall 0.956 /
-    precision 0.849 on the same-lang pair universe
-    (dedup_cluster_recall_eval) — the margin belongs in pair
-    REPORTING, never in closure.
+    Plan: one cached fingerprint groupBy (``_fingerprint_groups``) feeds
+    the shared signature/band-hash stage (``_signatures``), the node list
+    and the member counts. Edges come from ``_bucket_forest``: each LSH
+    bucket is scored where it lands and every task emits only the star
+    forest of its verified pairs, so connected components
+    (``connected_components_twostar``, large-star/small-star) iterate over
+    at most partitions × nodes edges instead of the scored pair stream.
 
-    Round-5 plan work (each measured at the 10× dup-sparse scale):
-    ONE cached fingerprint groupBy feeds both the pair pipeline and the
-    node/member bookkeeping (was two corpus passes, 3.1 s apiece); the
-    edge feed is single-branch (the old symmetric unionAll put the LSH
-    pipeline in BOTH union branches and the first CC checkpoint
-    evaluated it twice); and the CC skips its defensive input distinct
-    (first-matching-band guarantees each pair exactly once)."""
+    Exactness against the pair lane: the candidate set is the same (pairs
+    sharing a bucket in any band), the edge test is the same (est =
+    n_match/64 ≥ 0.8, see _CLOSURE_MIN_MATCH), and neither duplicate
+    edges nor scoring order can change a union-find — so the components
+    equal those of dedup_minhash_lsh's est ≥ 0.8 pairs (pinned by
+    tests/test_units_round4b.py, with and without block splitting)."""
     from .matching import connected_components_twostar
 
-    docs = t(spark, sf_dir, "documents")
-    groups = _fingerprint_groups(docs).cache()
-    edges = (
-        _lsh_pairs_from_groups(spark, groups)
-        .filter(F.col("est_jaccard") >= 0.8)
-        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    )
+    groups = _fingerprint_groups(t(spark, sf_dir, "documents")).cache()
     labels, _ = connected_components_twostar(
-        groups.select(F.col("rep_id").alias("node")), edges, edges_unique=True
+        groups.select(F.col("rep_id").alias("node")),
+        _bucket_forest(spark, _signatures(groups)),
     )
     return (
         labels.join(groups, labels.node == groups.rep_id)

@@ -3,6 +3,7 @@ SemDeDup, variable-width span dedup, two-star connected components."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -151,15 +152,78 @@ def test_cc_loops_restore_session_shuffle_partitions(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_cc_loop_dop_rule():
-    from sap_cta_data_pipeline_spark.operators.matching import _cc_loop_dop
+def _union_find(edges, nodes=()):
+    """Reference components: node -> min node id of its component."""
+    parent = {}
 
-    assert _cc_loop_dop(0, 32) == 1          # empty graph still plans
-    assert _cc_loop_dop(1, 32) == 1
-    assert _cc_loop_dop(400_000, 32) == 1
-    assert _cc_loop_dop(400_001, 32) == 2
-    assert _cc_loop_dop(6_700_000, 32) == 17  # the measured sf1 graph
-    assert _cc_loop_dop(10**9, 32) == 32      # session width is the ceiling
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for x in nodes:
+        find(x)
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {x: find(x) for x in parent}
+
+
+def _forest_labels(edges):
+    """_star_forest's rows as node -> comp over every node it saw."""
+    from sap_cta_data_pipeline_spark.operators.matching import _star_forest
+
+    hi = np.array([u for u, _ in edges], dtype=np.int64)
+    lo = np.array([v for _, v in edges], dtype=np.int64)
+    node, comp = _star_forest(hi, lo)
+    assert len(set(node.tolist())) == len(node), "one row per node at most"
+    assert (comp < node).all()
+    got = {x: x for x in np.concatenate([hi, lo]).tolist()}
+    got.update(zip(node.tolist(), comp.tolist()))
+    return got
+
+
+@pytest.mark.parametrize("seed", range(12))
+def test_star_forest_matches_union_find_on_random_graphs(seed):
+    rng = np.random.default_rng(seed)
+    n_nodes = int(rng.integers(2, 400))
+    n_edges = int(rng.integers(0, 2 * n_nodes))
+    ids = rng.choice(10**12, size=n_nodes, replace=False)
+    edges = [
+        (int(ids[a]), int(ids[b]))
+        for a, b in rng.integers(0, n_nodes, size=(n_edges, 2))
+    ]
+    # duplicates, reversed duplicates and self-loops must not matter
+    edges += edges[: n_edges // 3] + [(v, u) for u, v in edges[: n_edges // 4]]
+    edges += [(int(ids[0]), int(ids[0]))]
+    assert _forest_labels(edges) == _union_find(edges)
+
+
+def test_star_forest_planted_chain_and_empty():
+    chain = [(i, i + 1) for i in range(63)]
+    rng = np.random.default_rng(0)
+    shuffled = [chain[i] for i in rng.permutation(len(chain))]
+    assert _forest_labels(shuffled) == {i: 0 for i in range(64)}
+    assert _forest_labels([]) == {}
+
+
+def test_contract_partition_handles_an_empty_partition():
+    from sap_cta_data_pipeline_spark.operators.matching import _contract_partition
+
+    (batch,) = _contract_partition(iter([]))
+    assert batch.num_rows == 0 and batch.schema.names == ["hi", "lo"]
+
+
+def test_twostar_contracts_inputs_with_empty_partitions_and_duplicates(spark):
+    """Duplicated edges spread over more partitions than edges (so some
+    partitions are empty) give the union-find components."""
+    pairs = [(1, 2), (2, 3), (3, 1), (7, 8), (8, 7), (2, 1), (1, 2)]
+    edges = spark.createDataFrame(pairs, schema="src bigint, dst bigint").repartition(16)
+    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 7, 8, 99)], schema="node bigint")
+    labels, _ = connected_components_twostar(nodes, edges)
+    assert {r.node: r.comp for r in labels.collect()} == _union_find(pairs, [99])
 
 
 def test_twostar_isolated_and_pair(spark):

@@ -13,6 +13,7 @@ from sap_cta_data_pipeline_spark.catalog import load_table
 from sap_cta_data_pipeline_spark.operators.sources import _scratch
 from sap_cta_data_pipeline_spark.operators.table_log import txnlog_snapshot
 from sap_cta_data_pipeline_spark.registry import QUERIES
+from tests.test_units_round4 import _union_find
 
 
 @pytest.fixture(scope="module")
@@ -83,6 +84,25 @@ def test_minhash_cluster_invariants(q):
     for p in q("dedup_minhash_lsh").collect():
         if p.est_jaccard >= 0.8:
             assert cluster_of[p.doc_a] == cluster_of[p.doc_b]
+
+
+@pytest.mark.parametrize("block", [None, 2], ids=["default_block", "block_2"])
+def test_minhash_cluster_equals_union_find_of_lsh_pairs(q, monkeypatch, block):
+    """Both directions: the cluster lane's components are exactly the
+    union-find components of dedup_minhash_lsh's closure-grade pairs
+    (est >= 0.8) over the lane's representatives — no missed merge and
+    no over-merge. Block 2 forces the hot-bucket block split on every
+    bucket with more than two members."""
+    from sap_cta_data_pipeline_spark.operators import text as tx
+
+    if block is not None:
+        monkeypatch.setattr(tx, "_BUCKET_BLOCK", block)
+    cluster_of = {r.rep_id: r.cluster_id for r in q("dedup_minhash_cluster").collect()}
+    pairs = [
+        (p.doc_a, p.doc_b) for p in q("dedup_minhash_lsh").collect() if p.est_jaccard >= 0.8
+    ]
+    assert cluster_of == _union_find(pairs, cluster_of)
+    assert len(set(cluster_of.values())) < len(cluster_of)  # some merges happened
 
 
 def test_txnlog_time_travel(q, spark, sf_dir):
