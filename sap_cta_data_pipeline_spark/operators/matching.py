@@ -30,7 +30,7 @@ survives. That closure is a connected-components computation:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table as t
@@ -120,9 +120,10 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     comp ← comp[comp] (pointer jumping), so label chains collapse
     exponentially — rounds ≈ O(log diameter), not diameter. Every step
     is a keyed join/agg over the label table, eagerly localCheckpoint-ed
-    so round R's plan stays flat instead of nesting R joins deep; one
-    scalar convergence count per round crosses the driver — the
-    iterative-algorithm lane."""
+    so round R's plan stays flat instead of nesting R joins deep; the
+    number of labels a round changed is observed inside that checkpoint
+    job, so one scalar per round crosses the driver and no extra job
+    runs — the iterative-algorithm lane."""
     forest = _contract(
         edges.select(F.col("src").alias("hi"), F.col("dst").alias("lo"))
     )
@@ -143,25 +144,22 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         stepped = labels.join(prop, labels.node == prop.dst, "left").select(
             "node",
             F.least(F.col("comp"), F.coalesce(F.col("nc"), F.col("comp"))).alias("comp"),
+            F.col("comp").alias("old"),
         )
         # pointer jump: replace my label by my label's label (comp is
         # monotone non-increasing, so comp[comp] ≤ comp always holds)
         parent = stepped.select(
             F.col("node").alias("comp"), F.col("comp").alias("jump")
         )
-        new_labels = (
+        obs = Observation()
+        labels = (
             stepped.join(parent, "comp", "left")
-            .select("node", F.coalesce(F.col("jump"), F.col("comp")).alias("comp"))
+            .select("node", F.coalesce(F.col("jump"), F.col("comp")).alias("comp"), "old")
+            .observe(obs, F.count(F.when(F.col("comp") != F.col("old"), 1)).alias("changed"))
+            .select("node", "comp")
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if obs.get["changed"] == 0:
             break
     return labels
 
@@ -223,7 +221,8 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Distribution contract: every per-round operation is keyed on the node
     id (join + min-agg over the reps-sized label table, the contracted
     edge table checkpointed once and reused each round); one scalar
-    convergence count per round crosses the driver. The oracle is
+    convergence count per round, observed inside the round's checkpoint
+    job, crosses the driver. The oracle is
     the recursive-CTE min-reachable-label fixpoint — identical answer by
     induction on path length."""
     groups, edges = _neardup_graph(spark, sf_dir)
@@ -298,8 +297,6 @@ def _checkpoint_fp(edges: DataFrame) -> tuple[DataFrame, tuple]:
     job). A false-equal, which would end the loop before its fixed
     point, needs a simultaneous 64-bit sum AND xor collision at equal
     counts (~2^-128); a false-unequal only costs one more round."""
-    from pyspark.sql import Observation
-
     obs = Observation()
     edges = edges.observe(
         obs,

@@ -520,7 +520,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-element band array — a single projection whose cost no longer
     depends on ``.cache()`` keeping 4 plan branches cheap. The one cache
     is the tiny per-distinct-doc signature table feeding both join sides
-    and both broadcast lookups."""
+    and both signature lookups."""
     sigs = simhash_signatures(spark, sf_dir).cache()
 
     band_arr = F.array(
@@ -543,17 +543,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sa = sigs.select(F.col("rep_id").alias("doc_a"), F.col("simhash").alias("sh_a"))
     sb = sigs.select(F.col("rep_id").alias("doc_b"), F.col("simhash").alias("sh_b"))
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    # signature tables are CORPUS-scale (one slim row per distinct doc):
-    # broadcast only under the measured ceiling shared with the minhash
-    # lane (_SCORING_BROADCAST_MAX — round-8 sweep, SCALE.md S17); past
-    # it the attach joins go keyed SHUFFLE_HASH with the signature side
-    # building the hash table (always smaller than the pair stream).
-    from .text import _SCORING_BROADCAST_MAX
-
-    if sigs.count() > _SCORING_BROADCAST_MAX:
-        sa, sb = sa.hint("shuffle_hash"), sb.hint("shuffle_hash")
-    else:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
+    # signature tables are CORPUS-scale (one slim row per distinct doc), so
+    # the attach joins carry no hint: the session's autoBroadcastJoinThreshold
+    # policy broadcasts them while they are small and shuffles them past it
     return (
         raw_pairs.join(sa, "doc_a")
         .join(sb, "doc_b")

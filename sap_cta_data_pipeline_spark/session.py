@@ -29,9 +29,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # Round-8 broadcast policy (SCALE.md S17): explicit F.broadcast() is
     # reserved for builds BOUNDED BY CONSTRUCTION (1-row aggregates,
     # fixed dims like nation/region, k-row grids/centroids) or guarded by
-    # a MEASURED gate (minhash scoring, tfidf vocab). Scale-growing sides
-    # (TPC-H part/supplier, per-key aggregates) carry no hint — Catalyst/
-    # AQE decides from measured stats against this threshold. Round-9
+    # a MEASURED gate (tfidf vocab). Scale-growing sides (TPC-H
+    # part/supplier, per-key aggregates, simhash signatures) carry no
+    # hint — Catalyst/AQE decides from measured stats against this threshold. Round-9
     # re-sizing: the round-8 256m value let a 64-256 MB estimated build
     # through on the sf30 relational rung, and the single-threaded
     # driver-side hash-table build DOUBLED join_multiway's wall

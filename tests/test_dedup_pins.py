@@ -32,7 +32,17 @@ def _digest(pdf) -> str:
     return hashlib.sha256(pdf.to_csv(index=False).encode()).hexdigest()[:16]
 
 
-def test_minhash_lsh_pinned(spark):
+@pytest.fixture(params=[None, 2], ids=["default_block", "block_2"])
+def bucket_block(request, monkeypatch):
+    """Runs a MinHash pin at the default _BUCKET_BLOCK and at 2, which
+    cuts every bucket with more than two members into blocks."""
+    from sap_cta_data_pipeline_spark.operators import text as tx
+
+    if request.param is not None:
+        monkeypatch.setattr(tx, "_BUCKET_BLOCK", request.param)
+
+
+def test_minhash_lsh_pinned(spark, bucket_block):
     pdf = _frame(spark, "dedup_minhash_lsh")
     assert list(pdf.columns) == [
         "doc_a", "doc_b", "est_jaccard", "n_members_a", "n_members_b",
@@ -42,6 +52,16 @@ def test_minhash_lsh_pinned(spark):
     assert not pdf.duplicated(["doc_a", "doc_b"]).any()
     assert len(pdf) == 21563
     assert _digest(pdf) == "72ec533a9608ec06"
+
+
+def test_minhash_incremental_pinned(spark, bucket_block):
+    pdf = _frame(spark, "dedup_minhash_incremental")
+    assert list(pdf.columns) == [
+        "batch_id", "n_members", "best_match", "est_jaccard", "is_near_dup",
+    ]
+    assert not pdf.duplicated(["batch_id"]).any()
+    assert len(pdf) == 228
+    assert _digest(pdf) == "6ba1982b5b948140"
 
 
 def test_simhash_pinned(spark):
@@ -54,42 +74,50 @@ def test_simhash_pinned(spark):
     assert _digest(pdf) == "e60c290d0411410b"
 
 
-def test_minhash_scoring_lanes_agree(spark, monkeypatch):
-    """Round 13: the numpy scoring lane (matrix-gather pandas UDFs, the
-    default under _SCORING_NUMPY_MAX) must produce byte-identical pairs
-    to the broadcast zip-compare tier it replaced — forced here by
-    dropping the numpy gate to 0."""
-    from sap_cta_data_pipeline_spark.operators import text as tx
+def _footprint(spark):
+    """(broadcast ids held by the block managers, persisted RDDs) once
+    the garbage the caller dropped has been collected — broadcasts are
+    counted by their ``broadcast_N`` block ids, as perfbench does."""
+    import gc
+    import re
+    import time
 
-    numpy_pdf = _frame(spark, "dedup_minhash_lsh")
-    monkeypatch.setattr(tx, "_SCORING_NUMPY_MAX", 0)
-    hof_pdf = _frame(spark, "dedup_minhash_lsh")
-    assert _digest(numpy_pdf) == _digest(hof_pdf)
+    jvm = spark.sparkContext._jvm
+    ssc = spark.sparkContext._jsc.sc()
+    seen = None
+    for _ in range(20):
+        gc.collect()  # drops the py4j handles of the frames
+        jvm.java.lang.System.gc()  # lets the ContextCleaner see them
+        time.sleep(0.5)
+        statuses = ssc.env().blockManager().master().getStorageStatus()
+        ids = set()
+        for i in range(len(statuses)):
+            keys = jvm.scala.collection.JavaConverters.mapAsJavaMap(
+                statuses[i].blocks()
+            ).keySet().toString()
+            ids.update(re.findall(r"broadcast_(\d+)", keys))
+        now = (len(ids), int(spark.sparkContext._jsc.getPersistentRDDs().size()))
+        if now == seen:
+            return now
+        seen = now
+    return seen
 
 
-def test_minhash_incremental_scoring_lanes_agree(spark, monkeypatch):
-    """Round 14: the incremental lane's numpy scoring tier (same gate
-    and matrix-gather UDF family as the pair lane) must produce
-    byte-identical best-match verdicts to the broadcast zip-compare
-    tier — forced by dropping the numpy gate to 0."""
-    from sap_cta_data_pipeline_spark.operators import text as tx
-
-    numpy_pdf = _frame(spark, "dedup_minhash_incremental")
-    monkeypatch.setattr(tx, "_SCORING_NUMPY_MAX", 0)
-    hof_pdf = _frame(spark, "dedup_minhash_incremental")
-    assert _digest(numpy_pdf) == _digest(hof_pdf)
-
-
-def test_numpy_tier_broadcasts_are_retired(spark):
-    """Round 14 (ADVICE r13): the numpy tiers' matrix broadcasts must
-    not accumulate across invocations — each lane entry retires the
-    previous invocations' broadcasts, so the registry stays bounded and
-    the driver block manager holds at most the LIVE lane's matrices."""
-    from sap_cta_data_pipeline_spark.operators import text as tx
-
-    for _ in range(3):
-        QUERIES["dedup_minhash_lsh"](spark, SF0001).count()
-    assert len(tx._NUMPY_TIER_BCS) <= 1
+def test_minhash_lanes_leave_no_broadcast_or_cache(spark, tmp_path):
+    """Run twice and materialized, the pair and incremental lanes leave
+    the session's broadcast blocks and persisted RDDs as they found
+    them: they score inside their tasks and cache nothing. The input is
+    linked under a fresh directory, so no earlier test's plan (and
+    nothing it cached) matches the lanes' plans."""
+    os.symlink(
+        os.path.join(SF0001, "documents.parquet"), tmp_path / "documents.parquet"
+    )
+    before = _footprint(spark)
     for _ in range(2):
-        QUERIES["dedup_minhash_incremental"](spark, SF0001).count()
-    assert len(tx._NUMPY_TIER_BCS) <= 1
+        for key in ("dedup_minhash_lsh", "dedup_minhash_incremental"):
+            QUERIES[key](spark, str(tmp_path)).write.format("noop").mode(
+                "overwrite"
+            ).save()
+    after = _footprint(spark)
+    assert after[0] <= before[0], f"broadcast blocks {before[0]} -> {after[0]}"
+    assert after[1] <= before[1], f"persisted RDDs {before[1]} -> {after[1]}"

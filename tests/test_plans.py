@@ -634,17 +634,12 @@ def test_dedup_semantic_one_shuffle_family(q):
 
 
 def test_minhash_no_pair_stream_aggregate(q):
-    """Round-4 rework: pair dedup is the first-matching-band FILTER —
-    there must be no distinct/hash-agg over the candidate pair stream
-    (the band join feeds broadcast lookups + filter, then scoring)."""
+    """Pairs are scored inside their bucket's task: one mapInArrow over
+    the (band, bucket, block-pair)-keyed band rows, and no join, pair
+    distinct or exchange keyed on the pair columns anywhere."""
     plan = plan_text(q("dedup_minhash_lsh"), "simple")
-    # the first-band filter is present — either the numpy lane's pair
-    # UDF (round 13, corpora under _SCORING_NUMPY_MAX) or the broadcast
-    # zip-compare's array_position (the bigger-corpus tiers)
-    assert "_first_band_np" in plan or "array_position" in plan
-    # at fixture scale the big-corpus gate is off: NO pair-stream
-    # repartition/distinct exchange keyed on the pair columns may exist
-    # (the round-3 plan had `Exchange hashpartitioning(doc_a, doc_b ...)`)
+    assert plan.count("MapInArrow") == 1
+    assert "Join" not in plan
     assert "hashpartitioning(doc_a" not in plan
 
 

@@ -1,5 +1,4 @@
-"""Round-5 unit pins: schema-discovery shred, HLL rollup accuracy, and
-the minhash scoring-join gate."""
+"""Round-5 unit pins: schema-discovery shred and HLL rollup accuracy."""
 
 from __future__ import annotations
 
@@ -70,34 +69,6 @@ def test_hll_rollup_within_5pct_of_exact(q):
             exact[b].n_users, 1
         )
         assert rel < 0.05, f"bucket {b}: rel err {rel:.3f}"
-
-
-def test_minhash_scoring_attach_respects_gate(spark, sf_dir):
-    """Below the broadcast ceiling the scoring joins must broadcast
-    (plan contains BroadcastHashJoin feeding the est_jaccard filter);
-    the shuffle-hash swap is gated on corpus size, not hardcoded."""
-    plan = QUERIES["dedup_minhash_lsh"](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
-def test_minhash_scoring_swaps_past_broadcast_ceiling(spark, sf_dir, monkeypatch):
-    """Past _SCORING_BROADCAST_MAX distinct docs the same plan must use
-    keyed shuffle-hash scoring joins instead of broadcasting a
-    corpus-sized signature table (threshold forced to 0 to exercise the
-    huge-corpus branch on the fixture corpus)."""
-    from sap_cta_data_pipeline_spark.operators import text as text_ops
-
-    monkeypatch.setattr(text_ops, "_SCORING_BROADCAST_MAX", 0)
-    # round 13 added the numpy tier BELOW the broadcast tier — zero it
-    # too so the huge-corpus branch is the one exercised
-    monkeypatch.setattr(text_ops, "_SCORING_NUMPY_MAX", 0)
-    plan = (
-        QUERIES["dedup_minhash_lsh"](spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "ShuffledHashJoin" in plan
 
 
 # ---------------------------------------------------------------- batch BQ
