@@ -318,12 +318,10 @@ def main() -> int:
     spark.read.parquet(table_path(sf_dir, "region")).count()
     # pre-build the lakehouse fixture untimed (table WRITE is not the
     # measured surface; the timed runs measure log replay + DV read)
-    from sap_cta_data_pipeline_spark.operators.delta_reader import (
-        _build_dv_fixture,
-        _fixture_dir,
-    )
+    from sap_cta_data_pipeline_spark.operators.delta_reader import _build_dv_fixture
+    from sap_cta_data_pipeline_spark.operators.sources import built
 
-    _fixture_dir(spark, sf_dir, "delta_table_dv", _build_dv_fixture)
+    built(sf_dir, "delta_table_dv", lambda p: _build_dv_fixture(spark, sf_dir, p))
     # NOTE: caching base tables was measured and REJECTED — InMemoryRelation
     # columnar scans of array<float> are slower than the parquet vectorized
     # reader for the higher-order-function-heavy vector ops (param sweep

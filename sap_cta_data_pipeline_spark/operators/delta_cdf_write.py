@@ -45,7 +45,7 @@ from .delta_reader import (
     delta_table_changes,
 )
 from .lakehouse_interop import _stage_single_parquet
-from .sources import _scratch
+from .sources import built
 
 
 def _log_tip(base: str) -> int:
@@ -169,13 +169,8 @@ def _cdf_table(spark: SparkSession, sf_dir: str) -> str:
     """Shared 3-version CDF-enabled fixture built through the emitting
     writers: v0 INSERT the orders subset, v1 UPDATE (+10 on even keys),
     v2 DELETE keys divisible by 3."""
-    base = _scratch(sf_dir, "delta_cdf_write")
-    marker = os.path.join(base, "_FIXTURE_READY")
-    if not os.path.exists(marker):
-        import shutil
 
-        if os.path.isdir(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         o = (
             load_table(spark, sf_dir, "orders")
             .filter(_SUBSET)
@@ -202,9 +197,8 @@ def _cdf_table(spark: SparkSession, sf_dir: str) -> str:
             {"o_totalprice": "o_totalprice + 10"},
         )
         delta_delete_where_cdf(spark, base, "o_orderkey % 3 = 0")
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "delta_cdf_write", build)
 
 
 @query(
@@ -428,13 +422,8 @@ def delta_merge_cdf_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: change volume is O(matched + inserted); the probe and
     rewrites are the plain MERGE's file-bounded envelope."""
-    base = _scratch(sf_dir, "delta_merge_cdf")
-    marker = os.path.join(base, "_FIXTURE_READY")
-    if not os.path.exists(marker):
-        import shutil
 
-        if os.path.isdir(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         o = (
             load_table(spark, sf_dir, "orders")
             .filter(_MRG_SUBSET)
@@ -462,6 +451,6 @@ def delta_merge_cdf_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         delta_merge_cdf(spark, base, src, "o_orderkey", ["o_totalprice"])
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "delta_merge_cdf", build)
     return delta_table_changes(spark, base, 1, 1)

@@ -43,7 +43,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -62,7 +61,7 @@ from .delta_reader import (
     delta_state,
 )
 from .lakehouse_interop import _build_sink_fixture, _stage_single_parquet
-from .sources import _scratch
+from .sources import _scratch, built
 
 
 class ConcurrentMergeError(Exception):
@@ -636,12 +635,8 @@ def delta_update_cow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .lakehouse_interop import delta_delete_where
 
     base = _build_sink_fixture(spark, sf_dir)
-    clone = _scratch(sf_dir, "delta_update_cow")
-    if not os.path.exists(os.path.join(clone, "_FIXTURE_READY")):
-        if os.path.isdir(clone):
-            shutil.rmtree(clone)
-        shutil.copytree(base, clone)
-        os.remove(os.path.join(clone, "_FIXTURE_READY"))
+
+    def build(clone: str) -> None:
         delta_delete_where(spark, clone, "n_nationkey = 2")
         delta_update_where(
             spark,
@@ -649,8 +644,8 @@ def delta_update_cow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_nationkey % 5 = 1",
             {"n_regionkey": "n_regionkey + 10"},
         )
-        with open(os.path.join(clone, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    clone = built(sf_dir, "delta_update_cow", build, copy_of=base)
     return delta_snapshot(spark, clone).select("n_nationkey", "n_name", "n_regionkey")
 
 
@@ -675,12 +670,8 @@ def delta_merge_into_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL the inserts. Tests pin single-commit atomicity and the
     stale-snapshot abort (ConcurrentMergeError)."""
     base = _build_sink_fixture(spark, sf_dir)
-    clone = _scratch(sf_dir, "delta_merge_into")
-    if not os.path.exists(os.path.join(clone, "_FIXTURE_READY")):
-        if os.path.isdir(clone):
-            shutil.rmtree(clone)
-        shutil.copytree(base, clone)
-        os.remove(os.path.join(clone, "_FIXTURE_READY"))
+
+    def build(clone: str) -> None:
         n = t(spark, sf_dir, "nation").filter("n_nationkey < 5")
         src = n.select(
             "n_nationkey",
@@ -694,8 +685,8 @@ def delta_merge_into_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         delta_merge_into(spark, clone, src, "n_nationkey", ["n_name"])
-        with open(os.path.join(clone, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    clone = built(sf_dir, "delta_merge_into", build, copy_of=base)
     return delta_snapshot(spark, clone).select("n_nationkey", "n_name", "n_regionkey")
 
 
@@ -781,17 +772,13 @@ def delta_update_colmap_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     from .lakehouse_interop import _build_colmap_fixture
 
     src = _build_colmap_fixture(spark, sf_dir)
-    clone = _scratch(sf_dir, "delta_colmap_update")
-    if not os.path.exists(os.path.join(clone, "_FIXTURE_READY")):
-        if os.path.isdir(clone):
-            shutil.rmtree(clone)
-        shutil.copytree(src, clone)
-        os.remove(os.path.join(clone, "_FIXTURE_READY"))
+
+    def build(clone: str) -> None:
         delta_update_where(
             spark, clone, "n_nationkey % 5 = 1", {"n_regionkey": "n_regionkey + 10"}
         )
-        with open(os.path.join(clone, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    clone = built(sf_dir, "delta_colmap_update", build, copy_of=src)
     return delta_snapshot(spark, clone).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -819,15 +806,12 @@ def delta_delete_colmap_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .lakehouse_interop import _build_colmap_fixture, delta_delete_where
 
     src = _build_colmap_fixture(spark, sf_dir)
-    clone = _scratch(sf_dir, "delta_colmap_delete_dv")
-    if not os.path.exists(os.path.join(clone, "_FIXTURE_READY")):
-        if os.path.isdir(clone):
-            shutil.rmtree(clone)
-        shutil.copytree(src, clone)
-        os.remove(os.path.join(clone, "_FIXTURE_READY"))
-        delta_delete_where(spark, clone, "n_regionkey = 2")
-        with open(os.path.join(clone, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+    clone = built(
+        sf_dir,
+        "delta_colmap_delete_dv",
+        lambda p: delta_delete_where(spark, p, "n_regionkey = 2"),
+        copy_of=src,
+    )
     return delta_snapshot(spark, clone).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -863,12 +847,10 @@ def delta_merge_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     file-bounded envelope; insert routing collects only the DISTINCT
     partition tuples of the not-matched rows (bounded by partitions
     touched — the delta_append_partitioned discovery class)."""
-    base = _scratch(sf_dir, "delta_merge_part")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         from .lakehouse_interop import delta_append_partitioned
 
-        if os.path.isdir(base):
-            shutil.rmtree(base)
         n = t(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -897,8 +879,8 @@ def delta_merge_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
             )
         )
         delta_merge_into(spark, base, src, "n_nationkey", ["n_name"])
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "delta_merge_part", build)
     return delta_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )

@@ -34,6 +34,7 @@ import json
 import os
 import re
 import urllib.parse
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,7 +42,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table as t, table_path
 from ..registry import query
-from .sources import _scratch, drain_to_memory
+from .sources import built, drain_to_memory
 
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 
@@ -663,8 +664,6 @@ def _build_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         json.dump({"version": 2, "size": len(cp_rows)}, fh)
 
     _commit(log_dir, 3, [_remove("part-d.parquet"), _add("part-e.parquet")])
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 def _build_partitioned_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
@@ -698,15 +697,6 @@ def _build_partitioned_fixture(spark: SparkSession, sf_dir: str, base: str) -> N
             *adds,
         ],
     )
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
-
-
-def _fixture_dir(spark: SparkSession, sf_dir: str, name: str, builder) -> str:
-    base = _scratch(sf_dir, name)
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        builder(spark, sf_dir, base)
-    return base
 
 
 # ---------------------------------------------------------------- queries
@@ -727,7 +717,7 @@ def scan_delta_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one hash. This closes the round-4 verdict's one non-env-blocked
     gap: a user's existing Delta table is readable with zero new
     dependencies."""
-    base = _fixture_dir(spark, sf_dir, "delta_table", _build_fixture)
+    base = built(sf_dir, "delta_table", partial(_build_fixture, spark, sf_dir))
     return delta_snapshot(spark, base).select("n_nationkey", "n_name", "n_regionkey")
 
 
@@ -748,7 +738,7 @@ def scan_delta_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     that v0 state in pure SQL, so the hash certifies the reader pins the
     HISTORICAL file set, not the current one. Versions 1/2/3 equal clean
     nation and are pinned in tests/test_delta_reader.py."""
-    base = _fixture_dir(spark, sf_dir, "delta_table", _build_fixture)
+    base = built(sf_dir, "delta_table", partial(_build_fixture, spark, sf_dir))
     return delta_snapshot(spark, base, version=0).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -771,8 +761,8 @@ def scan_delta_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta partition-pruning contract: at 100 TB a one-partition query
     plans one partition's files from pure metadata, no listing, no
     footer reads of skipped files."""
-    base = _fixture_dir(
-        spark, sf_dir, "delta_table_part", _build_partitioned_fixture
+    base = built(
+        sf_dir, "delta_table_part", partial(_build_partitioned_fixture, spark, sf_dir)
     )
     return delta_snapshot(
         spark, base, partition_filter={"n_regionkey": "2"}
@@ -850,8 +840,6 @@ def _build_dv_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         base, [0, 2], prefix="ab"
     )
     _commit(log_dir, 2, [_remove("part-hi.parquet"), hi_add])
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 @query(
@@ -877,7 +865,7 @@ def scan_delta_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality (it ships as a broadcast, never a shuffle), and files
     WITHOUT a DV take the plain scan path — zero overhead where there is
     nothing to delete."""
-    base = _fixture_dir(spark, sf_dir, "delta_table_dv", _build_dv_fixture)
+    base = built(sf_dir, "delta_table_dv", partial(_build_dv_fixture, spark, sf_dir))
     return delta_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1053,8 +1041,6 @@ def _build_cdf_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         ],
     )
     _commit(log_dir, 2, [_remove("part-upd.parquet")])
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 @query(
@@ -1084,7 +1070,7 @@ def scan_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     POST-update names. The gate on delta.enableChangeDataFeed is pinned
     in tests. This is the incremental-consumer contract: downstream
     pipelines tail exactly these rows instead of diffing snapshots."""
-    base = _fixture_dir(spark, sf_dir, "delta_table_cdf", _build_cdf_fixture)
+    base = built(sf_dir, "delta_table_cdf", partial(_build_cdf_fixture, spark, sf_dir))
     return delta_table_changes(spark, base).select(
         "_commit_version", "_change_type", "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1209,7 +1195,7 @@ def stream_delta_cdf_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     split per emitted file from the commit JSONs and EXECUTORS read them
     (Arrow batches), the shape that holds at 100 TB; the TaskContext
     guard in read() pins that no change row transits the driver."""
-    base = _fixture_dir(spark, sf_dir, "delta_table_cdf", _build_cdf_fixture)
+    base = built(sf_dir, "delta_table_cdf", partial(_build_cdf_fixture, spark, sf_dir))
     spark.dataSource.register(_make_cdf_stream_datasource())
     stream = spark.readStream.format("delta_cdf_tail").option("path", base).load()
     return drain_to_memory(spark, sf_dir, stream, "cdf_tail")
@@ -1340,7 +1326,7 @@ def scan_delta_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     builder spaces commit mtimes), whose state is the clean nation
     (part-c + part-b). Resolution is pure log metadata — no data file
     is touched before the chosen snapshot scans."""
-    base = _fixture_dir(spark, sf_dir, "delta_table", _build_fixture)
+    base = built(sf_dir, "delta_table", partial(_build_fixture, spark, sf_dir))
     log_dir = os.path.join(base, "_delta_log")
     t1 = os.path.getmtime(os.path.join(log_dir, f"{1:020d}.json"))
     t2 = os.path.getmtime(os.path.join(log_dir, f"{2:020d}.json"))

@@ -29,7 +29,7 @@ from ..catalog import load_table
 from ..registry import query
 from .delta_reader import _meta_action, delta_snapshot, delta_state
 from .lakehouse_interop import delta_append_commit
-from .sources import _scratch
+from .sources import built
 
 
 class DeltaConstraintViolation(Exception):
@@ -161,8 +161,8 @@ def delta_write_check_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: enforcement is one extra map-side predicate + a 1-row audit
     agg per append — no shuffle, no second read of the table; cost is
     O(appended rows) however large the table already is."""
-    base = _scratch(sf_dir, "delta_check_constraint")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         o = (
             load_table(spark, sf_dir, "orders")
             .filter(_SUBSET)
@@ -180,8 +180,8 @@ def delta_write_check_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta_append_enforced(
             spark, base, o.filter("o_orderkey % 26 <> 0"), "half-b.parquet"
         )
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "delta_check_constraint", build)
     return delta_snapshot(spark, base)
 
 
@@ -208,8 +208,8 @@ def delta_write_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale: generation is a map-side projection at write time — zero
     read-side cost forever after, the classic shred-on-ingest trade."""
-    base = _scratch(sf_dir, "delta_generated_cols")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         o = (
             load_table(spark, sf_dir, "orders")
             .filter(_SUBSET)
@@ -228,6 +228,6 @@ def delta_write_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame
             },
         )
         delta_append_enforced(spark, base, o, "gen-a.parquet")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "delta_generated_cols", build)
     return delta_snapshot(spark, base)

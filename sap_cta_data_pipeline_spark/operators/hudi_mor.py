@@ -65,7 +65,7 @@ from pyspark.sql import types as T
 from ..catalog import load_table as t
 from ..functions.avro_codec import decode_record, encode_record
 from ..registry import query
-from .sources import _scratch
+from .sources import built
 
 _MAGIC = b"#HUDI#"
 _LOG_FORMAT_VERSION = 1
@@ -357,114 +357,112 @@ def _build_mor_fixture(spark: SparkSession, sf_dir: str) -> str:
     ``_hoodie_is_deleted``; an INFLIGHT deltacommit 003 wrote a garbage
     log that must stay invisible. Snapshot = clean nation minus the
     multiples of five."""
-    base = _scratch(sf_dir, "hudi_mor")
-    if os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        return base
-    n = t(spark, sf_dir, "nation")
-    based = n.select(
-        F.lit("001").alias("_hoodie_commit_time"),
-        F.col("n_nationkey").cast("string").alias("_hoodie_record_key"),
-        F.when(F.col("n_nationkey") < 12, F.concat("n_name", F.lit("-old")))
-        .otherwise(F.col("n_name"))
-        .alias("n_name"),
-        "n_nationkey",
-        "n_regionkey",
-    )
-    from .lakehouse_interop import _stage_single_parquet
 
-    base_rel = "fg-a_0-0-0_001.parquet"
-    _stage_single_parquet(based, os.path.join(base, base_rel))
+    def build(base: str) -> None:
+        n = t(spark, sf_dir, "nation")
+        based = n.select(
+            F.lit("001").alias("_hoodie_commit_time"),
+            F.col("n_nationkey").cast("string").alias("_hoodie_record_key"),
+            F.when(F.col("n_nationkey") < 12, F.concat("n_name", F.lit("-old")))
+            .otherwise(F.col("n_name"))
+            .alias("n_name"),
+            "n_nationkey",
+            "n_regionkey",
+        )
+        from .lakehouse_interop import _stage_single_parquet
 
-    spark_schema = T.StructType(
-        [
-            T.StructField("_hoodie_record_key", T.StringType(), True),
-            T.StructField("n_name", T.StringType(), True),
-            T.StructField("n_nationkey", T.IntegerType(), True),
-            T.StructField("n_regionkey", T.IntegerType(), True),
-            T.StructField("_hoodie_is_deleted", T.BooleanType(), True),
+        base_rel = "fg-a_0-0-0_001.parquet"
+        _stage_single_parquet(based, os.path.join(base, base_rel))
+
+        spark_schema = T.StructType(
+            [
+                T.StructField("_hoodie_record_key", T.StringType(), True),
+                T.StructField("n_name", T.StringType(), True),
+                T.StructField("n_nationkey", T.IntegerType(), True),
+                T.StructField("n_regionkey", T.IntegerType(), True),
+                T.StructField("_hoodie_is_deleted", T.BooleanType(), True),
+            ]
+        )
+        avro_schema = _log_record_schema(spark_schema)
+        rows = n.select("n_nationkey", "n_name", "n_regionkey").collect()
+        upserts = [
+            {
+                "_hoodie_record_key": str(r.n_nationkey),
+                "n_name": r.n_name,
+                "n_nationkey": r.n_nationkey,
+                "n_regionkey": r.n_regionkey,
+                "_hoodie_is_deleted": False,
+            }
+            for r in sorted(rows, key=lambda r: r.n_nationkey)
+            if r.n_nationkey < 12
         ]
-    )
-    avro_schema = _log_record_schema(spark_schema)
-    rows = n.select("n_nationkey", "n_name", "n_regionkey").collect()
-    upserts = [
-        {
-            "_hoodie_record_key": str(r.n_nationkey),
-            "n_name": r.n_name,
-            "n_nationkey": r.n_nationkey,
-            "n_regionkey": r.n_regionkey,
-            "_hoodie_is_deleted": False,
-        }
-        for r in sorted(rows, key=lambda r: r.n_nationkey)
-        if r.n_nationkey < 12
-    ]
-    deletes = [
-        {
-            "_hoodie_record_key": str(r.n_nationkey),
-            "n_name": None,
-            "n_nationkey": r.n_nationkey,
-            "n_regionkey": None,
-            "_hoodie_is_deleted": True,
-        }
-        for r in sorted(rows, key=lambda r: r.n_nationkey)
-        if r.n_nationkey % 5 == 0
-    ]
-    log_rel = "fg-a_0-0-0.log.1_002"
-    hdr = {_H_INSTANT_TIME: "002", _H_SCHEMA: json.dumps(avro_schema)}
-    with open(os.path.join(base, log_rel), "wb") as fh:
-        write_log_block(
-            fh, _AVRO_DATA_BLOCK, hdr, encode_avro_data_block(avro_schema, upserts)
-        )
-        write_log_block(
-            fh, _AVRO_DATA_BLOCK, hdr, encode_avro_data_block(avro_schema, deletes)
-        )
-    # inflight deltacommit 003: garbage log on disk, no completed instant
-    garbage_rel = "fg-a_0-0-0.log.2_003"
-    with open(os.path.join(base, garbage_rel), "wb") as fh:
-        write_log_block(
-            fh,
-            _AVRO_DATA_BLOCK,
-            {_H_INSTANT_TIME: "003", _H_SCHEMA: json.dumps(avro_schema)},
-            encode_avro_data_block(
-                avro_schema,
-                [
-                    {
-                        "_hoodie_record_key": "0",
-                        "n_name": "GARBAGE",
-                        "n_nationkey": 0,
-                        "n_regionkey": 0,
-                        "_hoodie_is_deleted": False,
-                    }
-                ],
-            ),
-        )
+        deletes = [
+            {
+                "_hoodie_record_key": str(r.n_nationkey),
+                "n_name": None,
+                "n_nationkey": r.n_nationkey,
+                "n_regionkey": None,
+                "_hoodie_is_deleted": True,
+            }
+            for r in sorted(rows, key=lambda r: r.n_nationkey)
+            if r.n_nationkey % 5 == 0
+        ]
+        log_rel = "fg-a_0-0-0.log.1_002"
+        hdr = {_H_INSTANT_TIME: "002", _H_SCHEMA: json.dumps(avro_schema)}
+        with open(os.path.join(base, log_rel), "wb") as fh:
+            write_log_block(
+                fh, _AVRO_DATA_BLOCK, hdr, encode_avro_data_block(avro_schema, upserts)
+            )
+            write_log_block(
+                fh, _AVRO_DATA_BLOCK, hdr, encode_avro_data_block(avro_schema, deletes)
+            )
+        # inflight deltacommit 003: garbage log on disk, no completed instant
+        garbage_rel = "fg-a_0-0-0.log.2_003"
+        with open(os.path.join(base, garbage_rel), "wb") as fh:
+            write_log_block(
+                fh,
+                _AVRO_DATA_BLOCK,
+                {_H_INSTANT_TIME: "003", _H_SCHEMA: json.dumps(avro_schema)},
+                encode_avro_data_block(
+                    avro_schema,
+                    [
+                        {
+                            "_hoodie_record_key": "0",
+                            "n_name": "GARBAGE",
+                            "n_nationkey": 0,
+                            "n_regionkey": 0,
+                            "_hoodie_is_deleted": False,
+                        }
+                    ],
+                ),
+            )
 
-    tl = os.path.join(base, ".hoodie")
-    os.makedirs(tl, exist_ok=True)
-    with open(os.path.join(tl, "hoodie.properties"), "w") as fh:
-        fh.write("hoodie.table.name=fixture\nhoodie.table.type=MERGE_ON_READ\n")
-    with open(os.path.join(tl, "001.commit"), "w") as fh:
-        json.dump(
-            {
-                "partitionToWriteStats": {
-                    "": [{"fileId": "fg-a", "path": base_rel, "numWrites": 25}]
-                }
-            },
-            fh,
-        )
-    with open(os.path.join(tl, "002.deltacommit"), "w") as fh:
-        json.dump(
-            {
-                "partitionToWriteStats": {
-                    "": [{"fileId": "fg-a", "path": log_rel, "numWrites": 17}]
-                }
-            },
-            fh,
-        )
-    with open(os.path.join(tl, "003.deltacommit.inflight"), "w") as fh:
-        fh.write("{}")
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
-    return base
+        tl = os.path.join(base, ".hoodie")
+        os.makedirs(tl, exist_ok=True)
+        with open(os.path.join(tl, "hoodie.properties"), "w") as fh:
+            fh.write("hoodie.table.name=fixture\nhoodie.table.type=MERGE_ON_READ\n")
+        with open(os.path.join(tl, "001.commit"), "w") as fh:
+            json.dump(
+                {
+                    "partitionToWriteStats": {
+                        "": [{"fileId": "fg-a", "path": base_rel, "numWrites": 25}]
+                    }
+                },
+                fh,
+            )
+        with open(os.path.join(tl, "002.deltacommit"), "w") as fh:
+            json.dump(
+                {
+                    "partitionToWriteStats": {
+                        "": [{"fileId": "fg-a", "path": log_rel, "numWrites": 17}]
+                    }
+                },
+                fh,
+            )
+        with open(os.path.join(tl, "003.deltacommit.inflight"), "w") as fh:
+            fh.write("{}")
+
+    return built(sf_dir, "hudi_mor", build)
 
 
 @query(

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import query
 from .lakehouse_interop import _stage_single_parquet, hudi_cow_state, hudi_cow_snapshot
-from .sources import _scratch
+from .sources import built
 
 
 def _timeline_dir(base: str) -> str:
@@ -233,12 +233,8 @@ def sink_hudi_cow_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (only distinct fileIds reach the driver — file-count bounded), and
     write amplification is bounded by the groups the batch's keys
     actually hit — the same contract as the Delta CoW UPDATE lane."""
-    base = _scratch(sf_dir, "hudi_cow_sink")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        import shutil
 
-        if os.path.isdir(base):  # partial state from an interrupted build
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -259,8 +255,8 @@ def sink_hudi_cow_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         hudi_cow_upsert(spark, base, batch3, "n_nationkey")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "hudi_cow_sink", build)
     return hudi_cow_snapshot(spark, base)
 
 
@@ -322,18 +318,10 @@ def hudi_mor_compact_lane(spark: SparkSession, sf_dir: str) -> DataFrame:
     file — the cost is the data rewritten, the payoff is every future
     read skipping the log-decode branch; scheduling it by log-bytes
     outstanding is exactly Hudi's compaction strategy knob."""
-    import shutil
-
     from .hudi_mor import _build_mor_fixture, hudi_mor_snapshot
 
     src = _build_mor_fixture(spark, sf_dir)
-    base = _scratch(sf_dir, "hudi_mor_compacted")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        if os.path.isdir(base):
-            shutil.rmtree(base)
-        shutil.copytree(src, base)
-        os.remove(os.path.join(base, "_FIXTURE_READY"))
-        hudi_mor_compact(spark, base)
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+    base = built(
+        sf_dir, "hudi_mor_compacted", lambda p: hudi_mor_compact(spark, p), copy_of=src
+    )
     return hudi_mor_snapshot(spark, base)

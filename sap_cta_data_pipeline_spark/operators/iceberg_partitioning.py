@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,7 +43,7 @@ from .iceberg_reader import (
     _manifest_file_rec,
     iceberg_snapshot,
 )
-from .sources import _scratch
+from .sources import built
 
 _N_BUCKETS = 4
 
@@ -226,8 +227,7 @@ def iceberg_create_bucketed(
 
 
 def _bucket_fixture(spark: SparkSession, sf_dir: str) -> str:
-    base = _scratch(sf_dir, "iceberg_bucketed")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         iceberg_create_bucketed(
             spark,
             base,
@@ -235,9 +235,8 @@ def _bucket_fixture(spark: SparkSession, sf_dir: str) -> str:
             "n_nationkey",
             _N_BUCKETS,
         )
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "iceberg_bucketed", build)
 
 
 @query(
@@ -379,15 +378,10 @@ def _build_evo_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         json.dump(md, fh)
     with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
         fh.write("1")
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 def _evo_fixture(spark: SparkSession, sf_dir: str) -> str:
-    base = _scratch(sf_dir, "iceberg_spec_evo")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_evo_fixture(spark, sf_dir, base)
-    return base
+    return built(sf_dir, "iceberg_spec_evo", partial(_build_evo_fixture, spark, sf_dir))
 
 
 @query(

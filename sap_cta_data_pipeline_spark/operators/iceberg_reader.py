@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,7 +50,7 @@ from ..catalog import table_path
 from ..functions.avro_codec import read_container, write_container
 from ..registry import query
 from .delta_reader import _write_parquet_file
-from .sources import _scratch, drain_to_memory
+from .sources import built, drain_to_memory
 
 # ------------------------------------------------------------- metadata
 
@@ -574,15 +575,6 @@ def _build_iceberg_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
             json.dump(md, fh)
     with open(os.path.join(base, "metadata", "version-hint.text"), "w") as fh:
         fh.write("2")
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
-
-
-def _fixture(spark: SparkSession, sf_dir: str) -> str:
-    base = _scratch(sf_dir, "iceberg_table")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_iceberg_fixture(spark, sf_dir, base)
-    return base
 
 
 # ---------------------------------------------------------------- queries
@@ -603,7 +595,9 @@ def scan_iceberg_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     (file, row-position) anti-join. The identity oracle (nation minus
     the five deleted keys) certifies the whole chain — container decode,
     manifest semantics, delete application — in one hash."""
-    base = _fixture(spark, sf_dir)
+    base = built(
+        sf_dir, "iceberg_table", partial(_build_iceberg_fixture, spark, sf_dir)
+    )
     return iceberg_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -619,7 +613,9 @@ def scan_iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys. Iceberg time travel is pure snapshot addressing (each snapshot
     pins its own manifest list — no log replay), which is why historical
     reads plan in O(manifests) regardless of table age."""
-    base = _fixture(spark, sf_dir)
+    base = built(
+        sf_dir, "iceberg_table", partial(_build_iceberg_fixture, spark, sf_dir)
+    )
     return iceberg_snapshot(spark, base, snapshot_id=1001).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -751,15 +747,14 @@ def _build_iceberg_part_fixture(
         json.dump(md, fh)
     with open(os.path.join(base, "metadata", "version-hint.text"), "w") as fh:
         fh.write("1")
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 def _part_fixture(spark: SparkSession, sf_dir: str) -> str:
-    base = _scratch(sf_dir, "iceberg_table_part")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_iceberg_part_fixture(spark, sf_dir, base)
-    return base
+    return built(
+        sf_dir,
+        "iceberg_table_part",
+        partial(_build_iceberg_part_fixture, spark, sf_dir),
+    )
 
 
 @query(
@@ -937,15 +932,12 @@ def _build_iceberg_eq_fixture(spark: SparkSession, sf_dir: str, base: str) -> No
         json.dump(md, fh)
     with open(os.path.join(base, "metadata", "version-hint.text"), "w") as fh:
         fh.write("1")
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 def _eq_fixture(spark: SparkSession, sf_dir: str) -> str:
-    base = _scratch(sf_dir, "iceberg_table_eq")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_iceberg_eq_fixture(spark, sf_dir, base)
-    return base
+    return built(
+        sf_dir, "iceberg_table_eq", partial(_build_iceberg_eq_fixture, spark, sf_dir)
+    )
 
 
 @query(
@@ -1157,13 +1149,12 @@ def sink_iceberg_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     way round 6 made Delta two-sided."""
     from ..catalog import load_table
 
-    base = _scratch(sf_dir, "iceberg_sink")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation")
         iceberg_append(spark, base, n.filter("n_nationkey < 12"), "a0.parquet")
         iceberg_append(spark, base, n.filter("n_nationkey >= 12"), "a1.parquet")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "iceberg_sink", build)
     return iceberg_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1268,15 +1259,15 @@ def stream_iceberg_snapshot_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape that holds at 100 TB; the TaskContext guard in read() pins
     that no appended row transits the driver. This is how production
     engines stream FROM Iceberg (incremental append scan)."""
-    base = _scratch(sf_dir, "iceberg_stream_sink")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         from ..catalog import load_table
 
         n = load_table(spark, sf_dir, "nation")
         iceberg_append(spark, base, n.filter("n_nationkey < 12"), "a0.parquet")
         iceberg_append(spark, base, n.filter("n_nationkey >= 12"), "a1.parquet")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "iceberg_stream_sink", build)
     spark.dataSource.register(_make_iceberg_stream_datasource())
     stream = (
         spark.readStream.format("iceberg_snapshot_tail").option("path", base).load()
@@ -1374,8 +1365,6 @@ def _build_iceberg_evo_fixture(spark: SparkSession, sf_dir: str, base: str) -> N
         json.dump(md, fh)
     with open(os.path.join(base, "metadata", "version-hint.text"), "w") as fh:
         fh.write("1")
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 @query(
@@ -1396,9 +1385,9 @@ def scan_iceberg_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     hash certifies which files resolved through which physical shape —
     the design reason Iceberg column adds are instant at any size (the
     same contract scan_delta_schema_evolution pins for Delta)."""
-    base = _scratch(sf_dir, "iceberg_table_evo")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_iceberg_evo_fixture(spark, sf_dir, base)
+    base = built(
+        sf_dir, "iceberg_table_evo", partial(_build_iceberg_evo_fixture, spark, sf_dir)
+    )
     return iceberg_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1502,7 +1491,9 @@ def scan_iceberg_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 1001, so the read returns FULL nation while the current snapshot
     hides five keys. Same pure-metadata resolution as snapshot-id time
     travel; timestamps before the first snapshot raise (pinned)."""
-    base = _fixture(spark, sf_dir)
+    base = built(
+        sf_dir, "iceberg_table", partial(_build_iceberg_fixture, spark, sf_dir)
+    )
     return iceberg_snapshot_as_of(spark, base, 1700000000500).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1664,15 +1655,14 @@ def sink_iceberg_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     still answers the full table (pinned in tests)."""
     from ..catalog import load_table
 
-    base = _scratch(sf_dir, "iceberg_sink_del")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation")
         iceberg_append(spark, base, n.filter("n_nationkey < 12"), "a0.parquet")
         iceberg_append(spark, base, n.filter("n_nationkey >= 12"), "a1.parquet")
         iceberg_delete_where(spark, base, "n_nationkey % 3 = 0")
         iceberg_delete_where(spark, base, "n_nationkey = 7")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "iceberg_sink_del", build)
     return iceberg_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1927,15 +1917,14 @@ def iceberg_dv_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join either way."""
     from ..catalog import load_table
 
-    base = _scratch(sf_dir, "iceberg_sink_dv")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation")
         iceberg_append(spark, base, n.filter("n_nationkey < 12"), "a0.parquet")
         iceberg_append(spark, base, n.filter("n_nationkey >= 12"), "a1.parquet")
         iceberg_delete_dv(spark, base, "n_nationkey % 3 = 0")
         iceberg_delete_dv(spark, base, "n_nationkey = 7")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "iceberg_sink_dv", build)
     return iceberg_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -2002,11 +1991,9 @@ def scan_iceberg_snapshots_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata rows (ids, sequence numbers, commit times, operations,
     currency flag), so any drift in snapshot bookkeeping breaks the
     hash, not just a test."""
-    base = _scratch(sf_dir, "iceberg_table")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_iceberg_fixture(spark, sf_dir, base)
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+    base = built(
+        sf_dir, "iceberg_table", partial(_build_iceberg_fixture, spark, sf_dir)
+    )
     return iceberg_snapshots_meta(spark, base)
 
 
@@ -2025,11 +2012,9 @@ def scan_iceberg_files_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence 1 plus the position-delete file at sequence 2 — the
     manifest-resolved inventory a compaction planner reads (content
     codes 0/1/2 per the spec)."""
-    base = _scratch(sf_dir, "iceberg_table")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_iceberg_fixture(spark, sf_dir, base)
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+    base = built(
+        sf_dir, "iceberg_table", partial(_build_iceberg_fixture, spark, sf_dir)
+    )
     return iceberg_files_meta(spark, base)
 
 
@@ -2109,16 +2094,15 @@ def iceberg_compact_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot stays time-travelable (pinned in tests)."""
     from ..catalog import load_table
 
-    base = _scratch(sf_dir, "iceberg_sink_compact")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation")
         iceberg_append(spark, base, n.filter("n_nationkey < 12"), "a0.parquet")
         iceberg_append(spark, base, n.filter("n_nationkey >= 12"), "a1.parquet")
         iceberg_delete_where(spark, base, "n_nationkey % 3 = 0")
         iceberg_delete_where(spark, base, "n_nationkey = 7")
         iceberg_rewrite_compact(spark, base)
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "iceberg_sink_compact", build)
     return iceberg_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -2241,8 +2225,7 @@ def sink_iceberg_eq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot still answers the full table (pinned in tests)."""
     from ..catalog import load_table
 
-    base = _scratch(sf_dir, "iceberg_sink_eqdel")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation")
         iceberg_append(spark, base, n.filter("n_nationkey < 12"), "a0.parquet")
         iceberg_append(spark, base, n.filter("n_nationkey >= 12"), "a1.parquet")
@@ -2252,8 +2235,8 @@ def sink_iceberg_eq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         iceberg_append(
             spark, base, n.filter("n_name = 'NATION_3'"), "a2.parquet"
         )
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "iceberg_sink_eqdel", build)
     return iceberg_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )

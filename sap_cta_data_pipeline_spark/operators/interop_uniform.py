@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -45,7 +44,7 @@ from .iceberg_reader import (
     iceberg_snapshot,
 )
 from .lakehouse_interop import _build_sink_fixture
-from .sources import _scratch
+from .sources import built
 
 
 def delta_uniform_iceberg_metadata(
@@ -166,13 +165,11 @@ def delta_uniform_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     point; a copy-based migration of a 100-TB table is exactly what
     UniForm exists to avoid."""
     delta_base = _build_sink_fixture(spark, sf_dir)
-    ib = _scratch(sf_dir, "uniform_iceberg")
-    if not os.path.exists(os.path.join(ib, "_FIXTURE_READY")):
-        if os.path.isdir(ib):
-            shutil.rmtree(ib)
-        delta_uniform_iceberg_metadata(spark, delta_base, ib)
-        with open(os.path.join(ib, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+    ib = built(
+        sf_dir,
+        "uniform_iceberg",
+        lambda p: delta_uniform_iceberg_metadata(spark, delta_base, p),
+    )
     return iceberg_snapshot(spark, ib).select(
         "n_nationkey", "n_name", "n_regionkey"
     )

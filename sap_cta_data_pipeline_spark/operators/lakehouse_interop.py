@@ -36,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,7 +57,7 @@ from .delta_reader import (
     delta_snapshot,
     delta_state,
 )
-from .sources import _scratch
+from .sources import _scratch, built
 
 #: v2-checkpoint wire shapes (delta.io PROTOCOL.md "V2 Checkpoints"):
 #: sidecar files carry only file actions; the top-level manifest adds
@@ -437,20 +438,19 @@ def _nation_parts(spark: SparkSession, sf_dir: str):
 
 def _build_sink_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Write-side fixture: two append commits via the writer (lo then hi)."""
-    base = _scratch(sf_dir, "delta_sink")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         _, lo, hi = _nation_parts(spark, sf_dir)
         delta_append_commit(spark, base, lo, "part-00000-c0.parquet", first=True)
         delta_append_commit(spark, base, hi, "part-00000-c1.parquet")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "delta_sink", build)
 
 
 def _build_stats_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Three stats-carrying files over disjoint n_nationkey ranges."""
-    base = _scratch(sf_dir, "delta_stats")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         n = t(spark, sf_dir, "nation")
         for i, (a, b) in enumerate([(0, 7), (8, 15), (16, 24)]):
             delta_append_commit(
@@ -461,9 +461,8 @@ def _build_stats_fixture(spark: SparkSession, sf_dir: str) -> str:
                 stats_col="n_nationkey",
                 first=(i == 0),
             )
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "delta_stats", build)
 
 
 def _build_hudi_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -472,65 +471,63 @@ def _build_hudi_fixture(spark: SparkSession, sf_dir: str) -> str:
     clean lo rows (the CoW update path — same fileId, new slice); an
     INFLIGHT instant 003 wrote a garbage file but never completed; plus an
     orphan parquet named by no instant. Latest slices = clean nation."""
-    base = _scratch(sf_dir, "hudi_cow")
-    if os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        return base
-    n, lo, hi = _nation_parts(spark, sf_dir)
 
-    def _meta(df: DataFrame, instant: str) -> DataFrame:
-        return df.select(
-            F.lit(instant).alias("_hoodie_commit_time"),
-            F.col("n_nationkey").cast("string").alias("_hoodie_record_key"),
-            "*",
-        )
+    def build(base: str) -> None:
+        n, lo, hi = _nation_parts(spark, sf_dir)
 
-    files = {
-        "fg-a_0-0-0_001.parquet": _meta(
-            lo.withColumn("n_name", F.concat("n_name", F.lit("-old"))), "001"
-        ),
-        "fg-b_0-0-0_001.parquet": _meta(hi, "001"),
-        "fg-a_0-0-0_002.parquet": _meta(lo, "002"),
-        "fg-c_0-0-0_003.parquet": _meta(
-            n.limit(3).withColumn("n_name", F.lit("GARBAGE")), "003"
-        ),
-        "orphan_0-0-0_000.parquet": _meta(
-            n.limit(2).withColumn("n_name", F.lit("GARBAGE")), "000"
-        ),
-    }
-    for rel, df in files.items():
-        _stage_single_parquet(df, os.path.join(base, rel))
+        def _meta(df: DataFrame, instant: str) -> DataFrame:
+            return df.select(
+                F.lit(instant).alias("_hoodie_commit_time"),
+                F.col("n_nationkey").cast("string").alias("_hoodie_record_key"),
+                "*",
+            )
 
-    tl = os.path.join(base, ".hoodie")
-    os.makedirs(tl, exist_ok=True)
-    with open(os.path.join(tl, "hoodie.properties"), "w") as fh:
-        fh.write("hoodie.table.name=fixture\nhoodie.table.type=COPY_ON_WRITE\n")
-
-    def _commit_meta(writes: list[tuple[str, str]]) -> dict:
-        return {
-            "partitionToWriteStats": {
-                "": [
-                    {"fileId": fid, "path": path, "numWrites": 1}
-                    for fid, path in writes
-                ]
-            },
-            "operation": "upsert",
-        }
-
-    with open(os.path.join(tl, "001.commit"), "w") as fh:
-        json.dump(
-            _commit_meta(
-                [("fg-a", "fg-a_0-0-0_001.parquet"), ("fg-b", "fg-b_0-0-0_001.parquet")]
+        files = {
+            "fg-a_0-0-0_001.parquet": _meta(
+                lo.withColumn("n_name", F.concat("n_name", F.lit("-old"))), "001"
             ),
-            fh,
-        )
-    with open(os.path.join(tl, "002.commit"), "w") as fh:
-        json.dump(_commit_meta([("fg-a", "fg-a_0-0-0_002.parquet")]), fh)
-    # inflight: marker only — a reader honoring the timeline never sees fg-c
-    with open(os.path.join(tl, "003.inflight"), "w") as fh:
-        fh.write("")
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
-    return base
+            "fg-b_0-0-0_001.parquet": _meta(hi, "001"),
+            "fg-a_0-0-0_002.parquet": _meta(lo, "002"),
+            "fg-c_0-0-0_003.parquet": _meta(
+                n.limit(3).withColumn("n_name", F.lit("GARBAGE")), "003"
+            ),
+            "orphan_0-0-0_000.parquet": _meta(
+                n.limit(2).withColumn("n_name", F.lit("GARBAGE")), "000"
+            ),
+        }
+        for rel, df in files.items():
+            _stage_single_parquet(df, os.path.join(base, rel))
+
+        tl = os.path.join(base, ".hoodie")
+        os.makedirs(tl, exist_ok=True)
+        with open(os.path.join(tl, "hoodie.properties"), "w") as fh:
+            fh.write("hoodie.table.name=fixture\nhoodie.table.type=COPY_ON_WRITE\n")
+
+        def _commit_meta(writes: list[tuple[str, str]]) -> dict:
+            return {
+                "partitionToWriteStats": {
+                    "": [
+                        {"fileId": fid, "path": path, "numWrites": 1}
+                        for fid, path in writes
+                    ]
+                },
+                "operation": "upsert",
+            }
+
+        with open(os.path.join(tl, "001.commit"), "w") as fh:
+            json.dump(
+                _commit_meta(
+                    [("fg-a", "fg-a_0-0-0_001.parquet"), ("fg-b", "fg-b_0-0-0_001.parquet")]
+                ),
+                fh,
+            )
+        with open(os.path.join(tl, "002.commit"), "w") as fh:
+            json.dump(_commit_meta([("fg-a", "fg-a_0-0-0_002.parquet")]), fh)
+        # inflight: marker only — a reader honoring the timeline never sees fg-c
+        with open(os.path.join(tl, "003.inflight"), "w") as fh:
+            fh.write("")
+
+    return built(sf_dir, "hudi_cow", build)
 
 
 def _build_evolve_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -538,35 +535,33 @@ def _build_evolve_fixture(spark: SparkSession, sf_dir: str) -> str:
     schema; commit 1 ADDS a column via a new metaData action and writes
     hi rows carrying it. Old files must read as typed nulls for the new
     column under the CURRENT schema."""
-    base = _scratch(sf_dir, "delta_evolve")
-    if os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        return base
-    _, lo, hi = _nation_parts(spark, sf_dir)
-    log_dir = os.path.join(base, "_delta_log")
 
-    _stage_single_parquet(lo, os.path.join(base, "part-v0.parquet"))
-    _commit(
-        log_dir,
-        0,
-        [
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            _meta_action([]),
-            _add("part-v0.parquet"),
-        ],
-    )
+    def build(base: str) -> None:
+        _, lo, hi = _nation_parts(spark, sf_dir)
+        log_dir = os.path.join(base, "_delta_log")
 
-    evolved = json.loads(json.dumps(_NATION_SCHEMA_JSON))  # deep copy
-    evolved["fields"].append(
-        {"name": "n_flag", "type": "integer", "nullable": True, "metadata": {}}
-    )
-    meta1 = _meta_action([])
-    meta1["metaData"]["schemaString"] = json.dumps(evolved)
-    hi_flag = hi.withColumn("n_flag", (F.col("n_nationkey") % 2).cast("int"))
-    _stage_single_parquet(hi_flag, os.path.join(base, "part-v1.parquet"))
-    _commit(log_dir, 1, [meta1, _add("part-v1.parquet")])
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
-    return base
+        _stage_single_parquet(lo, os.path.join(base, "part-v0.parquet"))
+        _commit(
+            log_dir,
+            0,
+            [
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+                _meta_action([]),
+                _add("part-v0.parquet"),
+            ],
+        )
+
+        evolved = json.loads(json.dumps(_NATION_SCHEMA_JSON))  # deep copy
+        evolved["fields"].append(
+            {"name": "n_flag", "type": "integer", "nullable": True, "metadata": {}}
+        )
+        meta1 = _meta_action([])
+        meta1["metaData"]["schemaString"] = json.dumps(evolved)
+        hi_flag = hi.withColumn("n_flag", (F.col("n_nationkey") % 2).cast("int"))
+        _stage_single_parquet(hi_flag, os.path.join(base, "part-v1.parquet"))
+        _commit(log_dir, 1, [meta1, _add("part-v1.parquet")])
+
+    return built(sf_dir, "delta_evolve", build)
 
 
 # -------------------------------------------------------------- queries
@@ -598,20 +593,7 @@ def delta_checkpoint_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     and read the clone. Only a correct, discoverable checkpoint can
     answer — the log is gone. At 100 TB this is what bounds reader
     startup to O(live files), not O(commit history)."""
-    base = _build_sink_fixture(spark, sf_dir)
-    clone = _scratch(sf_dir, "delta_sink_ckpt")
-    if not os.path.exists(os.path.join(clone, "_FIXTURE_READY")):
-        if os.path.isdir(clone):
-            shutil.rmtree(clone)
-        shutil.copytree(base, clone)
-        os.remove(os.path.join(clone, "_FIXTURE_READY"))
-        version = delta_checkpoint(spark, clone)
-        for v in range(version + 1):
-            p = os.path.join(clone, "_delta_log", f"{v:020d}.json")
-            if os.path.exists(p):
-                os.remove(p)
-        with open(os.path.join(clone, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+    clone = _checkpoint_destruction_fixture(spark, sf_dir, "delta_sink_ckpt")
     return delta_snapshot(spark, clone).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -623,21 +605,15 @@ def _checkpoint_destruction_fixture(
     """Clone the sink table, checkpoint it under the requested layout,
     then DELETE every pre-checkpoint JSON commit — only a correct,
     discoverable checkpoint of that layout can answer a read."""
-    base = _build_sink_fixture(spark, sf_dir)
-    clone = _scratch(sf_dir, name)
-    if not os.path.exists(os.path.join(clone, "_FIXTURE_READY")):
-        if os.path.isdir(clone):
-            shutil.rmtree(clone)
-        shutil.copytree(base, clone)
-        os.remove(os.path.join(clone, "_FIXTURE_READY"))
+
+    def build(clone: str) -> None:
         version = delta_checkpoint(spark, clone, **ckpt_kwargs)
         for v in range(version + 1):
             p = os.path.join(clone, "_delta_log", f"{v:020d}.json")
             if os.path.exists(p):
                 os.remove(p)
-        with open(os.path.join(clone, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return clone
+
+    return built(sf_dir, name, build, copy_of=_build_sink_fixture(spark, sf_dir))
 
 
 @query(
@@ -779,57 +755,55 @@ def _build_colmap_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Reader-v2 column-mapping table (mode "name"): data files store
     PHYSICAL column names (col-<uuid>-style), the schemaString carries
     the logical→physical mapping in field metadata."""
-    base = _scratch(sf_dir, "delta_colmap")
-    if os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        return base
-    n, lo, hi = _nation_parts(spark, sf_dir)
-    phys = {
-        "n_nationkey": "col-9f1a-key",
-        "n_name": "col-3c2b-name",
-        "n_regionkey": "col-77d0-region",
-    }
-    fields = [
-        {
-            "name": logical,
-            "type": "integer" if logical != "n_name" else "string",
-            "nullable": True,
-            "metadata": {
-                "delta.columnMapping.id": i + 1,
-                "delta.columnMapping.physicalName": p,
-            },
+
+    def build(base: str) -> None:
+        n, lo, hi = _nation_parts(spark, sf_dir)
+        phys = {
+            "n_nationkey": "col-9f1a-key",
+            "n_name": "col-3c2b-name",
+            "n_regionkey": "col-77d0-region",
         }
-        for i, (logical, p) in enumerate(phys.items())
-    ]
-    meta = {
-        "metaData": {
-            "id": "colmap-table",
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": json.dumps({"type": "struct", "fields": fields}),
-            "partitionColumns": [],
-            "configuration": {
-                "delta.columnMapping.mode": "name",
-                "delta.columnMapping.maxColumnId": "3",
-            },
+        fields = [
+            {
+                "name": logical,
+                "type": "integer" if logical != "n_name" else "string",
+                "nullable": True,
+                "metadata": {
+                    "delta.columnMapping.id": i + 1,
+                    "delta.columnMapping.physicalName": p,
+                },
+            }
+            for i, (logical, p) in enumerate(phys.items())
+        ]
+        meta = {
+            "metaData": {
+                "id": "colmap-table",
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": json.dumps({"type": "struct", "fields": fields}),
+                "partitionColumns": [],
+                "configuration": {
+                    "delta.columnMapping.mode": "name",
+                    "delta.columnMapping.maxColumnId": "3",
+                },
+            }
         }
-    }
-    for rel, df in (("part-lo.parquet", lo), ("part-hi.parquet", hi)):
-        renamed = df.select(
-            *[F.col(c).alias(phys[c]) for c in ("n_nationkey", "n_name", "n_regionkey")]
+        for rel, df in (("part-lo.parquet", lo), ("part-hi.parquet", hi)):
+            renamed = df.select(
+                *[F.col(c).alias(phys[c]) for c in ("n_nationkey", "n_name", "n_regionkey")]
+            )
+            _stage_single_parquet(renamed, os.path.join(base, rel))
+        _commit(
+            os.path.join(base, "_delta_log"),
+            0,
+            [
+                {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}},
+                meta,
+                _add("part-lo.parquet"),
+                _add("part-hi.parquet"),
+            ],
         )
-        _stage_single_parquet(renamed, os.path.join(base, rel))
-    _commit(
-        os.path.join(base, "_delta_log"),
-        0,
-        [
-            {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}},
-            meta,
-            _add("part-lo.parquet"),
-            _add("part-hi.parquet"),
-        ],
-    )
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
-    return base
+
+    return built(sf_dir, "delta_colmap", build)
 
 
 @query(
@@ -1009,17 +983,17 @@ def delta_delete_dv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifies writer→log→bitmap→anti-join end to end; tests pin the
     VACUUM interaction (DV'd data file survives, the superseded DV file
     goes once log retention drops the versions referencing it)."""
-    base = _build_sink_fixture(spark, sf_dir)
-    clone = _scratch(sf_dir, "delta_sink_delete_dv")
-    if not os.path.exists(os.path.join(clone, "_FIXTURE_READY")):
-        if os.path.isdir(clone):
-            shutil.rmtree(clone)
-        shutil.copytree(base, clone)
-        os.remove(os.path.join(clone, "_FIXTURE_READY"))
+
+    def build(clone: str) -> None:
         delta_delete_where(spark, clone, "n_nationkey % 3 = 0")
         delta_delete_where(spark, clone, "n_nationkey = 7")
-        with open(os.path.join(clone, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    clone = built(
+        sf_dir,
+        "delta_sink_delete_dv",
+        build,
+        copy_of=_build_sink_fixture(spark, sf_dir),
+    )
     return delta_snapshot(spark, clone).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1171,12 +1145,12 @@ def delta_vacuum_safety(spark: SparkSession, sf_dir: str) -> DataFrame:
     to rewritten versions now fails loudly at scan) is pinned too."""
     from .delta_reader import _build_fixture, delta_snapshot
 
-    base = _scratch(sf_dir, "delta_table_vacuum")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        src = _scratch(sf_dir, "delta_table_vacuum_src")
-        _build_fixture(spark, sf_dir, src)
-        shutil.copytree(src, base, dirs_exist_ok=True)
-        delta_vacuum(spark, base)
+    src = built(
+        sf_dir, "delta_table_vacuum_src", partial(_build_fixture, spark, sf_dir)
+    )
+    base = built(
+        sf_dir, "delta_table_vacuum", lambda p: delta_vacuum(spark, p), copy_of=src
+    )
     return delta_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1201,12 +1175,15 @@ def delta_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     restore commit reproduced the historical file set exactly."""
     from .delta_reader import _build_fixture, delta_snapshot
 
-    base = _scratch(sf_dir, "delta_table_restore")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        src = _scratch(sf_dir, "delta_table_restore_src")
-        _build_fixture(spark, sf_dir, src)
-        shutil.copytree(src, base, dirs_exist_ok=True)
-        delta_restore(spark, base, version=0)
+    src = built(
+        sf_dir, "delta_table_restore_src", partial(_build_fixture, spark, sf_dir)
+    )
+    base = built(
+        sf_dir,
+        "delta_table_restore",
+        lambda p: delta_restore(spark, p, version=0),
+        copy_of=src,
+    )
     return delta_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1301,12 +1278,10 @@ def delta_shallow_clone_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifetime trade every shallow clone makes)."""
     from .delta_reader import _build_fixture, delta_snapshot
 
-    src = _scratch(sf_dir, "delta_clone_src")
-    if not os.path.exists(os.path.join(src, "_FIXTURE_READY")):
-        _build_fixture(spark, sf_dir, src)
-    dst = _scratch(sf_dir, "delta_clone_dst")
-    if not os.path.isdir(os.path.join(dst, "_delta_log")):
-        delta_shallow_clone(spark, src, dst)
+    src = built(sf_dir, "delta_clone_src", partial(_build_fixture, spark, sf_dir))
+    dst = built(
+        sf_dir, "delta_clone_dst", partial(delta_shallow_clone, spark, src)
+    )
     return delta_snapshot(spark, dst).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1335,8 +1310,8 @@ def stream_delta_append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
 
     stage_dir = _scratch(sf_dir, "delta_stream_src")
-    table = _scratch(sf_dir, "delta_stream_sink")
-    if not os.path.exists(os.path.join(table, "_FIXTURE_READY")):
+
+    def build(table: str) -> None:
         ev = (
             load_table(spark, sf_dir, "events")
             .where(F.col("user_id") % 13 == 0)
@@ -1378,8 +1353,8 @@ def stream_delta_append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination(180)
-        with open(os.path.join(table, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    table = built(sf_dir, "delta_stream_sink", build)
     return delta_snapshot(spark, table).select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -1454,18 +1429,18 @@ def delta_optimize_compact_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete round-trip), the DV descriptors disappear from the live
     state, and the pre-OPTIMIZE version stays time-travelable with its
     DVs applied (pinned in tests)."""
-    base = _build_sink_fixture(spark, sf_dir)
-    clone = _scratch(sf_dir, "delta_sink_optimize")
-    if not os.path.exists(os.path.join(clone, "_FIXTURE_READY")):
-        if os.path.isdir(clone):
-            shutil.rmtree(clone)
-        shutil.copytree(base, clone)
-        os.remove(os.path.join(clone, "_FIXTURE_READY"))
+
+    def build(clone: str) -> None:
         delta_delete_where(spark, clone, "n_nationkey % 3 = 0")
         delta_delete_where(spark, clone, "n_nationkey = 7")
         delta_optimize_compact(spark, clone)
-        with open(os.path.join(clone, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    clone = built(
+        sf_dir,
+        "delta_sink_optimize",
+        build,
+        copy_of=_build_sink_fixture(spark, sf_dir),
+    )
     return delta_snapshot(spark, clone).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1514,12 +1489,11 @@ def sink_delta_append_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame
     pruning against the files this writer named)."""
     from ..catalog import load_table
 
-    base = _scratch(sf_dir, "delta_sink_part")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation")
         delta_append_partitioned(spark, base, n, "n_regionkey")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "delta_sink_part", build)
     return delta_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1576,8 +1550,7 @@ def delta_alter_add_column_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     original 3-column schema (pinned in tests)."""
     from ..catalog import load_table
 
-    base = _scratch(sf_dir, "delta_sink_alter")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation")
         delta_append_commit(
             spark, base, n.filter("n_nationkey < 12"), "part-lo.parquet", first=True
@@ -1587,8 +1560,8 @@ def delta_alter_add_column_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             "priority", (F.col("n_nationkey") * 10).cast("long")
         )
         delta_append_commit(spark, base, hi, "part-hi.parquet")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "delta_sink_alter", build)
     return delta_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey", "priority"
     )

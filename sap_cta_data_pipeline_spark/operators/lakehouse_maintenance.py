@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,7 +42,7 @@ from ..registry import query
 from .delta_reader import _COMMIT_RE, CommitConflict, _commit, delta_snapshot, delta_state
 from .iceberg_reader import IcebergCommitConflict, _put_metadata_if_absent, iceberg_append, iceberg_snapshot
 from .lakehouse_interop import _build_sink_fixture, _stage_single_parquet
-from .sources import _scratch
+from .sources import built
 from .training_prep import _morton_sql
 
 
@@ -144,15 +143,12 @@ def delta_optimize_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     Morton median (disjoint z-ranges across files), and that the
     pre-OPTIMIZE version remains time-travelable with the old layout."""
     base = _build_sink_fixture(spark, sf_dir)
-    clone = _scratch(sf_dir, "delta_sink_zorder")
-    if not os.path.exists(os.path.join(clone, "_FIXTURE_READY")):
-        if os.path.isdir(clone):
-            shutil.rmtree(clone)
-        shutil.copytree(base, clone)
-        os.remove(os.path.join(clone, "_FIXTURE_READY"))
-        delta_optimize_zorder(spark, clone, "n_nationkey", "n_regionkey")
-        with open(os.path.join(clone, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+    clone = built(
+        sf_dir,
+        "delta_sink_zorder",
+        lambda p: delta_optimize_zorder(spark, p, "n_nationkey", "n_regionkey"),
+        copy_of=base,
+    )
     return delta_snapshot(spark, clone).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -220,10 +216,8 @@ def iceberg_expire_snapshots_read(spark: SparkSession, sf_dir: str) -> DataFrame
     This is the retention verb every production table runs on a
     schedule; without it the log grows forever and nothing is ever
     physically reclaimable."""
-    base = _scratch(sf_dir, "iceberg_expire")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        if os.path.isdir(base):
-            shutil.rmtree(base)
+
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation")
         iceberg_append(spark, base, n.filter("n_nationkey < 8"), "a0.parquet")
         iceberg_append(
@@ -231,8 +225,8 @@ def iceberg_expire_snapshots_read(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         iceberg_append(spark, base, n.filter("n_nationkey >= 16"), "a2.parquet")
         iceberg_expire_snapshots(spark, base, keep_last=2)
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "iceberg_expire", build)
     return iceberg_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,7 +42,7 @@ from .iceberg_reader import (
     iceberg_delete_where,
     iceberg_snapshot,
 )
-from .sources import _scratch
+from .sources import _scratch, built
 
 
 # ---------------------------------------------------------- Delta DDL
@@ -175,16 +174,12 @@ def delta_colmap_rename_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .lakehouse_interop import _build_colmap_fixture
 
     src = _build_colmap_fixture(spark, sf_dir)
-    clone = _scratch(sf_dir, "delta_colmap_ddl")
-    if not os.path.exists(os.path.join(clone, "_FIXTURE_READY")):
-        if os.path.isdir(clone):
-            shutil.rmtree(clone)
-        shutil.copytree(src, clone)
-        os.remove(os.path.join(clone, "_FIXTURE_READY"))
+
+    def build(clone: str) -> None:
         delta_rename_column(spark, clone, "n_name", "n_label")
         delta_drop_column(spark, clone, "n_regionkey")
-        with open(os.path.join(clone, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    clone = built(sf_dir, "delta_colmap_ddl", build, copy_of=src)
     return delta_snapshot(spark, clone).select("n_nationkey", "n_label")
 
 
@@ -320,8 +315,7 @@ def iceberg_rewrite_manifests_read(
     thousands of small appends (planning reads manifests, not files)."""
     from ..catalog import load_table
 
-    base = _scratch(sf_dir, "iceberg_rewrite_manifests")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation")
         iceberg_append(spark, base, n.filter("n_nationkey < 8"), "a0.parquet")
         iceberg_append(
@@ -331,8 +325,8 @@ def iceberg_rewrite_manifests_read(
         iceberg_append(spark, base, n.filter("n_nationkey >= 16"), "a2.parquet")
         iceberg_delete_where(spark, base, "n_nationkey % 8 = 1")
         iceberg_rewrite_manifests(spark, base)
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "iceberg_rewrite_manifests", build)
     return iceberg_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )

@@ -4,6 +4,14 @@ Round-trip ops write to a per-SF scratch dir under /tmp and read back with
 explicit schemas — schema-on-read is never inferred for typed sources
 (inference is nondeterministic at scale and breaks the catalog contract).
 
+Table fixtures (the Delta, Iceberg, Hudi and txnlog tables that the
+lakehouse keys write with the engine's writers and read back with its
+readers) go through :func:`built`: each is built once per process and
+input basename, a half-built directory left by a build that raised is
+cleared before the next try, a ``copy_of`` source's readiness marker is
+not copied, and the build runs in place because Iceberg metadata records
+absolute ``file://`` paths.
+
 Scale notes: all sinks write partition-parallel (one file per task);
 `sink_parquet_partitioned` demonstrates partitioned layout + partition
 pruning on read-back (dynamic pruning kicks in for joins at scale);
@@ -35,6 +43,35 @@ def _scratch(sf_dir: str, name: str) -> str:
     # mode('overwrite') writes and read back partial data
     tag = os.path.basename(os.path.abspath(sf_dir.rstrip("/")))
     return os.path.join("/tmp", "sap_cta_scratch", f"pid{os.getpid()}", tag, name)
+
+
+#: Written into a fixture directory once its build has returned.
+READY = "_FIXTURE_READY"
+
+
+def built(sf_dir: str, name: str, build, copy_of: str | None = None) -> str:
+    """Return the scratch fixture ``name`` of ``sf_dir``, building it first
+    unless this process already finished it.
+
+    The directory is ready only once ``build(path)`` has returned and the
+    ``_FIXTURE_READY`` marker is written, so a build that raised part-way
+    is never served: the next call removes what it left and builds again.
+    With ``copy_of``, that directory is copied in first (without its
+    marker) and ``build`` works on the copy. The build runs at the final
+    path, not in a directory renamed into place, because Iceberg metadata
+    records absolute ``file://`` paths. ``_scratch`` is looked up at call
+    time, so a relocated scratch root applies to every fixture."""
+    path = _scratch(sf_dir, name)
+    if os.path.exists(os.path.join(path, READY)):
+        return path
+    shutil.rmtree(path, ignore_errors=True)
+    if copy_of is not None:
+        shutil.copytree(copy_of, path, ignore=shutil.ignore_patterns(READY))
+    build(path)
+    os.makedirs(path, exist_ok=True)
+    with open(os.path.join(path, READY), "w") as fh:
+        fh.write("ok")
+    return path
 
 
 #: Run numbers for streaming queries: each run gets a fresh checkpoint

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -334,12 +335,10 @@ def txnlog_describe_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clean nation: both transactions preserve the 25-row state while
     rewriting files — a rewrite-heavy, row-stable history being
     precisely the case where file counts alone would mislead."""
-    from .sources import _scratch
+    from .sources import built
     from .table_log import _build_fixture, txnlog_live_files, txnlog_snapshot
 
-    base = _scratch(sf_dir, "txnlog_table")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_fixture(spark, sf_dir, base)
+    base = built(sf_dir, "txnlog_table", partial(_build_fixture, spark, sf_dir))
     log_dir = os.path.join(base, "_log")
     versions = sorted(
         int(f.split(".")[0]) for f in os.listdir(log_dir) if f.endswith(".json")

@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 from ..catalog import load_table as t
 from ..functions.parity import bi, r6
 from ..registry import query
-from .sources import _scratch
+from .sources import built
 
 _KNUTH = 2654435761  # 2^32 / φ — the shared portable-hash constant
 _HASH_P = 1000003  # prime modulus for [0,1) uniforms
@@ -35,39 +35,36 @@ def _build_avro_fixture(spark: SparkSession, sf_dir: str) -> str:
     Iceberg manifests); plus a non-avro decoy the glob must not match."""
     from ..functions.avro_codec import write_container
 
-    base = _scratch(sf_dir, "avro_source")
-    if os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        return base
-    n = t(spark, sf_dir, "nation")
-    schema = {
-        "type": "record",
-        "name": "nation",
-        "fields": [
-            {"name": "n_nationkey", "type": ["null", "int"], "default": None},
-            {"name": "n_name", "type": ["null", "string"], "default": None},
-            {"name": "n_regionkey", "type": ["null", "int"], "default": None},
-        ],
-    }
-    rows = [
-        {
-            "n_nationkey": r.n_nationkey,
-            "n_name": r.n_name,
-            "n_regionkey": r.n_regionkey,
+    def build(base: str) -> None:
+        n = t(spark, sf_dir, "nation")
+        schema = {
+            "type": "record",
+            "name": "nation",
+            "fields": [
+                {"name": "n_nationkey", "type": ["null", "int"], "default": None},
+                {"name": "n_name", "type": ["null", "string"], "default": None},
+                {"name": "n_regionkey", "type": ["null", "int"], "default": None},
+            ],
         }
-        for r in sorted(n.collect(), key=lambda r: r.n_nationkey)
-    ]
-    os.makedirs(base, exist_ok=True)
-    write_container(
-        os.path.join(base, "part-0.avro"), schema, rows[:12], codec="deflate"
-    )
-    write_container(
-        os.path.join(base, "part-1.avro"), schema, rows[12:], codec="deflate"
-    )
-    with open(os.path.join(base, "decoy.txt"), "w") as fh:
-        fh.write("not avro")
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
-    return base
+        rows = [
+            {
+                "n_nationkey": r.n_nationkey,
+                "n_name": r.n_name,
+                "n_regionkey": r.n_regionkey,
+            }
+            for r in sorted(n.collect(), key=lambda r: r.n_nationkey)
+        ]
+        os.makedirs(base, exist_ok=True)
+        write_container(
+            os.path.join(base, "part-0.avro"), schema, rows[:12], codec="deflate"
+        )
+        write_container(
+            os.path.join(base, "part-1.avro"), schema, rows[12:], codec="deflate"
+        )
+        with open(os.path.join(base, "decoy.txt"), "w") as fh:
+            fh.write("not avro")
+
+    return built(sf_dir, "avro_source", build)
 
 
 def avro_scan(spark: SparkSession, path_glob: str, schema: T.StructType) -> DataFrame:

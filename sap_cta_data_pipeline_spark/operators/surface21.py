@@ -25,6 +25,7 @@ from __future__ import annotations
 import json
 import os
 import struct
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +41,7 @@ from .iceberg_reader import (
     _entry,
     _manifest_file_rec,
 )
-from .sources import _scratch
+from .sources import built
 
 # ------------------------------------------------- Iceberg stats pruning
 
@@ -221,15 +222,12 @@ def _build_stats_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         json.dump(md, fh)
     with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
         fh.write("1")
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 def _stats_fixture(spark: SparkSession, sf_dir: str) -> str:
-    base = _scratch(sf_dir, "iceberg_stats_prune")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_stats_fixture(spark, sf_dir, base)
-    return base
+    return built(
+        sf_dir, "iceberg_stats_prune", partial(_build_stats_fixture, spark, sf_dir)
+    )
 
 
 @query(

@@ -28,7 +28,7 @@ from ..functions.avro_codec import read_container
 from ..functions.parity import bi, r6
 from ..registry import query
 from .iceberg_reader import iceberg_append, iceberg_snapshot
-from .sources import _scratch
+from .sources import built
 
 
 def iceberg_referenced_files(base: str) -> set[str]:
@@ -100,13 +100,8 @@ def iceberg_orphan_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver metadata; the directory walk is the only filesystem scan and
     is embarrassingly parallelizable (production Iceberg runs it as a
     distributed listing job); deletes are per-orphan O(1)."""
-    base = _scratch(sf_dir, "iceberg_orphans")
-    marker = os.path.join(base, "_FIXTURE_READY")
-    if not os.path.exists(marker):
-        import shutil
 
-        if os.path.isdir(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation")
         iceberg_append(spark, base, n.filter("n_nationkey < 12"), "a0.parquet")
         iceberg_append(spark, base, n.filter("n_nationkey >= 12"), "a1.parquet")
@@ -122,8 +117,8 @@ def iceberg_orphan_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
         deleted = iceberg_remove_orphans(base)
         with open(os.path.join(base, "_DELETED.json"), "w") as fh:
             json.dump(deleted, fh)
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "iceberg_orphans", build)
     with open(os.path.join(base, "_DELETED.json")) as fh:
         deleted = json.load(fh)
     kept = sorted(

@@ -27,7 +27,7 @@ from ..registry import query
 from .delta_reader import _read_commit, delta_snapshot
 from .iceberg_reader import _load_metadata, iceberg_append, iceberg_snapshot
 from .lakehouse_interop import delta_append_commit
-from .sources import _scratch
+from .sources import built
 
 _COMMIT_RE = __import__("re").compile(r"^(\d{20})\.json$")
 
@@ -96,13 +96,8 @@ def sink_delta_idempotent_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by retention + checkpoints like every replay); no data is
     read — which is why Delta streaming sinks are exactly-once at any
     table size for the price of a metadata scan."""
-    base = _scratch(sf_dir, "delta_txn_sink")
-    marker = os.path.join(base, "_FIXTURE_READY")
-    if not os.path.exists(marker):
-        import shutil
 
-        if os.path.isdir(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -111,8 +106,8 @@ def sink_delta_idempotent_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert delta_txn_write(spark, base, hi, "b1.parquet", "ingest", 1)
         # the replay: same app, same version -> MUST be a no-op
         assert not delta_txn_write(spark, base, hi, "b1-replay.parquet", "ingest", 1)
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "delta_txn_sink", build)
     return delta_snapshot(spark, base)
 
 
@@ -136,13 +131,7 @@ def iceberg_snapshot_by_ref(
 
 
 def _ref_fixture(spark: SparkSession, sf_dir: str) -> str:
-    base = _scratch(sf_dir, "iceberg_refs")
-    marker = os.path.join(base, "_FIXTURE_READY")
-    if not os.path.exists(marker):
-        import shutil
-
-        if os.path.isdir(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation")
         iceberg_append(spark, base, n.filter("n_nationkey < 12"), "a0.parquet")
         iceberg_append(spark, base, n.filter("n_nationkey >= 12"), "a1.parquet")
@@ -162,9 +151,8 @@ def _ref_fixture(spark: SparkSession, sf_dir: str) -> str:
             json.dump(md, fh)
         with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
             fh.write(str(v + 1))
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "iceberg_refs", build)
 
 
 @query(

@@ -32,7 +32,7 @@ from ..functions.parity import bi, r6
 from ..registry import query
 from .iceberg_reader import _MANIFEST_FILE_SCHEMA, _entry, _iceberg_fields_of, _manifest_file_rec
 from .lakehouse_interop import _stage_single_parquet
-from .sources import _scratch
+from .sources import built
 from .surface21 import (
     _MANIFEST_ENTRY_STATS_SCHEMA,
     iceberg_stats_plan,
@@ -155,13 +155,7 @@ def iceberg_create_sorted(
 
 
 def _sorted_fixture(spark: SparkSession, sf_dir: str) -> str:
-    base = _scratch(sf_dir, "iceberg_sorted_stats")
-    marker = os.path.join(base, "_FIXTURE_READY")
-    if not os.path.exists(marker):
-        import shutil
-
-        if os.path.isdir(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         o = (
             load_table(spark, sf_dir, "orders")
             .filter("o_orderkey % 41 = 0")
@@ -172,9 +166,8 @@ def _sorted_fixture(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         iceberg_create_sorted(spark, base, o, "o_orderkey", _N_FILES)
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "iceberg_sorted_stats", build)
 
 
 @query(

@@ -33,7 +33,7 @@ from .iceberg_reader import (
     iceberg_append,
     iceberg_snapshot,
 )
-from .sources import _scratch
+from .sources import built
 
 
 def _tip_metadata(base: str) -> tuple[int, dict]:
@@ -192,13 +192,8 @@ def iceberg_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     scope; publish is one metadata swap — which is why WAP is the
     standard quality gate at 100 TB (no copy, no rewrite, atomic
     cutover, instant rollback by moving the ref back)."""
-    base = _scratch(sf_dir, "iceberg_wap")
-    marker = os.path.join(base, "_FIXTURE_READY")
-    if not os.path.exists(marker):
-        import shutil
 
-        if os.path.isdir(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -231,8 +226,8 @@ def iceberg_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         if staged.count() != n.count():
             raise ValueError("WAP audit failed: staged row count mismatch")
         iceberg_fast_forward(spark, base, "audit")
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "iceberg_wap", build)
     return iceberg_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )

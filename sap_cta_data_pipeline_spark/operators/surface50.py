@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,12 +52,12 @@ from .delta_reader import (
     _COMMIT_RE,
     _commit,
     _commit_ict_ms,
-    _fixture_dir,
     _meta_action,
     _read_commit,
     delta_snapshot,
     delta_version_at_timestamp,
 )
+from .sources import built
 
 _ICT_V1_MS = 1700000100000
 _ICT_V2_MS = 1700000200000
@@ -174,8 +175,6 @@ def _build_ict_clustered_fixture(
     mt = os.path.getmtime(os.path.join(log_dir, f"{0:020d}.json"))
     for v in range(3):
         os.utime(os.path.join(log_dir, f"{v:020d}.json"), (mt, mt))
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 def delta_clustering_domain(base: str) -> dict | None:
@@ -220,8 +219,10 @@ def delta_clustered_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     same cost shape as delta_describe_detail at any table size."""
     from .delta_reader import delta_state
 
-    base = _fixture_dir(
-        spark, sf_dir, "delta_ict_clustered", _build_ict_clustered_fixture
+    base = built(
+        sf_dir,
+        "delta_ict_clustered",
+        partial(_build_ict_clustered_fixture, spark, sf_dir),
     )
     live, _, _, config, _ = delta_state(spark, base)
     cluster = delta_clustering_domain(base) or {}
@@ -278,8 +279,10 @@ def delta_history_ict(spark: SparkSession, sf_dir: str) -> DataFrame:
     it value-oracles exactly); the pre-enablement commit's only
     timestamp is its file mtime (nondeterministic → reported as source
     'file-mtime' with a NULL ict_ms, never a fake value)."""
-    base = _fixture_dir(
-        spark, sf_dir, "delta_ict_clustered", _build_ict_clustered_fixture
+    base = built(
+        sf_dir,
+        "delta_ict_clustered",
+        partial(_build_ict_clustered_fixture, spark, sf_dir),
     )
     log_dir = os.path.join(base, "_delta_log")
     rows = []
@@ -319,8 +322,10 @@ def delta_time_travel_ict(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly newer) and serves the full clean nation — the identity
     oracle certifies the resolved snapshot; the mtime-blindness pin
     lives in tests/test_surface50.py."""
-    base = _fixture_dir(
-        spark, sf_dir, "delta_ict_clustered", _build_ict_clustered_fixture
+    base = built(
+        sf_dir,
+        "delta_ict_clustered",
+        partial(_build_ict_clustered_fixture, spark, sf_dir),
     )
     version = delta_version_at_timestamp(base, _ICT_V1_MS / 1000)
     if version != 1:

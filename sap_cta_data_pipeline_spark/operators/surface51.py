@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,7 +48,7 @@ from pyspark.sql import functions as F
 from ..functions.avro_codec import read_container, write_container
 from ..registry import query
 from .iceberg_reader import _resolve_path
-from .sources import _scratch
+from .sources import built
 
 # v3 manifest-entry/file schemas WITH the row-lineage fields (the
 # fixture's own containers; pre-v3 manifests elsewhere are untouched).
@@ -254,8 +255,6 @@ def _build_lineage_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         json.dump(md, fh)
     with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
         fh.write("1")
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 def lineage_files(base: str, snapshot_id: int | None = None) -> list[dict]:
@@ -406,7 +405,6 @@ def iceberg_row_lineage_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fixture(spark: SparkSession, sf_dir: str) -> str:
-    base = _scratch(sf_dir, "iceberg_row_lineage")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_lineage_fixture(spark, sf_dir, base)
-    return base
+    return built(
+        sf_dir, "iceberg_row_lineage", partial(_build_lineage_fixture, spark, sf_dir)
+    )

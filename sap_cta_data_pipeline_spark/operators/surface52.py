@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import query
 from .hudi_write import _timeline_dir
-from .sources import _scratch
+from .sources import built
 
 _SLICE_SEP = "_0-0-0_"
 
@@ -228,29 +228,28 @@ def _build_cleaner_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, list[
     nation."""
     from .hudi_write import hudi_cow_upsert
 
-    base = _scratch(sf_dir, "hudi_cleaner")
-    instants = []
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
         lo, hi = n.filter("n_nationkey < 12"), n.filter("n_nationkey >= 12")
-        instants.append(hudi_cow_upsert(spark, base, lo, "n_nationkey"))
-        instants.append(hudi_cow_upsert(spark, base, hi, "n_nationkey"))
-        instants.append(
-            hudi_cow_upsert(
-                spark,
-                base,
-                lo.withColumn("n_name", F.concat(F.col("n_name"), F.lit("-TMP"))),
-                "n_nationkey",
-            )
+        hudi_cow_upsert(spark, base, lo, "n_nationkey")
+        hudi_cow_upsert(spark, base, hi, "n_nationkey")
+        hudi_cow_upsert(
+            spark,
+            base,
+            lo.withColumn("n_name", F.concat(F.col("n_name"), F.lit("-TMP"))),
+            "n_nationkey",
         )
-        instants.append(hudi_cow_upsert(spark, base, lo, "n_nationkey"))
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            json.dump(instants, fh)
-    with open(os.path.join(base, "_FIXTURE_READY")) as fh:
-        instants = json.load(fh)
-    return base, instants
+        hudi_cow_upsert(spark, base, lo, "n_nationkey")
+
+    base = built(sf_dir, "hudi_cleaner", build)
+    tl = _timeline_dir(base)
+    # the four upserts' instants, wherever the timeline now keeps them
+    instants = set(_completed_commits(tl))
+    instants |= {a["instant"] for a in _archived_instants(tl)}
+    return base, sorted(instants)
 
 
 @query(

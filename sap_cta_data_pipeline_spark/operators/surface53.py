@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,10 +45,10 @@ from ..registry import query
 from .delta_reader import (
     _COMMIT_RE,
     _commit,
-    _fixture_dir,
     _meta_action,
     _read_commit,
 )
+from .sources import built
 
 _ROW_ID_COL = "_tracked_row_id"
 _RCV_COL = "_tracked_row_commit_version"
@@ -157,8 +158,6 @@ def _build_row_tracking_fixture(
             },
         ],
     )
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 def row_tracking_files(
@@ -264,8 +263,10 @@ def read_with_row_tracking(
 
 
 def _fixture(spark: SparkSession, sf_dir: str) -> str:
-    return _fixture_dir(
-        spark, sf_dir, "delta_row_tracking", _build_row_tracking_fixture
+    return built(
+        sf_dir,
+        "delta_row_tracking",
+        partial(_build_row_tracking_fixture, spark, sf_dir),
     )
 
 

@@ -48,12 +48,15 @@ delete's sequence never loses rows (round-10 ADVICE fix).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
 from .iceberg_reader import iceberg_state
+from .sources import built
 
 
 def _delete_key(d: dict) -> tuple:
@@ -385,9 +388,11 @@ def iceberg_changelog_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Intra-window add+delete cancellation is structural: INSERTs come
     from the added files' live rows at the TARGET snapshot, which
     applies the target's deletes before emission.)"""
-    from .iceberg_reader import _fixture
+    from .iceberg_reader import _build_iceberg_fixture
 
-    base = _fixture(spark, sf_dir)
+    base = built(
+        sf_dir, "iceberg_table", partial(_build_iceberg_fixture, spark, sf_dir)
+    )
     return iceberg_changelog(spark, base, 1001, 1002)
 
 
@@ -412,22 +417,19 @@ def iceberg_changelog_dv_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     window and the eq-delete refusal stay pinned in
     tests/test_surface54.py."""
     import json
-    import os
 
     from ..catalog import load_table
     from .iceberg_reader import _load_metadata, iceberg_append, iceberg_delete_dv
-    from .sources import _scratch
 
-    base = _scratch(sf_dir, "iceberg_changelog_dv")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
         iceberg_append(spark, base, n.filter("n_nationkey < 12"), "a0.parquet")
         iceberg_append(spark, base, n.filter("n_nationkey >= 12"), "a1.parquet")
         iceberg_delete_dv(spark, base, "n_nationkey % 5 = 0")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "iceberg_changelog_dv", build)
     snaps = sorted(
         _load_metadata(base)["snapshots"], key=lambda s: s["sequence-number"]
     )

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -34,11 +35,11 @@ from .delta_reader import (
     _COMMIT_RE,
     _build_cdf_fixture,
     _commit_ict_ms,
-    _fixture_dir,
     _read_commit,
     delta_table_changes,
     delta_version_at_timestamp,
 )
+from .sources import built
 
 _T0_MS = 1700000000000
 _STEP_MS = 100_000
@@ -113,8 +114,8 @@ def delta_cdf_by_timestamp_ict(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdc-file update pairs plus v2's derived deletes. The consumer
     contract at 100 TB: "changes since <wall time>" stays correct
     across log copies, restores, and storage-tier migrations."""
-    base = _fixture_dir(
-        spark, sf_dir, "delta_table_cdf_ict", _build_cdf_ict_fixture
+    base = built(
+        sf_dir, "delta_table_cdf_ict", partial(_build_cdf_ict_fixture, spark, sf_dir)
     )
     log_dir = os.path.join(base, "_delta_log")
     t1 = _commit_ict_ms(log_dir, 1) / 1000

@@ -29,6 +29,7 @@ identifier, so AQE's skew split (round-10 pin) covers hot identifiers.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,7 +42,7 @@ from .iceberg_reader import (
     _write_manifest,
     _write_parquet_file,
 )
-from .sources import _scratch
+from .sources import built
 from .surface54 import iceberg_changelog
 
 from ..functions.avro_codec import write_container
@@ -204,8 +205,6 @@ def _build_rewrite_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         json.dump(md, fh)
     with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
         fh.write("1")
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 @query(
@@ -230,9 +229,9 @@ def iceberg_changelog_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     values — drop), value-oracled cell-by-cell. Carryover-drop,
     pure-delete pass-through, and duplicate-identifier behavior are
     pinned in tests/test_surface56.py."""
-    base = _scratch(sf_dir, "iceberg_rewrite_cdc")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_rewrite_fixture(spark, sf_dir, base)
+    base = built(
+        sf_dir, "iceberg_rewrite_cdc", partial(_build_rewrite_fixture, spark, sf_dir)
+    )
     raw = iceberg_changelog(spark, base, 4001, 4002)
     return changelog_updates(
         raw, ["n_nationkey"], ["n_name", "n_regionkey"]

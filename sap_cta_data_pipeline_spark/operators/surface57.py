@@ -41,7 +41,7 @@ from ..catalog import load_table
 from ..registry import query
 from .iceberg_reader import iceberg_append, iceberg_snapshot
 from .lakehouse_maintenance import _put_metadata_if_absent
-from .sources import _scratch
+from .sources import built
 from .surface49 import _tip_metadata
 
 
@@ -122,8 +122,6 @@ def _build_refs_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         os.path.join(base, "metadata", "version-hint.text"), "w"
     ) as fh:
         fh.write(str(cur_v + 1))
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 @query(
@@ -137,14 +135,16 @@ def iceberg_expire_ref_protected(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical (identity oracle). Tag protection, branch
     protection, ref aging, expired-time-travel refusal, and the
     corrupt-refs refusal are pinned in tests/test_surface57.py."""
-    base = _scratch(sf_dir, "iceberg_refs_expire")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         _build_refs_fixture(spark, sf_dir, base)
         _, expired, removed = iceberg_expire_snapshots_refs(base, keep_last=1)
         if expired != [1001] or removed != ["tmp"]:
             raise AssertionError(
                 f"expiry picked expired={expired} removed={removed}"
             )
+
+    base = built(sf_dir, "iceberg_refs_expire", build)
     return iceberg_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )

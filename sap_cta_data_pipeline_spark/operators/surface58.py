@@ -42,7 +42,7 @@ from ..catalog import load_table
 from ..registry import query
 from .delta_reader import _commit, _meta_action, delta_snapshot, delta_state
 from .lakehouse_interop import _stage_single_parquet, delta_append_commit
-from .sources import _scratch
+from .sources import built
 
 
 #: Delta ``typeWidening`` supported changes (spec: the feature allows
@@ -163,8 +163,8 @@ def _build_merge_schema_fixture(spark: SparkSession, sf_dir: str) -> str:
     """lo rows (3 cols) at v0; v1 merge-schema-appends hi rows carrying
     the extra ``n_name_len`` int column in the same commit as the
     widened metaData."""
-    base = _scratch(sf_dir, "delta_merge_schema")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -176,9 +176,8 @@ def _build_merge_schema_fixture(spark: SparkSession, sf_dir: str) -> str:
             "n_name_len", F.length("n_name").cast("int")
         )
         delta_append_merge_schema(spark, base, hi, "part-hi.parquet")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "delta_merge_schema", build)
 
 
 @query(
@@ -210,8 +209,8 @@ def _build_type_widen_fixture(spark: SparkSession, sf_dir: str) -> str:
     """v0: lo rows, n_regionkey INT; v1: ALTER enabling typeWidening;
     v2: mergeSchema append of hi rows carrying n_regionkey as LONG —
     the declared type widens int→long in the same commit as the add."""
-    base = _scratch(sf_dir, "delta_type_widen")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -236,9 +235,8 @@ def _build_type_widen_fixture(spark: SparkSession, sf_dir: str) -> str:
             "n_regionkey", F.col("n_regionkey").cast("long")
         )
         delta_append_merge_schema(spark, base, hi, "part-hi.parquet")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "delta_type_widen", build)
 
 
 @query(
@@ -271,8 +269,7 @@ def _build_merge_evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
     n_name to UPPER, keys {100,101} are not-matched inserts."""
     from .delta_dml import delta_merge_into
 
-    base = _scratch(sf_dir, "delta_merge_evolution")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -298,9 +295,8 @@ def _build_merge_evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
             spark, base, source, "n_nationkey", ["n_name"],
             schema_evolution=True,
         )
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "delta_merge_evolution", build)
 
 
 @query(

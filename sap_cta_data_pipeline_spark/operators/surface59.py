@@ -44,7 +44,7 @@ from .iceberg_reader import (
     iceberg_snapshot,
     IcebergCommitConflict,
 )
-from .sources import _scratch
+from .sources import built
 
 from ..functions.avro_codec import read_container, write_container
 
@@ -215,8 +215,7 @@ def iceberg_append_evolved(
 
 
 def _build_evolved_fixture(spark: SparkSession, sf_dir: str) -> str:
-    base = _scratch(sf_dir, "iceberg_write_evolve")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -225,9 +224,8 @@ def _build_evolved_fixture(spark: SparkSession, sf_dir: str) -> str:
             "n_name_len", F.length("n_name").cast("int")
         )
         iceberg_append_evolved(spark, base, hi, "a1.parquet")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "iceberg_write_evolve", build)
 
 
 @query(

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,7 +44,7 @@ from .iceberg_reader import (
     _write_parquet_file,
 )
 from .lakehouse_interop import delta_append_commit
-from .sources import _scratch
+from .sources import built
 from .surface54 import iceberg_changelog
 from .surface56 import changelog_updates
 
@@ -171,13 +172,13 @@ def delta_merge_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure-delete file rewrites, unmatched-delete no-ops, and the
     flag-column hygiene (never reaches the table) are pinned in
     tests/test_surface60.py."""
-    src_base = _scratch(sf_dir, "iceberg_cdc_apply_src")
-    if not os.path.exists(os.path.join(src_base, "_FIXTURE_READY")):
-        _build_cdc_source_fixture(spark, sf_dir, src_base)
-        with open(os.path.join(src_base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    tgt = _scratch(sf_dir, "delta_cdc_apply_tgt")
-    if not os.path.exists(os.path.join(tgt, "_FIXTURE_READY")):
+    src_base = built(
+        sf_dir,
+        "iceberg_cdc_apply_src",
+        partial(_build_cdc_source_fixture, spark, sf_dir),
+    )
+
+    def build(tgt: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -196,8 +197,8 @@ def delta_merge_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, tgt, feed, "n_nationkey",
             ["n_name", "n_regionkey"], delete_col="__cdc_del",
         )
-        with open(os.path.join(tgt, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    tgt = built(sf_dir, "delta_cdc_apply_tgt", build)
     return delta_snapshot(spark, tgt).select(
         "n_nationkey", "n_name", "n_regionkey"
     )

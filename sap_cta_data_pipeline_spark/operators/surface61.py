@@ -24,7 +24,6 @@ rewrite. The tri-format symmetry is the point: on all three formats,
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +32,7 @@ from ..catalog import load_table
 from ..registry import query
 from .hudi_write import hudi_cow_upsert
 from .lakehouse_interop import hudi_cow_snapshot
-from .sources import _scratch
+from .sources import built
 
 
 @query(
@@ -57,8 +56,8 @@ def hudi_upsert_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULLs through the mergeSchema snapshot. Every cell value-oracled.
     The type-conflict refusal, survivor-NULL union, and
     untouched-group invariant are pinned in tests/test_surface61.py."""
-    base = _scratch(sf_dir, "hudi_evolve")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -75,8 +74,8 @@ def hudi_upsert_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("n_flag", F.lit(1).cast("int"))
         )
         hudi_cow_upsert(spark, base, batch, "n_nationkey")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "hudi_evolve", build)
     return hudi_cow_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey", "n_flag"
     )

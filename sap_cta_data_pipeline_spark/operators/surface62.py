@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,7 +44,7 @@ from .iceberg_reader import (
     _write_manifest,
     _write_parquet_file,
 )
-from .sources import _scratch
+from .sources import built
 from .surface54 import iceberg_changelog
 
 from ..functions.avro_codec import write_container
@@ -175,12 +176,9 @@ def _build_net_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
 
 
 def _net_fixture(spark: SparkSession, sf_dir: str) -> str:
-    base = _scratch(sf_dir, "iceberg_net_window")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_net_fixture(spark, sf_dir, base)
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+    return built(
+        sf_dir, "iceberg_net_window", partial(_build_net_fixture, spark, sf_dir)
+    )
 
 
 @query(

@@ -89,7 +89,7 @@ from .iceberg_reader import (
     iceberg_state,
     IcebergCommitConflict,
 )
-from .sources import _scratch
+from .sources import built
 from .surface54 import _delete_key, _live_rows
 
 from ..functions.avro_codec import read_container, write_container
@@ -701,8 +701,8 @@ def _commit_cow_swap(
 def _build_merge_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Iceberg nation in two files (lo/hi); MERGE 5 updates (keys < 5,
     renamed) + 5 inserts (keys +100) — the hi file is untouched."""
-    base = _scratch(sf_dir, "iceberg_merge_into")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -719,9 +719,8 @@ def _build_merge_fixture(spark: SparkSession, sf_dir: str) -> str:
         iceberg_merge_into(
             spark, base, upd.unionByName(ins), "n_nationkey", ["n_name"]
         )
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "iceberg_merge_into", build)
 
 
 @query(
@@ -804,8 +803,8 @@ def iceberg_merge_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .delta_reader import delta_snapshot, delta_table_changes
 
     src_base = _cdf_table(spark, sf_dir)
-    tgt = _scratch(sf_dir, "iceberg_cdc_apply_tgt")
-    if not os.path.exists(os.path.join(tgt, "_FIXTURE_READY")):
+
+    def build(tgt: str) -> None:
         seed = delta_snapshot(spark, src_base, version=0)
         iceberg_append(
             spark, tgt, seed.filter("o_orderkey % 2 = 0"), "seed-even.parquet"
@@ -826,6 +825,6 @@ def iceberg_merge_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["o_totalprice", "o_orderstatus"],
             delete_col="__cdc_del",
         )
-        with open(os.path.join(tgt, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    tgt = built(sf_dir, "iceberg_cdc_apply_tgt", build)
     return iceberg_snapshot(spark, tgt)

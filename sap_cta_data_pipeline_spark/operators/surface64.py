@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,7 +48,7 @@ from pyspark.sql import functions as F
 from ..functions.avro_codec import read_container
 from ..registry import query
 from .iceberg_reader import _load_metadata, _resolve_path
-from .sources import _scratch
+from .sources import built
 from .surface51 import (
     _LIN_ENTRY_SCHEMA,
     _LIN_MANIFEST_FILE_SCHEMA,
@@ -295,15 +296,12 @@ def _build_rename_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         json.dump(md, fh)
     with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
         fh.write("1")
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 def _fixture(spark: SparkSession, sf_dir: str) -> str:
-    base = _scratch(sf_dir, "iceberg_lineage_rename")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_rename_fixture(spark, sf_dir, base)
-    return base
+    return built(
+        sf_dir, "iceberg_lineage_rename", partial(_build_rename_fixture, spark, sf_dir)
+    )
 
 
 _COLS = ["n_nationkey", "n_name", "n_regionkey"]

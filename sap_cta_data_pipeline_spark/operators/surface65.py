@@ -31,14 +31,13 @@ O(files-in-window) delete metadata, never rows.
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
 from .iceberg_reader import _latest_seq, _load_metadata, iceberg_state
-from .sources import _scratch, drain_to_memory
+from .sources import built, drain_to_memory
 from .surface54 import iceberg_changelog_plan
 
 
@@ -209,17 +208,15 @@ def _stream_fixture(spark: SparkSession, sf_dir: str) -> str:
     from ..catalog import load_table
     from .iceberg_reader import iceberg_append, iceberg_delete_where
 
-    base = _scratch(sf_dir, "iceberg_chg_stream")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
         iceberg_append(spark, base, n.filter("n_nationkey < 12"), "a0.parquet")
         iceberg_append(spark, base, n.filter("n_nationkey >= 12"), "a1.parquet")
         iceberg_delete_where(spark, base, "n_nationkey % 5 = 0")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "iceberg_chg_stream", build)
 
 
 @query(

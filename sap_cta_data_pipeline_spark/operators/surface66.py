@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-from .sources import _scratch, drain_to_memory
+from .sources import built, drain_to_memory
 from .surface63 import _commit_cow_swap
 
 
@@ -211,8 +211,7 @@ def _update_plan(
 def _build_update_fixture(spark: SparkSession, sf_dir: str) -> str:
     from .iceberg_reader import iceberg_append
 
-    base = _scratch(sf_dir, "iceberg_update_cow")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -224,9 +223,8 @@ def _build_update_fixture(spark: SparkSession, sf_dir: str) -> str:
             "n_regionkey = 2",
             {"n_name": "concat(n_name, '-UPD')", "n_regionkey": "n_regionkey + 10"},
         )
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "iceberg_update_cow", build)
 
 
 @query(
@@ -310,17 +308,15 @@ def hudi_delete(
 def _build_hudi_delete_fixture(spark: SparkSession, sf_dir: str) -> str:
     from .hudi_write import hudi_cow_upsert
 
-    base = _scratch(sf_dir, "hudi_delete_cow")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
         hudi_cow_upsert(spark, base, n.filter("n_nationkey < 12"), "n_nationkey")
         hudi_cow_upsert(spark, base, n.filter("n_nationkey >= 12"), "n_nationkey")
         hudi_delete(spark, base, "n_regionkey = 1")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "hudi_delete_cow", build)
 
 
 @query(
@@ -436,8 +432,7 @@ def _make_hudi_tail_datasource():
 def _build_hudi_tail_fixture(spark: SparkSession, sf_dir: str) -> str:
     from .hudi_write import hudi_cow_upsert
 
-    base = _scratch(sf_dir, "hudi_incr_stream")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -450,9 +445,8 @@ def _build_hudi_tail_fixture(spark: SparkSession, sf_dir: str) -> str:
             .withColumn("n_name", F.concat(F.col("n_name"), F.lit("-U3")))
         )
         hudi_cow_upsert(spark, base, upd, "n_nationkey")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "hudi_incr_stream", build)
 
 
 @query(

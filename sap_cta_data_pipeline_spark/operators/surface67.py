@@ -44,7 +44,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..registry import query
-from .sources import _scratch
+from .sources import built
 
 
 def hudi_mor_upsert(
@@ -105,17 +105,16 @@ def hudi_mor_upsert(
             "__file",
             F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
         )
-        file_to_fid = {
-            os.path.basename(b): fid
-            for fid, (b, _logs) in slices.items()
-            if b
-        }
-        fid_map = F.create_map(
-            *[F.lit(x) for kv in sorted(file_to_fid.items()) for x in kv]
+        file_to_fid = spark.createDataFrame(
+            sorted(
+                (os.path.basename(b), fid)
+                for fid, (b, _logs) in slices.items()
+                if b
+            ),
+            "__file string, __fid string",
         )
-        owner = bases.select(
-            F.col("_hoodie_record_key").alias("__k"),
-            fid_map[F.col("__file")].alias("__fid"),
+        owner = bases.join(F.broadcast(file_to_fid), "__file").select(
+            F.col("_hoodie_record_key").alias("__k"), "__fid"
         )
         routed = incoming.join(
             owner, incoming[key_col].cast("string") == owner["__k"], "left"
@@ -131,25 +130,24 @@ def hudi_mor_upsert(
         avro_schema = _log_record_schema(spark_schema)
         hdr = {_H_INSTANT_TIME: instant, _H_SCHEMA: json.dumps(avro_schema)}
         # per hit group: ONE log block with the group's records, written
-        # EXECUTOR-SIDE (round 14, guide §5 driver): the hit batch rides
-        # one groupBy(__fid) shuffle (change-sized) into applyInArrow —
-        # each group's task encodes and writes its own block under
-        # temp-then-replace atomicity (idempotent across task retries:
-        # the content is key-sorted, so every attempt produces identical
-        # bytes) and returns only (fid, log_rel) as its commit message;
-        # the driver collects just those commit messages for the
-        # deltacommit envelope. The old form collected every routed
-        # record group to the driver and wrote the blocks serially —
-        # O(batch) driver memory and a serial write tail.
-        log_rel_by_fid = {
-            fid: f"{fid}_0-0-0.log.{len(slices[fid][1]) + 1}_{instant}"
-            for fid in slices
-        }
-        log_rel_map = F.create_map(
-            *[F.lit(x) for kv in sorted(log_rel_by_fid.items()) for x in kv]
+        # EXECUTOR-SIDE: the hit batch rides one groupBy(__fid) shuffle
+        # (change-sized) into applyInArrow — each group's task encodes
+        # and writes its own block under temp-then-replace atomicity
+        # (idempotent across task retries: the content is key-sorted, so
+        # every attempt produces identical bytes) and returns only
+        # (fid, log_rel) as its commit message; the driver collects just
+        # those commit messages for the deltacommit envelope. Group ids
+        # and log names reach the batch through broadcast-joined frames,
+        # so the plan's size does not grow with the file-group count.
+        log_rels = spark.createDataFrame(
+            sorted(
+                (fid, f"{fid}_0-0-0.log.{len(logs) + 1}_{instant}")
+                for fid, (_b, logs) in slices.items()
+            ),
+            "__fid string, __log_rel string",
         )
-        hits = routed.filter(F.col("__fid").isNotNull()).withColumn(
-            "__log_rel", log_rel_map[F.col("__fid")]
+        hits = routed.filter(F.col("__fid").isNotNull()).join(
+            F.broadcast(log_rels), "__fid"
         )
 
         def _write_block(tbl):
@@ -220,8 +218,7 @@ def hudi_mor_upsert(
 
 
 def _build_mor_upsert_fixture(spark: SparkSession, sf_dir: str) -> str:
-    base = _scratch(sf_dir, "hudi_mor_upsert")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -235,9 +232,8 @@ def _build_mor_upsert_fixture(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         hudi_mor_upsert(spark, base, upd, "n_nationkey", delete_col="__drop")
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "hudi_mor_upsert", build)
 
 
 @query(
@@ -276,8 +272,7 @@ def _build_merge_evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
     from .iceberg_reader import iceberg_append
     from .surface63 import iceberg_merge_into
 
-    base = _scratch(sf_dir, "iceberg_merge_evolution")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -300,9 +295,8 @@ def _build_merge_evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
             spark, base, src, "n_nationkey", ["n_name", "tier"],
             schema_evolution=True,
         )
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, "iceberg_merge_evolution", build)
 
 
 @query(

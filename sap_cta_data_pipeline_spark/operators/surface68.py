@@ -36,23 +36,22 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-from .sources import _scratch
+from .sources import built
 
 
 def _staged_event_chunks(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, object]:
     """Three deterministic event_id-tercile parquet chunks of the
     user_id%13 slice (the Delta sink's fixture shape) + their schema."""
-    stage_dir = _scratch(sf_dir, name)
-    marker = os.path.join(stage_dir, "_STAGED")
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("user_id") % 13 == 0)
-        .select(
-            "event_id", "user_id", "event_type",
-            F.round("value", 2).alias("value"),
+
+    def build(stage_dir: str) -> None:
+        ev = (
+            load_table(spark, sf_dir, "events")
+            .where(F.col("user_id") % 13 == 0)
+            .select(
+                "event_id", "user_id", "event_type",
+                F.round("value", 2).alias("value"),
+            )
         )
-    )
-    if not os.path.exists(marker):
         n = ev.count()
         ids = [r[0] for r in ev.select("event_id").orderBy("event_id").collect()]
         cuts = [ids[0], ids[n // 3], ids[2 * n // 3], ids[-1] + 1]
@@ -66,8 +65,8 @@ def _staged_event_chunks(spark: SparkSession, sf_dir: str, name: str) -> tuple[s
                 .write.mode("overwrite")
                 .parquet(f"{stage_dir}/chunk={i}")
             )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    stage_dir = built(sf_dir, name, build)
     return stage_dir, spark.read.parquet(f"{stage_dir}/chunk=0").schema
 
 
@@ -118,8 +117,8 @@ def stream_iceberg_append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .iceberg_reader import iceberg_snapshot
 
     stage_dir, schema = _staged_event_chunks(spark, sf_dir, "ice_stream_src")
-    table = _scratch(sf_dir, "iceberg_append_sink_tbl")
-    if not os.path.exists(os.path.join(table, "_FIXTURE_READY")):
+
+    def build(table: str) -> None:
         src = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -130,8 +129,8 @@ def stream_iceberg_append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda bdf, bid: iceberg_append_batch_once(spark, table, bdf, bid),
             os.path.join(table, "_stream_ckpt"),
         )
-        with open(os.path.join(table, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    table = built(sf_dir, "iceberg_append_sink_tbl", build)
     return iceberg_snapshot(spark, table).select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -152,8 +151,8 @@ def stream_hudi_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .lakehouse_interop import hudi_cow_snapshot
 
     stage_dir, schema = _staged_event_chunks(spark, sf_dir, "hudi_stream_src")
-    table = _scratch(sf_dir, "hudi_stream_sink")
-    if not os.path.exists(os.path.join(table, "_FIXTURE_READY")):
+
+    def build(table: str) -> None:
         src = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -164,8 +163,8 @@ def stream_hudi_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda bdf, bid: hudi_cow_upsert(spark, table, bdf, "event_id"),
             os.path.join(table, "_stream_ckpt"),
         )
-        with open(os.path.join(table, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    table = built(sf_dir, "hudi_stream_sink", build)
     return hudi_cow_snapshot(spark, table).select(
         "event_id", "user_id", "event_type", "value"
     )

@@ -42,7 +42,6 @@ property compounds across the table's whole DML history.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,19 +49,22 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import query
 from .iceberg_reader import iceberg_snapshot, _build_iceberg_part_fixture
-from .sources import _scratch
+from .sources import built
 from .surface63 import iceberg_merge_into
 from .surface66 import iceberg_update_cow
 
 
-def _part_table(spark: SparkSession, sf_dir: str, name: str) -> str:
+def _part_table(spark: SparkSession, sf_dir: str, name: str, dml) -> str:
     """A fresh identity(n_regionkey)-partitioned Iceberg nation table in
-    this key's own scratch (the shared ``iceberg_table_part`` fixture is
-    read-only to scans; DML keys mutate their own copy)."""
-    base = _scratch(sf_dir, name)
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    this key's own scratch with ``dml(base)`` applied (the shared
+    ``iceberg_table_part`` fixture is read-only to scans; DML keys mutate
+    their own copy)."""
+
+    def build(base: str) -> None:
         _build_iceberg_part_fixture(spark, sf_dir, base)
-    return base
+        dml(base)
+
+    return built(sf_dir, name, build)
 
 
 @query(
@@ -90,8 +92,8 @@ def iceberg_merge_partitioned_roundtrip(
     the partition-column-update refusal, the non-identity-transform
     refusal, and post-merge partition-pruned reads are pinned in
     tests/test_surface69.py."""
-    base = _part_table(spark, sf_dir, "iceberg_merge_part")
-    if not os.path.exists(os.path.join(base, "_MERGED")):
+
+    def merge(base: str) -> None:
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -106,8 +108,8 @@ def iceberg_merge_partitioned_roundtrip(
         iceberg_merge_into(
             spark, base, upd.unionByName(ins), "n_nationkey", ["n_name"]
         )
-        with open(os.path.join(base, "_MERGED"), "w") as fh:
-            fh.write("ok")
+
+    base = _part_table(spark, sf_dir, "iceberg_merge_part", merge)
     return iceberg_snapshot(spark, base)
 
 
@@ -130,8 +132,8 @@ def iceberg_update_partitioned_roundtrip(
     AND-composed into the predicate (semantics exact by construction:
     the oracle's CASE carries both conjuncts), and only region 2's file
     is rewritten (other files' path+sequence pinned)."""
-    base = _part_table(spark, sf_dir, "iceberg_update_part")
-    if not os.path.exists(os.path.join(base, "_UPDATED")):
+
+    def update(base: str) -> None:
         iceberg_update_cow(
             spark,
             base,
@@ -139,6 +141,6 @@ def iceberg_update_partitioned_roundtrip(
             {"n_name": "concat(n_name, '-UPD')"},
             partition_filter={"n_regionkey": 2},
         )
-        with open(os.path.join(base, "_UPDATED"), "w") as fh:
-            fh.write("ok")
+
+    base = _part_table(spark, sf_dir, "iceberg_update_part", update)
     return iceberg_snapshot(spark, base)

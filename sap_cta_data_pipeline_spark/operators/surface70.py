@@ -51,7 +51,7 @@ from ..registry import query
 from .delta_dml import delta_merge_into
 from .delta_reader import delta_snapshot
 from .lakehouse_interop import delta_append_commit
-from .sources import _scratch
+from .sources import _scratch, built
 from .surface26 import delta_last_txn_version
 
 
@@ -111,17 +111,16 @@ def _staged_merge_chunks(spark: SparkSession, sf_dir: str) -> tuple[str, object]
     file source orders new files by modification time, so the chunks
     carry explicit ascending mtimes — the update wave must land after
     the rows it updates."""
-    stage_dir = _scratch(sf_dir, "delta_merge_stream_src")
-    marker = os.path.join(stage_dir, "_STAGED")
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("user_id") % 13 == 0)
-        .select(
-            "event_id", "user_id", "event_type",
-            F.round("value", 2).alias("value"),
+
+    def build(stage_dir: str) -> None:
+        ev = (
+            load_table(spark, sf_dir, "events")
+            .where(F.col("user_id") % 13 == 0)
+            .select(
+                "event_id", "user_id", "event_type",
+                F.round("value", 2).alias("value"),
+            )
         )
-    )
-    if not os.path.exists(marker):
         mid = ev.approxQuantile("event_id", [0.5], 0.0)[0]
         chunks = [
             ev.where(F.col("event_id") < mid),
@@ -138,8 +137,8 @@ def _staged_merge_chunks(spark: SparkSession, sf_dir: str) -> tuple[str, object]
             for root, _dirs, files in os.walk(f"{stage_dir}/chunk={i}"):
                 for f in files:
                     os.utime(os.path.join(root, f), (t, t))
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    stage_dir = built(sf_dir, "delta_merge_stream_src", build)
     return stage_dir, spark.read.parquet(f"{stage_dir}/chunk=0").schema
 
 
@@ -164,8 +163,8 @@ def stream_delta_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what makes the sink exactly-once rather than merely convergent.
     The identity oracle certifies the final merged state end to end."""
     stage_dir, schema = _staged_merge_chunks(spark, sf_dir)
-    table = _scratch(sf_dir, "delta_merge_stream_sink")
-    if not os.path.exists(os.path.join(table, "_FIXTURE_READY")):
+
+    def build(table: str) -> None:
         src = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -184,8 +183,8 @@ def stream_delta_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination(180)
-        with open(os.path.join(table, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    table = built(sf_dir, "delta_merge_stream_sink", build)
     return delta_snapshot(spark, table).select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -251,11 +250,9 @@ def stream_replicate_iceberg_to_delta(
     from .surface65 import _make_changelog_tail_datasource
 
     src_tbl = _scratch(sf_dir, "ice_repl_src")
-    tgt = _scratch(sf_dir, "delta_repl_tgt")
-    marker = os.path.join(tgt, "_FIXTURE_READY")
-    if not os.path.exists(marker):
+
+    def build(tgt: str) -> None:
         shutil.rmtree(src_tbl, ignore_errors=True)
-        shutil.rmtree(tgt, ignore_errors=True)
         n = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -292,8 +289,8 @@ def stream_replicate_iceberg_to_delta(
         )
         iceberg_delete_where(spark, src_tbl, "n_nationkey % 3 = 0")
         _drain()  # batch 1: ONLY the merge + delete windows (pinned)
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    tgt = built(sf_dir, "delta_repl_tgt", build)
     return delta_snapshot(spark, tgt).select(
         "n_nationkey", "n_name", "n_regionkey"
     )

@@ -60,7 +60,7 @@ from .iceberg_reader import (
     iceberg_snapshot,
     iceberg_state,
 )
-from .sources import _scratch
+from .sources import built
 
 
 def write_transform_partitioned(
@@ -218,8 +218,7 @@ def _record_tagged_read(
 
 
 def _day_table(spark: SparkSession, sf_dir: str, name: str) -> str:
-    base = _scratch(sf_dir, name)
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+    def build(base: str) -> None:
         ev = (
             load_table(spark, sf_dir, "events")
             .where(F.col("user_id") % 13 == 0)
@@ -232,9 +231,8 @@ def _day_table(spark: SparkSession, sf_dir: str, name: str) -> str:
             spark, base, ev,
             [{"pname": "ts_day", "src": "ts", "transform": "day"}],
         )
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
-    return base
+
+    return built(sf_dir, name, build)
 
 
 @query(
@@ -277,8 +275,8 @@ def sink_iceberg_truncate_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(v/100)`` (spec semantics — exact on negatives too, pinned in
     the transform unit tests). Record-derived oracle as the day key;
     range-pruned point lookups pinned."""
-    base = _scratch(sf_dir, "iceberg_trunc_part")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         o = (
             load_table(spark, sf_dir, "orders")
             .where(F.col("o_orderkey") % 101 == 1)
@@ -292,8 +290,8 @@ def sink_iceberg_truncate_write(spark: SparkSession, sf_dir: str) -> DataFrame:
             [{"pname": "ck_trunc", "src": "o_custkey",
               "transform": "truncate[100]"}],
         )
-        with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "iceberg_trunc_part", build)
     return _record_tagged_read(spark, base, "ck_trunc").select(
         "o_orderkey", "o_custkey", F.col("ck_trunc").cast("long"),
         "o_totalprice",
@@ -328,10 +326,8 @@ def iceberg_merge_day_partitioned(
     is the GM MERGE envelope; only the routing learned transforms."""
     from .surface63 import iceberg_merge_into
 
-    base = _scratch(sf_dir, "iceberg_day_merge")
-    marker = os.path.join(base, "_MERGED")
-    if not os.path.exists(marker):
-        shutil.rmtree(base, ignore_errors=True)
+
+    def build(base: str) -> None:
         ev = (
             load_table(spark, sf_dir, "events")
             .where(F.col("user_id") % 13 == 0)
@@ -357,8 +353,8 @@ def iceberg_merge_day_partitioned(
         iceberg_merge_into(
             spark, base, upd.unionByName(ins), "event_id", ["value"]
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    base = built(sf_dir, "iceberg_day_merge", build)
     snap = iceberg_snapshot(spark, base)
     return snap.select(
         "event_id", "user_id", "value",

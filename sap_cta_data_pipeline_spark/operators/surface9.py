@@ -26,6 +26,7 @@ CDC, and two statistics lanes.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import pandas as pd
 
@@ -297,9 +298,10 @@ def scan_delta_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     share nothing, so all 25 keys flow through; keys < 12 are 'updated'
     ('-old' names superseded), the rest 'unchanged'. Oracle reconstructs
     both states from clean nation in SQL."""
-    from .delta_reader import _build_fixture, _fixture_dir, delta_state
+    from .delta_reader import _build_fixture, delta_state
+    from .sources import built
 
-    base = _fixture_dir(spark, sf_dir, "delta_table", _build_fixture)
+    base = built(sf_dir, "delta_table", partial(_build_fixture, spark, sf_dir))
     live0, _, _, _, _ = delta_state(spark, base, version=0)
     liveN, _, _, _, _ = delta_state(spark, base, version=None)
     only0 = sorted(set(live0) - set(liveN))

@@ -17,13 +17,14 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table as t
 from ..registry import query
-from .sources import _scratch
+from .sources import built
 
 
 def _build_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
@@ -59,8 +60,6 @@ def _build_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
             for a in actions:
                 fh.write(json.dumps(a) + "\n")
         os.rename(tmp, os.path.join(log_dir, f"{v:08d}.json"))
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 def txnlog_live_files(base: str, version: int | None = None) -> list[str]:
@@ -112,9 +111,7 @@ def scan_txnlog_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_units_round4b.py. At 100 TB the replay cost is
     metadata-sized (actions, not rows) and the snapshot scan prunes to
     live files only — the entire point of log-structured formats."""
-    base = _scratch(sf_dir, "txnlog_table")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_fixture(spark, sf_dir, base)
+    base = built(sf_dir, "txnlog_table", partial(_build_fixture, spark, sf_dir))
     return txnlog_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -140,11 +137,10 @@ def txnlog_compact_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the file-count reduction is what keeps listing + open() overhead
     off the read path (sink_compact_files' economics, now with
     versioned atomicity)."""
-    base = _scratch(sf_dir, "txnlog_table_compact")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         _build_fixture(spark, sf_dir, base)
-    log_dir = os.path.join(base, "_log")
-    if not os.path.exists(os.path.join(log_dir, f"{2:08d}.json")):
+        log_dir = os.path.join(base, "_log")
         live_parts = txnlog_live_files(base, 1)
         live_before = txnlog_snapshot(spark, base, 1)
         live_before.coalesce(1).write.mode("overwrite").parquet(
@@ -156,6 +152,8 @@ def txnlog_compact_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             for a in actions:
                 fh.write(json.dumps(a) + "\n")
         os.rename(tmp, os.path.join(log_dir, f"{2:08d}.json"))
+
+    base = built(sf_dir, "txnlog_table_compact", build)
     return txnlog_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -196,11 +194,10 @@ def merge_into_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERSIONED ATOMICITY — readers see the old or the new table, never a
     half-merged directory. Oracle computes the same final state in pure
     SQL over nation + the literal changeset."""
-    base = _scratch(sf_dir, "txnlog_table_merge")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
+
+    def build(base: str) -> None:
         _build_fixture(spark, sf_dir, base)
-    log_dir = os.path.join(base, "_log")
-    if not os.path.exists(os.path.join(log_dir, f"{2:08d}.json")):
+        log_dir = os.path.join(base, "_log")
         snap = txnlog_snapshot(spark, base, 1)
         changed_keys = sorted(_MERGE_UPDATES) + [_MERGE_DELETE]
         # copy-on-write: the live file set comes from LOG REPLAY (never a
@@ -241,6 +238,8 @@ def merge_into_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
             for a in actions:
                 fh.write(json.dumps(a) + "\n")
         os.rename(tmp, os.path.join(log_dir, f"{2:08d}.json"))
+
+    base = built(sf_dir, "txnlog_table_merge", build)
     return txnlog_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -273,8 +272,6 @@ def _build_mor_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
             for a in actions:
                 fh.write(json.dumps(a) + "\n")
         os.rename(tmp, os.path.join(log_dir, f"{v:08d}.json"))
-    with open(os.path.join(base, "_FIXTURE_READY"), "w") as fh:
-        fh.write("ok")
 
 
 def txnlog_mor_state(base: str, version: int | None = None) -> tuple[list[str], list[str]]:
@@ -363,9 +360,7 @@ def txnlog_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests). At 100 TB the sidecar is the only way a sub-second DELETE
     exists at all; the read-path anti-join broadcasts because delete
     sets are bounded between compactions by compaction policy."""
-    base = _scratch(sf_dir, "txnlog_mor")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_mor_fixture(spark, sf_dir, base)
+    base = built(sf_dir, "txnlog_mor", partial(_build_mor_fixture, spark, sf_dir))
     return txnlog_mor_snapshot(spark, base).select(
         "n_nationkey", "n_name", "n_regionkey"
     )

@@ -648,15 +648,16 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold. Rows-only lane (xxhash64-specific signatures); end-to-end
     behavior pinned in tests/test_iterative_pins.py on a planted
     near-dup/disjoint fixture and by digest in tests/test_dedup_pins.py."""
-    from .sources import _scratch
+    from .sources import built
 
     docs = t(spark, sf_dir, "documents")
+
     # ---- store build (the once-per-corpus step; daily runs only READ it)
-    store_path = _scratch(sf_dir, "minhash_store")
-    _signatures(_fingerprint_groups(docs.filter(F.col("doc_id") % 2 == 0))).write.mode(
-        "overwrite"
-    ).parquet(store_path)
-    store = spark.read.parquet(store_path)
+    def build_store(path: str) -> None:
+        corpus = docs.filter(F.col("doc_id") % 2 == 0)
+        _signatures(_fingerprint_groups(corpus)).write.parquet(path)
+
+    store = spark.read.parquet(built(sf_dir, "minhash_store", build_store))
     # ---- daily batch: signatures for batch docs only
     batch = _signatures(_fingerprint_groups(docs.filter(F.col("doc_id") % 2 == 1)))
 

@@ -10,6 +10,7 @@ import json
 import os
 import shutil
 import struct
+from functools import partial
 
 import pytest
 
@@ -27,10 +28,10 @@ from sap_cta_data_pipeline_spark.functions.deletion_vectors import (
 )
 from sap_cta_data_pipeline_spark.operators.delta_reader import (
     _build_dv_fixture,
-    _fixture_dir,
     delta_snapshot,
     delta_state,
 )
+from sap_cta_data_pipeline_spark.operators.sources import built
 
 # ------------------------------------------------------------- codec
 
@@ -136,7 +137,7 @@ def test_prefix_sharded_path_resolution():
 
 @pytest.fixture(scope="module")
 def dvbase(spark, sf_dir):
-    return _fixture_dir(spark, sf_dir, "delta_table_dv", _build_dv_fixture)
+    return built(sf_dir, "delta_table_dv", partial(_build_dv_fixture, spark, sf_dir))
 
 
 def test_dv_snapshot_removes_exactly_the_dv_rows(spark, dvbase):

@@ -11,26 +11,29 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import partial
 
 import pytest
 
 from sap_cta_data_pipeline_spark.operators.delta_reader import (
     _build_fixture,
     _build_partitioned_fixture,
-    _fixture_dir,
     delta_snapshot,
     delta_state,
 )
+from sap_cta_data_pipeline_spark.operators.sources import built
 
 
 @pytest.fixture(scope="module")
 def base(spark, sf_dir):
-    return _fixture_dir(spark, sf_dir, "delta_table", _build_fixture)
+    return built(sf_dir, "delta_table", partial(_build_fixture, spark, sf_dir))
 
 
 @pytest.fixture(scope="module")
 def pbase(spark, sf_dir):
-    return _fixture_dir(spark, sf_dir, "delta_table_part", _build_partitioned_fixture)
+    return built(
+        sf_dir, "delta_table_part", partial(_build_partitioned_fixture, spark, sf_dir)
+    )
 
 
 def test_every_version_pinned(spark, base):
@@ -258,15 +261,14 @@ def test_cdf_requires_flag_and_range_guard(spark, sf_dir, tmp_path):
     from sap_cta_data_pipeline_spark.operators.delta_reader import (
         _build_cdf_fixture,
         _build_fixture,
-        _fixture_dir,
-        delta_table_changes,
+            delta_table_changes,
     )
 
     # the plain fixture never enabled CDF → refuse
-    plain = _fixture_dir(spark, sf_dir, "delta_table", _build_fixture)
+    plain = built(sf_dir, "delta_table", partial(_build_fixture, spark, sf_dir))
     with pytest.raises(ValueError, match="enableChangeDataFeed"):
         delta_table_changes(spark, plain)
-    cdf = _fixture_dir(spark, sf_dir, "delta_table_cdf", _build_cdf_fixture)
+    cdf = built(sf_dir, "delta_table_cdf", partial(_build_cdf_fixture, spark, sf_dir))
     with pytest.raises(ValueError, match="outside retained commits"):
         delta_table_changes(spark, cdf, start=0, end=99)
 
@@ -276,11 +278,10 @@ def test_cdf_version_subrange(spark, sf_dir):
     10 rows, never the rewrite's 25+25 derived noise."""
     from sap_cta_data_pipeline_spark.operators.delta_reader import (
         _build_cdf_fixture,
-        _fixture_dir,
-        delta_table_changes,
+            delta_table_changes,
     )
 
-    base = _fixture_dir(spark, sf_dir, "delta_table_cdf", _build_cdf_fixture)
+    base = built(sf_dir, "delta_table_cdf", partial(_build_cdf_fixture, spark, sf_dir))
     rows = delta_table_changes(spark, base, start=1, end=1).collect()
     assert len(rows) == 10
     kinds = {r._change_type for r in rows}
@@ -296,11 +297,10 @@ def test_cdf_tail_is_incremental(spark, sf_dir, tmp_path):
 
     from sap_cta_data_pipeline_spark.operators.delta_reader import (
         _build_cdf_fixture,
-        _fixture_dir,
-        _make_cdf_stream_datasource,
+            _make_cdf_stream_datasource,
     )
 
-    src = _fixture_dir(spark, sf_dir, "delta_table_cdf", _build_cdf_fixture)
+    src = built(sf_dir, "delta_table_cdf", partial(_build_cdf_fixture, spark, sf_dir))
     clone = str(tmp_path / "cdf_tail_inc")
     _sh.copytree(src, clone)
     held = []

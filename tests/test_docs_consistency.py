@@ -92,6 +92,7 @@ def test_every_batch_has_scale_notes():
 #: scratch names deliberately shared by multiple modules (one builder,
 #: several readers — same schema by construction)
 _SHARED_SCRATCH = {
+    "delta_table",
     "delta_update_cow",
     "events_shredded",
     "iceberg_rewrite_manifests",
@@ -113,7 +114,8 @@ def test_scratch_names_unique_across_modules():
 
     owners = collections.defaultdict(set)
     for py in (REPO / "sap_cta_data_pipeline_spark" / "operators").glob("*.py"):
-        for m in _re.finditer(r'_scratch\(sf_dir, "([^"]+)"', py.read_text()):
+        text = py.read_text()
+        for m in _re.finditer(r'(?:_scratch|built)\(\s*sf_dir,\s*"([^"]+)"', text):
             owners[m.group(1)].add(py.name)
     clashes = {
         name: sorted(mods)
@@ -121,3 +123,23 @@ def test_scratch_names_unique_across_modules():
         if len(mods) > 1 and name not in _SHARED_SCRATCH
     }
     assert not clashes, f"scratch-name collisions across modules: {clashes}"
+
+
+def test_fixture_readiness_rule_lives_only_in_sources():
+    """Whether a scratch fixture is built is decided in one place,
+    ``sources.built``: no other package module names the readiness
+    marker, and no module keeps a private second-stage marker."""
+    pkg = REPO / "sap_cta_data_pipeline_spark"
+    sources = pkg / "operators" / "sources.py"
+    ready = sorted(
+        str(py.relative_to(pkg))
+        for py in pkg.rglob("*.py")
+        if py != sources and "_FIXTURE_READY" in py.read_text()
+    )
+    assert not ready, f"modules with their own readiness marker: {ready}"
+    staged = sorted(
+        str(py.relative_to(pkg))
+        for py in pkg.rglob("*.py")
+        if re.search(r"_(MERGED|UPDATED|STAGED)\b", py.read_text())
+    )
+    assert not staged, f"modules with a second-stage marker: {staged}"

@@ -12,6 +12,7 @@ import os
 import shutil
 import struct
 import tempfile
+from functools import partial
 
 import pytest
 
@@ -31,9 +32,14 @@ from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
 
 @pytest.fixture(scope="module")
 def ibase(spark, sf_dir):
-    from sap_cta_data_pipeline_spark.operators.iceberg_reader import _fixture
+    from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
+        _build_iceberg_fixture,
+    )
+    from sap_cta_data_pipeline_spark.operators.sources import built
 
-    return _fixture(spark, sf_dir)
+    return built(
+        sf_dir, "iceberg_table", partial(_build_iceberg_fixture, spark, sf_dir)
+    )
 
 
 # ------------------------------------------------------------- avro codec

@@ -28,7 +28,7 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture()
 def table(spark, tmp_path, monkeypatch):
     # route _scratch under tmp_path so each test owns a fresh table
-    import sap_cta_data_pipeline_spark.operators.surface52 as m
+    import sap_cta_data_pipeline_spark.operators.sources as m
 
     monkeypatch.setattr(
         m, "_scratch", lambda sf, name: str(tmp_path / name)

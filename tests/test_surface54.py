@@ -3,15 +3,24 @@ window, delete completeness, and the eq-delete refusal."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 
 from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
+    _build_iceberg_fixture,
     _eq_fixture,
-    _fixture,
 )
+from sap_cta_data_pipeline_spark.operators.sources import built
 from sap_cta_data_pipeline_spark.operators.surface54 import iceberg_changelog
 
 SF = "/root/testdata/sf0.001"
+
+
+def _fixture(spark, sf_dir):
+    return built(
+        sf_dir, "iceberg_table", partial(_build_iceberg_fixture, spark, sf_dir)
+    )
 
 
 def test_deletes_exact_rows(spark):
@@ -265,9 +274,6 @@ def test_fixture_window_scans_no_carried_unchanged(spark):
     plus the two affected files is ALL the plan opens (no full
     re-diff: the window's physical scan set is exactly the changed
     set)."""
-    from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
-        _fixture,
-    )
     from sap_cta_data_pipeline_spark.operators.surface54 import (
         iceberg_changelog_plan,
     )

@@ -69,13 +69,10 @@ def test_fixture_raw_vs_view_shape(spark):
         _build_rewrite_fixture,
         iceberg_changelog_updates,
     )
-    from sap_cta_data_pipeline_spark.operators.sources import _scratch
-    import os
+    from sap_cta_data_pipeline_spark.operators.sources import built
 
     SF = "/root/testdata/sf0.001"
-    base = _scratch(SF, "iceberg_rewrite_cdc")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_READY")):
-        _build_rewrite_fixture(spark, SF, base)
+    base = built(SF, "iceberg_rewrite_cdc", lambda p: _build_rewrite_fixture(spark, SF, p))
     assert iceberg_changelog(spark, base, 4001, 4002).count() == 50
     assert iceberg_changelog_updates.__wrapped__(spark, SF).count() == 10
 
