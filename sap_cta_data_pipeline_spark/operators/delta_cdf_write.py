@@ -40,23 +40,14 @@ from .delta_reader import (
     _commit,
     _meta_action,
     _remove,
+    _tip,
+    commit,
     delta_snapshot,
     delta_state,
     delta_table_changes,
 )
 from .lakehouse_interop import _stage_single_parquet
 from .sources import built
-
-
-def _log_tip(base: str) -> int:
-    import re
-
-    log_dir = os.path.join(base, "_delta_log")
-    return max(
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := re.match(r"^(\d{20})\.json$", f))
-    )
 
 
 def _cdc_action(rel: str) -> dict:
@@ -73,14 +64,16 @@ def _cdc_action(rel: str) -> dict:
 def _rewrite_with_changes(
     spark: SparkSession,
     base: str,
+    read_tip: int,
     predicate: str,
     change_frames: list[DataFrame],
     new_rows_of,
 ) -> int:
-    """Shared CoW body: find files hit by ``predicate``, rewrite each
-    without/with transformed matches via ``new_rows_of``, stage the
-    change frames under ``_change_data/``, commit removes+adds+cdc."""
-    live, schema_string, _, config, _ = delta_state(spark, base, None)
+    """Shared CoW body: find files hit by ``predicate`` in the snapshot at
+    ``read_tip``, rewrite each without/with transformed matches via
+    ``new_rows_of``, stage the change frames under ``_change_data/``,
+    commit removes+adds+cdc against that snapshot."""
+    live, schema_string, _, config, _ = delta_state(spark, base, read_tip)
     assert config.get("delta.enableChangeDataFeed") == "true"
     tagged = spark.read.parquet(*[os.path.join(base, p) for p in live]).select(
         "*",
@@ -92,7 +85,7 @@ def _rewrite_with_changes(
         tagged.filter(predicate).select("__file").distinct().collect()
     )  # distinct file names only — file-count bounded
     hit_files = sorted(r["__file"] for r in hit)
-    version = _log_tip(base) + 1
+    version = read_tip + 1
     actions = []
     for i, fname in enumerate(hit_files):
         old = tagged.filter(F.col("__file") == fname)
@@ -116,8 +109,7 @@ def _rewrite_with_changes(
         cdc = cdc.unionByName(c)
     _stage_single_parquet(cdc, os.path.join(base, cdc_rel))
     actions.append(_cdc_action(cdc_rel))
-    _commit(os.path.join(base, "_delta_log"), version, actions)
-    return version
+    return commit(base, actions, read_tip)
 
 
 def delta_update_where_cdf(
@@ -127,7 +119,8 @@ def delta_update_where_cdf(
     cdc file twice (update_preimage, then update_postimage with the SET
     applied); the rewrite's remove+add carry dataChange true as usual.
     Returns the committed version."""
-    live, *_ = delta_state(spark, base, None)
+    read_tip = _tip(base)
+    live, *_ = delta_state(spark, base, read_tip)
     full = spark.read.parquet(*[os.path.join(base, p) for p in live])
     matched = full.filter(predicate)
 
@@ -145,7 +138,7 @@ def delta_update_where_cdf(
         "_change_type", F.lit("update_postimage")
     )
     return _rewrite_with_changes(
-        spark, base, predicate, [pre, post], _apply
+        spark, base, read_tip, predicate, [pre, post], _apply
     )
 
 
@@ -154,11 +147,12 @@ def delta_delete_where_cdf(
 ) -> int:
     """CoW DELETE emitting the change feed: matched rows appear once
     with _change_type = 'delete'."""
-    live, *_ = delta_state(spark, base, None)
+    read_tip = _tip(base)
+    live, *_ = delta_state(spark, base, read_tip)
     full = spark.read.parquet(*[os.path.join(base, p) for p in live])
     dels = full.filter(predicate).withColumn("_change_type", F.lit("delete"))
     return _rewrite_with_changes(
-        spark, base, predicate, [dels], lambda _matched: None
+        spark, base, read_tip, predicate, [dels], lambda _matched: None
     )
 
 
@@ -303,7 +297,8 @@ def delta_merge_cdf(
     Scale: the same probe + per-hit-file rewrite envelope as the plain
     MERGE; the change frame adds one map-side pass over matched+inserted
     rows — O(changed), never O(table)."""
-    live, schema_string, _, config, _ = delta_state(spark, base, None)
+    read_tip = _tip(base)
+    live, schema_string, _, config, _ = delta_state(spark, base, read_tip)
     assert config.get("delta.enableChangeDataFeed") == "true"
     if source.groupBy(on).count().filter("count > 1").limit(1).count() > 0:
         raise ValueError(
@@ -362,7 +357,7 @@ def delta_merge_cdf(
     post = _apply(matched).withColumn("_change_type", F.lit("update_postimage"))
     ins_changes = inserts.withColumn("_change_type", F.lit("insert"))
 
-    version = _log_tip(base) + 1
+    version = read_tip + 1
     actions: list[dict] = [
         {"commitInfo": {"operation": "MERGE", "predicate": f"{on} = source.{on}"}}
     ]
@@ -382,8 +377,7 @@ def delta_merge_cdf(
     cdc = pre.unionByName(post).unionByName(ins_changes)
     _stage_single_parquet(cdc, os.path.join(base, cdc_rel))
     actions.append(_cdc_action(cdc_rel))
-    _commit(os.path.join(base, "_delta_log"), version, actions)
-    return version
+    return commit(base, actions, read_tip)
 
 
 _MRG_SUBSET = "o_orderkey % 37 = 0"

@@ -23,13 +23,12 @@ reading the table back through this repo's own spec reader:
   matched files are rewritten with source values, not-matched source rows
   land in a fresh insert file, and removes+adds+insert commit together —
   a reader at any version sees either the whole MERGE or none of it.
-  Conflict handling is the real MERGE contract, not blind retry: a loser
-  of the put-if-absent race re-reads the log tip and RE-VALIDATES its
-  read set — any intervening data-changing commit aborts with
-  ``ConcurrentMergeError`` (the merge was computed against a stale
-  snapshot), while metadata-only interlopers are safe to retry past.
-  This is the re-validation the append writer's comment
-  (lakehouse_interop.py:144-148) defers to "a real MERGE writer".
+  Conflict handling is the real MERGE contract, not blind retry: both
+  verbs plan against the snapshot at one log version and commit through
+  ``delta_reader.commit(read_tip=...)``, which aborts with
+  ``ConcurrentMergeError`` when an intervening commit changed data or
+  removed a file this rewrite removes (the merge was computed against a
+  stale snapshot), and retries past metadata-only interlopers.
 
 Scale notes (SCALE.md S18): the probe and every rewrite are ordinary
 distributed parquet jobs over exactly the affected file set; driver-side
@@ -52,59 +51,17 @@ from pyspark.sql import types as _T
 from ..catalog import load_table as t
 from ..registry import query
 from .delta_reader import (
-    _COMMIT_RE,
-    CommitConflict,
-    _commit,
+    ConcurrentMergeError,  # noqa: F401  (raised by commit; importable here)
     _meta_action,
     _read_commit,
+    _tip,
+    _versions,
+    commit,
     delta_snapshot,
     delta_state,
 )
 from .lakehouse_interop import _build_sink_fixture, _stage_single_parquet
 from .sources import _scratch, built
-
-
-class ConcurrentMergeError(Exception):
-    """A concurrent data-changing commit landed between this writer's
-    snapshot read and its commit attempt: the computed rewrite is stale
-    and must NOT be committed (rows it never saw could match). Callers
-    re-run the whole DML against the new snapshot."""
-
-
-def _log_tip(base: str) -> int:
-    log_dir = os.path.join(base, "_delta_log")
-    commits = sorted(
-        int(m.group(1)) for f in os.listdir(log_dir) if (m := _COMMIT_RE.match(f))
-    )
-    if not commits:
-        raise FileNotFoundError(f"no Delta commits under {log_dir}")
-    return commits[-1]
-
-
-def _commit_validated(base: str, read_tip: int, actions: list[dict]) -> int:
-    """Put-if-absent commit with READ-SET VALIDATION: on a version
-    conflict, replay every commit that landed after ``read_tip``; if any
-    carries a data-changing add/remove, the snapshot this DML was computed
-    from is stale -> ConcurrentMergeError. Metadata-only commits (ALTER,
-    checkpoint bookkeeping) cannot invalidate a row-level rewrite, so the
-    writer retries past them — Delta's conflict matrix in miniature."""
-    log_dir = os.path.join(base, "_delta_log")
-    version = read_tip + 1
-    for _ in range(10):
-        try:
-            _commit(log_dir, version, actions)
-            return version
-        except CommitConflict:
-            for a in _read_commit(log_dir, version):
-                if ("add" in a and a["add"].get("dataChange")) or (
-                    "remove" in a and a["remove"].get("dataChange")
-                ):
-                    raise ConcurrentMergeError(
-                        f"data-changing commit {version} landed after the "
-                        f"snapshot at {read_tip}; recompute against the new tip"
-                    ) from None
-            version += 1
-    raise CommitConflict(f"gave up after 10 contended versions under {log_dir}")
 
 
 def _dv_filter(spark: SparkSession, base: str, dvs: dict[str, dict], df: DataFrame) -> DataFrame:
@@ -195,7 +152,8 @@ def delta_update_where(
     the table's declared type (schemaString governs; an UPDATE must never
     drift the schema) — and committed as remove+add in one version.
     """
-    live, schema_string, part_cols, config, dvs = delta_state(spark, base)
+    read_tip = _tip(base)
+    live, schema_string, part_cols, config, dvs = delta_state(spark, base, read_tip)
     bad = sorted(set(assignments) & set(part_cols))
     if bad:
         raise NotImplementedError(
@@ -209,7 +167,6 @@ def delta_update_where(
     if unknown:
         raise ValueError(f"assignment to unknown column(s) {unknown}")
     abs_of = {os.path.abspath(os.path.join(base, p)): p for p in live}
-    read_tip = _log_tip(base)
 
     affected_abs = [
         r["__fp"]
@@ -271,7 +228,7 @@ def delta_update_where(
                 }
             }
         )
-    version = _commit_validated(base, read_tip, actions)
+    version = commit(base, actions, read_tip)
     return version, len(affected_abs)
 
 
@@ -326,13 +283,14 @@ def delta_merge_into(
     on the full target key set — every matching target row lives in a
     matched file by construction) become a fresh insert file; (5) removes
     + rewrite adds + insert add commit in one version through read-set
-    validation (see _commit_validated).
+    validation (see delta_reader.commit).
 
     The source is broadcast into both joins when small (Spark decides by
     stats); at scale a huge source flips to a shuffle join and the rewrite
     remains one distributed job per file group — no driver-side rows ever.
     """
-    live, schema_string, part_cols, config, dvs = delta_state(spark, base)
+    read_tip = _tip(base)
+    live, schema_string, part_cols, config, dvs = delta_state(spark, base, read_tip)
     schema = _T.StructType.fromJson(json.loads(schema_string))
     evolve_meta: dict | None = None
     if schema_evolution:
@@ -413,7 +371,6 @@ def delta_merge_into(
     if on not in data_cols or on in update_cols:
         raise ValueError(f"merge key {on!r} must be a non-updated target column")
     abs_of = {os.path.abspath(os.path.join(base, p)): p for p in live}
-    read_tip = _log_tip(base)
 
     cdc_flag = (
         F.coalesce(F.col(delete_col).cast("boolean"), F.lit(False))
@@ -607,7 +564,7 @@ def delta_merge_into(
         return read_tip, 0, 0  # no matches, no inserts: nothing to commit
     if txn is not None:
         actions.append({"txn": {"appId": txn[0], "version": int(txn[1])}})
-    version = _commit_validated(base, read_tip, actions)
+    version = commit(base, actions, read_tip)
     return version, len(matched_files), n_insert
 
 
@@ -700,9 +657,7 @@ def delta_describe_history_df(spark: SparkSession, base: str) -> DataFrame:
     retention + checkpoints."""
     log_dir = os.path.join(base, "_delta_log")
     rows = []
-    for v in sorted(
-        int(m.group(1)) for f in os.listdir(log_dir) if (m := _COMMIT_RE.match(f))
-    ):
+    for v in _versions(log_dir):
         acts = _read_commit(log_dir, v)
         ci = next((a["commitInfo"] for a in acts if "commitInfo" in a), None)
         if ci is not None:

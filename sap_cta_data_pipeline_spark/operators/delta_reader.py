@@ -1,12 +1,12 @@
-"""§2 round-5 batch BN — read-only Delta-protocol table reader.
+"""Delta-protocol table reader, and the one commit path of every Delta
+writer in this package.
 
-The one table-format gap that is NOT environment-blocked (round-4 verdict
-"What's missing" #2): the open Delta Lake transaction-log protocol
-(delta.io PROTOCOL.md — public spec) is plain JSON commit files plus
-parquet checkpoints, readable with zero new dependencies. table_log.py
-already implements the harder half of the idea from first principles (log
-replay, snapshot isolation, copy-on-write); this module implements the
-PUBLIC WIRE FORMAT a user's existing Delta table actually has:
+The open Delta Lake transaction-log protocol (delta.io PROTOCOL.md —
+public spec) is plain JSON commit files plus parquet checkpoints,
+readable with zero new dependencies. table_log.py implements the idea
+from first principles (log replay, snapshot isolation, copy-on-write);
+this module implements the PUBLIC WIRE FORMAT a user's existing Delta
+table actually has:
 
 - ``_delta_log/{version:020d}.json`` — newline-delimited action objects
   (``protocol`` / ``metaData`` / ``add`` / ``remove`` / ``commitInfo``);
@@ -26,6 +26,16 @@ The data read is an ordinary distributed parquet scan of exactly the live
 file set, so Catalyst pushdown/pruning applies unchanged. At 100 TB the
 live-file list for a partition-pruned query is the only driver-side
 state — precisely how production Delta readers behave.
+
+Commits: every Delta writer commits through ``commit(base, actions,
+read_tip=None)``, a put-if-absent of the next ``{version:020d}.json``
+(``_commit``). A BLIND commit (an append) that loses its version slot
+retries at the next one. A READ-DEPENDENT commit, planned against the
+snapshot at ``read_tip``, reads each commit that took its slot and
+aborts with ``ConcurrentMergeError`` if that commit changed data or
+removed a file this one removes. ``_versions`` is the one commit
+listing every replay shares. Fixture builders that plant an exact log
+in a directory they just created call ``_commit`` with fixed versions.
 """
 
 from __future__ import annotations
@@ -86,9 +96,54 @@ def _decode_path(path: str) -> str:
 # ---------------------------------------------------------------- reader
 
 
+def _versions(log_dir: str) -> list[int]:
+    """Sorted JSON commit versions under ``log_dir`` ([] without a log)."""
+    if not os.path.isdir(log_dir):
+        return []
+    return sorted(
+        int(m.group(1)) for f in os.listdir(log_dir) if (m := _COMMIT_RE.match(f))
+    )
+
+
+def _tip(base: str) -> int:
+    """The latest committed version of the table at ``base``."""
+    vs = _versions(os.path.join(base, "_delta_log"))
+    if not vs:
+        raise FileNotFoundError(f"no Delta commits under {base}/_delta_log")
+    return vs[-1]
+
+
 def _read_commit(log_dir: str, version: int) -> list[dict]:
     with open(os.path.join(log_dir, f"{version:020d}.json")) as fh:
         return [json.loads(line) for line in fh if line.strip()]
+
+
+def _newest_action(base: str, kind: str) -> dict | None:
+    """The newest ``kind`` action (``protocol`` / ``metaData``) in the JSON
+    log, read newest commit first. Checkpoint-resident actions are
+    delta_state's business; every writer here consults it first."""
+    log_dir = os.path.join(base, "_delta_log")
+    for v in reversed(_versions(log_dir)):
+        for a in _read_commit(log_dir, v):
+            if kind in a:
+                return a[kind]
+    return None
+
+
+def _protocol_action(base: str) -> dict:
+    """Newest protocol action; a log without one reads as 1/2."""
+    return _newest_action(base, "protocol") or {
+        "minReaderVersion": 1,
+        "minWriterVersion": 2,
+    }
+
+
+def _current_metadata_action(base: str) -> dict:
+    """Deep copy of the newest metaData action (callers edit it)."""
+    md = _newest_action(base, "metaData")
+    if md is None:
+        raise ValueError(f"no metaData action found under {base}/_delta_log")
+    return json.loads(json.dumps(md))
 
 
 def _collect_proto_meta(cp: DataFrame) -> list[dict]:
@@ -231,11 +286,7 @@ def delta_state(
     the retained JSON commits from 0 (same rule as Delta's own reader).
     """
     log_dir = os.path.join(base, "_delta_log")
-    commits = sorted(
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    )
+    commits = _versions(log_dir)
     lc_path = os.path.join(log_dir, "_last_checkpoint")
     if not commits:
         # log retention can leave checkpoint-only tables: the checkpoint
@@ -501,8 +552,14 @@ def _write_parquet_file(src_schema, pdf, path: str) -> None:
 
 class CommitConflict(Exception):
     """Another writer already committed this version (the loser of the
-    put-if-absent race). Callers retry at version+1 — Delta's optimistic
-    concurrency contract."""
+    put-if-absent race), or ``commit`` lost ten slots in a row."""
+
+
+class ConcurrentMergeError(Exception):
+    """A conflicting commit landed between this writer's snapshot read
+    and its commit attempt: the computed rewrite is stale and must NOT be
+    committed (rows it never saw could match, or files it rewrote are
+    gone). Callers re-run the whole operation against the new snapshot."""
 
 
 def _commit(log_dir: str, version: int, actions: list[dict]) -> None:
@@ -524,6 +581,53 @@ def _commit(log_dir: str, version: int, actions: list[dict]) -> None:
         ) from None
     finally:
         os.remove(tmp)
+
+
+def commit(base: str, actions: list[dict], read_tip: int | None = None) -> int:
+    """Commit ``actions`` as the next version of the table at ``base``;
+    returns the version. The one optimistic-concurrency rule every Delta
+    writer here goes through:
+
+    - ``read_tip=None`` — a BLIND commit (an append): it starts after the
+      current tip and, on a lost put-if-absent slot, retries at the next
+      version; appends never semantically conflict.
+    - ``read_tip=N`` — a READ-DEPENDENT commit, computed against the
+      snapshot at version N: it starts at N + 1, and on each lost slot it
+      reads the winning commit and raises ``ConcurrentMergeError`` if the
+      winner has a ``dataChange`` add or remove, or removes any path this
+      commit removes (whatever its ``dataChange`` — an OPTIMIZE's removes
+      are ``dataChange: false``, and re-adding rows a compacted file
+      already holds duplicates them). Commits that pass both checks
+      (metadata-only, or rearranging files this one does not touch) are
+      retried past.
+
+    After 10 lost slots it raises ``CommitConflict``."""
+    log_dir = os.path.join(base, "_delta_log")
+    if read_tip is None:
+        vs = _versions(log_dir)
+        version = (vs[-1] + 1) if vs else 0
+    else:
+        version = read_tip + 1
+    removes = {_decode_path(a["remove"]["path"]) for a in actions if "remove" in a}
+    for _ in range(10):
+        try:
+            _commit(log_dir, version, actions)
+            return version
+        except CommitConflict:
+            if read_tip is not None:
+                for a in _read_commit(log_dir, version):
+                    f = a.get("add") or a.get("remove")
+                    if f is not None and (
+                        f.get("dataChange")
+                        or ("remove" in a and _decode_path(f["path"]) in removes)
+                    ):
+                        raise ConcurrentMergeError(
+                            f"concurrent commit {version} under {log_dir} "
+                            f"conflicts with a rewrite planned at {read_tip}; "
+                            "recompute against the new tip"
+                        ) from None
+            version += 1
+    raise CommitConflict(f"gave up after 10 contended versions under {log_dir}")
 
 
 def _add(path: str, partition_values: dict | None = None) -> dict:
@@ -894,11 +998,7 @@ def delta_table_changes(
     is read in the ordinary distributed parquet scan, one plan branch
     per version (bounded by the requested range)."""
     log_dir = os.path.join(base, "_delta_log")
-    commits = sorted(
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    )
+    commits = _versions(log_dir)
     if not commits:
         raise FileNotFoundError(f"no Delta commits under {log_dir}")
     end = commits[-1] if end is None else end
@@ -1113,9 +1213,8 @@ def _cdf_file_plan(base: str, v_from: int, v_to: int) -> list[tuple]:
 
 def _cdf_next_version(base: str, _seen: int) -> int:
     """The first version not yet committed: the tail's latest offset."""
-    log_dir = os.path.join(base, "_delta_log")
-    vs = [int(m.group(1)) for f in os.listdir(log_dir) if (m := _COMMIT_RE.match(f))]
-    return (max(vs) + 1) if vs else 0
+    vs = _versions(os.path.join(base, "_delta_log"))
+    return (vs[-1] + 1) if vs else 0
 
 
 def _read_cdf_split(split):
@@ -1255,11 +1354,7 @@ def delta_version_at_timestamp(base: str, ts: float) -> int:
     mid-history-enablement split PROTOCOL.md defines. Pre-history
     timestamps raise, exactly like the version-based guard."""
     log_dir = os.path.join(base, "_delta_log")
-    versions = sorted(
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    )
+    versions = _versions(log_dir)
     if not versions:
         raise FileNotFoundError(f"no Delta commits under {log_dir}")
     ict = _ict_enablement(log_dir, versions)

@@ -22,7 +22,6 @@ EVOLUTION on the read side.
 
 from __future__ import annotations
 
-import json
 import os
 from functools import partial
 
@@ -42,6 +41,7 @@ from .iceberg_reader import (
     _iceberg_fields_of,
     _manifest_file_rec,
     iceberg_snapshot,
+    commit as iceberg_commit,
 )
 from .sources import built
 
@@ -220,10 +220,7 @@ def iceberg_create_bucketed(
             }
         ],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(md, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_commit(base, lambda _v, _prev: md)
 
 
 def _bucket_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -374,10 +371,7 @@ def _build_evo_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
             },
         ],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(md, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_commit(base, lambda _v, _prev: md)
 
 
 def _evo_fixture(spark: SparkSession, sf_dir: str) -> str:

@@ -1,12 +1,10 @@
-"""§2 round-7 batch CH — read-only Apache Iceberg table reader.
+"""Apache Iceberg table reader, and the one commit path of every Iceberg
+writer in this package.
 
-The second-most-requested interop after Delta (round-6 verdict "What's
-missing" #2). The open Iceberg spec (iceberg.apache.org/spec — table
-format v2) is plain JSON table metadata plus AVRO manifest files; no
-avro package exists in this container, so functions/avro_codec.py
-implements the container format from the published spec (the protobuf
-precedent inverted: here the from-scratch decoder is tractable and so
-it EXISTS rather than being documented as env-blocked).
+The open Iceberg spec (iceberg.apache.org/spec — table format v2) is
+plain JSON table metadata plus AVRO manifest files; no avro package is
+a dependency, so functions/avro_codec.py implements the container
+format from the published spec.
 
 Layout read here:
 
@@ -34,12 +32,23 @@ deletes are already parquet — the anti-join build side is a shuffle-free
 broadcast only if Spark sizes it so; AQE decides). Time travel is
 snapshot-id addressing into the SAME metadata file — no log replay at
 all, the design reason Iceberg scans plan in O(manifests-for-snapshot).
+
+Commits: every Iceberg writer commits through ``commit(base, build,
+read_v=None)``. Each attempt probes the newest ``v<N>.metadata.json``
+(``_tip`` — writers never trust the advisory hint), asks ``build(N,
+metadata)`` for the next metadata and puts ``v<N+1>.metadata.json`` if
+absent. A REBUILD commit (appends, fixture builders) that loses its
+slot rebuilds on the fresh tip; a READ-DEPENDENT commit, planned
+against version ``read_v``, aborts with ``IcebergCommitConflict`` once
+the tip has moved. ``version-hint.text`` is written after every
+successful commit.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
@@ -565,16 +574,9 @@ def _build_iceberg_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         "sort-orders": [{"order-id": 0, "fields": []}],
         "properties": {},
     }
-    for n, (cur, keep) in enumerate(
-        [(1001, snaps[:1]), (1002, snaps)], start=1
-    ):
-        md = dict(common)
-        md["current-snapshot-id"] = cur
-        md["snapshots"] = keep
-        with open(os.path.join(base, "metadata", f"v{n}.metadata.json"), "w") as fh:
-            json.dump(md, fh)
-    with open(os.path.join(base, "metadata", "version-hint.text"), "w") as fh:
-        fh.write("2")
+    for cur, keep in [(1001, snaps[:1]), (1002, snaps)]:
+        md = {**common, "current-snapshot-id": cur, "snapshots": keep}
+        commit(base, lambda _v, _prev: md)
 
 
 # ---------------------------------------------------------------- queries
@@ -742,11 +744,7 @@ def _build_iceberg_part_fixture(
             }
         ],
     }
-    os.makedirs(os.path.join(base, "metadata"), exist_ok=True)
-    with open(os.path.join(base, "metadata", "v1.metadata.json"), "w") as fh:
-        json.dump(md, fh)
-    with open(os.path.join(base, "metadata", "version-hint.text"), "w") as fh:
-        fh.write("1")
+    commit(base, lambda _v, _prev: md)
 
 
 def _part_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -927,11 +925,7 @@ def _build_iceberg_eq_fixture(spark: SparkSession, sf_dir: str, base: str) -> No
             }
         ],
     }
-    os.makedirs(os.path.join(base, "metadata"), exist_ok=True)
-    with open(os.path.join(base, "metadata", "v1.metadata.json"), "w") as fh:
-        json.dump(md, fh)
-    with open(os.path.join(base, "metadata", "version-hint.text"), "w") as fh:
-        fh.write("1")
+    commit(base, lambda _v, _prev: md)
 
 
 def _eq_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -1002,7 +996,28 @@ class IcebergCommitConflict(Exception):
     """Another writer already produced this metadata version (loser of
     the put-if-absent race on v<N>.metadata.json — Iceberg's optimistic
     concurrency is exactly this atomic swap; on object stores it is the
-    catalog's compare-and-swap)."""
+    catalog's compare-and-swap), a read-dependent commit found the tip
+    moved, or ``commit`` lost ten slots in a row."""
+
+
+_METADATA_RE = re.compile(r"^v(\d+)\.metadata\.json$")
+
+
+def _tip(meta_dir: str) -> tuple[int, dict | None]:
+    """Probe the metadata directory for the newest ``v<N>.metadata.json``:
+    returns (N, its metadata), or (0, None) for an empty table. Writers
+    probe, never trust ``version-hint.text``: the hint is advisory (a
+    racing winner may not have updated it yet)."""
+    versions = [
+        int(m.group(1))
+        for f in (os.listdir(meta_dir) if os.path.isdir(meta_dir) else [])
+        if (m := _METADATA_RE.match(f))
+    ]
+    if not versions:
+        return 0, None
+    v = max(versions)
+    with open(os.path.join(meta_dir, f"v{v}.metadata.json")) as fh:
+        return v, json.load(fh)
 
 
 def _put_metadata_if_absent(meta_dir: str, version: int, md: dict) -> None:
@@ -1020,6 +1035,45 @@ def _put_metadata_if_absent(meta_dir: str, version: int, md: dict) -> None:
         os.remove(tmp)
 
 
+def commit(base: str, build, read_v: int | None = None) -> int:
+    """Commit the metadata ``build(cur_v, prev)`` returns as version
+    ``cur_v + 1`` of the table at ``base``; returns that version. The one
+    optimistic-concurrency rule every Iceberg writer here goes through.
+    Each attempt probes the tip (``_tip``), then:
+
+    - ``read_v=None`` — a commit that REBUILDS on the fresh tip (appends,
+      equality deletes, fixture builders): ``build`` runs on every
+      attempt against the tip it is given, and a lost put-if-absent slot
+      retries on the new tip.
+    - ``read_v=N`` — a READ-DEPENDENT commit planned against metadata
+      version N (row-level deletes, rewrites, expiry, ref moves): if the
+      tip is no longer N it raises ``IcebergCommitConflict("concurrent
+      commit: ...")`` instead of committing a stale plan.
+
+    ``version-hint.text`` is written after every successful commit. After
+    10 lost slots it raises ``IcebergCommitConflict``."""
+    meta_dir = os.path.join(base, "metadata")
+    os.makedirs(meta_dir, exist_ok=True)
+    for _ in range(10):
+        cur_v, prev = _tip(meta_dir)
+        if read_v is not None and cur_v != read_v:
+            raise IcebergCommitConflict(
+                f"concurrent commit: metadata version {cur_v} under {meta_dir} "
+                f"landed after the plan at version {read_v}; recompute"
+            )
+        md = build(cur_v, prev)
+        try:
+            _put_metadata_if_absent(meta_dir, cur_v + 1, md)
+        except IcebergCommitConflict:
+            continue
+        with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
+            fh.write(str(cur_v + 1))
+        return cur_v + 1
+    raise IcebergCommitConflict(
+        f"gave up after 10 contended metadata versions under {meta_dir}"
+    )
+
+
 def iceberg_append(
     spark: SparkSession, base: str, df: DataFrame, file_name: str
 ) -> int:
@@ -1027,14 +1081,13 @@ def iceberg_append(
     stage ONE data parquet, write its manifest (Avro) and a NEW manifest
     list reusing every previous snapshot's manifests, then commit by
     put-if-absent on ``v<N+1>.metadata.json`` — the atomic swap that IS
-    Iceberg's optimistic concurrency (losers re-read the hint and retry
-    at the next version; appends never semantically conflict). Returns
-    the committed metadata version. version-hint.text is advisory
-    (last-writer-wins) per the spec — readers that miss the newest hint
-    still read a CONSISTENT older snapshot."""
+    Iceberg's optimistic concurrency. Appends never semantically
+    conflict, so ``commit`` rebuilds the manifests and metadata on the
+    fresh tip after a lost slot. Returns the committed metadata version.
+    version-hint.text is advisory (last-writer-wins) per the spec —
+    readers that miss the newest hint still read a CONSISTENT older
+    snapshot."""
     meta_dir = os.path.join(base, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    hint = os.path.join(meta_dir, "version-hint.text")
 
     # stage the data file (single parquet FILE, like the Delta writer)
     from .lakehouse_interop import _stage_single_parquet
@@ -1044,24 +1097,7 @@ def iceberg_append(
     _stage_single_parquet(df, data_path)
     n_rows = df.count()
 
-    import re as _re
-
-    for _ in range(10):
-        # discover the tip by PROBING the directory, not the hint: the
-        # hint is advisory (a racing winner may not have updated it yet),
-        # so trusting it would retry the same taken version forever —
-        # exactly what the conflict test plants.
-        versions = [
-            int(m.group(1))
-            for f in os.listdir(meta_dir)
-            if (m := _re.match(r"^v(\d+)\.metadata\.json$", f))
-        ]
-        if versions:
-            cur_v = max(versions)
-            with open(os.path.join(meta_dir, f"v{cur_v}.metadata.json")) as fh:
-                prev = json.load(fh)
-        else:
-            cur_v, prev = 0, None
+    def build(_cur_v: int, prev: dict | None) -> dict:
         seq = (prev or {}).get("last-sequence-number", 0) + 1
         snap_id = 1000 + seq
         mrel = f"m-{snap_id}.avro"
@@ -1120,16 +1156,9 @@ def iceberg_append(
         md["last-updated-ms"] = snap["timestamp-ms"]
         md["current-snapshot-id"] = snap_id
         md["snapshots"] = list(md.get("snapshots", [])) + [snap]
-        try:
-            _put_metadata_if_absent(meta_dir, cur_v + 1, md)
-        except IcebergCommitConflict:
-            continue  # re-read the tip, retry
-        with open(hint, "w") as fh:
-            fh.write(str(cur_v + 1))
-        return cur_v + 1
-    raise IcebergCommitConflict(
-        f"gave up after 10 contended metadata versions under {meta_dir}"
-    )
+        return md
+
+    return commit(base, build)
 
 
 @query(
@@ -1360,11 +1389,7 @@ def _build_iceberg_evo_fixture(spark: SparkSession, sf_dir: str, base: str) -> N
             },
         ],
     }
-    os.makedirs(os.path.join(base, "metadata"), exist_ok=True)
-    with open(os.path.join(base, "metadata", "v1.metadata.json"), "w") as fh:
-        json.dump(md, fh)
-    with open(os.path.join(base, "metadata", "version-hint.text"), "w") as fh:
-        fh.write("1")
+    commit(base, lambda _v, _prev: md)
 
 
 @query(
@@ -1424,9 +1449,10 @@ def iceberg_expire_snapshots(
     never a file any RETAINED snapshot still plans (the same
     union-of-live-sets safety contract as delta_vacuum). Time travel to
     expired snapshots then fails LOUDLY at snapshot resolution (the id
-    is gone from metadata), not silently with wrong data. Returns
-    (deleted, kept) relative paths."""
-    meta = _load_metadata(base)
+    is gone from metadata), not silently with wrong data. The commit is
+    read-dependent: a concurrent commit aborts it before any file is
+    deleted. Returns (deleted, kept) relative paths."""
+    read_v, meta = _tip(os.path.join(base, "metadata"))
     keep = [
         s for s in meta["snapshots"] if s["sequence-number"] >= keep_from_seq
     ]
@@ -1461,23 +1487,18 @@ def iceberg_expire_snapshots(
     candidates: set[str] = set()
     for s in expired:
         candidates |= _files_of(s)
-    deleted = sorted(candidates - referenced)
-    for rel in deleted:
-        p = os.path.join(base, rel)
-        if os.path.exists(p):
-            os.remove(p)
     md = dict(meta)
     md["snapshots"] = keep
     if md.get("current-snapshot-id") not in {s["snapshot-id"] for s in keep}:
         md["current-snapshot-id"] = max(
             keep, key=lambda s: s["sequence-number"]
         )["snapshot-id"]
-    meta_dir = os.path.join(base, "metadata")
-    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-        cur_v = int(fh.read().strip())
-    _put_metadata_if_absent(meta_dir, cur_v + 1, md)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(cur_v + 1))
+    commit(base, lambda _v, _prev: md, read_v)
+    deleted = sorted(candidates - referenced)
+    for rel in deleted:
+        p = os.path.join(base, rel)
+        if os.path.exists(p):
+            os.remove(p)
     return deleted, sorted(referenced)
 
 
@@ -1504,15 +1525,16 @@ def scan_iceberg_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def iceberg_delete_where(spark: SparkSession, base: str, predicate: str) -> int:
     """``DELETE FROM <table> WHERE predicate`` emitted as an Iceberg v2
-    POSITION-DELETE file (round 8 — the write half of the round-7 delete
-    reader, mirroring the Delta DV writer): one distributed probe of the
+    POSITION-DELETE file (the write half of the position-delete reader,
+    mirroring the Delta DV writer): one distributed probe of the
     current snapshot with the predicate PUSHED to parquet finds the
     matching (file_path, pos) pairs; rows already deleted by existing
     position deletes are excluded; the survivors are written as ONE
     delete parquet sorted by (file_path, pos) — the spec's required
     ordering — named by a DELETE manifest (content=1) at the next
-    sequence number, and committed with the same put-if-absent
-    metadata-version swap as ``iceberg_append``. The sequence gate the
+    sequence number, and committed read-dependent (``commit`` with the
+    planned metadata version): a concurrent commit aborts the delete
+    rather than dropping the rival's changes. The sequence gate the
     reader enforces (pos delete applies to files with seq <= delete's)
     holds by construction: the new delete's seq exceeds every current
     data file's.
@@ -1520,7 +1542,11 @@ def iceberg_delete_where(spark: SparkSession, base: str, predicate: str) -> int:
     Driver-side work is bounded by THIS delete's matched rows (the data
     a position-delete writer must materialize to write the file) plus
     metadata. Returns the committed metadata version."""
-    schema, data_entries, pos_deletes, _eq = iceberg_state(base)
+    meta_dir = os.path.join(base, "metadata")
+    read_v, prev = _tip(meta_dir)
+    schema, data_entries, pos_deletes, _eq = iceberg_state(
+        base, snapshot_id=prev["current-snapshot-id"]
+    )
     if not data_entries:
         raise ValueError(f"nothing to delete: no data files under {base}")
     probe = (
@@ -1555,86 +1581,55 @@ def iceberg_delete_where(spark: SparkSession, base: str, predicate: str) -> int:
             for p in deserialize_dv_blob(read_blob(d["path"], d["offset"], d["size"])):
                 already.add((d["referenced"], int(p)))
     new = sorted(matched - already)
-
-    meta_dir = os.path.join(base, "metadata")
-    import re as _re
-
-    versions = [
-        int(m.group(1))
-        for f in os.listdir(meta_dir)
-        if (m := _re.match(r"^v(\d+)\.metadata\.json$", f))
-    ]
     if not new:
-        return max(versions)
+        return read_v
 
     import pandas as pd
     import pyarrow as pa
 
-    for _ in range(10):
-        versions = [
-            int(m.group(1))
-            for f in os.listdir(meta_dir)
-            if (m := _re.match(r"^v(\d+)\.metadata\.json$", f))
-        ]
-        cur_v = max(versions)
-        with open(os.path.join(meta_dir, f"v{cur_v}.metadata.json")) as fh:
-            prev = json.load(fh)
-        seq = prev.get("last-sequence-number", 0) + 1
-        snap_id = 1000 + seq
-        del_rel = f"del-pos-{seq}.parquet"
-        del_pdf = pd.DataFrame(
-            {
-                "file_path": ["file://" + fp for fp, _ in new],
-                "pos": [p for _, p in new],
-            }
-        )
-        del_schema = pa.schema(
-            [pa.field("file_path", pa.string()), pa.field("pos", pa.int64())]
-        )
-        from .delta_reader import _write_parquet_file
-
-        _write_parquet_file(
-            del_schema, del_pdf, os.path.join(base, "data", del_rel)
-        )
-        mrel = f"m-del-{snap_id}.avro"
-        write_container(
-            os.path.join(meta_dir, mrel),
-            _MANIFEST_ENTRY_EQ_SCHEMA,
-            [_eq_entry(base, del_rel, 1, len(new), seq)],
-        )
-        snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
-        _, prev_manifests = read_container(
-            _resolve_path(base, snaps[prev["current-snapshot-id"]]["manifest-list"])
-        )
-        mlrel = f"snap-{snap_id}.avro"
-        write_container(
-            os.path.join(meta_dir, mlrel),
-            _MANIFEST_FILE_SCHEMA,
-            prev_manifests + [_manifest_file_rec(base, mrel, 1, snap_id, seq)],
-        )
-        md = dict(prev)
-        snap = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": 1700000000000 + seq,
-            "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-            "summary": {"operation": "delete"},
-            "schema-id": 0,
+    seq = prev.get("last-sequence-number", 0) + 1
+    snap_id = 1000 + seq
+    del_rel = f"del-pos-{seq}.parquet"
+    del_pdf = pd.DataFrame(
+        {
+            "file_path": ["file://" + fp for fp, _ in new],
+            "pos": [p for _, p in new],
         }
-        md["last-sequence-number"] = seq
-        md["last-updated-ms"] = snap["timestamp-ms"]
-        md["current-snapshot-id"] = snap_id
-        md["snapshots"] = list(md.get("snapshots", [])) + [snap]
-        try:
-            _put_metadata_if_absent(meta_dir, cur_v + 1, md)
-        except IcebergCommitConflict:
-            continue
-        with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-            fh.write(str(cur_v + 1))
-        return cur_v + 1
-    raise IcebergCommitConflict(
-        f"gave up after 10 contended metadata versions under {meta_dir}"
     )
+    del_schema = pa.schema(
+        [pa.field("file_path", pa.string()), pa.field("pos", pa.int64())]
+    )
+    _write_parquet_file(del_schema, del_pdf, os.path.join(base, "data", del_rel))
+    mrel = f"m-del-{snap_id}.avro"
+    write_container(
+        os.path.join(meta_dir, mrel),
+        _MANIFEST_ENTRY_EQ_SCHEMA,
+        [_eq_entry(base, del_rel, 1, len(new), seq)],
+    )
+    snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
+    _, prev_manifests = read_container(
+        _resolve_path(base, snaps[prev["current-snapshot-id"]]["manifest-list"])
+    )
+    mlrel = f"snap-{snap_id}.avro"
+    write_container(
+        os.path.join(meta_dir, mlrel),
+        _MANIFEST_FILE_SCHEMA,
+        prev_manifests + [_manifest_file_rec(base, mrel, 1, snap_id, seq)],
+    )
+    md = dict(prev)
+    snap = {
+        "snapshot-id": snap_id,
+        "sequence-number": seq,
+        "timestamp-ms": 1700000000000 + seq,
+        "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
+        "summary": {"operation": "delete"},
+        "schema-id": 0,
+    }
+    md["last-sequence-number"] = seq
+    md["last-updated-ms"] = snap["timestamp-ms"]
+    md["current-snapshot-id"] = snap_id
+    md["snapshots"] = list(md.get("snapshots", [])) + [snap]
+    return commit(base, lambda _v, _prev: md, read_v)
 
 
 @query(
@@ -1748,8 +1743,8 @@ def iceberg_delete_dv(spark: SparkSession, base: str, predicate: str) -> int:
     Scale: the probe is one distributed predicate-pushed scan; the
     driver materializes exactly this delete's matched positions (the
     bitmaps a DV writer must serialize — KBs per file), and the commit
-    is the same put-if-absent metadata swap as every Iceberg writer
-    here."""
+    is read-dependent (``commit`` with the planned metadata version): a
+    concurrent commit aborts it."""
     from ..functions.puffin import (
         DELETION_VECTOR_V1,
         deserialize_dv_blob,
@@ -1757,7 +1752,11 @@ def iceberg_delete_dv(spark: SparkSession, base: str, predicate: str) -> int:
         serialize_dv_blob,
     )
 
-    schema, data_entries, pos_deletes, _eq = iceberg_state(base)
+    meta_dir = os.path.join(base, "metadata")
+    read_v, prev = _tip(meta_dir)
+    schema, data_entries, pos_deletes, _eq = iceberg_state(
+        base, snapshot_id=prev["current-snapshot-id"]
+    )
     if not data_entries:
         raise ValueError(f"nothing to delete: no data files under {base}")
     probe = (
@@ -1787,107 +1786,84 @@ def iceberg_delete_dv(spark: SparkSession, base: str, predicate: str) -> int:
         if pos - existing.get(fp, set())
     }
 
-    meta_dir = os.path.join(base, "metadata")
-    import re as _re
-
-    def _versions() -> list[int]:
-        return [
-            int(m.group(1))
-            for f in os.listdir(meta_dir)
-            if (m := _re.match(r"^v(\d+)\.metadata\.json$", f))
-        ]
-
     if not new_files:
-        return max(_versions())
+        return read_v
 
     from ..functions.puffin import write_puffin
 
-    for _ in range(10):
-        cur_v = max(_versions())
-        with open(os.path.join(meta_dir, f"v{cur_v}.metadata.json")) as fh:
-            prev = json.load(fh)
-        seq = prev.get("last-sequence-number", 0) + 1
-        snap_id = 1000 + seq
-        puffin_rel = f"dv-{seq}.puffin"
-        refs = sorted(new_files)
-        blobs = [
-            {
-                "type": DELETION_VECTOR_V1,
-                "payload": serialize_dv_blob(
-                    sorted(new_files[fp] | existing.get(fp, set()))
-                ),
-                "snapshot-id": snap_id,
-                "sequence-number": seq,
-                "properties": {
-                    "referenced-data-file": "file://" + fp,
-                    "cardinality": str(
-                        len(new_files[fp] | existing.get(fp, set()))
-                    ),
-                },
-            }
-            for fp in refs
-        ]
-        puffin_path = os.path.join(base, "data", puffin_rel)
-        metas = write_puffin(puffin_path, blobs)
-        entries = []
-        for fp, bm in zip(refs, metas):
-            card = len(new_files[fp] | existing.get(fp, set()))
-            entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": None,
-                    "sequence_number": seq,
-                    "data_file": {
-                        "content": 1,
-                        "file_path": "file://" + puffin_path,
-                        "file_format": "PUFFIN",
-                        "partition": {},
-                        "record_count": card,
-                        "file_size_in_bytes": os.path.getsize(puffin_path),
-                        "referenced_data_file": "file://" + fp,
-                        "content_offset": bm["offset"],
-                        "content_size_in_bytes": bm["length"],
-                    },
-                }
-            )
-        mrel = f"m-dv-{snap_id}.avro"
-        write_container(
-            os.path.join(meta_dir, mrel), _MANIFEST_ENTRY_DV_SCHEMA, entries
-        )
-        snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
-        _, prev_manifests = read_container(
-            _resolve_path(base, snaps[prev["current-snapshot-id"]]["manifest-list"])
-        )
-        mlrel = f"snap-{snap_id}.avro"
-        write_container(
-            os.path.join(meta_dir, mlrel),
-            _MANIFEST_FILE_SCHEMA,
-            prev_manifests + [_manifest_file_rec(base, mrel, 1, snap_id, seq)],
-        )
-        md = dict(prev)
-        md["format-version"] = 3  # DVs are a v3 feature
-        snap = {
+    seq = prev.get("last-sequence-number", 0) + 1
+    snap_id = 1000 + seq
+    puffin_rel = f"dv-{seq}.puffin"
+    refs = sorted(new_files)
+    blobs = [
+        {
+            "type": DELETION_VECTOR_V1,
+            "payload": serialize_dv_blob(
+                sorted(new_files[fp] | existing.get(fp, set()))
+            ),
             "snapshot-id": snap_id,
             "sequence-number": seq,
-            "timestamp-ms": 1700000000000 + seq,
-            "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-            "summary": {"operation": "delete"},
-            "schema-id": 0,
+            "properties": {
+                "referenced-data-file": "file://" + fp,
+                "cardinality": str(
+                    len(new_files[fp] | existing.get(fp, set()))
+                ),
+            },
         }
-        md["last-sequence-number"] = seq
-        md["last-updated-ms"] = snap["timestamp-ms"]
-        md["current-snapshot-id"] = snap_id
-        md["snapshots"] = list(md.get("snapshots", [])) + [snap]
-        try:
-            _put_metadata_if_absent(meta_dir, cur_v + 1, md)
-        except IcebergCommitConflict:
-            continue
-        with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-            fh.write(str(cur_v + 1))
-        return cur_v + 1
-    raise IcebergCommitConflict(
-        f"gave up after 10 contended metadata versions under {meta_dir}"
+        for fp in refs
+    ]
+    puffin_path = os.path.join(base, "data", puffin_rel)
+    metas = write_puffin(puffin_path, blobs)
+    entries = []
+    for fp, bm in zip(refs, metas):
+        card = len(new_files[fp] | existing.get(fp, set()))
+        entries.append(
+            {
+                "status": 1,
+                "snapshot_id": None,
+                "sequence_number": seq,
+                "data_file": {
+                    "content": 1,
+                    "file_path": "file://" + puffin_path,
+                    "file_format": "PUFFIN",
+                    "partition": {},
+                    "record_count": card,
+                    "file_size_in_bytes": os.path.getsize(puffin_path),
+                    "referenced_data_file": "file://" + fp,
+                    "content_offset": bm["offset"],
+                    "content_size_in_bytes": bm["length"],
+                },
+            }
+        )
+    mrel = f"m-dv-{snap_id}.avro"
+    write_container(
+        os.path.join(meta_dir, mrel), _MANIFEST_ENTRY_DV_SCHEMA, entries
     )
+    snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
+    _, prev_manifests = read_container(
+        _resolve_path(base, snaps[prev["current-snapshot-id"]]["manifest-list"])
+    )
+    mlrel = f"snap-{snap_id}.avro"
+    write_container(
+        os.path.join(meta_dir, mlrel),
+        _MANIFEST_FILE_SCHEMA,
+        prev_manifests + [_manifest_file_rec(base, mrel, 1, snap_id, seq)],
+    )
+    md = dict(prev)
+    md["format-version"] = 3  # DVs are a v3 feature
+    snap = {
+        "snapshot-id": snap_id,
+        "sequence-number": seq,
+        "timestamp-ms": 1700000000000 + seq,
+        "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
+        "summary": {"operation": "delete"},
+        "schema-id": 0,
+    }
+    md["last-sequence-number"] = seq
+    md["last-updated-ms"] = snap["timestamp-ms"]
+    md["current-snapshot-id"] = snap_id
+    md["snapshots"] = list(md.get("snapshots", [])) + [snap]
+    return commit(base, lambda _v, _prev: md, read_v)
 
 
 @query(
@@ -2026,21 +2002,13 @@ def iceberg_rewrite_compact(spark: SparkSession, base: str) -> int:
     rewritten file takes the new sequence number; with the deletes FOLDED
     IN at rewrite time that is spec-correct (nothing older may re-apply:
     position deletes gate on seq <= delete's, equality on seq <, and the
-    new file's seq exceeds both). Returns the committed version."""
-    merged = iceberg_snapshot(spark, base)
+    new file's seq exceeds both). The commit is read-dependent: a
+    concurrent commit aborts the rewrite. Returns the committed version."""
     from .lakehouse_interop import _stage_single_parquet
 
     meta_dir = os.path.join(base, "metadata")
-    import re as _re
-
-    versions = [
-        int(m.group(1))
-        for f in os.listdir(meta_dir)
-        if (m := _re.match(r"^v(\d+)\.metadata\.json$", f))
-    ]
-    cur_v = max(versions)
-    with open(os.path.join(meta_dir, f"v{cur_v}.metadata.json")) as fh:
-        prev = json.load(fh)
+    read_v, prev = _tip(meta_dir)
+    merged = iceberg_snapshot(spark, base, snapshot_id=prev["current-snapshot-id"])
     seq = prev.get("last-sequence-number", 0) + 1
     snap_id = 1000 + seq
     file_rel = f"compacted-{seq}.parquet"
@@ -2071,10 +2039,7 @@ def iceberg_rewrite_compact(spark: SparkSession, base: str) -> int:
     md["last-updated-ms"] = snap["timestamp-ms"]
     md["current-snapshot-id"] = snap_id
     md["snapshots"] = list(md.get("snapshots", [])) + [snap]
-    _put_metadata_if_absent(meta_dir, cur_v + 1, md)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(cur_v + 1))
-    return cur_v + 1
+    return commit(base, lambda _v, _prev: md, read_v)
 
 
 @query(
@@ -2119,8 +2084,8 @@ def iceberg_eq_delete(
     spark: SparkSession, base: str, column: str, values: list
 ) -> int:
     """``DELETE FROM <table> WHERE column IN (values)`` emitted as an
-    Iceberg v2 EQUALITY-DELETE file (round 8, batch DP — the write half
-    of the round-7 eq-delete reader; completes writer symmetry for both
+    Iceberg v2 EQUALITY-DELETE file (the write half of the eq-delete
+    reader; completes writer symmetry for both
     delete encodings next to ``iceberg_delete_where``'s position
     deletes). The delete parquet carries ONLY the equality column; its
     manifest entry (content=2) names the column by FIELD ID
@@ -2137,21 +2102,11 @@ def iceberg_eq_delete(
     Returns the committed metadata version."""
     import pandas as pd
     import pyarrow as pa
-    import re as _re
-
-    from .delta_reader import _write_parquet_file
 
     meta_dir = os.path.join(base, "metadata")
     vals = sorted(set(values))
-    for _ in range(10):
-        versions = [
-            int(m.group(1))
-            for f in os.listdir(meta_dir)
-            if (m := _re.match(r"^v(\d+)\.metadata\.json$", f))
-        ]
-        cur_v = max(versions)
-        with open(os.path.join(meta_dir, f"v{cur_v}.metadata.json")) as fh:
-            prev = json.load(fh)
+
+    def build(_cur_v: int, prev: dict) -> dict:
         fields = _current_schema(prev)
         fid = next((f["id"] for f in fields if f["name"] == column), None)
         if fid is None:
@@ -2196,16 +2151,9 @@ def iceberg_eq_delete(
         md["last-updated-ms"] = snap["timestamp-ms"]
         md["current-snapshot-id"] = snap_id
         md["snapshots"] = list(md.get("snapshots", [])) + [snap]
-        try:
-            _put_metadata_if_absent(meta_dir, cur_v + 1, md)
-        except IcebergCommitConflict:
-            continue
-        with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-            fh.write(str(cur_v + 1))
-        return cur_v + 1
-    raise IcebergCommitConflict(
-        f"gave up after 10 contended metadata versions under {meta_dir}"
-    )
+        return md
+
+    return commit(base, build)
 
 
 @query(

@@ -40,7 +40,7 @@ from .iceberg_reader import (
     _MANIFEST_ENTRY_SCHEMA,
     _MANIFEST_FILE_SCHEMA,
     _iceberg_fields_of,
-    _put_metadata_if_absent,
+    commit as iceberg_commit,
     iceberg_snapshot,
 )
 from .lakehouse_interop import _build_sink_fixture
@@ -140,10 +140,7 @@ def delta_uniform_iceberg_metadata(
             }
         ],
     }
-    _put_metadata_if_absent(meta_dir, 1, md)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
-    return 1
+    return iceberg_commit(iceberg_base, lambda _v, _prev: md)
 
 
 @query(

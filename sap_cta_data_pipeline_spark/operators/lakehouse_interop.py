@@ -46,14 +46,16 @@ from ..catalog import load_table as t
 from ..registry import query
 from .delta_reader import (
     _CHECKPOINT_SCHEMA,
-    _COMMIT_RE,
     _NATION_SCHEMA_JSON,
-    CommitConflict,
     _add,
     _commit,
     _meta_action,
+    _protocol_action,
     _read_commit,
     _remove,
+    _tip,
+    _versions,
+    commit,
     delta_snapshot,
     delta_state,
 )
@@ -114,20 +116,11 @@ def delta_append_commit(
     first: bool = False,
     extra_actions: list[dict] | None = None,
 ) -> None:
-    """Stage ``df`` as one data file and commit it: version = last + 1,
-    actions = [protocol, metaData]? + [add]. The commit JSON is renamed
-    into place — atomic on a POSIX dir, put-if-absent on an object store."""
-    log_dir = os.path.join(base, "_delta_log")
-    existing = (
-        sorted(
-            int(m.group(1))
-            for f in os.listdir(log_dir)
-            if (m := _COMMIT_RE.match(f))
-        )
-        if os.path.isdir(log_dir)
-        else []
-    )
-    version = (existing[-1] + 1) if existing else 0
+    """Stage ``df`` as one data file and commit it as a BLIND commit (the
+    next free version), actions = [protocol, metaData]? + [add]. The
+    staged data file is conflict-free (its name is ours alone); only the
+    version slot is contended, and appends never semantically conflict,
+    so a lost slot retries at the next one (``delta_reader.commit``)."""
     _stage_single_parquet(df, os.path.join(base, file_name))
     add = _add(file_name)
     if stats_col is not None:
@@ -145,20 +138,7 @@ def delta_append_commit(
     actions.append(add)
     if extra_actions:
         actions.extend(extra_actions)  # e.g. SetTransaction (txn) markers
-    # optimistic concurrency: the staged data file is conflict-free (its
-    # name is ours alone); only the VERSION slot is contended. A loser of
-    # the put-if-absent race re-reads the log tip and retries — appends
-    # never semantically conflict, so blind retry is safe (a real MERGE
-    # writer re-validates its read set here before retrying).
-    for _ in range(10):
-        try:
-            _commit(log_dir, version, actions)
-            return
-        except CommitConflict:
-            version += 1
-    raise CommitConflict(
-        f"gave up after 10 contended versions under {log_dir}"
-    )
+    commit(base, actions)
 
 
 #: action rows per checkpoint part before the writer shards the layout
@@ -200,9 +180,7 @@ def delta_checkpoint(
       pointers) with the file actions in parquet sidecars under
       ``_delta_log/_sidecars/``."""
     log_dir = os.path.join(base, "_delta_log")
-    commits = sorted(
-        int(m.group(1)) for f in os.listdir(log_dir) if (m := _COMMIT_RE.match(f))
-    )
+    commits = _versions(log_dir)
     version = commits[-1]
     live: dict[str, dict] = {}
     dvs: dict[str, dict] = {}
@@ -360,11 +338,8 @@ def delta_stats_prune(
     Pure metadata — no footer read of any skipped file. Files without
     stats are conservatively planned (the Delta rule)."""
     log_dir = os.path.join(base, "_delta_log")
-    commits = sorted(
-        int(m.group(1)) for f in os.listdir(log_dir) if (m := _COMMIT_RE.match(f))
-    )
     live: dict[str, dict | None] = {}
-    for v in commits:
+    for v in _versions(log_dir):
         for a in _read_commit(log_dir, v):
             if "add" in a:
                 s = a["add"].get("stats")
@@ -833,7 +808,7 @@ def delta_delete_where(
     spark: SparkSession, base: str, predicate: str
 ) -> tuple[int, int]:
     """``DELETE FROM <table> WHERE predicate`` emitted as DELETION
-    VECTORS (round 8 — the writer half of the round-7 DV reader): no data
+    VECTORS (the writer half of the DV reader): no data
     file is rewritten; each affected file's matching row positions are
     serialized as a 64-bit roaring bitmap (functions/deletion_vectors)
     into ONE shared DV file, and the commit re-adds the file with the new
@@ -849,8 +824,9 @@ def delta_delete_where(
     come back — the driver-side collect is bounded by THIS delete's
     matched rows, which is exactly the data a DV writer must materialize
     to serialize bitmaps (production Delta does the same per-file bitmap
-    build; bitmaps are KBs of metadata per file). The commit goes through
-    the same put-if-absent ``_commit`` as every writer."""
+    build; bitmaps are KBs of metadata per file). The commit is
+    read-dependent (``delta_reader.commit`` with the snapshot's version):
+    a concurrent data change aborts it instead of resurrecting rows."""
     from ..functions.deletion_vectors import (
         dv_deleted_positions,
         dv_file_name,
@@ -860,12 +836,13 @@ def delta_delete_where(
     )
     import uuid as _uuid
 
-    live, schema_string, part_cols, config, dvs = delta_state(spark, base)
+    tip = _tip(base)
+    live, schema_string, part_cols, config, dvs = delta_state(spark, base, tip)
     schema = _T.StructType.fromJson(json.loads(schema_string))
     data_schema = _T.StructType(
         [f for f in schema.fields if f.name not in part_cols]
     )
-    # column mapping (round 9): scan under the PHYSICAL schema, alias to
+    # column mapping: scan under the PHYSICAL schema, alias to
     # logical so the predicate addresses logical names — the reader's
     # phys_of resolution threaded through the DV writer; the emitted
     # bitmap is (file, position) metadata and is name-agnostic.
@@ -880,11 +857,6 @@ def delta_delete_where(
         .agg(F.sort_array(F.collect_list("__ri")).alias("pos"))
     )
     per_file = {abs_of[r["__fp"]]: [int(x) for x in r["pos"]] for r in probe.collect()}
-    log_dir = os.path.join(base, "_delta_log")
-    commits = sorted(
-        int(m.group(1)) for f in os.listdir(log_dir) if (m := _COMMIT_RE.match(f))
-    )
-    tip = commits[-1] if commits else 0
     if not per_file:
         return tip, 0
 
@@ -912,12 +884,7 @@ def delta_delete_where(
     actions: list[dict] = [
         {"commitInfo": {"operation": "DELETE", "predicate": predicate}}
     ]
-    current_proto: dict = {}
-    for v in commits:
-        for a in _read_commit(log_dir, v):
-            if "protocol" in a:
-                current_proto = a["protocol"]
-    if "deletionVectors" not in (current_proto.get("readerFeatures") or []):
+    if "deletionVectors" not in (_protocol_action(base).get("readerFeatures") or []):
         actions.append(
             {
                 "protocol": {
@@ -956,14 +923,7 @@ def delta_delete_where(
                 }
             }
         )
-    version = tip + 1
-    for _ in range(10):
-        try:
-            _commit(log_dir, version, actions)
-            return version, n_new
-        except CommitConflict:
-            version += 1
-    raise CommitConflict(f"gave up after 10 contended versions under {log_dir}")
+    return commit(base, actions, tip), n_new
 
 
 @query(
@@ -1016,14 +976,8 @@ def delta_vacuum(spark: SparkSession, base: str) -> tuple[list[str], list[str]]:
     makes; idempotent by construction (second run deletes nothing).
     Listing is driver-side metadata + one directory walk; deletion is
     O(dead files)."""
-    from .delta_reader import _COMMIT_RE, _read_commit, delta_state
-
     log_dir = os.path.join(base, "_delta_log")
-    commits = sorted(
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    )
+    commits = _versions(log_dir)
     # retained versions = JSON commits + the checkpoint version (it is
     # time-travel-reachable even when its own commit was retention-
     # deleted); a checkpoint-ONLY log must scan the checkpoint state or
@@ -1068,12 +1022,12 @@ def delta_restore(spark: SparkSession, base: str, version: int) -> None:
     """RESTORE TABLE ... TO VERSION AS OF: commit the add/remove delta
     that makes the LATEST state equal version N's state — history is
     preserved (restore is one more commit, not a rewrite; time travel
-    still reaches the pre-restore states). Appends never conflict with
-    the restore commit itself: it goes through the same put-if-absent
-    _commit as every writer.
+    still reaches the pre-restore states). The restore diff is computed
+    against the latest snapshot, so it commits read-dependent
+    (``delta_reader.commit``): a concurrent data change aborts it.
 
-    The diff is over each path's FULL add metadata, not the path set
-    (round-8 ADVICE fix): a path live in both states whose
+    The diff is over each path's FULL add metadata, not the path set: a
+    path live in both states whose
     deletionVector or partitionValues differ is re-committed
     (remove + add) carrying the TARGET version's descriptor — a
     path-set-only diff would leave a post-target DV in force (rows
@@ -1081,19 +1035,12 @@ def delta_restore(spark: SparkSession, base: str, version: int) -> None:
     snapshot) and would re-add files with the current DV instead of the
     target's. The target metaData is restored too (schema/configuration
     follow the restored version, Delta's own RESTORE semantics)."""
-    from .delta_reader import _COMMIT_RE, _commit, _read_commit, delta_state
-
-    log_dir = os.path.join(base, "_delta_log")
-    commits = sorted(
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    )
+    tip = _tip(base)
     target_live, t_schema, t_parts, t_cfg, target_dvs = delta_state(
         spark, base, version=version
     )
     cur_live, c_schema, c_parts, c_cfg, cur_dvs = delta_state(
-        spark, base, version=None
+        spark, base, version=tip
     )
     actions: list[dict] = [{"commitInfo": {"operation": "RESTORE", "version": version}}]
     if (t_schema, t_parts, t_cfg) != (c_schema, c_parts, c_cfg):
@@ -1128,7 +1075,7 @@ def delta_restore(spark: SparkSession, base: str, version: int) -> None:
         if (cur_live[p], cur_dvs.get(p)) != (target_live[p], target_dvs.get(p)):
             actions.append(_remove(p))
             actions.append(_target_add(p))
-    _commit(log_dir, commits[-1] + 1, actions)
+    commit(base, actions, tip)
 
 
 @query(
@@ -1201,21 +1148,10 @@ def delta_shallow_clone(spark: SparkSession, src: str, dst: str) -> None:
     documented liability is shared-file lifetime — VACUUM on the source
     can delete files the clone still references (pinned in tests), which
     is exactly the trade Delta's own shallow clones make."""
-    from .delta_reader import _check_protocol, _commit, _read_commit, delta_state
-    from .delta_reader import _COMMIT_RE
+    from .delta_reader import _check_protocol
 
     live, schema_string, part_cols, config, dvs = delta_state(spark, src, None)
-    log_dir = os.path.join(src, "_delta_log")
-    commits = sorted(
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    )
-    protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
-    for v in commits:
-        for a in _read_commit(log_dir, v):
-            if "protocol" in a:
-                protocol = a["protocol"]
+    protocol = _protocol_action(src)
     _check_protocol(protocol)
     actions: list[dict] = [
         {"protocol": protocol},
@@ -1367,20 +1303,19 @@ def delta_optimize_compact(spark: SparkSession, base: str) -> int:
     protocol's marker that the commit rearranges bytes without changing
     table content (streams tailing the table skip it; CDF emits nothing).
     Superseded files and their DVs become vacuum-eligible once retention
-    drops the versions referencing them. Returns the committed version."""
-    live, schema_string, part_cols, config, dvs = delta_state(spark, base)
+    drops the versions referencing them. Returns the committed version;
+    a concurrent data change, or a concurrent commit removing a file this
+    one compacts, aborts it (``delta_reader.commit``)."""
+    tip = _tip(base)
+    live, schema_string, part_cols, config, dvs = delta_state(spark, base, tip)
     if part_cols:
         raise NotImplementedError(
             "delta_optimize_compact: partitioned bin-packing (per-partition "
             "groups) not implemented; fixture tables are unpartitioned"
         )
-    merged = delta_snapshot(spark, base)
+    merged = delta_snapshot(spark, base, tip)
     file_rel = "part-optimized-00000.parquet"
     _stage_single_parquet(merged, os.path.join(base, file_rel))
-    log_dir = os.path.join(base, "_delta_log")
-    commits = sorted(
-        int(m.group(1)) for f in os.listdir(log_dir) if (m := _COMMIT_RE.match(f))
-    )
     actions: list[dict] = [{"commitInfo": {"operation": "OPTIMIZE"}}]
     for p in sorted(live):
         actions.append(
@@ -1403,14 +1338,7 @@ def delta_optimize_compact(spark: SparkSession, base: str) -> int:
             }
         }
     )
-    version = commits[-1] + 1
-    for _ in range(10):
-        try:
-            _commit(log_dir, version, actions)
-            return version
-        except CommitConflict:
-            version += 1
-    raise CommitConflict(f"gave up after 10 contended versions under {log_dir}")
+    return commit(base, actions, tip)
 
 
 @query(
@@ -1507,28 +1435,23 @@ def delta_alter_add_column(
     schemaString appends the (nullable) column — zero file rewrites;
     files written before it surface typed NULLs under the new schema
     (the read contract scan_delta_schema_evolution certifies)."""
-    live, schema_string, part_cols, config, _dvs = delta_state(spark, base)
+    tip = _tip(base)
+    live, schema_string, part_cols, config, _dvs = delta_state(spark, base, tip)
     schema_json = json.loads(schema_string)
     if any(f["name"] == field_name for f in schema_json["fields"]):
         raise ValueError(f"column {field_name!r} already exists")
     schema_json["fields"].append(
         {"name": field_name, "type": field_type, "nullable": True, "metadata": {}}
     )
-    log_dir = os.path.join(base, "_delta_log")
-    commits = sorted(
-        int(m.group(1)) for f in os.listdir(log_dir) if (m := _COMMIT_RE.match(f))
-    )
-    version = commits[-1] + 1
-    _commit(
-        log_dir,
-        version,
+    return commit(
+        base,
         [
             {"commitInfo": {"operation": "ADD COLUMNS", "column": field_name}},
             _meta_action(list(part_cols), schema_json=schema_json,
                          configuration=dict(config)),
         ],
+        tip,
     )
-    return version
 
 
 @query(

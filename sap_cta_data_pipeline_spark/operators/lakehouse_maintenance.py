@@ -39,8 +39,10 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.ranks import with_global_row_number
 from ..registry import query
-from .delta_reader import _COMMIT_RE, CommitConflict, _commit, delta_snapshot, delta_state
-from .iceberg_reader import IcebergCommitConflict, _put_metadata_if_absent, iceberg_append, iceberg_snapshot
+from .delta_reader import _tip as _delta_tip, delta_snapshot, delta_state
+from .delta_reader import commit as delta_commit
+from .iceberg_reader import _tip as _iceberg_tip, iceberg_append, iceberg_snapshot
+from .iceberg_reader import commit as iceberg_commit
 from .lakehouse_interop import _build_sink_fixture, _stage_single_parquet
 from .sources import built
 from .training_prep import _morton_sql
@@ -53,24 +55,23 @@ def delta_optimize_zorder(
     applied) into ``n_files`` files ordered and split by the Morton
     interleave of the two columns' low bits, each add action carrying
     minValues/maxValues stats for the clustered columns. Commit is
-    remove(all old) + adds with ``dataChange: false``. Returns the
+    remove(all old) + adds with ``dataChange: false``, read-dependent
+    (``delta_reader.commit``): a concurrent data change, or a concurrent
+    commit removing a file this one rewrites, aborts it. Returns the
     committed version."""
-    live, schema_string, part_cols, config, dvs = delta_state(spark, base)
+    tip = _delta_tip(base)
+    live, schema_string, part_cols, config, dvs = delta_state(spark, base, tip)
     if part_cols:
         raise NotImplementedError(
             "delta_optimize_zorder: per-partition clustering not implemented"
         )
-    merged = delta_snapshot(spark, base)
+    merged = delta_snapshot(spark, base, tip)
     z = merged.withColumn("__z", F.expr(_morton_sql(col_a, col_b)))
     ranked = with_global_row_number(
         z, [F.asc("__z"), F.asc(col_a), F.asc(col_b)], "__rn", total_col="__tot"
     )
     bucket = ((F.col("__rn") - 1) * n_files / F.col("__tot")).cast("int")
     ranked = ranked.withColumn("__bucket", bucket).cache()
-    log_dir = os.path.join(base, "_delta_log")
-    commits = sorted(
-        int(m.group(1)) for f in os.listdir(log_dir) if (m := _COMMIT_RE.match(f))
-    )
     actions: list[dict] = [
         {"commitInfo": {"operation": "OPTIMIZE", "zOrderBy": [col_a, col_b]}}
     ]
@@ -118,14 +119,7 @@ def delta_optimize_zorder(
             }
         )
     ranked.unpersist()
-    version = commits[-1] + 1
-    for _ in range(10):
-        try:
-            _commit(log_dir, version, actions)
-            return version
-        except CommitConflict:
-            version += 1
-    raise CommitConflict(f"gave up after 10 contended versions under {log_dir}")
+    return delta_commit(base, actions, tip)
 
 
 @query(
@@ -159,25 +153,15 @@ def iceberg_expire_snapshots(
 ) -> tuple[int, list[int]]:
     """Drop all but the newest ``keep_last`` snapshots (by sequence
     number; the current snapshot is always retained) from the table
-    metadata, committed as a new metadata version through the same
-    put-if-absent swap as every writer. Returns (new metadata version,
+    metadata, committed as a new metadata version; a lost commit slot
+    re-plans the expiry on the fresh tip. Returns (new metadata version,
     expired snapshot ids). Pure metadata — physical reclaim is orphan
     cleanup's job, whose keep-set this shrinks."""
-    meta_dir = os.path.join(base, "metadata")
-    import re as _re
+    if keep_last < 1:
+        raise ValueError("keep_last must be >= 1")
 
-    for _ in range(10):
-        versions = [
-            int(m.group(1))
-            for f in os.listdir(meta_dir)
-            if (m := _re.match(r"^v(\d+)\.metadata\.json$", f))
-        ]
-        cur_v = max(versions)
-        with open(os.path.join(meta_dir, f"v{cur_v}.metadata.json")) as fh:
-            md = json.load(fh)
+    def plan(md: dict) -> tuple[list[dict], list[int]]:
         snaps = sorted(md.get("snapshots", []), key=lambda s: s["sequence-number"])
-        if keep_last < 1:
-            raise ValueError("keep_last must be >= 1")
         kept = snaps[-keep_last:]
         kept_ids = {s["snapshot-id"] for s in kept}
         if md.get("current-snapshot-id") not in kept_ids:
@@ -186,20 +170,19 @@ def iceberg_expire_snapshots(
                 f"{md.get('current-snapshot-id')} — refuse"
             )
         expired = [s["snapshot-id"] for s in snaps if s["snapshot-id"] not in kept_ids]
-        if not expired:
-            return cur_v, []
-        new_md = dict(md)
-        new_md["snapshots"] = kept
-        try:
-            _put_metadata_if_absent(meta_dir, cur_v + 1, new_md)
-        except IcebergCommitConflict:
-            continue
-        with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-            fh.write(str(cur_v + 1))
-        return cur_v + 1, expired
-    raise IcebergCommitConflict(
-        f"gave up after 10 contended metadata versions under {meta_dir}"
-    )
+        return kept, expired
+
+    cur_v, md = _iceberg_tip(os.path.join(base, "metadata"))
+    if not plan(md)[1]:
+        return cur_v, []
+    expired: list[int] = []
+
+    def build(_cur_v: int, md: dict) -> dict:
+        kept, ids = plan(md)
+        expired[:] = ids
+        return {**md, "snapshots": kept}
+
+    return iceberg_commit(base, build), expired
 
 
 @query(

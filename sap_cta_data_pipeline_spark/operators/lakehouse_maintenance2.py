@@ -31,42 +31,28 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.avro_codec import read_container, write_container
 from ..registry import query
-from .delta_reader import _read_commit, delta_snapshot, delta_state
-from .delta_dml import _commit_validated, _log_tip
+from .delta_reader import (
+    _current_metadata_action,
+    _protocol_action,
+    delta_snapshot,
+    delta_state,
+)
+from .delta_reader import _tip as _delta_tip
+from .delta_reader import commit as delta_commit
 from .iceberg_reader import (
     _MANIFEST_ENTRY_EQ_SCHEMA,
     _MANIFEST_FILE_SCHEMA,
-    _put_metadata_if_absent,
     _resolve_path,
     iceberg_append,
     iceberg_delete_where,
     iceberg_snapshot,
 )
+from .iceberg_reader import _tip as _iceberg_tip
+from .iceberg_reader import commit as iceberg_commit
 from .sources import _scratch, built
 
 
 # ---------------------------------------------------------- Delta DDL
-
-
-def _current_metadata_action(base: str) -> dict:
-    """Newest metaData action in the JSON log (commits are the source of
-    truth for this repo's fixtures; checkpoint-resident metadata is read
-    by delta_state, which every caller consults first)."""
-    log_dir = os.path.join(base, "_delta_log")
-    from .delta_reader import _COMMIT_RE
-
-    for v in sorted(
-        (
-            int(m.group(1))
-            for f in os.listdir(log_dir)
-            if (m := _COMMIT_RE.match(f))
-        ),
-        reverse=True,
-    ):
-        for a in _read_commit(log_dir, v):
-            if "metaData" in a:
-                return json.loads(json.dumps(a["metaData"]))
-    raise ValueError(f"no metaData action found under {log_dir}")
 
 
 def _require_column_mapping(config: dict, verb: str) -> None:
@@ -86,8 +72,8 @@ def delta_rename_column(
     field keeps its columnMapping id and physicalName, only the LOGICAL
     name changes, so every existing data file remains valid. Returns the
     committed version."""
-    tip = _log_tip(base)
-    _, schema_string, _, config, _ = delta_state(spark, base)
+    tip = _delta_tip(base)
+    _, schema_string, _, config, _ = delta_state(spark, base, tip)
     _require_column_mapping(config, "RENAME COLUMN")
     sch = json.loads(schema_string)
     names = [f["name"] for f in sch["fields"]]
@@ -100,9 +86,8 @@ def delta_rename_column(
             f["name"] = new
     meta = _current_metadata_action(base)
     meta["schemaString"] = json.dumps(sch)
-    return _commit_validated(
+    return delta_commit(
         base,
-        tip,
         [
             {
                 "commitInfo": {
@@ -112,6 +97,7 @@ def delta_rename_column(
             },
             {"metaData": meta},
         ],
+        tip,
     )
 
 
@@ -123,8 +109,8 @@ def delta_drop_column(spark: SparkSession, base: str, col: str) -> int:
     monotonic), so a future re-add of the same logical name maps to a
     FRESH physical column instead of resurrecting dropped data. Returns
     the committed version."""
-    tip = _log_tip(base)
-    _, schema_string, part_cols, config, _ = delta_state(spark, base)
+    tip = _delta_tip(base)
+    _, schema_string, part_cols, config, _ = delta_state(spark, base, tip)
     _require_column_mapping(config, "DROP COLUMN")
     if col in (part_cols or []):
         raise ValueError(
@@ -140,9 +126,8 @@ def delta_drop_column(spark: SparkSession, base: str, col: str) -> int:
     sch["fields"] = [f for f in sch["fields"] if f["name"] != col]
     meta = _current_metadata_action(base)
     meta["schemaString"] = json.dumps(sch)
-    return _commit_validated(
+    return delta_commit(
         base,
-        tip,
         [
             {
                 "commitInfo": {
@@ -152,6 +137,7 @@ def delta_drop_column(spark: SparkSession, base: str, col: str) -> int:
             },
             {"metaData": meta},
         ],
+        tip,
     )
 
 
@@ -195,18 +181,10 @@ def iceberg_rewrite_manifests(
     inherited from its source manifest record), so position/equality
     delete gating (file seq vs delete seq) is preserved exactly. The new
     snapshot commits as operation "replace" over the SAME data files.
+    The commit is read-dependent: a concurrent commit aborts the rewrite.
     Returns (version, manifests_before, manifests_after)."""
     meta_dir = os.path.join(base, "metadata")
-    import re as _re
-
-    versions = [
-        int(m.group(1))
-        for f in os.listdir(meta_dir)
-        if (m := _re.match(r"^v(\d+)\.metadata\.json$", f))
-    ]
-    cur_v = max(versions)
-    with open(os.path.join(meta_dir, f"v{cur_v}.metadata.json")) as fh:
-        prev = json.load(fh)
+    cur_v, prev = _iceberg_tip(meta_dir)
     snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
     cur_snap = snaps[prev["current-snapshot-id"]]
     _, manifests = read_container(_resolve_path(base, cur_snap["manifest-list"]))
@@ -285,10 +263,8 @@ def iceberg_rewrite_manifests(
     md["last-updated-ms"] = snap["timestamp-ms"]
     md["current-snapshot-id"] = snap_id
     md["snapshots"] = list(md.get("snapshots", [])) + [snap]
-    _put_metadata_if_absent(meta_dir, cur_v + 1, md)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(cur_v + 1))
-    return cur_v + 1, len(manifests), 1 + len(delete_mfs)
+    v = iceberg_commit(base, lambda _v, _prev: md, cur_v)
+    return v, len(manifests), 1 + len(delete_mfs)
 
 
 @query(
@@ -341,16 +317,7 @@ def iceberg_manifests_meta(spark: SparkSession, base: str) -> DataFrame:
     live (status != DELETED) entry count — what a maintenance planner
     reads to decide WHEN rewrite_manifests is worth running. O(manifest
     bytes) driver work, zero data-file reads."""
-    meta_dir = os.path.join(base, "metadata")
-    import re as _re
-
-    versions = [
-        int(m.group(1))
-        for f in os.listdir(meta_dir)
-        if (m := _re.match(r"^v(\d+)\.metadata\.json$", f))
-    ]
-    with open(os.path.join(meta_dir, f"v{max(versions)}.metadata.json")) as fh:
-        md = json.load(fh)
+    _, md = _iceberg_tip(os.path.join(base, "metadata"))
     snap = {s["snapshot-id"]: s for s in md["snapshots"]}[
         md["current-snapshot-id"]
     ]
@@ -396,25 +363,6 @@ def iceberg_manifests_meta_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     iceberg_rewrite_manifests_read.__wrapped__(spark, sf_dir)
     base = _scratch(sf_dir, "iceberg_rewrite_manifests")
     return iceberg_manifests_meta(spark, base)
-
-
-def _protocol_action(base: str) -> dict:
-    """Newest protocol action in the JSON log."""
-    log_dir = os.path.join(base, "_delta_log")
-    from .delta_reader import _COMMIT_RE
-
-    for v in sorted(
-        (
-            int(m.group(1))
-            for f in os.listdir(log_dir)
-            if (m := _COMMIT_RE.match(f))
-        ),
-        reverse=True,
-    ):
-        for a in _read_commit(log_dir, v):
-            if "protocol" in a:
-                return a["protocol"]
-    return {"minReaderVersion": 1, "minWriterVersion": 2}
 
 
 @query(

@@ -40,6 +40,7 @@ from .iceberg_reader import (
     _NATION_ICEBERG_FIELDS,
     _entry,
     _manifest_file_rec,
+    commit as iceberg_commit,
 )
 from .sources import built
 
@@ -218,10 +219,7 @@ def _build_stats_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
             }
         ],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(md, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_commit(base, lambda _v, _prev: md)
 
 
 def _stats_fixture(spark: SparkSession, sf_dir: str) -> str:

@@ -27,7 +27,7 @@ from ..catalog import load_table
 from ..functions.avro_codec import read_container
 from ..functions.parity import bi, r6
 from ..registry import query
-from .iceberg_reader import iceberg_append, iceberg_snapshot
+from .iceberg_reader import _tip, iceberg_append, iceberg_snapshot
 from .sources import built
 
 
@@ -35,15 +35,7 @@ def iceberg_referenced_files(base: str) -> set[str]:
     """Every data-dir-relative path referenced by ANY snapshot of the
     table (all manifest lists, all manifests, data AND delete files) —
     the keep-set for orphan cleanup. Driver-side metadata only."""
-    meta_dir = os.path.join(base, "metadata")
-    import re
-
-    versions = [
-        f for f in os.listdir(meta_dir) if re.match(r"^v\d+\.metadata\.json$", f)
-    ]
-    latest = max(versions, key=lambda f: int(f[1:].split(".")[0]))
-    with open(os.path.join(meta_dir, latest)) as fh:
-        md = json.load(fh)
+    _, md = _tip(os.path.join(base, "metadata"))
     keep: set[str] = set()
     for snap in md.get("snapshots", []):
         ml = snap["manifest-list"].replace("file://", "")

@@ -17,19 +17,17 @@ Iceberg named refs (branches/tags).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
 from ..registry import query
-from .delta_reader import _read_commit, delta_snapshot
+from .delta_reader import _read_commit, _versions, delta_snapshot
 from .iceberg_reader import _load_metadata, iceberg_append, iceberg_snapshot
+from .iceberg_reader import commit as iceberg_commit
 from .lakehouse_interop import delta_append_commit
 from .sources import built
-
-_COMMIT_RE = __import__("re").compile(r"^(\d{20})\.json$")
 
 
 def delta_last_txn_version(base: str, app_id: str) -> int | None:
@@ -37,14 +35,9 @@ def delta_last_txn_version(base: str, app_id: str) -> int | None:
     the read half of the SetTransaction protocol (Delta PROTOCOL.md
     'Transaction Identifiers'). O(commits) driver metadata."""
     log_dir = os.path.join(base, "_delta_log")
-    if not os.path.isdir(log_dir):
-        return None
     best: int | None = None
-    for f in sorted(os.listdir(log_dir)):
-        m = _COMMIT_RE.match(f)
-        if not m:
-            continue
-        for a in _read_commit(log_dir, int(m.group(1))):
+    for v in _versions(log_dir):
+        for a in _read_commit(log_dir, v):
             txn = a.get("txn")
             if txn and txn.get("appId") == app_id:
                 v = int(txn["version"])
@@ -136,21 +129,17 @@ def _ref_fixture(spark: SparkSession, sf_dir: str) -> str:
         iceberg_append(spark, base, n.filter("n_nationkey < 12"), "a0.parquet")
         iceberg_append(spark, base, n.filter("n_nationkey >= 12"), "a1.parquet")
         # bind refs: main -> current, audit tag -> the first snapshot
-        meta_dir = os.path.join(base, "metadata")
-        with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-            v = int(fh.read().strip())
-        mpath = os.path.join(meta_dir, f"v{v}.metadata.json")
-        with open(mpath) as fh:
-            md = json.load(fh)
-        snaps = sorted(s["snapshot-id"] for s in md["snapshots"])
-        md["refs"] = {
-            "main": {"snapshot-id": snaps[-1], "type": "branch"},
-            "pre-second-append": {"snapshot-id": snaps[0], "type": "tag"},
-        }
-        with open(os.path.join(meta_dir, f"v{v + 1}.metadata.json"), "w") as fh:
-            json.dump(md, fh)
-        with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-            fh.write(str(v + 1))
+        def bind_refs(_v: int, md: dict) -> dict:
+            snaps = sorted(s["snapshot-id"] for s in md["snapshots"])
+            return {
+                **md,
+                "refs": {
+                    "main": {"snapshot-id": snaps[-1], "type": "branch"},
+                    "pre-second-append": {"snapshot-id": snaps[0], "type": "tag"},
+                },
+            }
+
+        iceberg_commit(base, bind_refs)
 
     return built(sf_dir, "iceberg_refs", build)
 

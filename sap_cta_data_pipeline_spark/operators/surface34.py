@@ -18,7 +18,6 @@
 
 from __future__ import annotations
 
-import json
 import os
 import struct
 
@@ -30,7 +29,13 @@ from ..catalog import load_table as t
 from ..functions.avro_codec import write_container
 from ..functions.parity import bi, r6
 from ..registry import query
-from .iceberg_reader import _MANIFEST_FILE_SCHEMA, _entry, _iceberg_fields_of, _manifest_file_rec
+from .iceberg_reader import (
+    _MANIFEST_FILE_SCHEMA,
+    _entry,
+    _iceberg_fields_of,
+    _manifest_file_rec,
+    commit as iceberg_commit,
+)
 from .lakehouse_interop import _stage_single_parquet
 from .sources import built
 from .surface21 import (
@@ -148,10 +153,7 @@ def iceberg_create_sorted(
             }
         ],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(md, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_commit(base, lambda _v, _prev: md)
 
 
 def _sorted_fixture(spark: SparkSession, sf_dir: str) -> str:

@@ -14,7 +14,6 @@ tags/branches for time travel; this writes THROUGH them).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,26 +27,13 @@ from .iceberg_reader import (
     _MANIFEST_FILE_SCHEMA,
     _eq_entry,
     _manifest_file_rec,
-    _put_metadata_if_absent,
     _resolve_path,
+    _tip,
+    commit as iceberg_commit,
     iceberg_append,
     iceberg_snapshot,
 )
 from .sources import built
-
-
-def _tip_metadata(base: str) -> tuple[int, dict]:
-    import re as _re
-
-    meta_dir = os.path.join(base, "metadata")
-    versions = [
-        int(m.group(1))
-        for f in os.listdir(meta_dir)
-        if (m := _re.match(r"^v(\d+)\.metadata\.json$", f))
-    ]
-    v = max(versions)
-    with open(os.path.join(meta_dir, f"v{v}.metadata.json")) as fh:
-        return v, json.load(fh)
 
 
 def iceberg_append_to_branch(
@@ -57,8 +43,9 @@ def iceberg_append_to_branch(
     extends the branch parent's (refs[branch], falling back to main's
     tip), refs[branch] moves to the new snapshot, and — the WAP
     contract — ``current-snapshot-id`` and refs['main'] stay EXACTLY
-    where they were, so unqualified readers never see staged data.
-    Returns the committed metadata version."""
+    where they were, so unqualified readers never see staged data. A
+    lost commit slot rebuilds the snapshot on the fresh tip. Returns the
+    committed metadata version."""
     from .lakehouse_interop import _stage_single_parquet
 
     data_path = os.path.join(base, "data", file_name)
@@ -66,53 +53,53 @@ def iceberg_append_to_branch(
     _stage_single_parquet(df, data_path)
     n_rows = df.count()
 
-    cur_v, md = _tip_metadata(base)
     meta_dir = os.path.join(base, "metadata")
-    refs = dict(md.get("refs", {}))
-    snaps = {s["snapshot-id"]: s for s in md["snapshots"]}
-    if branch in refs:
-        parent_id = refs[branch]["snapshot-id"]
-    else:
-        # Fork from the table's CURRENT tip: ordinary appends advance
-        # current-snapshot-id without touching refs['main'], so the ref
-        # can be stale — current-snapshot-id is authoritative.
-        parent_id = md["current-snapshot-id"]
-    seq = md.get("last-sequence-number", 0) + 1
-    snap_id = 1000 + seq
-    mrel = f"m-wap-{snap_id}.avro"
-    write_container(
-        os.path.join(meta_dir, mrel),
-        _MANIFEST_ENTRY_EQ_SCHEMA,
-        [_eq_entry(base, file_name, 0, n_rows, seq)],
-    )
-    _, parent_manifests = read_container(
-        _resolve_path(base, snaps[parent_id]["manifest-list"])
-    )
-    mlrel = f"snap-{snap_id}.avro"
-    write_container(
-        os.path.join(meta_dir, mlrel),
-        _MANIFEST_FILE_SCHEMA,
-        parent_manifests + [_manifest_file_rec(base, mrel, 0, snap_id, seq)],
-    )
-    snap = {
-        "snapshot-id": snap_id,
-        "parent-snapshot-id": parent_id,
-        "sequence-number": seq,
-        "timestamp-ms": 1700000000000 + seq,
-        "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-        "summary": {"operation": "append", "wap.branch": branch},
-        "schema-id": 0,
-    }
-    md = dict(md)
-    md["last-sequence-number"] = seq
-    md["last-updated-ms"] = snap["timestamp-ms"]
-    md["snapshots"] = list(md["snapshots"]) + [snap]
-    refs[branch] = {"snapshot-id": snap_id, "type": "branch"}
-    md["refs"] = refs  # current-snapshot-id and refs['main'] untouched
-    _put_metadata_if_absent(meta_dir, cur_v + 1, md)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(cur_v + 1))
-    return cur_v + 1
+
+    def build(_cur_v: int, md: dict) -> dict:
+        refs = dict(md.get("refs", {}))
+        snaps = {s["snapshot-id"]: s for s in md["snapshots"]}
+        if branch in refs:
+            parent_id = refs[branch]["snapshot-id"]
+        else:
+            # Fork from the table's CURRENT tip: ordinary appends advance
+            # current-snapshot-id without touching refs['main'], so the ref
+            # can be stale — current-snapshot-id is authoritative.
+            parent_id = md["current-snapshot-id"]
+        seq = md.get("last-sequence-number", 0) + 1
+        snap_id = 1000 + seq
+        mrel = f"m-wap-{snap_id}.avro"
+        write_container(
+            os.path.join(meta_dir, mrel),
+            _MANIFEST_ENTRY_EQ_SCHEMA,
+            [_eq_entry(base, file_name, 0, n_rows, seq)],
+        )
+        _, parent_manifests = read_container(
+            _resolve_path(base, snaps[parent_id]["manifest-list"])
+        )
+        mlrel = f"snap-{snap_id}.avro"
+        write_container(
+            os.path.join(meta_dir, mlrel),
+            _MANIFEST_FILE_SCHEMA,
+            parent_manifests + [_manifest_file_rec(base, mrel, 0, snap_id, seq)],
+        )
+        snap = {
+            "snapshot-id": snap_id,
+            "parent-snapshot-id": parent_id,
+            "sequence-number": seq,
+            "timestamp-ms": 1700000000000 + seq,
+            "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
+            "summary": {"operation": "append", "wap.branch": branch},
+            "schema-id": 0,
+        }
+        md = dict(md)
+        md["last-sequence-number"] = seq
+        md["last-updated-ms"] = snap["timestamp-ms"]
+        md["snapshots"] = list(md["snapshots"]) + [snap]
+        refs[branch] = {"snapshot-id": snap_id, "type": "branch"}
+        md["refs"] = refs  # current-snapshot-id and refs['main'] untouched
+        return md
+
+    return iceberg_commit(base, build)
 
 
 def iceberg_fast_forward(
@@ -125,8 +112,10 @@ def iceberg_fast_forward(
     the staged lineage (the staged snapshot's ancestry must contain the
     target ref's current snapshot; otherwise publishing would silently
     DROP the concurrent commits, and the correct verb is a cherry-pick
-    that re-applies the staged changes on the new tip)."""
-    cur_v, md = _tip_metadata(base)
+    that re-applies the staged changes on the new tip). The commit is
+    read-dependent: a concurrent commit aborts the publish."""
+    meta_dir = os.path.join(base, "metadata")
+    cur_v, md = _tip(meta_dir)
     refs = dict(md.get("refs", {}))
     if from_branch not in refs:
         raise ValueError(
@@ -168,11 +157,7 @@ def iceberg_fast_forward(
     md["refs"] = refs
     if to_branch == "main":
         md["current-snapshot-id"] = target
-    meta_dir = os.path.join(base, "metadata")
-    _put_metadata_if_absent(meta_dir, cur_v + 1, md)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(cur_v + 1))
-    return cur_v + 1
+    return iceberg_commit(base, lambda _v, _prev: md, cur_v)
 
 
 @query(
@@ -199,19 +184,18 @@ def iceberg_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         iceberg_append(spark, base, n.filter("n_nationkey < 12"), "b0.parquet")
         # bind the explicit main ref at the pre-stage tip
-        cur_v, md = _tip_metadata(base)
-        md = dict(md)
-        md["refs"] = {
-            "main": {
-                "snapshot-id": md["current-snapshot-id"],
-                "type": "branch",
-            }
-        }
-        _put_metadata_if_absent(os.path.join(base, "metadata"), cur_v + 1, md)
-        with open(
-            os.path.join(base, "metadata", "version-hint.text"), "w"
-        ) as fh:
-            fh.write(str(cur_v + 1))
+        iceberg_commit(
+            base,
+            lambda _v, md: {
+                **md,
+                "refs": {
+                    "main": {
+                        "snapshot-id": md["current-snapshot-id"],
+                        "type": "branch",
+                    }
+                },
+            },
+        )
         iceberg_append_to_branch(
             spark, base, n.filter("n_nationkey >= 12"), "b1.parquet", "audit"
         )

@@ -49,11 +49,12 @@ from pyspark.sql import DataFrame, SparkSession
 from ..catalog import load_table
 from ..registry import query
 from .delta_reader import (
-    _COMMIT_RE,
     _commit,
     _commit_ict_ms,
     _meta_action,
+    _protocol_action,
     _read_commit,
+    _versions,
     delta_snapshot,
     delta_version_at_timestamp,
 )
@@ -183,11 +184,7 @@ def delta_clustering_domain(base: str) -> dict | None:
     it) — the reader-side surface for liquid clustering metadata."""
     log_dir = os.path.join(base, "_delta_log")
     state: dict | None = None
-    for v in sorted(
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    ):
+    for v in _versions(log_dir):
         for a in _read_commit(log_dir, v):
             dm = a.get("domainMetadata")
             if dm is not None and dm.get("domain") == _CLUSTER_DOMAIN:
@@ -229,16 +226,10 @@ def delta_clustered_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = [c[0] for c in cluster.get("clusteringColumns", [])]
     log_dir = os.path.join(base, "_delta_log")
     provider = None
-    for v in sorted(
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    ):
+    for v in _versions(log_dir):
         for a in _read_commit(log_dir, v):
             if "add" in a and a["add"].get("clusteringProvider"):
                 provider = a["add"]["clusteringProvider"]
-    from .lakehouse_maintenance2 import _protocol_action
-
     proto = _protocol_action(base)
     return spark.createDataFrame(
         [
@@ -286,11 +277,7 @@ def delta_history_ict(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     log_dir = os.path.join(base, "_delta_log")
     rows = []
-    for v in sorted(
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    ):
+    for v in _versions(log_dir):
         ci = next(
             (a["commitInfo"] for a in _read_commit(log_dir, v) if "commitInfo" in a),
             {},

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ..functions.avro_codec import read_container, write_container
 from ..registry import query
-from .iceberg_reader import _resolve_path
+from .iceberg_reader import _resolve_path, commit as iceberg_commit
 from .sources import built
 
 # v3 manifest-entry/file schemas WITH the row-lineage fields (the
@@ -251,10 +251,7 @@ def _build_lineage_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
             },
         ],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(md, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_commit(base, lambda _v, _prev: md)
 
 
 def lineage_files(base: str, snapshot_id: int | None = None) -> list[dict]:

@@ -43,10 +43,10 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from .delta_reader import (
-    _COMMIT_RE,
     _commit,
     _meta_action,
     _read_commit,
+    _versions,
 )
 from .sources import built
 
@@ -168,11 +168,7 @@ def row_tracking_files(
     an add WITHOUT baseRowId — silently inventing ids would collide
     with real ones on the next writer."""
     log_dir = os.path.join(base, "_delta_log")
-    versions = sorted(
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    )
+    versions = _versions(log_dir)
     target = versions[-1] if version is None else version
     # pass 1 — the enablement gate comes from table config, so resolve
     # it BEFORE judging adds (a plain table's add legitimately carries

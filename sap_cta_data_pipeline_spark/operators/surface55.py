@@ -32,10 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
 from .delta_reader import (
-    _COMMIT_RE,
     _build_cdf_fixture,
     _commit_ict_ms,
     _read_commit,
+    _versions,
     delta_table_changes,
     delta_version_at_timestamp,
 )
@@ -54,11 +54,7 @@ def _build_cdf_ict_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
     on."""
     _build_cdf_fixture(spark, sf_dir, base)
     log_dir = os.path.join(base, "_delta_log")
-    versions = sorted(
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := _COMMIT_RE.match(f))
-    )
+    versions = _versions(log_dir)
     for v in versions:
         actions = [
             a for a in _read_commit(log_dir, v) if "commitInfo" not in a

@@ -41,6 +41,7 @@ from .iceberg_reader import (
     _manifest_file_rec,
     _write_manifest,
     _write_parquet_file,
+    commit as iceberg_commit,
 )
 from .sources import built
 from .surface54 import iceberg_changelog
@@ -201,10 +202,7 @@ def _build_rewrite_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
             },
         ],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(md, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_commit(base, lambda _v, _prev: md)
 
 
 @query(

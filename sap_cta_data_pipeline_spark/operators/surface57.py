@@ -32,17 +32,15 @@ work at any table size.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
 from ..registry import query
-from .iceberg_reader import iceberg_append, iceberg_snapshot
-from .lakehouse_maintenance import _put_metadata_if_absent
+from .iceberg_reader import _tip, iceberg_append, iceberg_snapshot
+from .iceberg_reader import commit as iceberg_commit
 from .sources import built
-from .surface49 import _tip_metadata
 
 
 def iceberg_expire_snapshots_refs(
@@ -50,10 +48,11 @@ def iceberg_expire_snapshots_refs(
 ) -> tuple[int, list[int], list[str]]:
     """Ref-aware expiry. Returns (new metadata version, expired
     snapshot ids, removed ref names). Refuses when expiry would drop
-    the current snapshot (keep_last < 1 guards that trivially)."""
+    the current snapshot (keep_last < 1 guards that trivially). The
+    commit is read-dependent: a concurrent commit aborts the expiry."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    cur_v, md = _tip_metadata(base)
+    cur_v, md = _tip(os.path.join(base, "metadata"))
     snaps = sorted(md.get("snapshots", []), key=lambda s: s["sequence-number"])
     by_id = {s["snapshot-id"]: s for s in snaps}
     table_now = max(s["timestamp-ms"] for s in snaps)
@@ -82,11 +81,8 @@ def iceberg_expire_snapshots_refs(
     new_md = dict(md)
     new_md["snapshots"] = kept
     new_md["refs"] = refs
-    meta_dir = os.path.join(base, "metadata")
-    _put_metadata_if_absent(meta_dir, cur_v + 1, new_md)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(cur_v + 1))
-    return cur_v + 1, expired, removed_refs
+    v = iceberg_commit(base, lambda _v, _prev: new_md, cur_v)
+    return v, expired, removed_refs
 
 
 def _build_refs_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
@@ -108,20 +104,14 @@ def _build_refs_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         "b2.parquet",
     )
     iceberg_append(spark, base, n.filter("n_nationkey >= 19"), "b3.parquet")
-    cur_v, md = _tip_metadata(base)
-    md = dict(md)
-    md["refs"] = {
+    refs = {
         "main": {"snapshot-id": 1004, "type": "branch"},
         "audit": {"snapshot-id": 1003, "type": "branch"},
         "eoy": {"snapshot-id": 1002, "type": "tag"},
         "tmp": {"snapshot-id": 1001, "type": "tag",
                 "max-ref-age-ms": 2},
     }
-    _put_metadata_if_absent(os.path.join(base, "metadata"), cur_v + 1, md)
-    with open(
-        os.path.join(base, "metadata", "version-hint.text"), "w"
-    ) as fh:
-        fh.write(str(cur_v + 1))
+    iceberg_commit(base, lambda _v, md: {**md, "refs": refs})
 
 
 @query(

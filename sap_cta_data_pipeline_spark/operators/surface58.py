@@ -40,7 +40,14 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..registry import query
-from .delta_reader import _commit, _meta_action, delta_snapshot, delta_state
+from .delta_reader import (
+    _commit,
+    _meta_action,
+    _tip,
+    commit,
+    delta_snapshot,
+    delta_state,
+)
 from .lakehouse_interop import _stage_single_parquet, delta_append_commit
 from .sources import built
 
@@ -68,7 +75,7 @@ def delta_append_merge_schema(
     """Append ``df`` with ``mergeSchema`` semantics (see module
     docstring). One atomic commit: [widened metaData]? + add.
 
-    Batch GH: when the table enables ``delta.enableTypeWidening``, a
+    When the table enables ``delta.enableTypeWidening``, a
     frame column whose type is a SUPPORTED LOSSLESS WIDENING of the
     declared type (byte→short→int→long, int/float→double — the
     typeWidening feature's matrix) updates the declared type instead of
@@ -76,8 +83,10 @@ def delta_append_merge_schema(
     (``delta.typeChanges``) and NO existing file is rewritten — readers
     upcast old files' values under the widened read schema. Narrowings
     and unrelated changes still refuse; without the feature EVERY type
-    change refuses (the batch GF rule)."""
-    live, schema_string, part_cols, config, _dvs = delta_state(spark, base)
+    change refuses. The commit is read-dependent on
+    the snapshot whose schema it widened (``delta_reader.commit``)."""
+    tip = _tip(base)
+    live, schema_string, part_cols, config, _dvs = delta_state(spark, base, tip)
     if part_cols:
         raise NotImplementedError(
             "mergeSchema append on a partitioned table needs partition "
@@ -153,10 +162,7 @@ def delta_append_merge_schema(
             }
         }
     )
-    log_dir = os.path.join(base, "_delta_log")
-    from .delta_dml import _log_tip
-
-    _commit(log_dir, _log_tip(base) + 1, actions)
+    commit(base, actions, tip)
 
 
 def _build_merge_schema_fixture(spark: SparkSession, sf_dir: str) -> str:

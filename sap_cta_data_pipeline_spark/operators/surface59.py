@@ -24,7 +24,6 @@ anywhere in the cost.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,11 +37,11 @@ from .iceberg_reader import (
     _iceberg_fields_of,
     _load_metadata,
     _manifest_file_rec,
-    _put_metadata_if_absent,
     _resolve_path,
+    _tip,
+    commit as iceberg_commit,
     iceberg_append,
     iceberg_snapshot,
-    IcebergCommitConflict,
 )
 from .sources import built
 
@@ -54,8 +53,9 @@ def iceberg_append_evolved(
 ) -> int:
     """Append ``df`` to an EXISTING Iceberg table, evolving the schema
     additively when the frame carries new columns (see module
-    docstring). Returns the committed metadata version. Commit pattern
-    cites iceberg_reader.iceberg_append (probe-the-tip put-if-absent)."""
+    docstring). Returns the committed metadata version. Like
+    iceberg_reader.iceberg_append, a lost commit slot rebuilds the
+    snapshot (and re-validates the evolution) on the fresh tip."""
     from .iceberg_reader import (
         _MANIFEST_ENTRY_EQ_SCHEMA,
         _eq_entry,
@@ -63,28 +63,12 @@ def iceberg_append_evolved(
     from .lakehouse_interop import _stage_single_parquet
 
     meta_dir = os.path.join(base, "metadata")
-    if not os.path.isdir(meta_dir):
+    _, tip_md = _tip(meta_dir)
+    if tip_md is None:
         raise FileNotFoundError(
             f"no Iceberg table under {base} — evolved append targets an "
             "existing table (create with iceberg_append first)"
         )
-
-    import re as _re
-
-    def _read_tip() -> tuple[int, dict]:
-        versions = [
-            int(m.group(1))
-            for f in os.listdir(meta_dir)
-            if (m := _re.match(r"^v(\d+)\.metadata\.json$", f))
-        ]
-        if not versions:
-            raise FileNotFoundError(
-                f"no Iceberg table under {base} — evolved append targets "
-                "an existing table (create with iceberg_append first)"
-            )
-        cur_v = max(versions)
-        with open(os.path.join(meta_dir, f"v{cur_v}.metadata.json")) as fh:
-            return cur_v, json.load(fh)
 
     frame_fields = _iceberg_fields_of(df.schema)
 
@@ -123,30 +107,19 @@ def iceberg_append_evolved(
                 )
         return fields, new_cols, last_col
 
-    # validate against the current tip BEFORE staging any data (round-11
-    # advice: a refusal must not leave an orphaned file under data/ that
-    # no manifest references — the Delta and Hudi lanes validate first)
-    _evolve_plan(_read_tip()[1])
+    # validate against the current tip BEFORE staging any data: a refusal
+    # must not leave an orphaned file under data/ that no manifest
+    # references (the Delta and Hudi lanes validate first)
+    _evolve_plan(tip_md)
     data_path = os.path.join(base, "data", file_name)
     os.makedirs(os.path.dirname(data_path), exist_ok=True)
     _stage_single_parquet(df, data_path)
     n_rows = df.count()
 
-    def _unstage() -> None:
-        try:
-            os.remove(data_path)
-        except OSError:
-            pass
-
-    for _ in range(10):
-        cur_v, prev = _read_tip()
-        try:
-            fields, new_cols, last_col = _evolve_plan(prev)
-        except ValueError:
-            # schema changed under contention into a conflict: the
-            # staged file must not orphan (round-11 advice)
-            _unstage()
-            raise
+    def build(_cur_v: int, prev: dict) -> dict:
+        # re-validated on every attempt: the schema may have changed
+        # under contention into a conflict
+        fields, new_cols, last_col = _evolve_plan(prev)
 
         seq = prev.get("last-sequence-number", 0) + 1
         snap_id = 1000 + seq
@@ -201,17 +174,17 @@ def iceberg_append_evolved(
         md["last-updated-ms"] = snap["timestamp-ms"]
         md["current-snapshot-id"] = snap_id
         md["snapshots"] = list(md.get("snapshots", [])) + [snap]
+        return md
+
+    try:
+        return iceberg_commit(base, build)
+    except Exception:
+        # refusal or give-up: no manifest references the staged file
         try:
-            _put_metadata_if_absent(meta_dir, cur_v + 1, md)
-        except IcebergCommitConflict:
-            continue
-        with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-            fh.write(str(cur_v + 1))
-        return cur_v + 1
-    _unstage()  # give-up path: no manifest references the staged file
-    raise IcebergCommitConflict(
-        f"gave up after 10 contended metadata versions under {meta_dir}"
-    )
+            os.remove(data_path)
+        except OSError:
+            pass
+        raise
 
 
 def _build_evolved_fixture(spark: SparkSession, sf_dir: str) -> str:

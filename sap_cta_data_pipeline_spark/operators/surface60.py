@@ -25,7 +25,6 @@ work plus the rewrite of the touched files, never a table scan.
 
 from __future__ import annotations
 
-import json
 import os
 from functools import partial
 
@@ -42,6 +41,7 @@ from .iceberg_reader import (
     _manifest_file_rec,
     _write_manifest,
     _write_parquet_file,
+    commit as iceberg_commit,
 )
 from .lakehouse_interop import delta_append_commit
 from .sources import built
@@ -131,10 +131,7 @@ def _build_cdc_source_fixture(spark: SparkSession, sf_dir: str, base: str) -> No
             },
         ],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(md, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_commit(base, lambda _v, _prev: md)
 
 
 def cdc_feed(chg: DataFrame, id_cols: list[str], value_cols: list[str]) -> DataFrame:

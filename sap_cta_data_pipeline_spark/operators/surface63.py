@@ -65,7 +65,6 @@ absorbing a 1 GB window rewrites the touched files and nothing else.
 
 from __future__ import annotations
 
-import json
 import os
 import uuid as _uuid
 
@@ -80,14 +79,13 @@ from .iceberg_reader import (
     _current_schema,
     _eq_entry,
     _iceberg_fields_of,
-    _load_metadata,
     _manifest_file_rec,
-    _put_metadata_if_absent,
     _resolve_path,
+    _tip,
+    commit as iceberg_commit,
     iceberg_append,
     iceberg_snapshot,
     iceberg_state,
-    IcebergCommitConflict,
 )
 from .sources import built
 from .surface54 import _delete_key, _live_rows
@@ -163,7 +161,7 @@ def iceberg_merge_plan(
     The caller (``iceberg_merge_into``) validates that every source row
     lands inside the filter; an unvalidated filter would silently turn
     out-of-filter matches into duplicate inserts (lost updates)."""
-    meta = _load_metadata(base)
+    read_version, meta = _tip(os.path.join(base, "metadata"))
     part_cols, _spec, pfields = _partition_info(meta, "iceberg_merge_into")
     pnames = [pf["pname"] for pf in pfields]
     if partition_filter:
@@ -175,7 +173,9 @@ def iceberg_merge_plan(
                 "partition values, e.g. epoch days for a day transform)"
             )
     schema, data_files, pos_dels, eq_dels = iceberg_state(
-        base, partition_filter=partition_filter
+        base,
+        snapshot_id=meta["current-snapshot-id"],
+        partition_filter=partition_filter,
     )
     if eq_dels:
         raise ValueError(
@@ -218,11 +218,7 @@ def iceberg_merge_plan(
         "part_of": {
             f["path"]: f.get("partition") or {} for f in data_files
         },
-        "read_version": max(
-            int(f[1:].split(".")[0])
-            for f in os.listdir(os.path.join(base, "metadata"))
-            if f.startswith("v") and f.endswith(".metadata.json")
-        ),
+        "read_version": read_version,
     }
 
 
@@ -584,7 +580,8 @@ def _commit_cow_swap(
     manifest-level sequence numbers preserved so inherited entry
     sequences stay correct), untouched manifests carried by pointer,
     new data files on one content=0 manifest at the new sequence, one
-    put-if-absent metadata swap. Cleans up staged files and raises
+    put-if-absent metadata swap, read-dependent on ``cur_v``
+    (``iceberg_reader.commit``). Cleans up staged files and raises
     ``IcebergCommitConflict`` if any commit landed since planning.
     Returns the new metadata version."""
     # (rel, n) callers are unpartitioned; (rel, n, part_rec) callers
@@ -593,109 +590,102 @@ def _commit_cow_swap(
         (t[0], t[1], t[2] if len(t) > 2 else {}) for t in new_files
     ]
     meta_dir = os.path.join(base, "metadata")
-    # read-set validation (the Delta _commit_validated discipline): the
-    # rewrite was planned against cur_v's live set — if ANY commit
-    # landed since, the matched-file set may be stale; abort, never
-    # publish a lost update.
-    tip_now = max(
-        int(f[1:].split(".")[0])
-        for f in os.listdir(meta_dir)
-        if f.startswith("v") and f.endswith(".metadata.json")
-    )
-    if tip_now != cur_v:
+
+    # runs only while the tip is still cur_v: the rewrite was planned
+    # against cur_v's live set, so any commit landing since aborts it
+    # (the matched-file set may be stale) instead of losing an update
+    def build(_v: int, _tip_md: dict) -> dict:
+        seq = prev.get("last-sequence-number", 0) + 1
+        snap_id = 1000 + seq
+        snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
+        _, prev_manifests = read_container(
+            _resolve_path(base, snaps[prev["current-snapshot-id"]]["manifest-list"])
+        )
+        out_manifests: list[dict] = []
+        for mi, m in enumerate(prev_manifests):
+            mschema, entries = read_container(
+                _resolve_path(base, m["manifest_path"])
+            )
+            hit = any(
+                e["status"] != 2
+                and _resolve_path(base, e["data_file"]["file_path"])
+                in removed_paths
+                for e in entries
+            )
+            if not hit:
+                out_manifests.append(m)  # untouched manifest: carried by pointer
+                continue
+            # rewrite the affected manifest: removed files become status-2
+            # DELETED entries, survivors status-0 EXISTING. Schema and the
+            # manifest-level sequence numbers are PRESERVED so entries with
+            # inherited (null) sequence numbers keep their original sequence.
+            new_entries = []
+            for e in entries:
+                if e["status"] == 2:
+                    continue  # recorded by the snapshot that dropped it
+                e2 = dict(e)
+                path = _resolve_path(base, e["data_file"]["file_path"])
+                e2["status"] = 2 if path in removed_paths else 0
+                new_entries.append(e2)
+            rrel = f"m-{tag}-{snap_id}-rw{mi}.avro"
+            rpath = os.path.join(meta_dir, rrel)
+            write_container(rpath, mschema, new_entries)
+            m2 = dict(m)
+            m2["manifest_path"] = "file://" + rpath
+            m2["manifest_length"] = os.path.getsize(rpath)
+            out_manifests.append(m2)
+        if new_files:
+            mrel = f"m-{tag}-{snap_id}.avro"
+            partitioned = any(p for _rel, _n, p in new_files)
+            entries = []
+            for rel, n, p in new_files:
+                e = _eq_entry(base, rel, 0, n, seq)
+                e["data_file"]["partition"] = p
+                entries.append(e)
+            write_container(
+                os.path.join(meta_dir, mrel),
+                _part_entry_schema(prev) if partitioned else _MANIFEST_ENTRY_EQ_SCHEMA,
+                entries,
+            )
+            mrec = _manifest_file_rec(base, mrel, 0, snap_id, seq)
+            mrec["partition_spec_id"] = prev.get("default-spec-id", 0)
+            out_manifests.append(mrec)
+        mlrel = f"snap-{snap_id}.avro"
+        write_container(
+            os.path.join(meta_dir, mlrel), _MANIFEST_FILE_SCHEMA, out_manifests
+        )
+        md = dict(prev)
+        schema_id = prev.get("current-schema-id", 0)
+        if md_mutate is not None:
+            # writer-side evolution riding the same swap (MERGE WITH SCHEMA
+            # EVOLUTION): the mutator appends the evolved schema entry and
+            # returns the id the new snapshot addresses
+            schema_id = md_mutate(md)
+        snap = {
+            "snapshot-id": snap_id,
+            "sequence-number": seq,
+            "timestamp-ms": 1700000000000 + seq,
+            "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
+            "summary": {"operation": "overwrite"},
+            "schema-id": schema_id,
+        }
+        if "parent-snapshot-id" not in snap and prev.get("current-snapshot-id"):
+            snap["parent-snapshot-id"] = prev["current-snapshot-id"]
+        md["last-sequence-number"] = seq
+        md["last-updated-ms"] = snap["timestamp-ms"]
+        md["current-snapshot-id"] = snap_id
+        md["snapshots"] = list(md.get("snapshots", [])) + [snap]
+        return md
+
+    try:
+        return iceberg_commit(base, build, cur_v)
+    except Exception:
         for rel, _n, _p in new_files:
             try:
                 os.remove(os.path.join(base, "data", rel))
             except OSError:
                 pass
-        raise IcebergCommitConflict(
-            f"concurrent commit: {tag} rewrite planned against metadata "
-            f"v{cur_v} but the table is now at v{tip_now}; re-run it"
-        )
-    seq = prev.get("last-sequence-number", 0) + 1
-    snap_id = 1000 + seq
-    snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
-    _, prev_manifests = read_container(
-        _resolve_path(base, snaps[prev["current-snapshot-id"]]["manifest-list"])
-    )
-    out_manifests: list[dict] = []
-    for mi, m in enumerate(prev_manifests):
-        mschema, entries = read_container(
-            _resolve_path(base, m["manifest_path"])
-        )
-        hit = any(
-            e["status"] != 2
-            and _resolve_path(base, e["data_file"]["file_path"])
-            in removed_paths
-            for e in entries
-        )
-        if not hit:
-            out_manifests.append(m)  # untouched manifest: carried by pointer
-            continue
-        # rewrite the affected manifest: removed files become status-2
-        # DELETED entries, survivors status-0 EXISTING. Schema and the
-        # manifest-level sequence numbers are PRESERVED so entries with
-        # inherited (null) sequence numbers keep their original sequence.
-        new_entries = []
-        for e in entries:
-            if e["status"] == 2:
-                continue  # recorded by the snapshot that dropped it
-            e2 = dict(e)
-            path = _resolve_path(base, e["data_file"]["file_path"])
-            e2["status"] = 2 if path in removed_paths else 0
-            new_entries.append(e2)
-        rrel = f"m-{tag}-{snap_id}-rw{mi}.avro"
-        rpath = os.path.join(meta_dir, rrel)
-        write_container(rpath, mschema, new_entries)
-        m2 = dict(m)
-        m2["manifest_path"] = "file://" + rpath
-        m2["manifest_length"] = os.path.getsize(rpath)
-        out_manifests.append(m2)
-    if new_files:
-        mrel = f"m-{tag}-{snap_id}.avro"
-        partitioned = any(p for _rel, _n, p in new_files)
-        entries = []
-        for rel, n, p in new_files:
-            e = _eq_entry(base, rel, 0, n, seq)
-            e["data_file"]["partition"] = p
-            entries.append(e)
-        write_container(
-            os.path.join(meta_dir, mrel),
-            _part_entry_schema(prev) if partitioned else _MANIFEST_ENTRY_EQ_SCHEMA,
-            entries,
-        )
-        mrec = _manifest_file_rec(base, mrel, 0, snap_id, seq)
-        mrec["partition_spec_id"] = prev.get("default-spec-id", 0)
-        out_manifests.append(mrec)
-    mlrel = f"snap-{snap_id}.avro"
-    write_container(
-        os.path.join(meta_dir, mlrel), _MANIFEST_FILE_SCHEMA, out_manifests
-    )
-    md = dict(prev)
-    schema_id = prev.get("current-schema-id", 0)
-    if md_mutate is not None:
-        # writer-side evolution riding the same swap (MERGE WITH SCHEMA
-        # EVOLUTION): the mutator appends the evolved schema entry and
-        # returns the id the new snapshot addresses
-        schema_id = md_mutate(md)
-    snap = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": 1700000000000 + seq,
-        "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-        "summary": {"operation": "overwrite"},
-        "schema-id": schema_id,
-    }
-    if "parent-snapshot-id" not in snap and prev.get("current-snapshot-id"):
-        snap["parent-snapshot-id"] = prev["current-snapshot-id"]
-    md["last-sequence-number"] = seq
-    md["last-updated-ms"] = snap["timestamp-ms"]
-    md["current-snapshot-id"] = snap_id
-    md["snapshots"] = list(md.get("snapshots", [])) + [snap]
-    _put_metadata_if_absent(meta_dir, cur_v + 1, md)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(cur_v + 1))
-    return cur_v + 1
+        raise
 
 
 def _build_merge_fixture(spark: SparkSession, sf_dir: str) -> str:

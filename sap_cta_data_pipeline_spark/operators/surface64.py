@@ -38,7 +38,6 @@ unique by construction, the ideal shuffle key at 100 TB).
 
 from __future__ import annotations
 
-import json
 import os
 from functools import partial
 
@@ -47,7 +46,7 @@ from pyspark.sql import functions as F
 
 from ..functions.avro_codec import read_container
 from ..registry import query
-from .iceberg_reader import _load_metadata, _resolve_path
+from .iceberg_reader import _load_metadata, _resolve_path, commit as iceberg_commit
 from .sources import built
 from .surface51 import (
     _LIN_ENTRY_SCHEMA,
@@ -292,10 +291,7 @@ def _build_rename_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
             },
         ],
     }
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump(md, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_commit(base, lambda _v, _prev: md)
 
 
 def _fixture(spark: SparkSession, sf_dir: str) -> str:

@@ -159,12 +159,12 @@ def _update_plan(
     + tagged live set (same refusals: non-identity partition
     transforms, equality deletes). ``partition_filter`` prunes the
     candidate file set driver-side from the manifests."""
-    from .iceberg_reader import _load_metadata, iceberg_state
+    from .iceberg_reader import _tip, iceberg_state
     from .surface63 import _partition_info
 
     from .surface54 import _delete_key, _live_rows
 
-    meta = _load_metadata(base)
+    read_version, meta = _tip(os.path.join(base, "metadata"))
     part_cols, _spec, pfields = _partition_info(meta, "iceberg_update_cow")
     pnames = [pf["pname"] for pf in pfields]
     if partition_filter:
@@ -176,7 +176,9 @@ def _update_plan(
                 "partition values, e.g. epoch days for a day transform)"
             )
     schema, data_files, pos_dels, eq_dels = iceberg_state(
-        base, partition_filter=partition_filter
+        base,
+        snapshot_id=meta["current-snapshot-id"],
+        partition_filter=partition_filter,
     )
     if eq_dels:
         raise ValueError(
@@ -200,11 +202,7 @@ def _update_plan(
         "part_of": {
             f["path"]: f.get("partition") or {} for f in data_files
         },
-        "read_version": max(
-            int(f[1:].split(".")[0])
-            for f in os.listdir(os.path.join(base, "metadata"))
-            if f.startswith("v") and f.endswith(".metadata.json")
-        ),
+        "read_version": read_version,
     }
 
 

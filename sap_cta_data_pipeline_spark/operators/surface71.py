@@ -41,7 +41,6 @@ live in and its pruned reads open one day's files from metadata alone.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -59,6 +58,7 @@ from .iceberg_reader import (
     _manifest_file_rec,
     iceberg_snapshot,
     iceberg_state,
+    commit as iceberg_commit,
 )
 from .sources import built
 
@@ -189,10 +189,7 @@ def write_transform_partitioned(
         _MANIFEST_FILE_SCHEMA,
         [_manifest_file_rec(base, "m1-data.avro", 0, 3001, 1)],
     )
-    with open(os.path.join(base, "metadata", "v1.metadata.json"), "w") as fh:
-        json.dump(md, fh)
-    with open(os.path.join(base, "metadata", "version-hint.text"), "w") as fh:
-        fh.write("1")
+    iceberg_commit(base, lambda _v, _prev: md)
 
 
 def _record_tagged_read(

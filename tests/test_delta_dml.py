@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from sap_cta_data_pipeline_spark.catalog import load_table as t
 from sap_cta_data_pipeline_spark.operators.delta_dml import (
     ConcurrentMergeError,
-    _log_tip,
     delta_merge_into,
     delta_update_where,
 )
@@ -24,6 +23,7 @@ from sap_cta_data_pipeline_spark.operators.delta_reader import (
     _commit,
     _read_commit,
     delta_snapshot,
+    _tip,
     delta_state,
 )
 from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
@@ -83,7 +83,7 @@ def test_update_applies_and_clears_dv(spark, sf_dir, tmp_path):
 
 def test_update_no_match_is_noop(spark, sf_dir, tmp_path):
     base = _clone_sink(spark, sf_dir, tmp_path, "upd_noop")
-    tip0 = _log_tip(base)
+    tip0 = _tip(base)
     version, n_files = delta_update_where(
         spark, base, "n_nationkey = 999", {"n_name": "'X'"}
     )
@@ -99,7 +99,7 @@ def test_update_refusals(spark, sf_dir, tmp_path):
 
 def test_merge_is_one_atomic_commit(spark, sf_dir, tmp_path):
     base = _clone_sink(spark, sf_dir, tmp_path, "mrg_atomic")
-    tip0 = _log_tip(base)
+    tip0 = _tip(base)
     n = t(spark, sf_dir, "nation").filter("n_nationkey < 3")
     src = n.select(
         "n_nationkey", F.lit("UPD").alias("n_name"), "n_regionkey"
@@ -144,7 +144,7 @@ def test_merge_insert_only_when_no_matches(spark, sf_dir, tmp_path):
 def test_merge_aborts_on_concurrent_data_commit(spark, sf_dir, tmp_path, monkeypatch):
     """A data-changing commit stealing our version slot must ABORT the
     merge (stale read set), not blind-retry past it."""
-    import sap_cta_data_pipeline_spark.operators.delta_dml as dml
+    import sap_cta_data_pipeline_spark.operators.delta_reader as dr
 
     base = _clone_sink(spark, sf_dir, tmp_path, "mrg_conflict")
     real_commit = _commit
@@ -172,7 +172,7 @@ def test_merge_aborts_on_concurrent_data_commit(spark, sf_dir, tmp_path, monkeyp
             )
         return real_commit(ld, version, actions)
 
-    monkeypatch.setattr(dml, "_commit", racing_commit)
+    monkeypatch.setattr(dr, "_commit", racing_commit)
     n = t(spark, sf_dir, "nation").filter("n_nationkey < 2")
     src = n.select("n_nationkey", F.lit("U").alias("n_name"), "n_regionkey")
     with pytest.raises(ConcurrentMergeError):
@@ -182,7 +182,7 @@ def test_merge_aborts_on_concurrent_data_commit(spark, sf_dir, tmp_path, monkeyp
 def test_merge_retries_past_metadata_only_commit(spark, sf_dir, tmp_path, monkeypatch):
     """A metadata-only interloper (no dataChange) cannot invalidate the
     rewrite — the writer retries at the next version and lands."""
-    import sap_cta_data_pipeline_spark.operators.delta_dml as dml
+    import sap_cta_data_pipeline_spark.operators.delta_reader as dr
 
     base = _clone_sink(spark, sf_dir, tmp_path, "mrg_meta_ok")
     real_commit = _commit
@@ -196,7 +196,7 @@ def test_merge_retries_past_metadata_only_commit(spark, sf_dir, tmp_path, monkey
             )
         return real_commit(ld, version, actions)
 
-    monkeypatch.setattr(dml, "_commit", racing_commit)
+    monkeypatch.setattr(dr, "_commit", racing_commit)
     n = t(spark, sf_dir, "nation").filter("n_nationkey < 2")
     src = n.select("n_nationkey", F.lit("U2").alias("n_name"), "n_regionkey")
     version, n_rewritten, _ = delta_merge_into(
@@ -285,7 +285,7 @@ def test_colmap_rename_then_update(spark, sf_dir, tmp_path):
     nf["name"] = "n_label"  # logical rename; physicalName untouched
     _commit(
         os.path.join(base, "_delta_log"),
-        _log_tip(base) + 1,
+        _tip(base) + 1,
         [
             {
                 "metaData": {
@@ -459,7 +459,7 @@ def test_merge_evolution_no_data_noop_commits_schema(spark, sf_dir, tmp_path):
     base = _clone_sink(spark, sf_dir, tmp_path, "mrg_evnoop")
     n = t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     empty = n.withColumn("n_extra", F.lit(1).cast("int")).filter("1 = 0")
-    tip0 = _log_tip(base)
+    tip0 = _tip(base)
     # non-evolution empty-source MERGE: no commit at all
     v0, nr0, ni0 = delta_merge_into(
         spark, base, empty.drop("n_extra"), "n_nationkey", ["n_name"]

@@ -143,3 +143,32 @@ def test_fixture_readiness_rule_lives_only_in_sources():
         if re.search(r"_(MERGED|UPDATED|STAGED)\b", py.read_text())
     )
     assert not staged, f"modules with a second-stage marker: {staged}"
+
+
+def test_commit_rule_lives_only_in_the_format_readers():
+    """Each table format commits through one function in its reader
+    module (``delta_reader.commit``, ``iceberg_reader.commit``), which
+    owns the tip probe, the retry loop and the conflict rule. No other
+    package module lists commit versions itself, catches a commit
+    conflict, or writes the Iceberg version hint."""
+    pkg = REPO / "sap_cta_data_pipeline_spark"
+    owners = {pkg / "operators" / f for f in ("delta_reader.py", "iceberg_reader.py")}
+    rules = {
+        "commit-version listing": re.compile(
+            r"_COMMIT_RE|metadata\\\.json|endswith\(\s*[\"']\.metadata\.json"
+        ),
+        "commit-conflict catch": re.compile(
+            r"except\b[^:\n]*\b(?:Iceberg)?CommitConflict\b"
+        ),
+        "version-hint write": re.compile(
+            r"version-hint\.text[\"']\)\s*,\s*[\"'][wax]"
+        ),
+    }
+    found = sorted(
+        f"{py.relative_to(pkg)}: {what}"
+        for py in pkg.rglob("*.py")
+        if py not in owners
+        for what, rx in rules.items()
+        if rx.search(py.read_text())
+    )
+    assert not found, f"commit logic outside the format readers: {found}"

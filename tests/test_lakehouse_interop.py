@@ -187,9 +187,9 @@ def test_append_retries_past_conflict(spark, sf_dir, tmp_path, monkeypatch):
     import shutil
 
     from sap_cta_data_pipeline_spark.catalog import load_table
+    from sap_cta_data_pipeline_spark.operators import delta_reader as dr
     from sap_cta_data_pipeline_spark.operators import lakehouse_interop as li
     from sap_cta_data_pipeline_spark.operators.delta_reader import (
-        _commit,
         delta_snapshot,
         delta_state,
     )
@@ -200,7 +200,7 @@ def test_append_retries_past_conflict(spark, sf_dir, tmp_path, monkeypatch):
     n = load_table(spark, sf_dir, "nation").limit(3)
     extra = n.selectExpr("n_nationkey + 200 AS n_nationkey", "n_name", "n_regionkey")
 
-    real_commit = li._commit
+    real_commit = dr._commit
     raced: dict[str, int] = {}
 
     def racing_commit(ld, version, actions):
@@ -210,7 +210,7 @@ def test_append_retries_past_conflict(spark, sf_dir, tmp_path, monkeypatch):
             real_commit(ld, version, [{"commitInfo": {"writer": "rival"}}])
         return real_commit(ld, version, actions)
 
-    monkeypatch.setattr(li, "_commit", racing_commit)
+    monkeypatch.setattr(dr, "_commit", racing_commit)
     li.delta_append_commit(spark, clone, extra, "ours.parquet")
     monkeypatch.undo()
     assert raced["raced"] == 2  # tip was 1 → first attempt at 2, lost
@@ -226,6 +226,7 @@ def test_append_gives_up_after_ten_conflicts(spark, sf_dir, tmp_path, monkeypatc
     import shutil
 
     from sap_cta_data_pipeline_spark.catalog import load_table
+    from sap_cta_data_pipeline_spark.operators import delta_reader as dr
     from sap_cta_data_pipeline_spark.operators import lakehouse_interop as li
     from sap_cta_data_pipeline_spark.operators.delta_reader import CommitConflict
 
@@ -236,7 +237,7 @@ def test_append_gives_up_after_ten_conflicts(spark, sf_dir, tmp_path, monkeypatc
     def always_lose(ld, version, actions):
         raise CommitConflict(f"version {version} taken")
 
-    monkeypatch.setattr(li, "_commit", always_lose)
+    monkeypatch.setattr(dr, "_commit", always_lose)
     with pytest.raises(CommitConflict, match="gave up after 10"):
         li.delta_append_commit(spark, clone, n, "never.parquet")
 

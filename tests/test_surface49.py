@@ -16,8 +16,8 @@ from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
 from sap_cta_data_pipeline_spark.operators.surface26 import (
     iceberg_snapshot_by_ref,
 )
+from sap_cta_data_pipeline_spark.operators.iceberg_reader import _tip
 from sap_cta_data_pipeline_spark.operators.surface49 import (
-    _tip_metadata,
     iceberg_append_to_branch,
     iceberg_fast_forward,
 )
@@ -31,7 +31,7 @@ def _fresh(spark, tmp_path, name):
         "n_nationkey", "n_name", "n_regionkey"
     )
     iceberg_append(spark, base, n.filter("n_nationkey < 12"), "b0.parquet")
-    cur_v, md = _tip_metadata(base)
+    cur_v, md = _tip(os.path.join(base, "metadata"))
     md = dict(md)
     md["refs"] = {
         "main": {"snapshot-id": md["current-snapshot-id"], "type": "branch"}
@@ -56,7 +56,7 @@ def test_staged_branch_invisible_on_main(spark, tmp_path):
     # the branch sees the staged world
     assert iceberg_snapshot_by_ref(spark, base, "audit").count() == 25
     # main ref unchanged
-    _, md = _tip_metadata(base)
+    _, md = _tip(os.path.join(base, "metadata"))
     assert md["refs"]["main"]["snapshot-id"] == md["current-snapshot-id"]
 
 
@@ -84,7 +84,7 @@ def test_publish_is_metadata_only(spark, tmp_path):
     v = iceberg_fast_forward(spark, base, "audit")
     assert sorted(os.listdir(data_dir)) == before  # no data file touched
     assert iceberg_snapshot(spark, base).count() == 25
-    _, md = _tip_metadata(base)
+    _, md = _tip(os.path.join(base, "metadata"))
     assert md["refs"]["main"]["snapshot-id"] == md["current-snapshot-id"]
     # rollback = move the ref back: instant
     snaps = sorted(s["snapshot-id"] for s in md["snapshots"])
@@ -118,7 +118,7 @@ def test_fast_forward_refuses_diverged_main(spark, tmp_path):
     iceberg_append(
         spark, base, n.filter("n_nationkey = 0"), "concurrent.parquet"
     )
-    _, md = _tip_metadata(base)
+    _, md = _tip(os.path.join(base, "metadata"))
     assert (
         md["refs"]["main"]["snapshot-id"] != md["current-snapshot-id"]
     ), "precondition: the ref must be stale for this probe"

@@ -4,12 +4,14 @@ naive-vs-ref-aware contrast."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
+    _tip,
     iceberg_snapshot,
 )
-from sap_cta_data_pipeline_spark.operators.surface49 import _tip_metadata
 from sap_cta_data_pipeline_spark.operators.surface57 import (
     _build_refs_fixture,
     iceberg_expire_snapshots_refs,
@@ -29,7 +31,7 @@ def test_refs_protect_beyond_keep_last(spark, tmp_path):
     _, expired, removed = iceberg_expire_snapshots_refs(base, keep_last=1)
     assert expired == [1001]  # newest-K alone would also drop 1002, 1003
     assert removed == ["tmp"]
-    _, md = _tip_metadata(base)
+    _, md = _tip(os.path.join(base, "metadata"))
     kept = sorted(s["snapshot-id"] for s in md["snapshots"])
     assert kept == [1002, 1003, 1004]
     assert sorted(md["refs"]) == ["audit", "eoy", "main"]
@@ -61,13 +63,11 @@ def test_durable_refs_never_age(spark, tmp_path):
 
 def test_corrupt_refs_refuse(spark, tmp_path):
     base = _fixture(spark, tmp_path)
-    import os
-
-    from sap_cta_data_pipeline_spark.operators.lakehouse_maintenance import (
+    from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
         _put_metadata_if_absent,
     )
 
-    cur_v, md = _tip_metadata(base)
+    cur_v, md = _tip(os.path.join(base, "metadata"))
     md = dict(md)
     md["refs"] = dict(md["refs"])
     md["refs"]["ghost"] = {"snapshot-id": 999999, "type": "tag"}
