@@ -16,7 +16,9 @@ of the published Avro 1.11 spec those files need, reader AND writer:
   field-sequential concatenation, unions as zigzag branch index + value,
   arrays/maps as count-prefixed blocks (negative count ⇒ a byte-size
   long follows — emitted by some writers; the reader handles both),
-  enums as zigzag index, fixed as raw bytes.
+  enums as zigzag index, fixed as raw bytes. The writer encodes a
+  record field absent from the value as the field's declared
+  ``default``; a field without one must be present.
 
 Decoded values are plain Python (records → dicts keyed by field name),
 so the Iceberg reader (operators/iceberg_reader.py) consumes them with
@@ -196,7 +198,11 @@ def _encode(schema, value, out: bytearray, named: dict) -> None:
     t = schema["type"]
     if t == "record":
         for f in schema["fields"]:
-            _encode(f["type"], value[f["name"]], out, named)
+            # a field that declares a default may be absent from the value
+            if f["name"] not in value and "default" in f:
+                _encode(f["type"], f["default"], out, named)
+            else:
+                _encode(f["type"], value[f["name"]], out, named)
     elif t == "array":
         if value:
             out += _zigzag_encode(len(value))

@@ -29,76 +29,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, table_path
-from ..functions.avro_codec import write_container
 from ..functions.murmur3 import bucket_long, bucket_long_np
 from ..registry import query
 from .delta_reader import _write_parquet_file
 from .iceberg_reader import (
-    _MANIFEST_ENTRY_SCHEMA,
-    _MANIFEST_FILE_SCHEMA,
     _NATION_ICEBERG_FIELDS,
     _entry,
     _iceberg_fields_of,
-    _manifest_file_rec,
+    _manifest,
+    _new_table,
+    _snapshot,
     iceberg_snapshot,
     commit as iceberg_commit,
 )
 from .sources import built
 
 _N_BUCKETS = 4
-
-
-def _bucket_entry_schema(field_name: str) -> dict:
-    """Manifest-entry Avro schema whose partition record carries one
-    int bucket field."""
-    return {
-        "type": "record",
-        "name": "manifest_entry",
-        "fields": [
-            {"name": "status", "type": "int", "field-id": 0},
-            {
-                "name": "snapshot_id",
-                "type": ["null", "long"],
-                "default": None,
-                "field-id": 1,
-            },
-            {
-                "name": "data_file",
-                "field-id": 2,
-                "type": {
-                    "type": "record",
-                    "name": "r2",
-                    "fields": [
-                        {"name": "content", "type": "int", "field-id": 134},
-                        {"name": "file_path", "type": "string", "field-id": 100},
-                        {"name": "file_format", "type": "string", "field-id": 101},
-                        {
-                            "name": "partition",
-                            "field-id": 102,
-                            "type": {
-                                "type": "record",
-                                "name": "r102",
-                                "fields": [
-                                    {
-                                        "name": field_name,
-                                        "type": ["null", "int"],
-                                        "default": None,
-                                        "field-id": 1000,
-                                    }
-                                ],
-                            },
-                        },
-                        {"name": "record_count", "type": "long", "field-id": 103},
-                        {
-                            "name": "file_size_in_bytes",
-                            "type": "long",
-                            "field-id": 104,
-                        },
-                    ],
-                },
-            },
-        ],
-    }
 
 
 def iceberg_create_bucketed(
@@ -140,6 +86,22 @@ def iceberg_create_bucketed(
     import pyarrow.parquet as pq
 
     part_field = f"{source_col}_bucket"
+    fields = _iceberg_fields_of(df.select(*cols).schema)
+    md = _new_table(
+        base,
+        fields,
+        uuid="0f1e2d3c-0000-4000-8000-0000000000d7",
+        partition_fields=[
+            {
+                "name": part_field,
+                "transform": f"bucket[{n_buckets}]",
+                "source-id": next(
+                    f["id"] for f in fields if f["name"] == source_col
+                ),
+                "field-id": 1000,
+            }
+        ],
+    )
     entries = []
     os.makedirs(os.path.join(base, "data"), exist_ok=True)
     for b in range(n_buckets):
@@ -154,72 +116,11 @@ def iceberg_create_bucketed(
         dst = os.path.join(base, "data", rel)
         os.replace(os.path.join(bdir, parts[0]), dst)
         n_rows = pq.read_metadata(dst).num_rows
-        e = _entry(base, rel, 0, n_rows)
-        e["data_file"]["partition"] = {part_field: b}
-        entries.append(e)
-    meta_dir = os.path.join(base, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    write_container(
-        os.path.join(meta_dir, "m1-data.avro"),
-        _bucket_entry_schema(part_field),
-        entries,
+        entries.append(_entry(base, rel, 0, n_rows, partition={part_field: b}))
+    m = _manifest(base, md, "m1-data.avro", entries, 0, 3001, 1)
+    md = _snapshot(
+        base, md, [m], "append", snap_id=3001, seq=1, ts=1700000000000
     )
-    write_container(
-        os.path.join(meta_dir, "snap-3001.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [_manifest_file_rec(base, "m1-data.avro", 0, 3001, 1)],
-    )
-    src_id = next(
-        f["id"]
-        for f in _iceberg_fields_of(df.select(*cols).schema)
-        if f["name"] == source_col
-    )
-    md = {
-        "format-version": 2,
-        "table-uuid": "0f1e2d3c-0000-4000-8000-0000000000d7",
-        "location": "file://" + base,
-        "last-sequence-number": 1,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": len(cols),
-        "current-schema-id": 0,
-        "schemas": [
-            {
-                "type": "struct",
-                "schema-id": 0,
-                "fields": _iceberg_fields_of(df.select(*cols).schema),
-            }
-        ],
-        "default-spec-id": 0,
-        "partition-specs": [
-            {
-                "spec-id": 0,
-                "fields": [
-                    {
-                        "name": part_field,
-                        "transform": f"bucket[{n_buckets}]",
-                        "source-id": src_id,
-                        "field-id": 1000,
-                    }
-                ],
-            }
-        ],
-        "last-partition-id": 1000,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {},
-        "current-snapshot-id": 3001,
-        "snapshots": [
-            {
-                "snapshot-id": 3001,
-                "sequence-number": 1,
-                "timestamp-ms": 1700000000000,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-3001.avro"),
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            }
-        ],
-    }
     iceberg_commit(base, lambda _v, _prev: md)
 
 
@@ -280,97 +181,56 @@ def _build_evo_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
 
     tbl = pq.read_table(table_path(sf_dir, "nation"))
     pdf = tbl.to_pandas().sort_values("n_nationkey").reset_index(drop=True)
-    meta_dir = os.path.join(base, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-
+    # spec 0 is unpartitioned; spec 1, identity(n_regionkey), is the
+    # default once the layout evolved
+    md = _new_table(
+        base,
+        _NATION_ICEBERG_FIELDS,
+        uuid="0f1e2d3c-0000-4000-8000-0000000000e0",
+        **{
+            "default-spec-id": 1,
+            "partition-specs": [
+                {"spec-id": 0, "fields": []},
+                {
+                    "spec-id": 1,
+                    "fields": [
+                        {
+                            "name": "n_regionkey",
+                            "transform": "identity",
+                            "source-id": 3,
+                            "field-id": 1000,
+                        }
+                    ],
+                },
+            ],
+            "last-partition-id": 1000,
+        },
+    )
     early = pdf[pdf.n_regionkey <= 1]
     _write_parquet_file(
         tbl.schema, early, os.path.join(base, "data", "all-early.parquet")
     )
-    write_container(
-        os.path.join(meta_dir, "m-old.avro"),
-        _MANIFEST_ENTRY_SCHEMA,
-        [_entry(base, "all-early.parquet", 0, len(early))],
+    old_mf = _manifest(
+        base, md, "m-old.avro",
+        [_entry(base, "all-early.parquet", 0, len(early))], 0, 4001, 1,
+        spec_id=0,
     )
-    old_mf = _manifest_file_rec(base, "m-old.avro", 0, 4001, 1)
-    old_mf["partition_spec_id"] = 0
-
     new_entries = []
     for rk in (2, 3, 4):
         rel = f"rk={rk}.parquet"
         sub = pdf[pdf.n_regionkey == rk]
         _write_parquet_file(tbl.schema, sub, os.path.join(base, "data", rel))
-        e = _entry(base, rel, 0, len(sub))
-        e["data_file"]["partition"] = {"n_regionkey": int(rk)}
-        new_entries.append(e)
-    write_container(
-        os.path.join(meta_dir, "m-new.avro"),
-        _bucket_entry_schema("n_regionkey"),
-        new_entries,
+        new_entries.append(
+            _entry(base, rel, 0, len(sub), partition={"n_regionkey": int(rk)})
+        )
+    new_mf = _manifest(base, md, "m-new.avro", new_entries, 0, 4002, 2)
+    md = _snapshot(
+        base, md, [old_mf], "append", snap_id=4001, seq=1, ts=1700000000000
     )
-    new_mf = _manifest_file_rec(base, "m-new.avro", 0, 4002, 2)
-    new_mf["partition_spec_id"] = 1
-
-    write_container(
-        os.path.join(meta_dir, "snap-4001.avro"), _MANIFEST_FILE_SCHEMA, [old_mf]
+    md = _snapshot(
+        base, md, [old_mf, new_mf], "append", snap_id=4002, seq=2,
+        ts=1700000000001,
     )
-    write_container(
-        os.path.join(meta_dir, "snap-4002.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [old_mf, new_mf],
-    )
-    md = {
-        "format-version": 2,
-        "table-uuid": "0f1e2d3c-0000-4000-8000-0000000000e0",
-        "location": "file://" + base,
-        "last-sequence-number": 2,
-        "last-updated-ms": 1700000000001,
-        "last-column-id": 3,
-        "current-schema-id": 0,
-        "schemas": [
-            {"type": "struct", "schema-id": 0, "fields": _NATION_ICEBERG_FIELDS}
-        ],
-        "default-spec-id": 1,
-        "partition-specs": [
-            {"spec-id": 0, "fields": []},
-            {
-                "spec-id": 1,
-                "fields": [
-                    {
-                        "name": "n_regionkey",
-                        "transform": "identity",
-                        "source-id": 3,
-                        "field-id": 1000,
-                    }
-                ],
-            },
-        ],
-        "last-partition-id": 1000,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {},
-        "current-snapshot-id": 4002,
-        "snapshots": [
-            {
-                "snapshot-id": 4001,
-                "sequence-number": 1,
-                "timestamp-ms": 1700000000000,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-4001.avro"),
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            },
-            {
-                "snapshot-id": 4002,
-                "sequence-number": 2,
-                "timestamp-ms": 1700000000001,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-4002.avro"),
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            },
-        ],
-    }
     iceberg_commit(base, lambda _v, _prev: md)
 
 

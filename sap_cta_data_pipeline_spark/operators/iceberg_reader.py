@@ -42,6 +42,26 @@ slot rebuilds on the fresh tip; a READ-DEPENDENT commit, planned
 against version ``read_v``, aborts with ``IcebergCommitConflict`` once
 the tip has moved. ``version-hint.text`` is written after every
 successful commit.
+
+Snapshots: every Iceberg writer and fixture builder in this package
+builds what it commits through five helpers here, over one manifest
+schema:
+
+- ``_new_table(base, fields, *, uuid, partition_fields=(),
+  format_version=2, **extra)`` — the metadata of an empty table;
+- ``_entry(base, rel, content, n_rows, **data_file)`` — one manifest
+  entry; ``_entry_schema(md, spec_id=None)`` is the one manifest-entry
+  schema (the v2/v3 superset, partition record from the table's spec);
+- ``_manifest(base, md, rel, entries, content, snap_id, seq)`` — writes
+  ``metadata/<rel>`` and returns its manifest-list record;
+- ``_manifests(base, md, snapshot_id=None)`` — a snapshot's manifest
+  list (default: the current one);
+- ``_snapshot(base, md, manifests, operation, *, snap_id, seq, ts,
+  **fields)`` — writes ``snap-<id>.avro`` and returns ``md`` with the
+  new snapshot current, recording its ``parent-snapshot-id`` and
+  ``schema-id``.
+
+The result goes to ``commit``.
 """
 
 from __future__ import annotations
@@ -73,7 +93,7 @@ def _load_metadata(base: str) -> dict:
     with open(os.path.join(base, "metadata", f"v{n}.metadata.json")) as fh:
         meta = json.load(fh)
     fv = meta.get("format-version")
-    # v3 accepted since round 9: its row-level-delete feature (deletion
+    # v3 is accepted: its row-level-delete feature (deletion
     # vectors in Puffin files) is implemented end to end; other v3-only
     # features surface as loud per-entry refusals, not silent misreads.
     if fv not in (1, 2, 3):
@@ -158,7 +178,7 @@ def iceberg_state(
     applies only to data files with a STRICTLY SMALLER sequence number;
     a position delete applies only to data files with sequence number
     ``<=`` the delete's (a file added LATER at a reused/rewritten path
-    must not lose rows — round-8 ADVICE fix).
+    must not lose rows).
     """
     meta = _load_metadata(base)
     snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
@@ -240,7 +260,7 @@ def iceberg_state(
             if content == 0:
                 # the entry's partition record rides along so DML
                 # rewrites can re-emit it (a CoW rewrite keeps every
-                # row in its file's partition — batch GS)
+                # row in its file's partition)
                 data_files.append(
                     {"path": path, "seq": seq, "partition": part_rec}
                 )
@@ -343,7 +363,7 @@ def iceberg_snapshot(
     # group data files by the SET of delete groups that apply under the
     # spec's sequence gates — position deletes apply to files with
     # file.seq <= delete.seq (a file added later at a reused/rewritten
-    # path must not lose rows — round-8 ADVICE fix), equality deletes to
+    # path must not lose rows), equality deletes to
     # files with file.seq STRICTLY < delete.seq. One plan branch per
     # signature; group count is bounded by distinct delete sequences,
     # metadata-sized.
@@ -372,100 +392,11 @@ def iceberg_snapshot(
 
 # ---------------------------------------------------------------- fixture
 
-_MANIFEST_ENTRY_SCHEMA = {
-    "type": "record",
-    "name": "manifest_entry",
-    "fields": [
-        {"name": "status", "type": "int", "field-id": 0},
-        {
-            "name": "snapshot_id",
-            "type": ["null", "long"],
-            "default": None,
-            "field-id": 1,
-        },
-        {
-            "name": "data_file",
-            "field-id": 2,
-            "type": {
-                "type": "record",
-                "name": "r2",
-                "fields": [
-                    {"name": "content", "type": "int", "field-id": 134},
-                    {"name": "file_path", "type": "string", "field-id": 100},
-                    {"name": "file_format", "type": "string", "field-id": 101},
-                    {
-                        "name": "partition",
-                        "field-id": 102,
-                        "type": {"type": "record", "name": "r102", "fields": []},
-                    },
-                    {"name": "record_count", "type": "long", "field-id": 103},
-                    {
-                        "name": "file_size_in_bytes",
-                        "type": "long",
-                        "field-id": 104,
-                    },
-                ],
-            },
-        },
-    ],
-}
-
-_MANIFEST_FILE_SCHEMA = {
-    "type": "record",
-    "name": "manifest_file",
-    "fields": [
-        {"name": "manifest_path", "type": "string", "field-id": 500},
-        {"name": "manifest_length", "type": "long", "field-id": 501},
-        {"name": "partition_spec_id", "type": "int", "field-id": 502},
-        {"name": "content", "type": "int", "field-id": 517},
-        {"name": "sequence_number", "type": "long", "field-id": 515},
-        {"name": "min_sequence_number", "type": "long", "field-id": 516},
-        {"name": "added_snapshot_id", "type": "long", "field-id": 503},
-    ],
-}
-
 _NATION_ICEBERG_FIELDS = [
     {"id": 1, "name": "n_nationkey", "required": False, "type": "int"},
     {"id": 2, "name": "n_name", "required": False, "type": "string"},
     {"id": 3, "name": "n_regionkey", "required": False, "type": "int"},
 ]
-
-
-def _write_manifest(base: str, rel: str, entries: list[dict]) -> dict:
-    path = os.path.join(base, "metadata", rel)
-    write_container(path, _MANIFEST_ENTRY_SCHEMA, entries)
-    return path
-
-
-def _manifest_file_rec(
-    base: str, rel: str, content: int, snap_id: int, seq: int
-) -> dict:
-    path = os.path.join(base, "metadata", rel)
-    return {
-        "manifest_path": "file://" + path,
-        "manifest_length": os.path.getsize(path),
-        "partition_spec_id": 0,
-        "content": content,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snap_id,
-    }
-
-
-def _entry(base: str, rel: str, content: int, n_rows: int, status: int = 1) -> dict:
-    path = os.path.join(base, "data", rel)
-    return {
-        "status": status,
-        "snapshot_id": None,
-        "data_file": {
-            "content": content,
-            "file_path": "file://" + path,
-            "file_format": "PARQUET",
-            "partition": {},
-            "record_count": n_rows,
-            "file_size_in_bytes": os.path.getsize(path),
-        },
-    }
 
 
 def _build_iceberg_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
@@ -507,76 +438,33 @@ def _build_iceberg_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
     del_path = os.path.join(base, "data", "delete-0.parquet")
     _write_parquet_file(del_schema, del_rows, del_path)
 
-    _write_manifest(
+    md = _new_table(
+        base, _NATION_ICEBERG_FIELDS, uuid="0f1e2d3c-0000-4000-8000-000000001234"
+    )
+    data = _manifest(
         base,
+        md,
         "m1-data.avro",
         [
             _entry(base, "part-lo.parquet", 0, len(lo)),
             _entry(base, "part-hi.parquet", 0, len(hi)),
         ],
+        0,
+        1001,
+        1,
     )
-    _write_manifest(
-        base, "m2-deletes.avro", [_entry(base, "delete-0.parquet", 1, 5)]
+    md = _snapshot(
+        base, md, [data], "append", snap_id=1001, seq=1, ts=1700000000000
     )
-    write_container(
-        os.path.join(base, "metadata", "snap-1001.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [_manifest_file_rec(base, "m1-data.avro", 0, 1001, 1)],
+    commit(base, lambda _v, _prev: md)
+    dels = _manifest(
+        base, md, "m2-deletes.avro", [_entry(base, "delete-0.parquet", 1, 5)],
+        1, 1002, 2,
     )
-    write_container(
-        os.path.join(base, "metadata", "snap-1002.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [
-            _manifest_file_rec(base, "m1-data.avro", 0, 1001, 1),
-            _manifest_file_rec(base, "m2-deletes.avro", 1, 1002, 2),
-        ],
+    md = _snapshot(
+        base, md, [data, dels], "delete", snap_id=1002, seq=2, ts=1700000001000
     )
-
-    snaps = [
-        {
-            "snapshot-id": 1001,
-            "sequence-number": 1,
-            "timestamp-ms": 1700000000000,
-            "manifest-list": "file://"
-            + os.path.join(base, "metadata", "snap-1001.avro"),
-            "summary": {"operation": "append"},
-            "schema-id": 0,
-        },
-        {
-            "snapshot-id": 1002,
-            "sequence-number": 2,
-            "timestamp-ms": 1700000001000,
-            "manifest-list": "file://"
-            + os.path.join(base, "metadata", "snap-1002.avro"),
-            "summary": {"operation": "delete"},
-            "schema-id": 0,
-        },
-    ]
-    common = {
-        "format-version": 2,
-        "table-uuid": "0f1e2d3c-0000-4000-8000-000000001234",
-        "location": "file://" + base,
-        "last-sequence-number": 2,
-        "last-updated-ms": 1700000001000,
-        "last-column-id": 3,
-        "current-schema-id": 0,
-        "schemas": [
-            {
-                "type": "struct",
-                "schema-id": 0,
-                "fields": _NATION_ICEBERG_FIELDS,
-            }
-        ],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "last-partition-id": 999,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {},
-    }
-    for cur, keep in [(1001, snaps[:1]), (1002, snaps)]:
-        md = {**common, "current-snapshot-id": cur, "snapshots": keep}
-        commit(base, lambda _v, _prev: md)
+    commit(base, lambda _v, _prev: md)
 
 
 # ---------------------------------------------------------------- queries
@@ -623,56 +511,6 @@ def scan_iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MANIFEST_ENTRY_PART_SCHEMA = {
-    "type": "record",
-    "name": "manifest_entry",
-    "fields": [
-        {"name": "status", "type": "int", "field-id": 0},
-        {
-            "name": "snapshot_id",
-            "type": ["null", "long"],
-            "default": None,
-            "field-id": 1,
-        },
-        {
-            "name": "data_file",
-            "field-id": 2,
-            "type": {
-                "type": "record",
-                "name": "r2",
-                "fields": [
-                    {"name": "content", "type": "int", "field-id": 134},
-                    {"name": "file_path", "type": "string", "field-id": 100},
-                    {"name": "file_format", "type": "string", "field-id": 101},
-                    {
-                        "name": "partition",
-                        "field-id": 102,
-                        "type": {
-                            "type": "record",
-                            "name": "r102",
-                            "fields": [
-                                {
-                                    "name": "n_regionkey",
-                                    "type": ["null", "int"],
-                                    "default": None,
-                                    "field-id": 1000,
-                                }
-                            ],
-                        },
-                    },
-                    {"name": "record_count", "type": "long", "field-id": 103},
-                    {
-                        "name": "file_size_in_bytes",
-                        "type": "long",
-                        "field-id": 104,
-                    },
-                ],
-            },
-        },
-    ],
-}
-
-
 def _build_iceberg_part_fixture(
     spark: SparkSession, sf_dir: str, base: str
 ) -> None:
@@ -684,66 +522,31 @@ def _build_iceberg_part_fixture(
 
     tbl = pq.read_table(table_path(sf_dir, "nation"))
     pdf = tbl.to_pandas().sort_values("n_nationkey").reset_index(drop=True)
+    md = _new_table(
+        base,
+        _NATION_ICEBERG_FIELDS,
+        uuid="0f1e2d3c-0000-4000-8000-000000005678",
+        partition_fields=[
+            {
+                "name": "n_regionkey",
+                "transform": "identity",
+                "source-id": 3,
+                "field-id": 1000,
+            }
+        ],
+    )
     entries = []
     for rk in sorted(pdf.n_regionkey.unique()):
         rel = f"rk={int(rk)}.parquet"
         sub = pdf[pdf.n_regionkey == rk]
         _write_parquet_file(tbl.schema, sub, os.path.join(base, "data", rel))
-        e = _entry(base, rel, 0, len(sub))
-        e["data_file"]["partition"] = {"n_regionkey": int(rk)}
-        entries.append(e)
-    write_container(
-        os.path.join(base, "metadata", "m1-data.avro"),
-        _MANIFEST_ENTRY_PART_SCHEMA,
-        entries,
+        entries.append(
+            _entry(base, rel, 0, len(sub), partition={"n_regionkey": int(rk)})
+        )
+    m = _manifest(base, md, "m1-data.avro", entries, 0, 2001, 1)
+    md = _snapshot(
+        base, md, [m], "append", snap_id=2001, seq=1, ts=1700000000000
     )
-    write_container(
-        os.path.join(base, "metadata", "snap-2001.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [_manifest_file_rec(base, "m1-data.avro", 0, 2001, 1)],
-    )
-    md = {
-        "format-version": 2,
-        "table-uuid": "0f1e2d3c-0000-4000-8000-000000005678",
-        "location": "file://" + base,
-        "last-sequence-number": 1,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": 3,
-        "current-schema-id": 0,
-        "schemas": [
-            {"type": "struct", "schema-id": 0, "fields": _NATION_ICEBERG_FIELDS}
-        ],
-        "default-spec-id": 0,
-        "partition-specs": [
-            {
-                "spec-id": 0,
-                "fields": [
-                    {
-                        "name": "n_regionkey",
-                        "transform": "identity",
-                        "source-id": 3,
-                        "field-id": 1000,
-                    }
-                ],
-            }
-        ],
-        "last-partition-id": 1000,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {},
-        "current-snapshot-id": 2001,
-        "snapshots": [
-            {
-                "snapshot-id": 2001,
-                "sequence-number": 1,
-                "timestamp-ms": 1700000000000,
-                "manifest-list": "file://"
-                + os.path.join(base, "metadata", "snap-2001.avro"),
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            }
-        ],
-    }
     commit(base, lambda _v, _prev: md)
 
 
@@ -776,67 +579,6 @@ def scan_iceberg_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     return iceberg_snapshot(
         spark, base, partition_filter={"n_regionkey": 2}
     ).select("n_nationkey", "n_name", "n_regionkey")
-
-
-_MANIFEST_ENTRY_EQ_SCHEMA = {
-    "type": "record",
-    "name": "manifest_entry",
-    "fields": [
-        {"name": "status", "type": "int", "field-id": 0},
-        {
-            "name": "snapshot_id",
-            "type": ["null", "long"],
-            "default": None,
-            "field-id": 1,
-        },
-        {
-            "name": "sequence_number",
-            "type": ["null", "long"],
-            "default": None,
-            "field-id": 3,
-        },
-        {
-            "name": "data_file",
-            "field-id": 2,
-            "type": {
-                "type": "record",
-                "name": "r2",
-                "fields": [
-                    {"name": "content", "type": "int", "field-id": 134},
-                    {"name": "file_path", "type": "string", "field-id": 100},
-                    {"name": "file_format", "type": "string", "field-id": 101},
-                    {
-                        "name": "partition",
-                        "field-id": 102,
-                        "type": {"type": "record", "name": "r102", "fields": []},
-                    },
-                    {"name": "record_count", "type": "long", "field-id": 103},
-                    {
-                        "name": "file_size_in_bytes",
-                        "type": "long",
-                        "field-id": 104,
-                    },
-                    {
-                        "name": "equality_ids",
-                        "type": ["null", {"type": "array", "items": "int"}],
-                        "default": None,
-                        "field-id": 135,
-                    },
-                ],
-            },
-        },
-    ],
-}
-
-
-def _eq_entry(
-    base: str, rel: str, content: int, n_rows: int, seq: int,
-    equality_ids: list[int] | None = None,
-) -> dict:
-    e = _entry(base, rel, content, n_rows)
-    e["sequence_number"] = seq
-    e["data_file"]["equality_ids"] = equality_ids
-    return e
 
 
 def _build_iceberg_eq_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
@@ -872,59 +614,34 @@ def _build_iceberg_eq_fixture(spark: SparkSession, sf_dir: str, base: str) -> No
         pd.DataFrame({"n_name": ["NATION_8", "NATION_20"]}),
         os.path.join(base, "data", "del-eq.parquet"),
     )
-    entries = [
-        _eq_entry(base, "part-lo.parquet", 0, len(lo), 1),
-        _eq_entry(base, "part-hi.parquet", 0, len(hi), 1),
-        _eq_entry(base, "part-new.parquet", 0, 1, 4),
-    ]
-    write_container(
-        os.path.join(base, "metadata", "m1-data.avro"),
-        _MANIFEST_ENTRY_EQ_SCHEMA,
-        entries,
+    md = _new_table(
+        base, _NATION_ICEBERG_FIELDS, uuid="0f1e2d3c-0000-4000-8000-00000000abcd"
     )
-    write_container(
-        os.path.join(base, "metadata", "m2-eqdel.avro"),
-        _MANIFEST_ENTRY_EQ_SCHEMA,
-        [_eq_entry(base, "del-eq.parquet", 2, 2, 3, equality_ids=[2])],
-    )
-    write_container(
-        os.path.join(base, "metadata", "snap-3001.avro"),
-        _MANIFEST_FILE_SCHEMA,
+    data = _manifest(
+        base,
+        md,
+        "m1-data.avro",
         [
-            _manifest_file_rec(base, "m1-data.avro", 0, 3001, 1),
-            _manifest_file_rec(base, "m2-eqdel.avro", 1, 3001, 3),
+            _entry(base, "part-lo.parquet", 0, len(lo), seq=1),
+            _entry(base, "part-hi.parquet", 0, len(hi), seq=1),
+            _entry(base, "part-new.parquet", 0, 1, seq=4),
         ],
+        0,
+        3001,
+        1,
     )
-    md = {
-        "format-version": 2,
-        "table-uuid": "0f1e2d3c-0000-4000-8000-00000000abcd",
-        "location": "file://" + base,
-        "last-sequence-number": 4,
-        "last-updated-ms": 1700000002000,
-        "last-column-id": 3,
-        "current-schema-id": 0,
-        "schemas": [
-            {"type": "struct", "schema-id": 0, "fields": _NATION_ICEBERG_FIELDS}
-        ],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "last-partition-id": 999,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {},
-        "current-snapshot-id": 3001,
-        "snapshots": [
-            {
-                "snapshot-id": 3001,
-                "sequence-number": 4,
-                "timestamp-ms": 1700000002000,
-                "manifest-list": "file://"
-                + os.path.join(base, "metadata", "snap-3001.avro"),
-                "summary": {"operation": "overwrite"},
-                "schema-id": 0,
-            }
-        ],
-    }
+    dels = _manifest(
+        base,
+        md,
+        "m2-eqdel.avro",
+        [_entry(base, "del-eq.parquet", 2, 2, seq=3, equality_ids=[2])],
+        1,
+        3001,
+        3,
+    )
+    md = _snapshot(
+        base, md, [data, dels], "overwrite", snap_id=3001, seq=4, ts=1700000002000
+    )
     commit(base, lambda _v, _prev: md)
 
 
@@ -1074,6 +791,282 @@ def commit(base: str, build, read_v: int | None = None) -> int:
     )
 
 
+# ------------------------------------------------------- snapshot writer
+
+_AVRO_OF_ICEBERG = {
+    "boolean": "boolean",
+    "int": "int",
+    "long": "long",
+    "float": "float",
+    "double": "double",
+    "string": "string",
+    "date": "int",  # days since epoch, per the spec's avro mapping
+}
+
+
+def _opt(name: str, avro_type, field_id: int) -> dict:
+    """An optional Avro field: nullable, null by default."""
+    return {
+        "name": name,
+        "type": ["null", avro_type],
+        "default": None,
+        "field-id": field_id,
+    }
+
+
+def _bounds(key_id: int) -> dict:
+    """A column-bounds map in the spec's k/v array form: (field id,
+    single-value-serialized bytes) records."""
+    return {
+        "type": "array",
+        "items": {
+            "type": "record",
+            "name": f"k{key_id}_v{key_id + 1}",
+            "fields": [
+                {"name": "key", "type": "int", "field-id": key_id},
+                {"name": "value", "type": "bytes", "field-id": key_id + 1},
+            ],
+        },
+    }
+
+
+def _entry_schema(md: dict, spec_id: int | None = None) -> dict:
+    """The one manifest-entry Avro schema, the v2/v3 superset: every
+    optional entry and data-file field is nullable with a null default,
+    so an entry sets only the fields it has. The partition record holds
+    one nullable field per field of partition spec ``spec_id`` (default:
+    the table's default spec), typed as the transform's result over its
+    source column."""
+    from ..functions.transforms import result_iceberg_type
+
+    sid = md.get("default-spec-id", 0) if spec_id is None else spec_id
+    spec = next(
+        (s for s in md.get("partition-specs", []) if s["spec-id"] == sid),
+        {"fields": []},
+    )
+    part = []
+    if spec["fields"]:
+        type_of = {f["id"]: f["type"] for f in _current_schema(md)}
+        for pf in spec["fields"]:
+            src_t = type_of[pf["source-id"]]
+            t = result_iceberg_type(pf.get("transform", "identity"), src_t)
+            if not isinstance(t, str) or t not in _AVRO_OF_ICEBERG:
+                raise ValueError(
+                    f"partition field {pf['name']!r} ({pf.get('transform')} "
+                    f"over type {src_t!r}) has no claimed Avro manifest mapping"
+                )
+            part.append(_opt(pf["name"], _AVRO_OF_ICEBERG[t], pf["field-id"]))
+    data_file = {
+        "type": "record",
+        "name": "r2",
+        "fields": [
+            {"name": "content", "type": "int", "field-id": 134},
+            {"name": "file_path", "type": "string", "field-id": 100},
+            {"name": "file_format", "type": "string", "field-id": 101},
+            {
+                "name": "partition",
+                "field-id": 102,
+                "type": {"type": "record", "name": "r102", "fields": part},
+            },
+            {"name": "record_count", "type": "long", "field-id": 103},
+            {"name": "file_size_in_bytes", "type": "long", "field-id": 104},
+            _opt("lower_bounds", _bounds(126), 125),
+            _opt("upper_bounds", _bounds(129), 128),
+            _opt("equality_ids", {"type": "array", "items": "int"}, 135),
+            # v3: null = inherit from the manifest's first_row_id
+            _opt("first_row_id", "long", 142),
+            # v3 deletion vectors: the blob's data file and Puffin range
+            _opt("referenced_data_file", "string", 143),
+            _opt("content_offset", "long", 144),
+            _opt("content_size_in_bytes", "long", 145),
+        ],
+    }
+    return {
+        "type": "record",
+        "name": "manifest_entry",
+        "fields": [
+            {"name": "status", "type": "int", "field-id": 0},
+            _opt("snapshot_id", "long", 1),
+            # null = inherit the manifest's sequence number
+            _opt("sequence_number", "long", 3),
+            {"name": "data_file", "field-id": 2, "type": data_file},
+        ],
+    }
+
+
+_MANIFEST_FILE_SCHEMA = {
+    "type": "record",
+    "name": "manifest_file",
+    "fields": [
+        {"name": "manifest_path", "type": "string", "field-id": 500},
+        {"name": "manifest_length", "type": "long", "field-id": 501},
+        {"name": "partition_spec_id", "type": "int", "field-id": 502},
+        {"name": "content", "type": "int", "field-id": 517},
+        {"name": "sequence_number", "type": "long", "field-id": 515},
+        {"name": "min_sequence_number", "type": "long", "field-id": 516},
+        {"name": "added_snapshot_id", "type": "long", "field-id": 503},
+        # v3: first row id of this manifest's null-lineage entries
+        _opt("first_row_id", "long", 520),
+    ],
+}
+
+
+def _entry(
+    base: str,
+    rel: str,
+    content: int,
+    n_rows: int,
+    *,
+    status: int = 1,
+    seq: int | None = None,
+    **data_file,
+) -> dict:
+    """Manifest entry for the file ``data/<rel>`` (an absolute ``rel``
+    names a file outside the table). ``content`` 0/1/2 = data /
+    position deletes / equality deletes; ``status`` 1/0/2 = added /
+    existing / deleted; ``seq`` None inherits the manifest's sequence
+    number. ``data_file`` sets optional data-file fields (``partition``,
+    bounds, ``equality_ids``, ``first_row_id``, DV addressing)."""
+    path = os.path.join(base, "data", rel)
+    return {
+        "status": status,
+        "snapshot_id": None,
+        "sequence_number": seq,
+        "data_file": {
+            "content": content,
+            "file_path": "file://" + path,
+            "file_format": "PARQUET",
+            "partition": {},
+            "record_count": n_rows,
+            "file_size_in_bytes": os.path.getsize(path),
+            **data_file,
+        },
+    }
+
+
+def _manifest(
+    base: str,
+    md: dict,
+    rel: str,
+    entries: list[dict],
+    content: int,
+    snap_id: int,
+    seq: int,
+    spec_id: int | None = None,
+) -> dict:
+    """Write the manifest ``metadata/<rel>`` of ``entries`` under
+    ``_entry_schema(md, spec_id)``; returns its manifest-list record
+    (``content`` 0 = data, 1 = deletes; added by ``snap_id`` at
+    sequence ``seq``)."""
+    path = os.path.join(base, "metadata", rel)
+    write_container(path, _entry_schema(md, spec_id), entries)
+    return {
+        "manifest_path": "file://" + path,
+        "manifest_length": os.path.getsize(path),
+        "partition_spec_id": (
+            md.get("default-spec-id", 0) if spec_id is None else spec_id
+        ),
+        "content": content,
+        "sequence_number": seq,
+        "min_sequence_number": seq,
+        "added_snapshot_id": snap_id,
+    }
+
+
+def _manifests(base: str, md: dict, snapshot_id: int | None = None) -> list[dict]:
+    """The manifest list of snapshot ``snapshot_id`` (default: the
+    current snapshot; empty for a table without one)."""
+    sid = md.get("current-snapshot-id") if snapshot_id is None else snapshot_id
+    if sid is None:
+        return []
+    snap = next(s for s in md["snapshots"] if s["snapshot-id"] == sid)
+    return read_container(_resolve_path(base, snap["manifest-list"]))[1]
+
+
+def _next_ids(md: dict) -> tuple[int, int]:
+    """(sequence number, snapshot id) of the table's next snapshot."""
+    seq = md.get("last-sequence-number", 0) + 1
+    return seq, 1000 + seq
+
+
+def _snapshot(
+    base: str,
+    md: dict,
+    manifests: list[dict],
+    operation: str,
+    *,
+    snap_id: int | None = None,
+    seq: int | None = None,
+    ts: int | None = None,
+    **fields,
+) -> dict:
+    """Write the manifest list ``metadata/snap-<id>.avro`` of
+    ``manifests`` and return a copy of ``md`` with the new snapshot
+    current. Defaults: ``seq`` = last sequence number + 1, ``snap_id`` =
+    1000 + seq, ``ts`` = 1700000000000 + seq. The snapshot records its
+    ``parent-snapshot-id`` (the current snapshot, when there is one) and
+    the ``schema-id`` it was written with (``current-schema-id``);
+    ``fields`` override any snapshot field."""
+    if seq is None:
+        seq = _next_ids(md)[0]
+    snap_id = 1000 + seq if snap_id is None else snap_id
+    ts = 1700000000000 + seq if ts is None else ts
+    ml = os.path.join(base, "metadata", f"snap-{snap_id}.avro")
+    write_container(ml, _MANIFEST_FILE_SCHEMA, manifests)
+    snap = {
+        "snapshot-id": snap_id,
+        "sequence-number": seq,
+        "timestamp-ms": ts,
+        "manifest-list": "file://" + ml,
+        "summary": {"operation": operation},
+        "schema-id": md.get("current-schema-id", 0),
+    }
+    if md.get("current-snapshot-id") is not None:
+        snap["parent-snapshot-id"] = md["current-snapshot-id"]
+    snap.update(fields)
+    return {
+        **md,
+        "last-sequence-number": seq,
+        "last-updated-ms": ts,
+        "current-snapshot-id": snap_id,
+        "snapshots": list(md.get("snapshots", [])) + [snap],
+    }
+
+
+def _new_table(
+    base: str,
+    fields: list[dict],
+    *,
+    uuid: str,
+    partition_fields=(),
+    format_version: int = 2,
+    **extra,
+) -> dict:
+    """Metadata of an empty table at ``base``: schema 0 of ``fields``,
+    partition spec 0 of ``partition_fields``, no snapshot yet. ``extra``
+    sets or overrides any top-level field."""
+    return {
+        "format-version": format_version,
+        "table-uuid": uuid,
+        "location": "file://" + base,
+        "last-sequence-number": 0,
+        "last-updated-ms": 1700000000000,
+        "last-column-id": max((f["id"] for f in fields), default=0),
+        "current-schema-id": 0,
+        "schemas": [{"type": "struct", "schema-id": 0, "fields": list(fields)}],
+        "default-spec-id": 0,
+        "partition-specs": [{"spec-id": 0, "fields": list(partition_fields)}],
+        "last-partition-id": max(
+            (f["field-id"] for f in partition_fields), default=999
+        ),
+        "default-sort-order-id": 0,
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "properties": {},
+        "snapshots": [],
+        **extra,
+    }
+
+
 def iceberg_append(
     spark: SparkSession, base: str, df: DataFrame, file_name: str
 ) -> int:
@@ -1087,8 +1080,6 @@ def iceberg_append(
     version-hint.text is advisory (last-writer-wins) per the spec —
     readers that miss the newest hint still read a CONSISTENT older
     snapshot."""
-    meta_dir = os.path.join(base, "metadata")
-
     # stage the data file (single parquet FILE, like the Delta writer)
     from .lakehouse_interop import _stage_single_parquet
 
@@ -1098,65 +1089,17 @@ def iceberg_append(
     n_rows = df.count()
 
     def build(_cur_v: int, prev: dict | None) -> dict:
-        seq = (prev or {}).get("last-sequence-number", 0) + 1
-        snap_id = 1000 + seq
-        mrel = f"m-{snap_id}.avro"
-        write_container(
-            os.path.join(meta_dir, mrel),
-            _MANIFEST_ENTRY_EQ_SCHEMA,
-            [_eq_entry(base, file_name, 0, n_rows, seq)],
+        md = prev or _new_table(
+            base,
+            _iceberg_fields_of(df.schema),
+            uuid="0f1e2d3c-0000-4000-8000-00000000ffff",
         )
-        prev_manifests: list[dict] = []
-        if prev is not None and prev.get("current-snapshot-id") is not None:
-            snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
-            _, prev_manifests = read_container(
-                _resolve_path(base, snaps[prev["current-snapshot-id"]]["manifest-list"])
-            )
-        mlrel = f"snap-{snap_id}.avro"
-        write_container(
-            os.path.join(meta_dir, mlrel),
-            _MANIFEST_FILE_SCHEMA,
-            prev_manifests
-            + [_manifest_file_rec(base, mrel, 0, snap_id, seq)],
+        seq, snap_id = _next_ids(md)
+        m = _manifest(
+            base, md, f"m-{snap_id}.avro",
+            [_entry(base, file_name, 0, n_rows, seq=seq)], 0, snap_id, seq,
         )
-        snap = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": 1700000000000 + seq,
-            "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-            "summary": {"operation": "append"},
-            "schema-id": 0,
-        }
-        if prev is None:
-            md = {
-                "format-version": 2,
-                "table-uuid": "0f1e2d3c-0000-4000-8000-00000000ffff",
-                "location": "file://" + base,
-                "last-updated-ms": snap["timestamp-ms"],
-                "last-column-id": len(df.schema.fields),
-                "current-schema-id": 0,
-                "schemas": [
-                    {
-                        "type": "struct",
-                        "schema-id": 0,
-                        "fields": _iceberg_fields_of(df.schema),
-                    }
-                ],
-                "default-spec-id": 0,
-                "partition-specs": [{"spec-id": 0, "fields": []}],
-                "last-partition-id": 999,
-                "default-sort-order-id": 0,
-                "sort-orders": [{"order-id": 0, "fields": []}],
-                "properties": {},
-                "snapshots": [],
-            }
-        else:
-            md = dict(prev)
-        md["last-sequence-number"] = seq
-        md["last-updated-ms"] = snap["timestamp-ms"]
-        md["current-snapshot-id"] = snap_id
-        md["snapshots"] = list(md.get("snapshots", [])) + [snap]
-        return md
+        return _snapshot(base, md, _manifests(base, md) + [m], "append")
 
     return commit(base, build)
 
@@ -1174,8 +1117,7 @@ def sink_iceberg_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     result back through this module's own snapshot reader. The identity
     oracle certifies writer ∘ reader = identity over the REAL wire
     format; snapshot addressing to the first commit is pinned in tests,
-    as is the conflict-retry path. Makes the Iceberg lane two-sided the
-    way round 6 made Delta two-sided."""
+    as is the conflict-retry path."""
     from ..catalog import load_table
 
     def build(base: str) -> None:
@@ -1323,72 +1265,31 @@ def _build_iceberg_evo_fixture(spark: SparkSession, sf_dir: str, base: str) -> N
     )
     _write_parquet_file(schema2, lo, os.path.join(base, "data", "old.parquet"))
     _write_parquet_file(tbl.schema, hi, os.path.join(base, "data", "new.parquet"))
-    write_container(
-        os.path.join(base, "metadata", "m1.avro"),
-        _MANIFEST_ENTRY_SCHEMA,
-        [_entry(base, "old.parquet", 0, len(lo))],
+    md = _new_table(
+        base,
+        _NATION_ICEBERG_FIELDS[:2],
+        uuid="0f1e2d3c-0000-4000-8000-00000000e01e",
     )
-    write_container(
-        os.path.join(base, "metadata", "m2.avro"),
-        _MANIFEST_ENTRY_SCHEMA,
-        [_entry(base, "new.parquet", 0, len(hi))],
+    m1 = _manifest(
+        base, md, "m1.avro", [_entry(base, "old.parquet", 0, len(lo))], 0, 4001, 1
     )
-    write_container(
-        os.path.join(base, "metadata", "snap-4001.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [_manifest_file_rec(base, "m1.avro", 0, 4001, 1)],
+    md = _snapshot(
+        base, md, [m1], "append", snap_id=4001, seq=1, ts=1700000000000
     )
-    write_container(
-        os.path.join(base, "metadata", "snap-4002.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [
-            _manifest_file_rec(base, "m1.avro", 0, 4001, 1),
-            _manifest_file_rec(base, "m2.avro", 0, 4002, 2),
-        ],
-    )
-    schema0 = {
-        "type": "struct",
-        "schema-id": 0,
-        "fields": _NATION_ICEBERG_FIELDS[:2],
-    }
-    schema1 = {"type": "struct", "schema-id": 1, "fields": _NATION_ICEBERG_FIELDS}
+    # ADD COLUMN: a new schema entry; no data file is rewritten
     md = {
-        "format-version": 2,
-        "table-uuid": "0f1e2d3c-0000-4000-8000-00000000e01e",
-        "location": "file://" + base,
-        "last-sequence-number": 2,
-        "last-updated-ms": 1700000001000,
+        **md,
         "last-column-id": 3,
         "current-schema-id": 1,
-        "schemas": [schema0, schema1],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "last-partition-id": 999,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {},
-        "current-snapshot-id": 4002,
-        "snapshots": [
-            {
-                "snapshot-id": 4001,
-                "sequence-number": 1,
-                "timestamp-ms": 1700000000000,
-                "manifest-list": "file://"
-                + os.path.join(base, "metadata", "snap-4001.avro"),
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            },
-            {
-                "snapshot-id": 4002,
-                "sequence-number": 2,
-                "timestamp-ms": 1700000001000,
-                "manifest-list": "file://"
-                + os.path.join(base, "metadata", "snap-4002.avro"),
-                "summary": {"operation": "append"},
-                "schema-id": 1,
-            },
-        ],
+        "schemas": md["schemas"]
+        + [{"type": "struct", "schema-id": 1, "fields": _NATION_ICEBERG_FIELDS}],
     }
+    m2 = _manifest(
+        base, md, "m2.avro", [_entry(base, "new.parquet", 0, len(hi))], 0, 4002, 2
+    )
+    md = _snapshot(
+        base, md, [m1, m2], "append", snap_id=4002, seq=2, ts=1700000001000
+    )
     commit(base, lambda _v, _prev: md)
 
 
@@ -1542,8 +1443,7 @@ def iceberg_delete_where(spark: SparkSession, base: str, predicate: str) -> int:
     Driver-side work is bounded by THIS delete's matched rows (the data
     a position-delete writer must materialize to write the file) plus
     metadata. Returns the committed metadata version."""
-    meta_dir = os.path.join(base, "metadata")
-    read_v, prev = _tip(meta_dir)
+    read_v, prev = _tip(os.path.join(base, "metadata"))
     schema, data_entries, pos_deletes, _eq = iceberg_state(
         base, snapshot_id=prev["current-snapshot-id"]
     )
@@ -1587,8 +1487,7 @@ def iceberg_delete_where(spark: SparkSession, base: str, predicate: str) -> int:
     import pandas as pd
     import pyarrow as pa
 
-    seq = prev.get("last-sequence-number", 0) + 1
-    snap_id = 1000 + seq
+    seq, snap_id = _next_ids(prev)
     del_rel = f"del-pos-{seq}.parquet"
     del_pdf = pd.DataFrame(
         {
@@ -1600,35 +1499,11 @@ def iceberg_delete_where(spark: SparkSession, base: str, predicate: str) -> int:
         [pa.field("file_path", pa.string()), pa.field("pos", pa.int64())]
     )
     _write_parquet_file(del_schema, del_pdf, os.path.join(base, "data", del_rel))
-    mrel = f"m-del-{snap_id}.avro"
-    write_container(
-        os.path.join(meta_dir, mrel),
-        _MANIFEST_ENTRY_EQ_SCHEMA,
-        [_eq_entry(base, del_rel, 1, len(new), seq)],
+    m = _manifest(
+        base, prev, f"m-del-{snap_id}.avro",
+        [_entry(base, del_rel, 1, len(new), seq=seq)], 1, snap_id, seq,
     )
-    snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
-    _, prev_manifests = read_container(
-        _resolve_path(base, snaps[prev["current-snapshot-id"]]["manifest-list"])
-    )
-    mlrel = f"snap-{snap_id}.avro"
-    write_container(
-        os.path.join(meta_dir, mlrel),
-        _MANIFEST_FILE_SCHEMA,
-        prev_manifests + [_manifest_file_rec(base, mrel, 1, snap_id, seq)],
-    )
-    md = dict(prev)
-    snap = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": 1700000000000 + seq,
-        "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-        "summary": {"operation": "delete"},
-        "schema-id": 0,
-    }
-    md["last-sequence-number"] = seq
-    md["last-updated-ms"] = snap["timestamp-ms"]
-    md["current-snapshot-id"] = snap_id
-    md["snapshots"] = list(md.get("snapshots", [])) + [snap]
+    md = _snapshot(base, prev, _manifests(base, prev) + [m], "delete")
     return commit(base, lambda _v, _prev: md, read_v)
 
 
@@ -1665,70 +1540,6 @@ def sink_iceberg_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------- v3 deletion vectors (Puffin)
 
-_MANIFEST_ENTRY_DV_SCHEMA = {
-    "type": "record",
-    "name": "manifest_entry",
-    "fields": [
-        {"name": "status", "type": "int", "field-id": 0},
-        {
-            "name": "snapshot_id",
-            "type": ["null", "long"],
-            "default": None,
-            "field-id": 1,
-        },
-        {
-            "name": "sequence_number",
-            "type": ["null", "long"],
-            "default": None,
-            "field-id": 3,
-        },
-        {
-            "name": "data_file",
-            "field-id": 2,
-            "type": {
-                "type": "record",
-                "name": "r2",
-                "fields": [
-                    {"name": "content", "type": "int", "field-id": 134},
-                    {"name": "file_path", "type": "string", "field-id": 100},
-                    {"name": "file_format", "type": "string", "field-id": 101},
-                    {
-                        "name": "partition",
-                        "field-id": 102,
-                        "type": {"type": "record", "name": "r102", "fields": []},
-                    },
-                    {"name": "record_count", "type": "long", "field-id": 103},
-                    {
-                        "name": "file_size_in_bytes",
-                        "type": "long",
-                        "field-id": 104,
-                    },
-                    # spec-v3 DV addressing (field ids per the table spec)
-                    {
-                        "name": "referenced_data_file",
-                        "type": ["null", "string"],
-                        "default": None,
-                        "field-id": 143,
-                    },
-                    {
-                        "name": "content_offset",
-                        "type": ["null", "long"],
-                        "default": None,
-                        "field-id": 144,
-                    },
-                    {
-                        "name": "content_size_in_bytes",
-                        "type": ["null", "long"],
-                        "default": None,
-                        "field-id": 145,
-                    },
-                ],
-            },
-        },
-    ],
-}
-
-
 def iceberg_delete_dv(spark: SparkSession, base: str, predicate: str) -> int:
     """``DELETE ... WHERE predicate`` emitted as spec-v3 DELETION VECTORS:
     matched row positions are grouped per data file, each file's
@@ -1752,8 +1563,7 @@ def iceberg_delete_dv(spark: SparkSession, base: str, predicate: str) -> int:
         serialize_dv_blob,
     )
 
-    meta_dir = os.path.join(base, "metadata")
-    read_v, prev = _tip(meta_dir)
+    read_v, prev = _tip(os.path.join(base, "metadata"))
     schema, data_entries, pos_deletes, _eq = iceberg_state(
         base, snapshot_id=prev["current-snapshot-id"]
     )
@@ -1791,78 +1601,37 @@ def iceberg_delete_dv(spark: SparkSession, base: str, predicate: str) -> int:
 
     from ..functions.puffin import write_puffin
 
-    seq = prev.get("last-sequence-number", 0) + 1
-    snap_id = 1000 + seq
+    seq, snap_id = _next_ids(prev)
     puffin_rel = f"dv-{seq}.puffin"
     refs = sorted(new_files)
+    merged = {fp: sorted(new_files[fp] | existing.get(fp, set())) for fp in refs}
     blobs = [
         {
             "type": DELETION_VECTOR_V1,
-            "payload": serialize_dv_blob(
-                sorted(new_files[fp] | existing.get(fp, set()))
-            ),
+            "payload": serialize_dv_blob(merged[fp]),
             "snapshot-id": snap_id,
             "sequence-number": seq,
             "properties": {
                 "referenced-data-file": "file://" + fp,
-                "cardinality": str(
-                    len(new_files[fp] | existing.get(fp, set()))
-                ),
+                "cardinality": str(len(merged[fp])),
             },
         }
         for fp in refs
     ]
-    puffin_path = os.path.join(base, "data", puffin_rel)
-    metas = write_puffin(puffin_path, blobs)
-    entries = []
-    for fp, bm in zip(refs, metas):
-        card = len(new_files[fp] | existing.get(fp, set()))
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": None,
-                "sequence_number": seq,
-                "data_file": {
-                    "content": 1,
-                    "file_path": "file://" + puffin_path,
-                    "file_format": "PUFFIN",
-                    "partition": {},
-                    "record_count": card,
-                    "file_size_in_bytes": os.path.getsize(puffin_path),
-                    "referenced_data_file": "file://" + fp,
-                    "content_offset": bm["offset"],
-                    "content_size_in_bytes": bm["length"],
-                },
-            }
+    metas = write_puffin(os.path.join(base, "data", puffin_rel), blobs)
+    entries = [
+        _entry(
+            base, puffin_rel, 1, len(merged[fp]), seq=seq,
+            file_format="PUFFIN",
+            referenced_data_file="file://" + fp,
+            content_offset=bm["offset"],
+            content_size_in_bytes=bm["length"],
         )
-    mrel = f"m-dv-{snap_id}.avro"
-    write_container(
-        os.path.join(meta_dir, mrel), _MANIFEST_ENTRY_DV_SCHEMA, entries
-    )
-    snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
-    _, prev_manifests = read_container(
-        _resolve_path(base, snaps[prev["current-snapshot-id"]]["manifest-list"])
-    )
-    mlrel = f"snap-{snap_id}.avro"
-    write_container(
-        os.path.join(meta_dir, mlrel),
-        _MANIFEST_FILE_SCHEMA,
-        prev_manifests + [_manifest_file_rec(base, mrel, 1, snap_id, seq)],
-    )
-    md = dict(prev)
-    md["format-version"] = 3  # DVs are a v3 feature
-    snap = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": 1700000000000 + seq,
-        "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-        "summary": {"operation": "delete"},
-        "schema-id": 0,
-    }
-    md["last-sequence-number"] = seq
-    md["last-updated-ms"] = snap["timestamp-ms"]
-    md["current-snapshot-id"] = snap_id
-    md["snapshots"] = list(md.get("snapshots", [])) + [snap]
+        for fp, bm in zip(refs, metas)
+    ]
+    md = {**prev, "format-version": 3}  # DVs are a v3 feature
+    m = _manifest(base, md, f"m-dv-{snap_id}.avro", entries, 1, snap_id, seq)
+    md = _snapshot(base, md, _manifests(base, md) + [m], "delete")
     return commit(base, lambda _v, _prev: md, read_v)
 
 
@@ -1875,10 +1644,10 @@ def iceberg_delete_dv(spark: SparkSession, base: str, predicate: str) -> int:
     """,
 )
 def iceberg_dv_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iceberg v3 DELETION-VECTOR round-trip (round-8 verdict "what's
-    missing" #3): DELETE twice through ``iceberg_delete_dv`` (the second
-    delete lands on a data file that ALREADY carries a DV, exercising the
-    merge-into-self-contained-blob path), then read back through this
+    """Iceberg v3 DELETION-VECTOR round-trip: DELETE twice through
+    ``iceberg_delete_dv`` (the second delete lands on a data file that
+    ALREADY carries a DV, exercising the merge-into-self-contained-blob
+    path), then read back through this
     module's snapshot reader — which fetches each blob by the manifest's
     (referenced_data_file, content_offset, content_size_in_bytes)
     triple, CRC-checks it, and applies the positions in the SAME
@@ -2006,39 +1775,17 @@ def iceberg_rewrite_compact(spark: SparkSession, base: str) -> int:
     concurrent commit aborts the rewrite. Returns the committed version."""
     from .lakehouse_interop import _stage_single_parquet
 
-    meta_dir = os.path.join(base, "metadata")
-    read_v, prev = _tip(meta_dir)
+    read_v, prev = _tip(os.path.join(base, "metadata"))
     merged = iceberg_snapshot(spark, base, snapshot_id=prev["current-snapshot-id"])
-    seq = prev.get("last-sequence-number", 0) + 1
-    snap_id = 1000 + seq
+    seq, snap_id = _next_ids(prev)
     file_rel = f"compacted-{seq}.parquet"
     _stage_single_parquet(merged, os.path.join(base, "data", file_rel))
     n_rows = merged.count()
-    mrel = f"m-compact-{snap_id}.avro"
-    write_container(
-        os.path.join(meta_dir, mrel),
-        _MANIFEST_ENTRY_EQ_SCHEMA,
-        [_eq_entry(base, file_rel, 0, n_rows, seq)],
+    m = _manifest(
+        base, prev, f"m-compact-{snap_id}.avro",
+        [_entry(base, file_rel, 0, n_rows, seq=seq)], 0, snap_id, seq,
     )
-    mlrel = f"snap-{snap_id}.avro"
-    write_container(
-        os.path.join(meta_dir, mlrel),
-        _MANIFEST_FILE_SCHEMA,
-        [_manifest_file_rec(base, mrel, 0, snap_id, seq)],
-    )
-    md = dict(prev)
-    snap = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": 1700000000000 + seq,
-        "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-        "summary": {"operation": "replace"},
-        "schema-id": 0,
-    }
-    md["last-sequence-number"] = seq
-    md["last-updated-ms"] = snap["timestamp-ms"]
-    md["current-snapshot-id"] = snap_id
-    md["snapshots"] = list(md.get("snapshots", [])) + [snap]
+    md = _snapshot(base, prev, [m], "replace")
     return commit(base, lambda _v, _prev: md, read_v)
 
 
@@ -2103,7 +1850,6 @@ def iceberg_eq_delete(
     import pandas as pd
     import pyarrow as pa
 
-    meta_dir = os.path.join(base, "metadata")
     vals = sorted(set(values))
 
     def build(_cur_v: int, prev: dict) -> dict:
@@ -2114,44 +1860,19 @@ def iceberg_eq_delete(
         ftype = next(f["type"] for f in fields if f["name"] == column)
         if ftype not in _PA_OF_ICEBERG:
             raise NotImplementedError(f"eq-delete on {ftype!r} column")
-        seq = prev.get("last-sequence-number", 0) + 1
-        snap_id = 1000 + seq
+        seq, snap_id = _next_ids(prev)
         del_rel = f"del-eq-{seq}.parquet"
         _write_parquet_file(
             pa.schema([pa.field(column, pa.type_for_alias(_PA_OF_ICEBERG[ftype]))]),
             pd.DataFrame({column: vals}),
             os.path.join(base, "data", del_rel),
         )
-        mrel = f"m-eqdel-{snap_id}.avro"
-        write_container(
-            os.path.join(meta_dir, mrel),
-            _MANIFEST_ENTRY_EQ_SCHEMA,
-            [_eq_entry(base, del_rel, 2, len(vals), seq, equality_ids=[fid])],
+        m = _manifest(
+            base, prev, f"m-eqdel-{snap_id}.avro",
+            [_entry(base, del_rel, 2, len(vals), seq=seq, equality_ids=[fid])],
+            1, snap_id, seq,
         )
-        snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
-        _, prev_manifests = read_container(
-            _resolve_path(base, snaps[prev["current-snapshot-id"]]["manifest-list"])
-        )
-        mlrel = f"snap-{snap_id}.avro"
-        write_container(
-            os.path.join(meta_dir, mlrel),
-            _MANIFEST_FILE_SCHEMA,
-            prev_manifests + [_manifest_file_rec(base, mrel, 1, snap_id, seq)],
-        )
-        md = dict(prev)
-        snap = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": 1700000000000 + seq,
-            "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-            "summary": {"operation": "delete"},
-            "schema-id": 0,
-        }
-        md["last-sequence-number"] = seq
-        md["last-updated-ms"] = snap["timestamp-ms"]
-        md["current-snapshot-id"] = snap_id
-        md["snapshots"] = list(md.get("snapshots", [])) + [snap]
-        return md
+        return _snapshot(base, prev, _manifests(base, prev) + [m], "delete")
 
     return commit(base, build)
 

@@ -33,13 +33,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load_table
-from ..functions.avro_codec import write_container
 from ..registry import query
 from .delta_reader import delta_snapshot, delta_state
 from .iceberg_reader import (
-    _MANIFEST_ENTRY_SCHEMA,
-    _MANIFEST_FILE_SCHEMA,
+    _entry,
     _iceberg_fields_of,
+    _manifest,
+    _new_table,
+    _snapshot,
     commit as iceberg_commit,
     iceberg_snapshot,
 )
@@ -73,73 +74,26 @@ def delta_uniform_iceberg_metadata(
     import pyarrow.parquet as pq
 
     schema = T.StructType.fromJson(json.loads(schema_string))
-    meta_dir = os.path.join(iceberg_base, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    entries = []
-    for rel in sorted(live):
-        abs_path = os.path.abspath(os.path.join(delta_base, rel))
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": None,
-                "data_file": {
-                    "content": 0,
-                    "file_path": "file://" + abs_path,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": pq.read_metadata(abs_path).num_rows,
-                    "file_size_in_bytes": os.path.getsize(abs_path),
-                },
-            }
-        )
-    mrel = "m-uniform-1.avro"
-    write_container(os.path.join(meta_dir, mrel), _MANIFEST_ENTRY_SCHEMA, entries)
-    mpath = os.path.join(meta_dir, mrel)
-    mlrel = "snap-uniform-1.avro"
-    write_container(
-        os.path.join(meta_dir, mlrel),
-        _MANIFEST_FILE_SCHEMA,
-        [
-            {
-                "manifest_path": "file://" + mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": 0,
-                "content": 0,
-                "sequence_number": 1,
-                "min_sequence_number": 1,
-                "added_snapshot_id": 1001,
-            }
-        ],
+    md = _new_table(
+        iceberg_base,
+        _iceberg_fields_of(schema),
+        uuid="0f1e2d3c-0000-4000-8000-0000000000f0",
+        properties={"uniform.source": "delta"},
     )
-    md = {
-        "format-version": 2,
-        "table-uuid": "0f1e2d3c-0000-4000-8000-0000000000f0",
-        "location": "file://" + iceberg_base,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": len(schema.fields),
-        "current-schema-id": 0,
-        "schemas": [
-            {"type": "struct", "schema-id": 0, "fields": _iceberg_fields_of(schema)}
-        ],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "last-partition-id": 999,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {"uniform.source": "delta"},
-        "last-sequence-number": 1,
-        "current-snapshot-id": 1001,
-        "snapshots": [
-            {
-                "snapshot-id": 1001,
-                "sequence-number": 1,
-                "timestamp-ms": 1700000000000,
-                "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            }
-        ],
-    }
+    # an absolute path names the Delta file in place: no byte is copied
+    entries = [
+        _entry(
+            iceberg_base,
+            os.path.abspath(os.path.join(delta_base, rel)),
+            0,
+            pq.read_metadata(os.path.join(delta_base, rel)).num_rows,
+        )
+        for rel in sorted(live)
+    ]
+    m = _manifest(iceberg_base, md, "m-uniform-1.avro", entries, 0, 1001, 1)
+    md = _snapshot(
+        iceberg_base, md, [m], "append", snap_id=1001, seq=1, ts=1700000000000
+    )
     return iceberg_commit(iceberg_base, lambda _v, _prev: md)
 
 

@@ -36,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid as _uuid
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
@@ -834,7 +835,6 @@ def delta_delete_where(
         write_dv_file,
         z85_encode,
     )
-    import uuid as _uuid
 
     tip = _tip(base)
     live, schema_string, part_cols, config, dvs = delta_state(spark, base, tip)
@@ -1314,7 +1314,9 @@ def delta_optimize_compact(spark: SparkSession, base: str) -> int:
             "groups) not implemented; fixture tables are unpartitioned"
         )
     merged = delta_snapshot(spark, base, tip)
-    file_rel = "part-optimized-00000.parquet"
+    # a fresh uid per rewrite: a fixed name would overwrite the file an
+    # older version still references, breaking its time travel
+    file_rel = f"part-optimized-{_uuid.uuid4().hex[:12]}.parquet"
     _stage_single_parquet(merged, os.path.join(base, file_rel))
     actions: list[dict] = [{"commitInfo": {"operation": "OPTIMIZE"}}]
     for p in sorted(live):

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,6 +86,9 @@ def delta_optimize_zorder(
                 }
             }
         )
+    # a fresh uid per rewrite: a fixed name would overwrite the file an
+    # older version still references, breaking its time travel
+    uid = _uuid.uuid4().hex[:12]
     for i in range(n_files):
         part = ranked.filter(F.col("__bucket") == i).orderBy("__rn")
         # per-file clustered-column stats: one 1-row aggregate per file
@@ -95,7 +99,7 @@ def delta_optimize_zorder(
             F.max(col_b).alias("b_max"),
             F.count(F.lit(1)).alias("n"),
         ).collect()[0]
-        rel = f"part-zorder-{i:05d}.parquet"
+        rel = f"part-zorder-{uid}-{i:05d}.parquet"
         _stage_single_parquet(
             part.drop("__z", "__rn", "__tot", "__bucket"),
             os.path.join(base, rel),

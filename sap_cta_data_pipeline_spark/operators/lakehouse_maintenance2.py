@@ -29,7 +29,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.avro_codec import read_container, write_container
+from ..functions.avro_codec import read_container
 from ..registry import query
 from .delta_reader import (
     _current_metadata_action,
@@ -40,9 +40,11 @@ from .delta_reader import (
 from .delta_reader import _tip as _delta_tip
 from .delta_reader import commit as delta_commit
 from .iceberg_reader import (
-    _MANIFEST_ENTRY_EQ_SCHEMA,
-    _MANIFEST_FILE_SCHEMA,
+    _manifest,
+    _manifests,
+    _next_ids,
     _resolve_path,
+    _snapshot,
     iceberg_append,
     iceberg_delete_where,
     iceberg_snapshot,
@@ -183,11 +185,8 @@ def iceberg_rewrite_manifests(
     snapshot commits as operation "replace" over the SAME data files.
     The commit is read-dependent: a concurrent commit aborts the rewrite.
     Returns (version, manifests_before, manifests_after)."""
-    meta_dir = os.path.join(base, "metadata")
-    cur_v, prev = _iceberg_tip(meta_dir)
-    snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
-    cur_snap = snaps[prev["current-snapshot-id"]]
-    _, manifests = read_container(_resolve_path(base, cur_snap["manifest-list"]))
+    cur_v, prev = _iceberg_tip(os.path.join(base, "metadata"))
+    manifests = _manifests(base, prev)
     data_mfs = [m for m in manifests if m.get("content", 0) == 0]
     delete_mfs = [m for m in manifests if m.get("content", 0) != 0]
 
@@ -215,54 +214,18 @@ def iceberg_rewrite_manifests(
                     "snapshot_id": e.get("snapshot_id")
                     or m.get("added_snapshot_id"),
                     "sequence_number": seq,  # explicit — survives the merge
-                    "data_file": {
-                        "content": df_rec.get("content", 0),
-                        "file_path": df_rec["file_path"],
-                        "file_format": df_rec.get("file_format", "PARQUET"),
-                        "partition": {},
-                        "record_count": df_rec["record_count"],
-                        "file_size_in_bytes": df_rec["file_size_in_bytes"],
-                        "equality_ids": df_rec.get("equality_ids"),
-                    },
+                    "data_file": df_rec,
                 }
             )
 
-    seq_new = prev.get("last-sequence-number", 0) + 1
-    snap_id = 1000 + seq_new
-    mrel = f"m-rewrite-{snap_id}.avro"
-    write_container(
-        os.path.join(meta_dir, mrel), _MANIFEST_ENTRY_EQ_SCHEMA, merged
+    seq_new, snap_id = _next_ids(prev)
+    merged_rec = _manifest(
+        base, prev, f"m-rewrite-{snap_id}.avro", merged, 0, snap_id, seq_new
     )
-    merged_rec = {
-        "manifest_path": "file://" + os.path.join(meta_dir, mrel),
-        "manifest_length": os.path.getsize(os.path.join(meta_dir, mrel)),
-        "partition_spec_id": 0,
-        "content": 0,
-        "sequence_number": seq_new,
-        "min_sequence_number": min(
-            (e["sequence_number"] for e in merged), default=seq_new
-        ),
-        "added_snapshot_id": snap_id,
-    }
-    mlrel = f"snap-{snap_id}.avro"
-    write_container(
-        os.path.join(meta_dir, mlrel),
-        _MANIFEST_FILE_SCHEMA,
-        [merged_rec] + delete_mfs,
+    merged_rec["min_sequence_number"] = min(
+        (e["sequence_number"] for e in merged), default=seq_new
     )
-    md = dict(prev)
-    snap = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq_new,
-        "timestamp-ms": 1700000000000 + seq_new,
-        "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-        "summary": {"operation": "replace"},
-        "schema-id": 0,
-    }
-    md["last-sequence-number"] = seq_new
-    md["last-updated-ms"] = snap["timestamp-ms"]
-    md["current-snapshot-id"] = snap_id
-    md["snapshots"] = list(md.get("snapshots", [])) + [snap]
+    md = _snapshot(base, prev, [merged_rec] + delete_mfs, "replace")
     v = iceberg_commit(base, lambda _v, _prev: md, cur_v)
     return v, len(manifests), 1 + len(delete_mfs)
 
@@ -318,12 +281,8 @@ def iceberg_manifests_meta(spark: SparkSession, base: str) -> DataFrame:
     reads to decide WHEN rewrite_manifests is worth running. O(manifest
     bytes) driver work, zero data-file reads."""
     _, md = _iceberg_tip(os.path.join(base, "metadata"))
-    snap = {s["snapshot-id"]: s for s in md["snapshots"]}[
-        md["current-snapshot-id"]
-    ]
-    _, manifests = read_container(_resolve_path(base, snap["manifest-list"]))
     rows = []
-    for m in manifests:
+    for m in _manifests(base, md):
         _, entries = read_container(_resolve_path(base, m["manifest_path"]))
         rows.append(
             (

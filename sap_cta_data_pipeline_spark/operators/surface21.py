@@ -22,7 +22,6 @@ data layout.
 
 from __future__ import annotations
 
-import json
 import os
 import struct
 from functools import partial
@@ -31,84 +30,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table_path
-from ..functions.avro_codec import write_container
+from ..functions.avro_codec import read_container
 from ..functions.parity import bi
 from ..registry import query
 from .delta_reader import _write_parquet_file
 from .iceberg_reader import (
-    _MANIFEST_FILE_SCHEMA,
     _NATION_ICEBERG_FIELDS,
     _entry,
-    _manifest_file_rec,
+    _load_metadata,
+    _manifest,
+    _manifests,
+    _new_table,
+    _resolve_path,
+    _snapshot,
     commit as iceberg_commit,
 )
 from .sources import built
 
 # ------------------------------------------------- Iceberg stats pruning
-
-#: manifest-entry schema whose data_file carries column bounds
-#: (lower_bounds field-id 125, upper_bounds 128; entries are
-#: (field-id, bytes) pairs per the spec's k/v array form).
-_BOUNDS_KV = {
-    "type": "array",
-    "items": {
-        "type": "record",
-        "name": "kv",
-        "fields": [
-            {"name": "key", "type": "int", "field-id": 126},
-            {"name": "value", "type": "bytes", "field-id": 127},
-        ],
-    },
-}
-_MANIFEST_ENTRY_STATS_SCHEMA = {
-    "type": "record",
-    "name": "manifest_entry",
-    "fields": [
-        {"name": "status", "type": "int", "field-id": 0},
-        {
-            "name": "snapshot_id",
-            "type": ["null", "long"],
-            "default": None,
-            "field-id": 1,
-        },
-        {
-            "name": "data_file",
-            "field-id": 2,
-            "type": {
-                "type": "record",
-                "name": "r2",
-                "fields": [
-                    {"name": "content", "type": "int", "field-id": 134},
-                    {"name": "file_path", "type": "string", "field-id": 100},
-                    {"name": "file_format", "type": "string", "field-id": 101},
-                    {
-                        "name": "partition",
-                        "field-id": 102,
-                        "type": {"type": "record", "name": "r102", "fields": []},
-                    },
-                    {"name": "record_count", "type": "long", "field-id": 103},
-                    {
-                        "name": "file_size_in_bytes",
-                        "type": "long",
-                        "field-id": 104,
-                    },
-                    {
-                        "name": "lower_bounds",
-                        "type": ["null", _BOUNDS_KV],
-                        "default": None,
-                        "field-id": 125,
-                    },
-                    {
-                        "name": "upper_bounds",
-                        "type": ["null", dict(_BOUNDS_KV, items=dict(_BOUNDS_KV["items"], name="kv2"))],
-                        "default": None,
-                        "field-id": 128,
-                    },
-                ],
-            },
-        },
-    ],
-}
 
 
 def ib_single_value(v: int, typ: str) -> bytes:
@@ -129,18 +68,9 @@ def iceberg_stats_plan(
     ``field_id`` intersects [lo, hi]; a file with NO bounds for the
     field can never be pruned (the presence rule shared with the
     partition-evolution reader). Driver-side metadata work only."""
-    from ..functions.avro_codec import read_container
-
-    with open(os.path.join(base, "metadata", "v1.metadata.json")) as fh:
-        md = json.load(fh)
-    snaps = {s["snapshot-id"]: s for s in md["snapshots"]}
-    ml = snaps[md["current-snapshot-id"]]["manifest-list"]
-    _, manifests = read_container(ml.replace("file://", ""))
     keep: list[str] = []
-    for m in manifests:
-        _, entries = read_container(
-            m["manifest_path"].replace("file://", "")
-        )
+    for m in _manifests(base, _load_metadata(base)):
+        _, entries = read_container(_resolve_path(base, m["manifest_path"]))
         for e in entries:
             if e["status"] == 2:
                 continue
@@ -152,7 +82,7 @@ def iceberg_stats_plan(
                 fhi = ib_single_value_decode(ubs[field_id], typ)
                 if fhi < lo or flo > hi:
                     continue  # envelope misses the query range: prune
-            keep.append(df_["file_path"].replace("file://", ""))
+            keep.append(_resolve_path(base, df_["file_path"]))
     return sorted(keep)
 
 
@@ -163,62 +93,28 @@ def _build_stats_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
 
     tbl = pq.read_table(table_path(sf_dir, "nation"))
     pdf = tbl.to_pandas().sort_values("n_nationkey").reset_index(drop=True)
+    md = _new_table(
+        base, _NATION_ICEBERG_FIELDS, uuid="0f1e2d3c-0000-4000-8000-0000000000f5"
+    )
     entries = []
     for i in range(5):
         lo, hi = i * 5, i * 5 + 4
         sub = pdf[(pdf.n_nationkey >= lo) & (pdf.n_nationkey <= hi)]
         rel = f"range-{lo}-{hi}.parquet"
         _write_parquet_file(tbl.schema, sub, os.path.join(base, "data", rel))
-        e = _entry(base, rel, 0, len(sub))
-        e["data_file"]["lower_bounds"] = [
-            {"key": 1, "value": ib_single_value(int(sub.n_nationkey.min()), "int")}
-        ]
-        e["data_file"]["upper_bounds"] = [
-            {"key": 1, "value": ib_single_value(int(sub.n_nationkey.max()), "int")}
-        ]
-        entries.append(e)
-    meta_dir = os.path.join(base, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    write_container(
-        os.path.join(meta_dir, "m1-data.avro"),
-        _MANIFEST_ENTRY_STATS_SCHEMA,
-        entries,
+        lb = ib_single_value(int(sub.n_nationkey.min()), "int")
+        ub = ib_single_value(int(sub.n_nationkey.max()), "int")
+        entries.append(
+            _entry(
+                base, rel, 0, len(sub),
+                lower_bounds=[{"key": 1, "value": lb}],
+                upper_bounds=[{"key": 1, "value": ub}],
+            )
+        )
+    m = _manifest(base, md, "m1-data.avro", entries, 0, 5001, 1)
+    md = _snapshot(
+        base, md, [m], "append", snap_id=5001, seq=1, ts=1700000000000
     )
-    write_container(
-        os.path.join(meta_dir, "snap-5001.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [_manifest_file_rec(base, "m1-data.avro", 0, 5001, 1)],
-    )
-    md = {
-        "format-version": 2,
-        "table-uuid": "0f1e2d3c-0000-4000-8000-0000000000f5",
-        "location": "file://" + base,
-        "last-sequence-number": 1,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": 3,
-        "current-schema-id": 0,
-        "schemas": [
-            {"type": "struct", "schema-id": 0, "fields": _NATION_ICEBERG_FIELDS}
-        ],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "last-partition-id": 999,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {},
-        "current-snapshot-id": 5001,
-        "snapshots": [
-            {
-                "snapshot-id": 5001,
-                "sequence-number": 1,
-                "timestamp-ms": 1700000000000,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-5001.avro"),
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            }
-        ],
-    }
     iceberg_commit(base, lambda _v, _prev: md)
 
 

@@ -27,7 +27,13 @@ from ..catalog import load_table
 from ..functions.avro_codec import read_container
 from ..functions.parity import bi, r6
 from ..registry import query
-from .iceberg_reader import _tip, iceberg_append, iceberg_snapshot
+from .iceberg_reader import (
+    _manifests,
+    _resolve_path,
+    _tip,
+    iceberg_append,
+    iceberg_snapshot,
+)
 from .sources import built
 
 
@@ -38,14 +44,10 @@ def iceberg_referenced_files(base: str) -> set[str]:
     _, md = _tip(os.path.join(base, "metadata"))
     keep: set[str] = set()
     for snap in md.get("snapshots", []):
-        ml = snap["manifest-list"].replace("file://", "")
-        _, manifests = read_container(ml)
-        for m in manifests:
-            _, entries = read_container(
-                m["manifest_path"].replace("file://", "")
-            )
+        for m in _manifests(base, md, snap["snapshot-id"]):
+            _, entries = read_container(_resolve_path(base, m["manifest_path"]))
             for e in entries:
-                p = e["data_file"]["file_path"].replace("file://", "")
+                p = _resolve_path(base, e["data_file"]["file_path"])
                 keep.add(os.path.relpath(p, base))
     return keep
 

@@ -26,22 +26,19 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..catalog import load_table as t
-from ..functions.avro_codec import write_container
 from ..functions.parity import bi, r6
 from ..registry import query
 from .iceberg_reader import (
-    _MANIFEST_FILE_SCHEMA,
     _entry,
     _iceberg_fields_of,
-    _manifest_file_rec,
+    _manifest,
+    _new_table,
+    _snapshot,
     commit as iceberg_commit,
 )
 from .lakehouse_interop import _stage_single_parquet
 from .sources import built
-from .surface21 import (
-    _MANIFEST_ENTRY_STATS_SCHEMA,
-    iceberg_stats_plan,
-)
+from .surface21 import iceberg_stats_plan
 
 _N_FILES = 4
 
@@ -77,9 +74,6 @@ def iceberg_create_sorted(
         ).collect()[0]
     )
     entries = []
-    meta_dir = os.path.join(base, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
-    lo_bound = None
     for i in range(n_files):
         part = df
         if i > 0:
@@ -91,7 +85,6 @@ def iceberg_create_sorted(
         mm = part.agg(
             F.min(sort_col).alias("lo"), F.max(sort_col).alias("hi"), F.count(F.lit(1)).alias("n")
         ).collect()[0]  # 1-row per-file bound (file-count bounded)
-        e = _entry(base, rel, 0, mm["n"])
         import datetime
 
         def _ser(v):
@@ -99,60 +92,39 @@ def iceberg_create_sorted(
                 return ib_date_value((v - datetime.date(1970, 1, 1)).days)
             return struct.pack("<q", int(v))
 
-        e["data_file"]["lower_bounds"] = [{"key": field_id, "value": _ser(mm["lo"])}]
-        e["data_file"]["upper_bounds"] = [{"key": field_id, "value": _ser(mm["hi"])}]
-        entries.append(e)
-    write_container(
-        os.path.join(meta_dir, "m1-data.avro"),
-        _MANIFEST_ENTRY_STATS_SCHEMA,
-        entries,
+        entries.append(
+            _entry(
+                base, rel, 0, mm["n"],
+                lower_bounds=[{"key": field_id, "value": _ser(mm["lo"])}],
+                upper_bounds=[{"key": field_id, "value": _ser(mm["hi"])}],
+            )
+        )
+    md = _new_table(
+        base,
+        fields,
+        uuid="0f1e2d3c-0000-4000-8000-0000000000a4",
+        **{
+            "default-sort-order-id": 1,
+            "sort-orders": [
+                {"order-id": 0, "fields": []},
+                {
+                    "order-id": 1,
+                    "fields": [
+                        {
+                            "transform": "identity",
+                            "source-id": field_id,
+                            "direction": "asc",
+                            "null-order": "nulls-first",
+                        }
+                    ],
+                },
+            ],
+        },
     )
-    write_container(
-        os.path.join(meta_dir, "snap-6001.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [_manifest_file_rec(base, "m1-data.avro", 0, 6001, 1)],
+    m = _manifest(base, md, "m1-data.avro", entries, 0, 6001, 1)
+    md = _snapshot(
+        base, md, [m], "append", snap_id=6001, seq=1, ts=1700000000000
     )
-    md = {
-        "format-version": 2,
-        "table-uuid": "0f1e2d3c-0000-4000-8000-0000000000a4",
-        "location": "file://" + base,
-        "last-sequence-number": 1,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": len(fields),
-        "current-schema-id": 0,
-        "schemas": [{"type": "struct", "schema-id": 0, "fields": fields}],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "last-partition-id": 999,
-        "default-sort-order-id": 1,
-        "sort-orders": [
-            {"order-id": 0, "fields": []},
-            {
-                "order-id": 1,
-                "fields": [
-                    {
-                        "transform": "identity",
-                        "source-id": field_id,
-                        "direction": "asc",
-                        "null-order": "nulls-first",
-                    }
-                ],
-            },
-        ],
-        "properties": {},
-        "current-snapshot-id": 6001,
-        "snapshots": [
-            {
-                "snapshot-id": 6001,
-                "sequence-number": 1,
-                "timestamp-ms": 1700000000000,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-6001.avro"),
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            }
-        ],
-    }
     iceberg_commit(base, lambda _v, _prev: md)
 
 

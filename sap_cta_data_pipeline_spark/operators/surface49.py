@@ -20,14 +20,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.avro_codec import read_container, write_container
 from ..registry import query
 from .iceberg_reader import (
-    _MANIFEST_ENTRY_EQ_SCHEMA,
-    _MANIFEST_FILE_SCHEMA,
-    _eq_entry,
-    _manifest_file_rec,
-    _resolve_path,
+    _entry,
+    _manifest,
+    _manifests,
+    _next_ids,
+    _snapshot,
     _tip,
     commit as iceberg_commit,
     iceberg_append,
@@ -53,11 +52,8 @@ def iceberg_append_to_branch(
     _stage_single_parquet(df, data_path)
     n_rows = df.count()
 
-    meta_dir = os.path.join(base, "metadata")
-
     def build(_cur_v: int, md: dict) -> dict:
         refs = dict(md.get("refs", {}))
-        snaps = {s["snapshot-id"]: s for s in md["snapshots"]}
         if branch in refs:
             parent_id = refs[branch]["snapshot-id"]
         else:
@@ -65,39 +61,28 @@ def iceberg_append_to_branch(
             # current-snapshot-id without touching refs['main'], so the ref
             # can be stale — current-snapshot-id is authoritative.
             parent_id = md["current-snapshot-id"]
-        seq = md.get("last-sequence-number", 0) + 1
-        snap_id = 1000 + seq
-        mrel = f"m-wap-{snap_id}.avro"
-        write_container(
-            os.path.join(meta_dir, mrel),
-            _MANIFEST_ENTRY_EQ_SCHEMA,
-            [_eq_entry(base, file_name, 0, n_rows, seq)],
+        seq, snap_id = _next_ids(md)
+        m = _manifest(
+            base, md, f"m-wap-{snap_id}.avro",
+            [_entry(base, file_name, 0, n_rows, seq=seq)], 0, snap_id, seq,
         )
-        _, parent_manifests = read_container(
-            _resolve_path(base, snaps[parent_id]["manifest-list"])
+        out = _snapshot(
+            base,
+            md,
+            _manifests(base, md, parent_id) + [m],
+            "append",
+            **{
+                "parent-snapshot-id": parent_id,
+                "summary": {"operation": "append", "wap.branch": branch},
+            },
         )
-        mlrel = f"snap-{snap_id}.avro"
-        write_container(
-            os.path.join(meta_dir, mlrel),
-            _MANIFEST_FILE_SCHEMA,
-            parent_manifests + [_manifest_file_rec(base, mrel, 0, snap_id, seq)],
-        )
-        snap = {
-            "snapshot-id": snap_id,
-            "parent-snapshot-id": parent_id,
-            "sequence-number": seq,
-            "timestamp-ms": 1700000000000 + seq,
-            "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-            "summary": {"operation": "append", "wap.branch": branch},
-            "schema-id": 0,
-        }
-        md = dict(md)
-        md["last-sequence-number"] = seq
-        md["last-updated-ms"] = snap["timestamp-ms"]
-        md["snapshots"] = list(md["snapshots"]) + [snap]
         refs[branch] = {"snapshot-id": snap_id, "type": "branch"}
-        md["refs"] = refs  # current-snapshot-id and refs['main'] untouched
-        return md
+        # the WAP contract: current-snapshot-id and refs['main'] untouched
+        return {
+            **out,
+            "current-snapshot-id": md["current-snapshot-id"],
+            "refs": refs,
+        }
 
     return iceberg_commit(base, build)
 

@@ -38,66 +38,26 @@ scan; ``_metadata.row_index`` comes from the parquet reader for free.
 
 from __future__ import annotations
 
-import json
 import os
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.avro_codec import read_container, write_container
+from ..functions.avro_codec import read_container
 from ..registry import query
-from .iceberg_reader import _resolve_path, commit as iceberg_commit
+from .iceberg_reader import (
+    _NATION_ICEBERG_FIELDS,
+    _entry,
+    _load_metadata,
+    _manifest,
+    _manifests,
+    _new_table,
+    _resolve_path,
+    _snapshot,
+    commit as iceberg_commit,
+)
 from .sources import built
-
-# v3 manifest-entry/file schemas WITH the row-lineage fields (the
-# fixture's own containers; pre-v3 manifests elsewhere are untouched).
-_LIN_ENTRY_SCHEMA = {
-    "type": "record",
-    "name": "manifest_entry",
-    "fields": [
-        {"name": "status", "type": "int", "field-id": 0},
-        {"name": "snapshot_id", "type": ["null", "long"], "field-id": 1},
-        {
-            "name": "data_file",
-            "field-id": 2,
-            "type": {
-                "type": "record",
-                "name": "r2",
-                "fields": [
-                    {"name": "content", "type": "int", "field-id": 134},
-                    {"name": "file_path", "type": "string", "field-id": 100},
-                    {"name": "file_format", "type": "string", "field-id": 101},
-                    {
-                        "name": "partition",
-                        "field-id": 102,
-                        "type": {"type": "record", "name": "r102", "fields": []},
-                    },
-                    {"name": "record_count", "type": "long", "field-id": 103},
-                    {"name": "file_size_in_bytes", "type": "long", "field-id": 104},
-                    # v3: null = inherit from manifest position
-                    {"name": "first_row_id", "type": ["null", "long"], "field-id": 142},
-                ],
-            },
-        },
-    ],
-}
-
-_LIN_MANIFEST_FILE_SCHEMA = {
-    "type": "record",
-    "name": "manifest_file",
-    "fields": [
-        {"name": "manifest_path", "type": "string", "field-id": 500},
-        {"name": "manifest_length", "type": "long", "field-id": 501},
-        {"name": "partition_spec_id", "type": "int", "field-id": 502},
-        {"name": "content", "type": "int", "field-id": 517},
-        {"name": "sequence_number", "type": "long", "field-id": 515},
-        {"name": "min_sequence_number", "type": "long", "field-id": 516},
-        {"name": "added_snapshot_id", "type": "long", "field-id": 503},
-        # v3: starting row id for this manifest's null-lineage entries
-        {"name": "first_row_id", "type": ["null", "long"], "field-id": 520},
-    ],
-}
 
 _ROW_ID = "_row_id"
 _LAST_SEQ = "_last_updated_sequence_number"
@@ -109,39 +69,6 @@ def _write_lineage_parquet(pdf, path: str) -> None:
 
     os.makedirs(os.path.dirname(path), exist_ok=True)
     pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
-
-
-def _entry(base: str, rel: str, n_rows: int, first_row_id: int | None,
-           status: int = 1) -> dict:
-    path = os.path.join(base, "data", rel)
-    return {
-        "status": status,
-        "snapshot_id": None,
-        "data_file": {
-            "content": 0,
-            "file_path": "file://" + path,
-            "file_format": "PARQUET",
-            "partition": {},
-            "record_count": n_rows,
-            "file_size_in_bytes": os.path.getsize(path),
-            "first_row_id": first_row_id,
-        },
-    }
-
-
-def _manifest_rec(base: str, rel: str, snap_id: int, seq: int,
-                  first_row_id: int | None) -> dict:
-    path = os.path.join(base, "metadata", rel)
-    return {
-        "manifest_path": "file://" + path,
-        "manifest_length": os.path.getsize(path),
-        "partition_spec_id": 0,
-        "content": 0,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snap_id,
-        "first_row_id": first_row_id,
-    }
 
 
 def _build_lineage_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
@@ -164,8 +91,6 @@ def _build_lineage_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
 
     from ..catalog import table_path
 
-    meta_dir = os.path.join(base, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
     pdf = (
         pq.read_table(table_path(sf_dir, "nation"))
         .to_pandas()[["n_nationkey", "n_name", "n_regionkey"]]
@@ -177,18 +102,34 @@ def _build_lineage_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
     _write_lineage_parquet(lo, os.path.join(base, "data", "lin-lo.parquet"))
     _write_lineage_parquet(hi, os.path.join(base, "data", "lin-hi.parquet"))
 
-    write_container(
-        os.path.join(meta_dir, "m-lin-1.avro"),
-        _LIN_ENTRY_SCHEMA,
-        [
-            _entry(base, "lin-lo.parquet", len(lo), None),
-            _entry(base, "lin-hi.parquet", len(hi), None),
-        ],
+    md = _new_table(
+        base,
+        _NATION_ICEBERG_FIELDS,
+        uuid="lineage-fixture",
+        format_version=3,
     )
-    write_container(
-        os.path.join(meta_dir, "snap-3001.avro"),
-        _LIN_MANIFEST_FILE_SCHEMA,
-        [_manifest_rec(base, "m-lin-1.avro", 3001, 1, 0)],
+    # v1: both entries null-lineage, inheriting from the manifest's 0
+    m1 = _manifest(
+        base,
+        md,
+        "m-lin-1.avro",
+        [
+            _entry(base, "lin-lo.parquet", 0, len(lo)),
+            _entry(base, "lin-hi.parquet", 0, len(hi)),
+        ],
+        0,
+        3001,
+        1,
+    )
+    md = _snapshot(
+        base,
+        md,
+        [{**m1, "first_row_id": 0}],
+        "append",
+        snap_id=3001,
+        seq=1,
+        ts=1700000001000,
+        **{"first-row-id": 0},
     )
 
     # ---- v2: CoW update of key 5 with materialized lineage
@@ -202,55 +143,27 @@ def _build_lineage_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
     lo2[_LAST_SEQ] = lo2[_LAST_SEQ].astype("Int64")
     _write_lineage_parquet(lo2, os.path.join(base, "data", "lin-lo2.parquet"))
 
-    write_container(
-        os.path.join(meta_dir, "m-lin-2.avro"),
-        _LIN_ENTRY_SCHEMA,
-        [_entry(base, "lin-lo2.parquet", len(lo2), None)],
+    m2 = _manifest(
+        base, md, "m-lin-2.avro",
+        [_entry(base, "lin-lo2.parquet", 0, len(lo2))],
+        0, 3002, 2,
     )
-    write_container(
-        os.path.join(meta_dir, "m-lin-1b.avro"),
-        _LIN_ENTRY_SCHEMA,
-        # rewritten manifest: the EXISTING entry pins its assigned id
-        [_entry(base, "lin-hi.parquet", len(hi), 12, status=0)],
+    # rewritten manifest: the EXISTING entry pins its assigned id
+    m1b = _manifest(
+        base, md, "m-lin-1b.avro",
+        [_entry(base, "lin-hi.parquet", 0, len(hi), status=0, first_row_id=12)],
+        0, 3001, 1,
     )
-    write_container(
-        os.path.join(meta_dir, "snap-3002.avro"),
-        _LIN_MANIFEST_FILE_SCHEMA,
-        [
-            _manifest_rec(base, "m-lin-2.avro", 3002, 2, 25),
-            _manifest_rec(base, "m-lin-1b.avro", 3001, 1, None),
-        ],
+    md = _snapshot(
+        base,
+        {**md, "next-row-id": 37},
+        [{**m2, "first_row_id": 25}, m1b],
+        "overwrite",
+        snap_id=3002,
+        seq=2,
+        ts=1700000002000,
+        **{"first-row-id": 25},
     )
-
-    md = {
-        "format-version": 3,
-        "table-uuid": "lineage-fixture",
-        "location": "file://" + base,
-        "last-sequence-number": 2,
-        "next-row-id": 37,
-        "current-snapshot-id": 3002,
-        "schemas": [{"schema-id": 0, "fields": []}],
-        "current-schema-id": 0,
-        "snapshots": [
-            {
-                "snapshot-id": 3001,
-                "sequence-number": 1,
-                "first-row-id": 0,
-                "timestamp-ms": 1700000001000,
-                "manifest-list": "file://" + os.path.join(meta_dir, "snap-3001.avro"),
-                "summary": {"operation": "append"},
-            },
-            {
-                "snapshot-id": 3002,
-                "parent-snapshot-id": 3001,
-                "sequence-number": 2,
-                "first-row-id": 25,
-                "timestamp-ms": 1700000002000,
-                "manifest-list": "file://" + os.path.join(meta_dir, "snap-3002.avro"),
-                "summary": {"operation": "overwrite"},
-            },
-        ],
-    }
     iceberg_commit(base, lambda _v, _prev: md)
 
 
@@ -262,19 +175,13 @@ def lineage_files(base: str, snapshot_id: int | None = None) -> list[dict]:
     entry keeps its pinned id (and does not advance the running
     assignment — it was assigned in an earlier snapshot). Refuses
     non-v3 tables loudly (pre-v3 rows have no lineage to materialize)."""
-    meta_dir = os.path.join(base, "metadata")
-    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-        v = int(fh.read().strip())
-    with open(os.path.join(meta_dir, f"v{v}.metadata.json")) as fh:
-        md = json.load(fh)
+    md = _load_metadata(base)
     if md.get("format-version") != 3:
         raise ValueError(
             "row lineage requires an Iceberg format-version 3 table; "
             f"this table is v{md.get('format-version')}"
         )
-    sid = snapshot_id if snapshot_id is not None else md["current-snapshot-id"]
-    snap = next(s for s in md["snapshots"] if s["snapshot-id"] == sid)
-    _, manifests = read_container(_resolve_path(base, snap["manifest-list"]))
+    manifests = _manifests(base, md, snapshot_id)
     out: list[dict] = []
     for m in manifests:
         if m["content"] != 0:

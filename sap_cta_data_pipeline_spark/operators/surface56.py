@@ -36,17 +36,16 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from .iceberg_reader import (
-    _MANIFEST_FILE_SCHEMA,
+    _NATION_ICEBERG_FIELDS,
     _entry,
-    _manifest_file_rec,
-    _write_manifest,
+    _manifest,
+    _new_table,
+    _snapshot,
     _write_parquet_file,
     commit as iceberg_commit,
 )
 from .sources import built
 from .surface54 import iceberg_changelog
-
-from ..functions.avro_codec import write_container
 
 
 def changelog_updates(
@@ -130,14 +129,10 @@ def changelog_updates(
 def _build_rewrite_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
     """Two snapshots: 4001 = nation in one file; 4002 = CoW rewrite of
     that file with keys < 5 renamed '-v2' (raw changelog: 25 D + 25 I)."""
-    import json
-
     import pyarrow.parquet as pq
 
     from ..catalog import table_path
 
-    meta_dir = os.path.join(base, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
     tbl = pq.read_table(table_path(sf_dir, "nation"))
     pdf = (
         tbl.to_pandas()[["n_nationkey", "n_name", "n_regionkey"]]
@@ -150,58 +145,21 @@ def _build_rewrite_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
     schema = tbl.select(["n_nationkey", "n_name", "n_regionkey"]).schema
     _write_parquet_file(schema, pdf, os.path.join(base, "data", "all-v1.parquet"))
     _write_parquet_file(schema, pdf2, os.path.join(base, "data", "all-v2.parquet"))
-    _write_manifest(base, "m-v1.avro", [_entry(base, "all-v1.parquet", 0, len(pdf))])
-    _write_manifest(base, "m-v2.avro", [_entry(base, "all-v2.parquet", 0, len(pdf2))])
-    write_container(
-        os.path.join(meta_dir, "snap-4001.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [_manifest_file_rec(base, "m-v1.avro", 0, 4001, 1)],
+    md = _new_table(base, _NATION_ICEBERG_FIELDS, uuid="rewrite-fixture")
+    m1 = _manifest(
+        base, md, "m-v1.avro", [_entry(base, "all-v1.parquet", 0, len(pdf))],
+        0, 4001, 1,
     )
-    write_container(
-        os.path.join(meta_dir, "snap-4002.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [_manifest_file_rec(base, "m-v2.avro", 0, 4002, 2)],
+    m2 = _manifest(
+        base, md, "m-v2.avro", [_entry(base, "all-v2.parquet", 0, len(pdf2))],
+        0, 4002, 2,
     )
-    md = {
-        "format-version": 2,
-        "table-uuid": "rewrite-fixture",
-        "location": "file://" + base,
-        "last-sequence-number": 2,
-        "current-snapshot-id": 4002,
-        "schemas": [
-            {
-                "schema-id": 0,
-                "fields": [
-                    {"id": 1, "name": "n_nationkey", "required": False,
-                     "type": "int"},
-                    {"id": 2, "name": "n_name", "required": False,
-                     "type": "string"},
-                    {"id": 3, "name": "n_regionkey", "required": False,
-                     "type": "int"},
-                ],
-            }
-        ],
-        "current-schema-id": 0,
-        "snapshots": [
-            {
-                "snapshot-id": 4001,
-                "sequence-number": 1,
-                "timestamp-ms": 1700000001000,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-4001.avro"),
-                "summary": {"operation": "append"},
-            },
-            {
-                "snapshot-id": 4002,
-                "parent-snapshot-id": 4001,
-                "sequence-number": 2,
-                "timestamp-ms": 1700000002000,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-4002.avro"),
-                "summary": {"operation": "overwrite"},
-            },
-        ],
-    }
+    md = _snapshot(
+        base, md, [m1], "append", snap_id=4001, seq=1, ts=1700000001000
+    )
+    md = _snapshot(
+        base, md, [m2], "overwrite", snap_id=4002, seq=2, ts=1700000002000
+    )
     iceberg_commit(base, lambda _v, _prev: md)
 
 

@@ -32,20 +32,20 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import query
 from .iceberg_reader import (
-    _MANIFEST_FILE_SCHEMA,
     _current_schema,
+    _entry,
     _iceberg_fields_of,
     _load_metadata,
-    _manifest_file_rec,
-    _resolve_path,
+    _manifest,
+    _manifests,
+    _next_ids,
+    _snapshot,
     _tip,
     commit as iceberg_commit,
     iceberg_append,
     iceberg_snapshot,
 )
 from .sources import built
-
-from ..functions.avro_codec import read_container, write_container
 
 
 def iceberg_append_evolved(
@@ -56,14 +56,9 @@ def iceberg_append_evolved(
     docstring). Returns the committed metadata version. Like
     iceberg_reader.iceberg_append, a lost commit slot rebuilds the
     snapshot (and re-validates the evolution) on the fresh tip."""
-    from .iceberg_reader import (
-        _MANIFEST_ENTRY_EQ_SCHEMA,
-        _eq_entry,
-    )
     from .lakehouse_interop import _stage_single_parquet
 
-    meta_dir = os.path.join(base, "metadata")
-    _, tip_md = _tip(meta_dir)
+    _, tip_md = _tip(os.path.join(base, "metadata"))
     if tip_md is None:
         raise FileNotFoundError(
             f"no Iceberg table under {base} — evolved append targets an "
@@ -121,30 +116,7 @@ def iceberg_append_evolved(
         # under contention into a conflict
         fields, new_cols, last_col = _evolve_plan(prev)
 
-        seq = prev.get("last-sequence-number", 0) + 1
-        snap_id = 1000 + seq
-        mrel = f"m-{snap_id}.avro"
-        write_container(
-            os.path.join(meta_dir, mrel),
-            _MANIFEST_ENTRY_EQ_SCHEMA,
-            [_eq_entry(base, file_name, 0, n_rows, seq)],
-        )
-        prev_manifests: list[dict] = []
-        if prev.get("current-snapshot-id") is not None:
-            snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
-            _, prev_manifests = read_container(
-                _resolve_path(
-                    base, snaps[prev["current-snapshot-id"]]["manifest-list"]
-                )
-            )
-        mlrel = f"snap-{snap_id}.avro"
-        write_container(
-            os.path.join(meta_dir, mlrel),
-            _MANIFEST_FILE_SCHEMA,
-            prev_manifests + [_manifest_file_rec(base, mrel, 0, snap_id, seq)],
-        )
         md = dict(prev)
-        schema_id = prev.get("current-schema-id", 0)
         if new_cols:
             # the evolved schema is a NEW entry (old snapshots keep
             # addressing their schema-id); current-schema-id moves in
@@ -162,19 +134,12 @@ def iceberg_append_evolved(
             ]
             md["current-schema-id"] = schema_id
             md["last-column-id"] = last_col
-        snap = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": 1700000000000 + seq,
-            "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-            "summary": {"operation": "append"},
-            "schema-id": schema_id,
-        }
-        md["last-sequence-number"] = seq
-        md["last-updated-ms"] = snap["timestamp-ms"]
-        md["current-snapshot-id"] = snap_id
-        md["snapshots"] = list(md.get("snapshots", [])) + [snap]
-        return md
+        seq, snap_id = _next_ids(md)
+        m = _manifest(
+            base, md, f"m-{snap_id}.avro",
+            [_entry(base, file_name, 0, n_rows, seq=seq)], 0, snap_id, seq,
+        )
+        return _snapshot(base, md, _manifests(base, md) + [m], "append")
 
     try:
         return iceberg_commit(base, build)

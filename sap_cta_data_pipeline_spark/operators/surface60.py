@@ -36,10 +36,11 @@ from ..registry import query
 from .delta_dml import delta_merge_into
 from .delta_reader import delta_snapshot
 from .iceberg_reader import (
-    _MANIFEST_FILE_SCHEMA,
+    _NATION_ICEBERG_FIELDS,
     _entry,
-    _manifest_file_rec,
-    _write_manifest,
+    _manifest,
+    _new_table,
+    _snapshot,
     _write_parquet_file,
     commit as iceberg_commit,
 )
@@ -47,8 +48,6 @@ from .lakehouse_interop import delta_append_commit
 from .sources import built
 from .surface54 import iceberg_changelog
 from .surface56 import changelog_updates
-
-from ..functions.avro_codec import write_container
 
 
 def _build_cdc_source_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
@@ -59,8 +58,6 @@ def _build_cdc_source_fixture(spark: SparkSession, sf_dir: str, base: str) -> No
     import pandas as pd
     import pyarrow.parquet as pq
 
-    meta_dir = os.path.join(base, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
     tbl = pq.read_table(table_path(sf_dir, "nation"))
     pdf = (
         tbl.to_pandas()[["n_nationkey", "n_name", "n_regionkey"]]
@@ -79,58 +76,21 @@ def _build_cdc_source_fixture(spark: SparkSession, sf_dir: str, base: str) -> No
     schema = tbl.select(["n_nationkey", "n_name", "n_regionkey"]).schema
     _write_parquet_file(schema, pdf, os.path.join(base, "data", "v1.parquet"))
     _write_parquet_file(schema, pdf2, os.path.join(base, "data", "v2.parquet"))
-    _write_manifest(base, "m-v1.avro", [_entry(base, "v1.parquet", 0, len(pdf))])
-    _write_manifest(base, "m-v2.avro", [_entry(base, "v2.parquet", 0, len(pdf2))])
-    write_container(
-        os.path.join(meta_dir, "snap-5001.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [_manifest_file_rec(base, "m-v1.avro", 0, 5001, 1)],
+    md = _new_table(base, _NATION_ICEBERG_FIELDS, uuid="cdc-apply-fixture")
+    m1 = _manifest(
+        base, md, "m-v1.avro", [_entry(base, "v1.parquet", 0, len(pdf))],
+        0, 5001, 1,
     )
-    write_container(
-        os.path.join(meta_dir, "snap-5002.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [_manifest_file_rec(base, "m-v2.avro", 0, 5002, 2)],
+    m2 = _manifest(
+        base, md, "m-v2.avro", [_entry(base, "v2.parquet", 0, len(pdf2))],
+        0, 5002, 2,
     )
-    md = {
-        "format-version": 2,
-        "table-uuid": "cdc-apply-fixture",
-        "location": "file://" + base,
-        "last-sequence-number": 2,
-        "current-snapshot-id": 5002,
-        "schemas": [
-            {
-                "schema-id": 0,
-                "fields": [
-                    {"id": 1, "name": "n_nationkey", "required": False,
-                     "type": "int"},
-                    {"id": 2, "name": "n_name", "required": False,
-                     "type": "string"},
-                    {"id": 3, "name": "n_regionkey", "required": False,
-                     "type": "int"},
-                ],
-            }
-        ],
-        "current-schema-id": 0,
-        "snapshots": [
-            {
-                "snapshot-id": 5001,
-                "sequence-number": 1,
-                "timestamp-ms": 1700000001000,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-5001.avro"),
-                "summary": {"operation": "append"},
-            },
-            {
-                "snapshot-id": 5002,
-                "parent-snapshot-id": 5001,
-                "sequence-number": 2,
-                "timestamp-ms": 1700000002000,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-5002.avro"),
-                "summary": {"operation": "overwrite"},
-            },
-        ],
-    }
+    md = _snapshot(
+        base, md, [m1], "append", snap_id=5001, seq=1, ts=1700000001000
+    )
+    md = _snapshot(
+        base, md, [m2], "overwrite", snap_id=5002, seq=2, ts=1700000002000
+    )
     iceberg_commit(base, lambda _v, _prev: md)
 
 

@@ -37,25 +37,22 @@ from pyspark.sql import DataFrame, SparkSession
 from ..catalog import table_path
 from ..registry import query
 from .iceberg_reader import (
-    _MANIFEST_FILE_SCHEMA,
+    _NATION_ICEBERG_FIELDS,
     _entry,
-    _manifest_file_rec,
-    _write_manifest,
+    _manifest,
+    _new_table,
+    _snapshot,
     _write_parquet_file,
     commit as iceberg_commit,
 )
 from .sources import built
 from .surface54 import iceberg_changelog
 
-from ..functions.avro_codec import write_container
-
 
 def _build_net_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
     import pandas as pd
     import pyarrow.parquet as pq
 
-    meta_dir = os.path.join(base, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
     tbl = pq.read_table(table_path(sf_dir, "nation"))
     pdf = (
         tbl.to_pandas()[["n_nationkey", "n_name", "n_regionkey"]]
@@ -95,80 +92,29 @@ def _build_net_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         ),
         os.path.join(base, "data", "del.parquet"),
     )
-    _write_manifest(base, "m-base.avro", [_entry(base, "base.parquet", 0, len(pdf))])
-    _write_manifest(base, "m-new.avro", [_entry(base, "new.parquet", 0, len(new))])
-    _write_manifest(base, "m-del.avro", [_entry(base, "del.parquet", 1, 3)])
-    write_container(
-        os.path.join(meta_dir, "snap-6001.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [_manifest_file_rec(base, "m-base.avro", 0, 6001, 1)],
+    md = _new_table(base, _NATION_ICEBERG_FIELDS, uuid="net-window-fixture")
+    m_base = _manifest(
+        base, md, "m-base.avro", [_entry(base, "base.parquet", 0, len(pdf))],
+        0, 6001, 1,
     )
-    write_container(
-        os.path.join(meta_dir, "snap-6002.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [
-            _manifest_file_rec(base, "m-base.avro", 0, 6001, 1),
-            _manifest_file_rec(base, "m-new.avro", 0, 6002, 2),
-        ],
+    m_new = _manifest(
+        base, md, "m-new.avro", [_entry(base, "new.parquet", 0, len(new))],
+        0, 6002, 2,
     )
-    write_container(
-        os.path.join(meta_dir, "snap-6003.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [
-            _manifest_file_rec(base, "m-base.avro", 0, 6001, 1),
-            _manifest_file_rec(base, "m-new.avro", 0, 6002, 2),
-            _manifest_file_rec(base, "m-del.avro", 1, 6003, 3),
-        ],
+    m_del = _manifest(
+        base, md, "m-del.avro", [_entry(base, "del.parquet", 1, 3)], 1, 6003, 3
     )
-    md = {
-        "format-version": 2,
-        "table-uuid": "net-window-fixture",
-        "location": "file://" + base,
-        "last-sequence-number": 3,
-        "current-snapshot-id": 6003,
-        "schemas": [
-            {
-                "schema-id": 0,
-                "fields": [
-                    {"id": 1, "name": "n_nationkey", "required": False,
-                     "type": "int"},
-                    {"id": 2, "name": "n_name", "required": False,
-                     "type": "string"},
-                    {"id": 3, "name": "n_regionkey", "required": False,
-                     "type": "int"},
-                ],
-            }
-        ],
-        "current-schema-id": 0,
-        "snapshots": [
-            {
-                "snapshot-id": 6001,
-                "sequence-number": 1,
-                "timestamp-ms": 1700000001000,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-6001.avro"),
-                "summary": {"operation": "append"},
-            },
-            {
-                "snapshot-id": 6002,
-                "parent-snapshot-id": 6001,
-                "sequence-number": 2,
-                "timestamp-ms": 1700000002000,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-6002.avro"),
-                "summary": {"operation": "append"},
-            },
-            {
-                "snapshot-id": 6003,
-                "parent-snapshot-id": 6002,
-                "sequence-number": 3,
-                "timestamp-ms": 1700000003000,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-6003.avro"),
-                "summary": {"operation": "delete"},
-            },
-        ],
-    }
+    md = _snapshot(
+        base, md, [m_base], "append", snap_id=6001, seq=1, ts=1700000001000
+    )
+    md = _snapshot(
+        base, md, [m_base, m_new], "append", snap_id=6002, seq=2,
+        ts=1700000002000,
+    )
+    md = _snapshot(
+        base, md, [m_base, m_new, m_del], "delete", snap_id=6003, seq=3,
+        ts=1700000003000,
+    )
     iceberg_commit(base, lambda _v, _prev: md)
 
 

@@ -74,13 +74,14 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import query
 from .iceberg_reader import (
-    _MANIFEST_ENTRY_EQ_SCHEMA,
-    _MANIFEST_FILE_SCHEMA,
     _current_schema,
-    _eq_entry,
+    _entry,
     _iceberg_fields_of,
-    _manifest_file_rec,
+    _manifest,
+    _manifests,
+    _next_ids,
     _resolve_path,
+    _snapshot,
     _tip,
     commit as iceberg_commit,
     iceberg_append,
@@ -479,7 +480,7 @@ def iceberg_merge_into(
     md_mutate = None
     if new_fields:
 
-        def md_mutate(md: dict) -> int:
+        def md_mutate(md: dict) -> None:
             # the evolved schema is a NEW entry (old snapshots keep
             # addressing their schema-id); current-schema-id moves in
             # the SAME metadata swap as the merge snapshot (one atomic
@@ -499,69 +500,12 @@ def iceberg_merge_into(
             ]
             md["current-schema-id"] = schema_id
             md["last-column-id"] = plan["evolved_last_col"]
-            return schema_id
 
     new_v = _commit_cow_swap(
         base, plan["meta"], plan["read_version"], removed_paths, new_files,
         tag="mrg", md_mutate=md_mutate,
     )
     return new_v, n_rewritten, n_insert
-
-
-_AVRO_OF_ICEBERG = {
-    "boolean": "boolean",
-    "int": "int",
-    "long": "long",
-    "float": "float",
-    "double": "double",
-    "string": "string",
-    "date": "int",  # days since epoch, per the spec's avro mapping
-}
-
-
-def _part_entry_schema(meta: dict) -> dict:
-    """Manifest-entry Avro schema for NEW data files of an identity-
-    partitioned table: `_MANIFEST_ENTRY_EQ_SCHEMA` with the partition
-    record's fields filled from the default spec (field-id from the
-    spec, Avro type from the table schema's source column)."""
-    import copy
-
-    from ..functions.transforms import result_iceberg_type
-
-    _part_cols, spec, pfs = _partition_info(meta, "_part_entry_schema")
-    type_of = {f["id"]: f["type"] for f in _current_schema(meta)}
-    pfields = []
-    for f, pf in zip(spec.get("fields", []), pfs):
-        src_t = type_of[f["source-id"]]
-        t = (
-            result_iceberg_type(pf["transform"], src_t)
-            if isinstance(src_t, str)
-            else src_t
-        )
-        # timestamp/date sources under temporal transforms resolve to
-        # "int" regardless of source type; identity keeps the source
-        if not isinstance(t, str) or t not in _AVRO_OF_ICEBERG:
-            raise ValueError(
-                f"partition field {pf['pname']!r} "
-                f"({pf['transform']} over type {src_t!r}) has no claimed "
-                "Avro manifest mapping"
-            )
-        pfields.append(
-            {
-                "name": pf["pname"],
-                "type": ["null", _AVRO_OF_ICEBERG[t]],
-                "default": None,
-                "field-id": f["field-id"],
-            }
-        )
-    schema = copy.deepcopy(_MANIFEST_ENTRY_EQ_SCHEMA)
-    for df_field in schema["fields"]:
-        if df_field["name"] != "data_file":
-            continue
-        for inner in df_field["type"]["fields"]:
-            if inner["name"] == "partition":
-                inner["type"]["fields"] = pfields
-    return schema
 
 
 def _commit_cow_swap(
@@ -589,20 +533,20 @@ def _commit_cow_swap(
     new_files = [
         (t[0], t[1], t[2] if len(t) > 2 else {}) for t in new_files
     ]
-    meta_dir = os.path.join(base, "metadata")
 
     # runs only while the tip is still cur_v: the rewrite was planned
     # against cur_v's live set, so any commit landing since aborts it
     # (the matched-file set may be stale) instead of losing an update
     def build(_v: int, _tip_md: dict) -> dict:
-        seq = prev.get("last-sequence-number", 0) + 1
-        snap_id = 1000 + seq
-        snaps = {s["snapshot-id"]: s for s in prev["snapshots"]}
-        _, prev_manifests = read_container(
-            _resolve_path(base, snaps[prev["current-snapshot-id"]]["manifest-list"])
-        )
+        md = dict(prev)
+        if md_mutate is not None:
+            # writer-side evolution riding the same swap (MERGE WITH SCHEMA
+            # EVOLUTION): the mutator appends the evolved schema entry and
+            # moves current-schema-id, which the new snapshot records
+            md_mutate(md)
+        seq, snap_id = _next_ids(md)
         out_manifests: list[dict] = []
-        for mi, m in enumerate(prev_manifests):
+        for mi, m in enumerate(_manifests(base, md)):
             mschema, entries = read_container(
                 _resolve_path(base, m["manifest_path"])
             )
@@ -627,55 +571,24 @@ def _commit_cow_swap(
                 path = _resolve_path(base, e["data_file"]["file_path"])
                 e2["status"] = 2 if path in removed_paths else 0
                 new_entries.append(e2)
-            rrel = f"m-{tag}-{snap_id}-rw{mi}.avro"
-            rpath = os.path.join(meta_dir, rrel)
+            rpath = os.path.join(base, "metadata", f"m-{tag}-{snap_id}-rw{mi}.avro")
             write_container(rpath, mschema, new_entries)
             m2 = dict(m)
             m2["manifest_path"] = "file://" + rpath
             m2["manifest_length"] = os.path.getsize(rpath)
             out_manifests.append(m2)
         if new_files:
-            mrel = f"m-{tag}-{snap_id}.avro"
-            partitioned = any(p for _rel, _n, p in new_files)
-            entries = []
-            for rel, n, p in new_files:
-                e = _eq_entry(base, rel, 0, n, seq)
-                e["data_file"]["partition"] = p
-                entries.append(e)
-            write_container(
-                os.path.join(meta_dir, mrel),
-                _part_entry_schema(prev) if partitioned else _MANIFEST_ENTRY_EQ_SCHEMA,
-                entries,
+            out_manifests.append(
+                _manifest(
+                    base, md, f"m-{tag}-{snap_id}.avro",
+                    [
+                        _entry(base, rel, 0, n, seq=seq, partition=p)
+                        for rel, n, p in new_files
+                    ],
+                    0, snap_id, seq,
+                )
             )
-            mrec = _manifest_file_rec(base, mrel, 0, snap_id, seq)
-            mrec["partition_spec_id"] = prev.get("default-spec-id", 0)
-            out_manifests.append(mrec)
-        mlrel = f"snap-{snap_id}.avro"
-        write_container(
-            os.path.join(meta_dir, mlrel), _MANIFEST_FILE_SCHEMA, out_manifests
-        )
-        md = dict(prev)
-        schema_id = prev.get("current-schema-id", 0)
-        if md_mutate is not None:
-            # writer-side evolution riding the same swap (MERGE WITH SCHEMA
-            # EVOLUTION): the mutator appends the evolved schema entry and
-            # returns the id the new snapshot addresses
-            schema_id = md_mutate(md)
-        snap = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": 1700000000000 + seq,
-            "manifest-list": "file://" + os.path.join(meta_dir, mlrel),
-            "summary": {"operation": "overwrite"},
-            "schema-id": schema_id,
-        }
-        if "parent-snapshot-id" not in snap and prev.get("current-snapshot-id"):
-            snap["parent-snapshot-id"] = prev["current-snapshot-id"]
-        md["last-sequence-number"] = seq
-        md["last-updated-ms"] = snap["timestamp-ms"]
-        md["current-snapshot-id"] = snap_id
-        md["snapshots"] = list(md.get("snapshots", [])) + [snap]
-        return md
+        return _snapshot(base, md, out_manifests, "overwrite")
 
     try:
         return iceberg_commit(base, build, cur_v)

@@ -44,30 +44,32 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.avro_codec import read_container
 from ..registry import query
-from .iceberg_reader import _load_metadata, _resolve_path, commit as iceberg_commit
+from .iceberg_reader import (
+    _NATION_ICEBERG_FIELDS,
+    _entry,
+    _load_metadata,
+    _manifest,
+    _manifests,
+    _new_table,
+    _snapshot,
+    commit as iceberg_commit,
+)
 from .sources import built
 from .surface51 import (
-    _LIN_ENTRY_SCHEMA,
-    _LIN_MANIFEST_FILE_SCHEMA,
     _LAST_SEQ,
     _ROW_ID,
-    _entry,
-    _manifest_rec,
     _write_lineage_parquet,
     lineage_files,
 )
 from .surface56 import changelog_updates
 
-from ..functions.avro_codec import write_container
-
 
 def _assert_no_delete_manifests(base: str, sid: int) -> None:
-    md = _load_metadata(base)
-    snap = next(s for s in md["snapshots"] if s["snapshot-id"] == sid)
-    _, manifests = read_container(_resolve_path(base, snap["manifest-list"]))
-    if any(m.get("content", 0) != 0 for m in manifests):
+    if any(
+        m.get("content", 0) != 0
+        for m in _manifests(base, _load_metadata(base), sid)
+    ):
         raise NotImplementedError(
             "lineage changelog over DELETE manifests is not claimed — "
             "recovering row ids for positionally-deleted rows needs the "
@@ -204,8 +206,6 @@ def _build_rename_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
 
     from ..catalog import table_path
 
-    meta_dir = os.path.join(base, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
     pdf = (
         pq.read_table(table_path(sf_dir, "nation"))
         .to_pandas()[["n_nationkey", "n_name", "n_regionkey"]]
@@ -240,57 +240,40 @@ def _build_rename_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
     v2[_LAST_SEQ] = v2[_LAST_SEQ].astype("Int64")
     _write_lineage_parquet(v2, os.path.join(base, "data", "ln-v2.parquet"))
 
-    write_container(
-        os.path.join(meta_dir, "m-ln-1.avro"),
-        _LIN_ENTRY_SCHEMA,
-        [_entry(base, "ln-v1.parquet", len(pdf), None)],
+    md = _new_table(
+        base,
+        _NATION_ICEBERG_FIELDS,
+        uuid="lineage-rename-fixture",
+        format_version=3,
     )
-    write_container(
-        os.path.join(meta_dir, "m-ln-2.avro"),
-        _LIN_ENTRY_SCHEMA,
-        [_entry(base, "ln-v2.parquet", len(v2), None)],
+    m1 = _manifest(
+        base, md, "m-ln-1.avro", [_entry(base, "ln-v1.parquet", 0, len(pdf))],
+        0, 7001, 1,
     )
-    write_container(
-        os.path.join(meta_dir, "snap-7001.avro"),
-        _LIN_MANIFEST_FILE_SCHEMA,
-        [_manifest_rec(base, "m-ln-1.avro", 7001, 1, 0)],
+    m2 = _manifest(
+        base, md, "m-ln-2.avro", [_entry(base, "ln-v2.parquet", 0, len(v2))],
+        0, 7002, 2,
     )
-    write_container(
-        os.path.join(meta_dir, "snap-7002.avro"),
-        _LIN_MANIFEST_FILE_SCHEMA,
-        [_manifest_rec(base, "m-ln-2.avro", 7002, 2, 25)],
+    md = _snapshot(
+        base,
+        md,
+        [{**m1, "first_row_id": 0}],
+        "append",
+        snap_id=7001,
+        seq=1,
+        ts=1700000001000,
+        **{"first-row-id": 0},
     )
-    md = {
-        "format-version": 3,
-        "table-uuid": "lineage-rename-fixture",
-        "location": "file://" + base,
-        "last-sequence-number": 2,
-        "next-row-id": 51,
-        "current-snapshot-id": 7002,
-        "schemas": [{"schema-id": 0, "fields": []}],
-        "current-schema-id": 0,
-        "snapshots": [
-            {
-                "snapshot-id": 7001,
-                "sequence-number": 1,
-                "first-row-id": 0,
-                "timestamp-ms": 1700000001000,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-7001.avro"),
-                "summary": {"operation": "append"},
-            },
-            {
-                "snapshot-id": 7002,
-                "parent-snapshot-id": 7001,
-                "sequence-number": 2,
-                "first-row-id": 25,
-                "timestamp-ms": 1700000002000,
-                "manifest-list": "file://"
-                + os.path.join(meta_dir, "snap-7002.avro"),
-                "summary": {"operation": "overwrite"},
-            },
-        ],
-    }
+    md = _snapshot(
+        base,
+        {**md, "next-row-id": 51},
+        [{**m2, "first_row_id": 25}],
+        "overwrite",
+        snap_id=7002,
+        seq=2,
+        ts=1700000002000,
+        **{"first-row-id": 25},
+    )
     iceberg_commit(base, lambda _v, _prev: md)
 
 

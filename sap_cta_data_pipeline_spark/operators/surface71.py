@@ -48,14 +48,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.avro_codec import write_container
 from ..functions.transforms import transform_expr, transform_value
 from ..registry import query
 from .iceberg_reader import (
-    _MANIFEST_FILE_SCHEMA,
-    _eq_entry,
+    _entry,
     _iceberg_fields_of,
-    _manifest_file_rec,
+    _manifest,
+    _new_table,
+    _snapshot,
     iceberg_snapshot,
     iceberg_state,
     commit as iceberg_commit,
@@ -78,8 +78,6 @@ def write_transform_partitioned(
     stays, exactly like the spec's data layout. Each staged file's
     manifest entry carries its typed partition record parsed back from
     the directory value."""
-    from .surface63 import _part_entry_schema
-
     dtype = {f.name: f.dataType for f in df.schema.fields}
     pnames = [pf["pname"] for pf in pfields]
     staged = os.path.join(base, "_stage")
@@ -97,47 +95,20 @@ def write_transform_partitioned(
     )
     fields = _iceberg_fields_of(df.schema)
     fid_of = {f["name"]: f["id"] for f in fields}
-    md = {
-        "format-version": 2,
-        "table-uuid": "0f1e2d3c-0000-4000-8000-0000000071aa",
-        "location": "file://" + base,
-        "last-sequence-number": 1,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": len(fields),
-        "current-schema-id": 0,
-        "schemas": [{"type": "struct", "schema-id": 0, "fields": fields}],
-        "default-spec-id": 0,
-        "partition-specs": [
+    md = _new_table(
+        base,
+        fields,
+        uuid="0f1e2d3c-0000-4000-8000-0000000071aa",
+        partition_fields=[
             {
-                "spec-id": 0,
-                "fields": [
-                    {
-                        "name": pf["pname"],
-                        "transform": pf["transform"],
-                        "source-id": fid_of[pf["src"]],
-                        "field-id": 1000 + i,
-                    }
-                    for i, pf in enumerate(pfields)
-                ],
+                "name": pf["pname"],
+                "transform": pf["transform"],
+                "source-id": fid_of[pf["src"]],
+                "field-id": 1000 + i,
             }
+            for i, pf in enumerate(pfields)
         ],
-        "last-partition-id": 1000 + len(pfields) - 1,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {},
-        "current-snapshot-id": 3001,
-        "snapshots": [
-            {
-                "snapshot-id": 3001,
-                "sequence-number": 1,
-                "timestamp-ms": 1700000000000,
-                "manifest-list": "file://"
-                + os.path.join(base, "metadata", "snap-3001.avro"),
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-            }
-        ],
-    }
+    )
     import pyarrow.parquet as pq
 
     os.makedirs(os.path.join(base, "data"), exist_ok=True)
@@ -170,24 +141,12 @@ def write_transform_partitioned(
             tag = "-".join(str(rec[p]) for p in pnames)
             rel = f"p-{tag}-{i}.parquet"
             shutil.move(os.path.join(leaf, f), os.path.join(base, "data", rel))
-            e = _eq_entry(
-                base, rel, 0,
-                pq.ParquetFile(os.path.join(base, "data", rel)).metadata.num_rows,
-                1,
-            )
-            e["data_file"]["partition"] = rec
-            entries.append(e)
+            n = pq.ParquetFile(os.path.join(base, "data", rel)).metadata.num_rows
+            entries.append(_entry(base, rel, 0, n, seq=1, partition=rec))
     shutil.rmtree(staged)
-    os.makedirs(os.path.join(base, "metadata"), exist_ok=True)
-    write_container(
-        os.path.join(base, "metadata", "m1-data.avro"),
-        _part_entry_schema(md),
-        entries,
-    )
-    write_container(
-        os.path.join(base, "metadata", "snap-3001.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [_manifest_file_rec(base, "m1-data.avro", 0, 3001, 1)],
+    m = _manifest(base, md, "m1-data.avro", entries, 0, 3001, 1)
+    md = _snapshot(
+        base, md, [m], "append", snap_id=3001, seq=1, ts=1700000000000
     )
     iceberg_commit(base, lambda _v, _prev: md)
 

@@ -172,3 +172,29 @@ def test_commit_rule_lives_only_in_the_format_readers():
         if rx.search(py.read_text())
     )
     assert not found, f"commit logic outside the format readers: {found}"
+
+
+def test_snapshot_writer_lives_only_in_iceberg_reader():
+    """Every Iceberg writer and fixture builder assembles what it commits
+    through ``iceberg_reader``'s snapshot writer (``_new_table``,
+    ``_entry``, ``_manifest``, ``_manifests``, ``_snapshot``) over its
+    one manifest schema. No other package module writes a snapshot
+    record, defines a manifest Avro schema, or starts a table-metadata
+    header of its own."""
+    pkg = REPO / "sap_cta_data_pipeline_spark"
+    owner = pkg / "operators" / "iceberg_reader.py"
+    rules = {
+        "snapshot record": re.compile(r"[\"']manifest-list[\"']\s*:"),
+        "manifest schema": re.compile(
+            r"[\"']name[\"']\s*:\s*[\"']manifest_(?:entry|file)[\"']"
+        ),
+        "metadata header": re.compile(r"[\"']format-version[\"']\s*:\s*\d"),
+    }
+    found = sorted(
+        f"{py.relative_to(pkg)}: {what}"
+        for py in pkg.rglob("*.py")
+        if py != owner
+        for what, rx in rules.items()
+        if rx.search(py.read_text())
+    )
+    assert not found, f"Iceberg snapshot writing outside iceberg_reader: {found}"

@@ -23,8 +23,8 @@ from sap_cta_data_pipeline_spark.functions.avro_codec import (
     write_container,
 )
 from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
-    _MANIFEST_ENTRY_SCHEMA,
     _build_iceberg_fixture,
+    _entry_schema,
     iceberg_snapshot,
     iceberg_state,
 )
@@ -181,12 +181,12 @@ def test_eq_delete_without_ids_refused(spark, ibase, tmp_path):
     clone = str(tmp_path / "ib_eq")
     shutil.copytree(ibase, clone)
     _repoint(clone, ibase)
-    # rewrite the delete manifest's entry to content=2 (no equality_ids
-    # field exists in this entry schema -> decoded as absent)
+    # rewrite the delete manifest's entry to content=2 (its equality_ids
+    # stays null)
     mpath = os.path.join(clone, "metadata", "m2-deletes.avro")
     schema, entries = read_container(mpath)
     entries[0]["data_file"]["content"] = 2
-    write_container(mpath, _MANIFEST_ENTRY_SCHEMA, entries)
+    write_container(mpath, _entry_schema({}), entries)
     with pytest.raises(ValueError, match="no equality_ids"):
         iceberg_state(clone)
 
@@ -202,7 +202,7 @@ def test_deleted_manifest_entry_excluded(spark, ibase, tmp_path):
     for e in entries:
         if e["data_file"]["file_path"].endswith("part-lo.parquet"):
             e["status"] = 2
-    write_container(mpath, _MANIFEST_ENTRY_SCHEMA, entries)
+    write_container(mpath, _entry_schema({}), entries)
     _, data, _, _ = iceberg_state(clone, snapshot_id=1001)
     assert [os.path.basename(d["path"]) for d in data] == ["part-hi.parquet"]
 

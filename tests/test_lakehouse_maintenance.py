@@ -75,6 +75,34 @@ def test_zorder_layout_stats_and_time_travel(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, old.collect())) == before
 
 
+@pytest.mark.parametrize("kind", ["compact", "zorder"])
+def test_second_optimize_keeps_older_versions(spark, sf_dir, tmp_path, kind):
+    """Each OPTIMIZE stages fresh file names: a later rewrite never
+    overwrites a file an older version still references, so time travel
+    to the versions before it keeps their own rows."""
+    from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
+        delta_delete_where,
+        delta_optimize_compact,
+    )
+
+    base = _build_sink_fixture(spark, sf_dir)
+    clone = str(tmp_path / kind)
+    shutil.copytree(base, clone)
+    os.remove(os.path.join(clone, "_FIXTURE_READY"))
+
+    def optimize() -> int:
+        if kind == "compact":
+            return delta_optimize_compact(spark, clone)
+        return delta_optimize_zorder(spark, clone, "n_nationkey", "n_regionkey")
+
+    v_opt = optimize()
+    v_del, _ = delta_delete_where(spark, clone, "n_nationkey < 5")
+    optimize()
+    assert delta_snapshot(spark, clone, version=v_opt).count() == 25
+    assert delta_snapshot(spark, clone, version=v_del).count() == 20
+    assert delta_snapshot(spark, clone).count() == 20
+
+
 def test_expire_snapshots_and_orphan_reclaim(spark, sf_dir, tmp_path):
     from sap_cta_data_pipeline_spark.operators.surface23 import (
         iceberg_referenced_files,

@@ -9,13 +9,17 @@ import os
 
 import pytest
 
-from sap_cta_data_pipeline_spark.functions.avro_codec import write_container
-from sap_cta_data_pipeline_spark.operators.surface51 import (
-    _LIN_ENTRY_SCHEMA,
-    _LIN_MANIFEST_FILE_SCHEMA,
-    _build_lineage_fixture,
+from sap_cta_data_pipeline_spark.functions.avro_codec import (
+    read_container,
+    write_container,
+)
+from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
+    _MANIFEST_FILE_SCHEMA,
     _entry,
-    _manifest_rec,
+    _manifest,
+)
+from sap_cta_data_pipeline_spark.operators.surface51 import (
+    _build_lineage_fixture,
     lineage_files,
     read_with_lineage,
 )
@@ -56,26 +60,29 @@ def test_append_inherits_from_next_row_id(spark, tmp_path):
     b = pd.DataFrame({"n_nationkey": [102], "n_name": ["CC"], "n_regionkey": [2]})
     _write_lineage_parquet(a, os.path.join(base, "data", "app-a.parquet"))
     _write_lineage_parquet(b, os.path.join(base, "data", "app-b.parquet"))
-    write_container(
-        os.path.join(meta_dir, "m-app.avro"),
-        _LIN_ENTRY_SCHEMA,
-        [
-            _entry(base, "app-a.parquet", 2, None),
-            _entry(base, "app-b.parquet", 1, None),
-        ],
-    )
     with open(os.path.join(meta_dir, "v1.metadata.json")) as fh:
         md = json.load(fh)
     assert md["next-row-id"] == 37
+    app = _manifest(
+        base,
+        md,
+        "m-app.avro",
+        [
+            _entry(base, "app-a.parquet", 0, 2),
+            _entry(base, "app-b.parquet", 0, 1),
+        ],
+        0,
+        3003,
+        3,
+    )
     old_list = md["snapshots"][-1]["manifest-list"]
-    from sap_cta_data_pipeline_spark.functions.avro_codec import read_container
     from sap_cta_data_pipeline_spark.operators.iceberg_reader import _resolve_path
 
     _, prev = read_container(_resolve_path(base, old_list))
     write_container(
         os.path.join(meta_dir, "snap-3003.avro"),
-        _LIN_MANIFEST_FILE_SCHEMA,
-        list(prev) + [_manifest_rec(base, "m-app.avro", 3003, 3, 37)],
+        _MANIFEST_FILE_SCHEMA,
+        list(prev) + [{**app, "first_row_id": 37}],
     )
     md["snapshots"].append(
         {
@@ -144,10 +151,10 @@ def test_null_lineage_without_manifest_base_refuses(spark, tmp_path):
     meta_dir = os.path.join(base, "metadata")
     # corrupt: manifest list entry loses its first_row_id while holding
     # null-lineage entries
+    ml = os.path.join(meta_dir, "snap-3001.avro")
+    _, recs = read_container(ml)
     write_container(
-        os.path.join(meta_dir, "snap-3001.avro"),
-        _LIN_MANIFEST_FILE_SCHEMA,
-        [_manifest_rec(base, "m-lin-1.avro", 3001, 1, None)],
+        ml, _MANIFEST_FILE_SCHEMA, [{**r, "first_row_id": None} for r in recs]
     )
     with pytest.raises(ValueError, match="first_row_id"):
         lineage_files(base, 3001)

@@ -84,8 +84,7 @@ def _three_file_fixture(spark, tmp_path, del_seq=2):
     from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
         _MANIFEST_FILE_SCHEMA,
         _entry,
-        _manifest_file_rec,
-        _write_manifest,
+        _manifest,
     )
 
     base = str(tmp_path / "iceberg_three")
@@ -117,31 +116,31 @@ def _three_file_fixture(spark, tmp_path, del_seq=2):
         ),
         os.path.join(data_dir, "d1.parquet"),
     )
-    _write_manifest(
+    unpartitioned: dict = {}
+    m12 = _manifest(
         base,
+        unpartitioned,
         "m-12.avro",
         [_entry(base, "f1.parquet", 0, 5), _entry(base, "f2.parquet", 0, 5)],
+        0,
+        3001,
+        1,
     )
-    _write_manifest(base, "m-3.avro", [_entry(base, "f3.parquet", 0, 15)])
-    _write_manifest(
-        base, "m-del.avro", [_entry(base, "d1.parquet", 1, 2)]
+    m3 = _manifest(
+        base, unpartitioned, "m-3.avro", [_entry(base, "f3.parquet", 0, 15)],
+        0, 3001, 3,
+    )
+    m_del = _manifest(
+        base, unpartitioned, "m-del.avro", [_entry(base, "d1.parquet", 1, 2)],
+        1, 3002, del_seq,
     )
     write_container(
-        os.path.join(meta_dir, "snap-3001.avro"),
-        _MANIFEST_FILE_SCHEMA,
-        [
-            _manifest_file_rec(base, "m-12.avro", 0, 3001, 1),
-            _manifest_file_rec(base, "m-3.avro", 0, 3001, 3),
-        ],
+        os.path.join(meta_dir, "snap-3001.avro"), _MANIFEST_FILE_SCHEMA, [m12, m3]
     )
     write_container(
         os.path.join(meta_dir, "snap-3002.avro"),
         _MANIFEST_FILE_SCHEMA,
-        [
-            _manifest_file_rec(base, "m-12.avro", 0, 3001, 1),
-            _manifest_file_rec(base, "m-3.avro", 0, 3001, 3),
-            _manifest_file_rec(base, "m-del.avro", 1, 3002, del_seq),
-        ],
+        [m12, m3, m_del],
     )
     md = {
         "format-version": 2,

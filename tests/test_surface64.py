@@ -103,15 +103,15 @@ def test_delete_manifest_window_refuses(spark, tmp_path):
         read_container,
         write_container,
     )
-    from sap_cta_data_pipeline_spark.operators.surface51 import (
-        _LIN_MANIFEST_FILE_SCHEMA,
+    from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
+        _MANIFEST_FILE_SCHEMA,
     )
 
     ml = os.path.join(base, "metadata", "snap-7002.avro")
     schema, recs = read_container(ml)
     fake = dict(recs[0])
     fake["content"] = 1
-    write_container(ml, _LIN_MANIFEST_FILE_SCHEMA, recs + [fake])
+    write_container(ml, _MANIFEST_FILE_SCHEMA, recs + [fake])
     # point the metadata at the grafted copy (location fields carry
     # absolute paths; rewrite them)
     md_path = os.path.join(base, "metadata", "v1.metadata.json")
