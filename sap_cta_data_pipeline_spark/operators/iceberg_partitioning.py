@@ -260,9 +260,10 @@ def scan_iceberg_partition_evolution(
     history: old files keep old specs, planning is per-entry.
 
     Scale: pruning remains O(manifest entries) driver-side; the only
-    extra cost of evolution is scanning unprunable old-spec files until
-    they age out via compaction (iceberg_rewrite_compact rewrites them
-    under the current spec — the documented migration path)."""
+    extra cost of evolution is scanning unprunable old-spec files.
+    iceberg_rewrite_compact folds the table into one file with an empty
+    partition record, which keeps every row readable but is never
+    pruned either."""
     base = _evo_fixture(spark, sf_dir)
     return (
         iceberg_snapshot(spark, base, partition_filter={"n_regionkey": 2})

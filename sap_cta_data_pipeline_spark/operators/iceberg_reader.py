@@ -836,7 +836,9 @@ def _entry_schema(md: dict, spec_id: int | None = None) -> dict:
     so an entry sets only the fields it has. The partition record holds
     one nullable field per field of partition spec ``spec_id`` (default:
     the table's default spec), typed as the transform's result over its
-    source column."""
+    source column; it declares no default, so an entry must carry every
+    one of them. ``md`` without partition specs (``{}``) gives the empty
+    partition record."""
     from ..functions.transforms import result_iceberg_type
 
     sid = md.get("default-spec-id", 0) if spec_id is None else spec_id
@@ -855,7 +857,13 @@ def _entry_schema(md: dict, spec_id: int | None = None) -> dict:
                     f"partition field {pf['name']!r} ({pf.get('transform')} "
                     f"over type {src_t!r}) has no claimed Avro manifest mapping"
                 )
-            part.append(_opt(pf["name"], _AVRO_OF_ICEBERG[t], pf["field-id"]))
+            part.append(
+                {
+                    "name": pf["name"],
+                    "type": ["null", _AVRO_OF_ICEBERG[t]],
+                    "field-id": pf["field-id"],
+                }
+            )
     data_file = {
         "type": "record",
         "name": "r2",
@@ -957,9 +965,15 @@ def _manifest(
     """Write the manifest ``metadata/<rel>`` of ``entries`` under
     ``_entry_schema(md, spec_id)``; returns its manifest-list record
     (``content`` 0 = data, 1 = deletes; added by ``snap_id`` at
-    sequence ``seq``)."""
+    sequence ``seq``). Entries that carry no partition values are
+    written with an empty partition record: a partition filter can never
+    prune such a file, as it cannot prune one written under an older,
+    unpartitioned spec."""
     path = os.path.join(base, "metadata", rel)
-    write_container(path, _entry_schema(md, spec_id), entries)
+    partitioned = any(e["data_file"]["partition"] for e in entries)
+    write_container(
+        path, _entry_schema(md if partitioned else {}, spec_id), entries
+    )
     return {
         "manifest_path": "file://" + path,
         "manifest_length": os.path.getsize(path),
@@ -1002,14 +1016,14 @@ def _snapshot(
 ) -> dict:
     """Write the manifest list ``metadata/snap-<id>.avro`` of
     ``manifests`` and return a copy of ``md`` with the new snapshot
-    current. Defaults: ``seq`` = last sequence number + 1, ``snap_id`` =
-    1000 + seq, ``ts`` = 1700000000000 + seq. The snapshot records its
+    current. Defaults: ``seq`` and ``snap_id`` from ``_next_ids(md)``,
+    ``ts`` = 1700000000000 + seq. The snapshot records its
     ``parent-snapshot-id`` (the current snapshot, when there is one) and
     the ``schema-id`` it was written with (``current-schema-id``);
     ``fields`` override any snapshot field."""
-    if seq is None:
-        seq = _next_ids(md)[0]
-    snap_id = 1000 + seq if snap_id is None else snap_id
+    next_seq, next_id = _next_ids(md)
+    seq = next_seq if seq is None else seq
+    snap_id = next_id if snap_id is None else snap_id
     ts = 1700000000000 + seq if ts is None else ts
     ml = os.path.join(base, "metadata", f"snap-{snap_id}.avro")
     write_container(ml, _MANIFEST_FILE_SCHEMA, manifests)
@@ -1043,8 +1057,9 @@ def _new_table(
     **extra,
 ) -> dict:
     """Metadata of an empty table at ``base``: schema 0 of ``fields``,
-    partition spec 0 of ``partition_fields``, no snapshot yet. ``extra``
-    sets or overrides any top-level field."""
+    partition spec 0 of ``partition_fields``, no snapshot yet.
+    ``format_version`` is the one way to set the format version; ``extra``
+    sets or overrides any other top-level field."""
     return {
         "format-version": format_version,
         "table-uuid": uuid,

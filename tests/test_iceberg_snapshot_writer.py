@@ -11,6 +11,9 @@ from pyspark.sql import functions as F
 
 from sap_cta_data_pipeline_spark.catalog import load_table
 from sap_cta_data_pipeline_spark.operators import iceberg_reader as ir
+from sap_cta_data_pipeline_spark.operators.iceberg_partitioning import (
+    _build_evo_fixture,
+)
 from sap_cta_data_pipeline_spark.operators.surface21 import (
     _build_stats_fixture,
     iceberg_stats_plan,
@@ -93,3 +96,38 @@ def test_stats_plan_reads_the_current_metadata(spark, sf_dir, tmp_path):
     assert [os.path.basename(p) for p in plan] == [
         "range-10-14.parquet", "range-5-9.parquet", "x.parquet",
     ]
+
+
+def _keys(df) -> list[int]:
+    return sorted(r.n_nationkey for r in df.select("n_nationkey").collect())
+
+
+def test_append_to_partitioned_table_is_never_pruned(spark, sf_dir, tmp_path):
+    """An appended file carries no partition value, so it is written with
+    an empty partition record: a partition filter keeps it (the residual
+    predicate row-filters it) instead of pruning it on a null value."""
+    base = str(tmp_path / "part")
+    ir._build_iceberg_part_fixture(spark, sf_dir, base)
+    n = _nation(spark, sf_dir)
+    extra = n.filter("n_regionkey = 2").withColumn(
+        "n_nationkey", (F.col("n_nationkey") + 100).cast("int")
+    )
+    ir.iceberg_append(spark, base, extra, "extra.parquet")
+    got = ir.iceberg_snapshot(
+        spark, base, partition_filter={"n_regionkey": 2}
+    ).filter("n_regionkey = 2")
+    region2 = _keys(n.filter("n_regionkey = 2"))
+    assert _keys(got) == region2 + [k + 100 for k in region2]
+
+
+def test_compacting_an_evolved_spec_keeps_filtered_rows(spark, sf_dir, tmp_path):
+    """Compaction folds the spec-evolution table into one file; the
+    region-filtered read of scan_iceberg_partition_evolution still
+    returns every region-1 and region-2 row."""
+    base = str(tmp_path / "evo")
+    _build_evo_fixture(spark, sf_dir, base)
+    ir.iceberg_rewrite_compact(spark, base)
+    got = ir.iceberg_snapshot(
+        spark, base, partition_filter={"n_regionkey": 2}
+    ).filter(F.col("n_regionkey").isin(1, 2))
+    assert _keys(got) == _keys(_nation(spark, sf_dir).filter("n_regionkey IN (1, 2)"))
