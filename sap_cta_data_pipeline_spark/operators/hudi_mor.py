@@ -1,11 +1,9 @@
-"""§2 round-8 batch DE — Hudi Merge-on-Read snapshot reader.
+"""Hudi Merge-on-Read snapshot reader.
 
-Round-7 verdict "What's missing" #1: the Hudi reader was CoW-only because
-no Avro decoder existed; functions/avro_codec.py removed that blocker in
-round 7, so the same from-scratch discipline now reaches Hudi LOG FILES —
-the format write-heavy Hudi tables actually use (MoR is the default for
-streaming upserts: updates/deletes append to per-file-group ``.log``
-files; compaction folds them into new base parquet later).
+Merge-on-read is the layout write-heavy Hudi tables use: updates and
+deletes append to per-file-group ``.log`` files, and compaction folds
+them into new base parquet later. The log files are Avro, decoded by
+functions/avro_codec.py; the slices come from ``hudi_timeline``.
 
 Wire format implemented here (hudi.apache.org/tech-specs, "Log File
 Format" — the PUBLIC spec; the paired writer below produces the fixture
@@ -65,6 +63,7 @@ from pyspark.sql import types as T
 from ..catalog import load_table as t
 from ..functions.avro_codec import decode_record, encode_record
 from ..registry import query
+from . import hudi_timeline as ht
 from .sources import built
 
 _MAGIC = b"#HUDI#"
@@ -172,50 +171,6 @@ def decode_avro_data_block(schema: dict, content: bytes) -> list[dict]:
     return out
 
 
-# -------------------------------------------------------------- timeline
-
-
-def hudi_mor_state(
-    base: str, as_of: str | None = None
-) -> dict[str, tuple[str | None, list[str]]]:
-    """Latest file slice per file group from the COMPLETED timeline:
-    fileId → (base parquet path | None, ordered log paths after it).
-    ``as_of`` (instant time, inclusive) replays only instants ≤ it —
-    Hudi time travel is pure timeline addressing, zero data work.
-
-    MoR timelines complete base-file writes as ``.commit`` /
-    ``.deltacommit`` instants whose write stats name the written path;
-    a stats entry whose path ends ``.log.*`` APPENDS to the group's
-    current slice, a parquet path STARTS a new slice (compaction — the
-    pending logs fold in and the log list resets). Inflight/requested
-    instants stay invisible, same rule as the CoW reader."""
-    tl_dir = os.path.join(base, ".hoodie")
-    instants = sorted(
-        (f.split(".", 1)[0], f.split(".", 1)[1])
-        for f in os.listdir(tl_dir)
-        if f.endswith((".commit", ".deltacommit"))
-    )
-    if as_of is not None:
-        if not any(ts <= as_of for ts, _ in instants):
-            raise ValueError(
-                f"no completed instant at or before {as_of!r} under {tl_dir}"
-            )
-        instants = [(ts, k) for ts, k in instants if ts <= as_of]
-    slices: dict[str, tuple[str | None, list[str]]] = {}
-    for ts, kind in instants:  # instant times sort lexicographically
-        with open(os.path.join(tl_dir, f"{ts}.{kind}")) as fh:
-            meta = json.load(fh)
-        for _part, stats in meta["partitionToWriteStats"].items():
-            for ws in stats:
-                fid, path = ws["fileId"], ws["path"]
-                if ".log." in os.path.basename(path):
-                    cur = slices.get(fid, (None, []))
-                    slices[fid] = (cur[0], cur[1] + [path])
-                else:
-                    slices[fid] = (path, [])
-    return slices
-
-
 # ------------------------------------------------------------ merge read
 
 
@@ -299,7 +254,7 @@ def hudi_mor_snapshot(
     group, so a group's merge never needs another group's slice);
     ``keep_key`` retains ``_hoodie_record_key`` in the output (the
     compactor re-emits it into the new base slice)."""
-    slices = hudi_mor_state(base, as_of)
+    slices = ht.file_slices(base, as_of)
     if fids is not None:
         slices = {fid: s for fid, s in slices.items() if fid in fids}
     base_paths = sorted(p for p, _ in slices.values() if p is not None)
@@ -354,11 +309,14 @@ def _build_mor_fixture(spark: SparkSession, sf_dir: str) -> str:
     fg-a with '-old' names for keys < 12; instant 002 (.deltacommit)
     appends fg-a.log.1 with TWO blocks — block 1 UPSERTS the clean names
     for keys < 12, block 2 TOMBSTONES keys ≡ 0 (mod 5) via
-    ``_hoodie_is_deleted``; an INFLIGHT deltacommit 003 wrote a garbage
-    log that must stay invisible. Snapshot = clean nation minus the
-    multiples of five."""
+    ``_hoodie_is_deleted``; deltacommit 003 stays INFLIGHT, and the
+    garbage log its writer left must stay invisible. Snapshot = clean
+    nation minus the multiples of five."""
 
     def build(base: str) -> None:
+        from .lakehouse_interop import _stage_single_parquet
+
+        ht.create_table(base, "MERGE_ON_READ")
         n = t(spark, sf_dir, "nation")
         based = n.select(
             F.lit("001").alias("_hoodie_commit_time"),
@@ -369,10 +327,13 @@ def _build_mor_fixture(spark: SparkSession, sf_dir: str) -> str:
             "n_nationkey",
             "n_regionkey",
         )
-        from .lakehouse_interop import _stage_single_parquet
 
-        base_rel = "fg-a_0-0-0_001.parquet"
-        _stage_single_parquet(based, os.path.join(base, base_rel))
+        def write_base(instant: str) -> list[tuple[str, str]]:
+            rel = f"fg-a_0-0-0_{instant}.parquet"
+            _stage_single_parquet(based, os.path.join(base, rel))
+            return [("fg-a", rel)]
+
+        ht.commit(base, write_base, action="commit", operation="upsert", instant="001")
 
         spark_schema = T.StructType(
             [
@@ -384,83 +345,42 @@ def _build_mor_fixture(spark: SparkSession, sf_dir: str) -> str:
             ]
         )
         avro_schema = _log_record_schema(spark_schema)
-        rows = n.select("n_nationkey", "n_name", "n_regionkey").collect()
-        upserts = [
-            {
-                "_hoodie_record_key": str(r.n_nationkey),
-                "n_name": r.n_name,
-                "n_nationkey": r.n_nationkey,
-                "n_regionkey": r.n_regionkey,
-                "_hoodie_is_deleted": False,
-            }
-            for r in sorted(rows, key=lambda r: r.n_nationkey)
-            if r.n_nationkey < 12
-        ]
-        deletes = [
-            {
-                "_hoodie_record_key": str(r.n_nationkey),
-                "n_name": None,
-                "n_nationkey": r.n_nationkey,
-                "n_regionkey": None,
-                "_hoodie_is_deleted": True,
-            }
-            for r in sorted(rows, key=lambda r: r.n_nationkey)
-            if r.n_nationkey % 5 == 0
-        ]
-        log_rel = "fg-a_0-0-0.log.1_002"
-        hdr = {_H_INSTANT_TIME: "002", _H_SCHEMA: json.dumps(avro_schema)}
-        with open(os.path.join(base, log_rel), "wb") as fh:
-            write_log_block(
-                fh, _AVRO_DATA_BLOCK, hdr, encode_avro_data_block(avro_schema, upserts)
-            )
-            write_log_block(
-                fh, _AVRO_DATA_BLOCK, hdr, encode_avro_data_block(avro_schema, deletes)
-            )
-        # inflight deltacommit 003: garbage log on disk, no completed instant
-        garbage_rel = "fg-a_0-0-0.log.2_003"
-        with open(os.path.join(base, garbage_rel), "wb") as fh:
-            write_log_block(
-                fh,
-                _AVRO_DATA_BLOCK,
-                {_H_INSTANT_TIME: "003", _H_SCHEMA: json.dumps(avro_schema)},
-                encode_avro_data_block(
-                    avro_schema,
-                    [
-                        {
-                            "_hoodie_record_key": "0",
-                            "n_name": "GARBAGE",
-                            "n_nationkey": 0,
-                            "n_regionkey": 0,
-                            "_hoodie_is_deleted": False,
-                        }
-                    ],
-                ),
-            )
+        rows = sorted(
+            n.select("n_nationkey", "n_name", "n_regionkey").collect(),
+            key=lambda r: r.n_nationkey,
+        )
 
-        tl = os.path.join(base, ".hoodie")
-        os.makedirs(tl, exist_ok=True)
-        with open(os.path.join(tl, "hoodie.properties"), "w") as fh:
-            fh.write("hoodie.table.name=fixture\nhoodie.table.type=MERGE_ON_READ\n")
-        with open(os.path.join(tl, "001.commit"), "w") as fh:
-            json.dump(
-                {
-                    "partitionToWriteStats": {
-                        "": [{"fileId": "fg-a", "path": base_rel, "numWrites": 25}]
-                    }
-                },
-                fh,
-            )
-        with open(os.path.join(tl, "002.deltacommit"), "w") as fh:
-            json.dump(
-                {
-                    "partitionToWriteStats": {
-                        "": [{"fileId": "fg-a", "path": log_rel, "numWrites": 17}]
-                    }
-                },
-                fh,
-            )
-        with open(os.path.join(tl, "003.deltacommit.inflight"), "w") as fh:
-            fh.write("{}")
+        def record(r, deleted: bool) -> dict:
+            return {
+                "_hoodie_record_key": str(r.n_nationkey),
+                "n_name": None if deleted else r.n_name,
+                "n_nationkey": r.n_nationkey,
+                "n_regionkey": None if deleted else r.n_regionkey,
+                "_hoodie_is_deleted": deleted,
+            }
+
+        upserts = [record(r, False) for r in rows if r.n_nationkey < 12]
+        deletes = [record(r, True) for r in rows if r.n_nationkey % 5 == 0]
+
+        def write_log(instant: str, n_log: int, blocks: list[list[dict]]) -> str:
+            rel = f"fg-a_0-0-0.log.{n_log}_{instant}"
+            hdr = {_H_INSTANT_TIME: instant, _H_SCHEMA: json.dumps(avro_schema)}
+            with open(os.path.join(base, rel), "wb") as fh:
+                for records in blocks:
+                    block = encode_avro_data_block(avro_schema, records)
+                    write_log_block(fh, _AVRO_DATA_BLOCK, hdr, block)
+            return rel
+
+        ht.commit(
+            base,
+            lambda i: [("fg-a", write_log(i, 1, [upserts, deletes]))],
+            action="deltacommit",
+            operation="upsert",
+            instant="002",
+        )
+        # deltacommit 003's writer died after writing its log
+        garbage = dict(upserts[0], n_name="GARBAGE")
+        write_log(ht.begin(base, "deltacommit", instant="003"), 2, [[garbage]])
 
     return built(sf_dir, "hudi_mor", build)
 
@@ -473,7 +393,7 @@ def _build_mor_fixture(spark: SparkSession, sf_dir: str) -> str:
     """,
 )
 def scan_hudi_mor_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hudi MERGE-ON-READ snapshot (round-8 verdict ask #3): base parquet
+    """Hudi MERGE-ON-READ snapshot: base parquet
     ('-old' names for keys < 12) merged at read time with a real framed
     ``.log`` file — block 1 upserts the clean names, block 2 tombstones
     the multiples of five via ``_hoodie_is_deleted`` — while an inflight
@@ -533,7 +453,7 @@ def scan_hudi_mor_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _build_mor_fixture(spark, sf_dir)
     # log files of instants in (001, 002]: timeline state at 002 minus
     # the base slices — for the fixture, exactly the 002 deltacommit log
-    slices = hudi_mor_state(base, as_of="002")
+    slices = ht.file_slices(base, as_of="002")
     log_paths = sorted(p for _, logs in slices.values() for p in logs)
     out_schema = T.StructType(
         [

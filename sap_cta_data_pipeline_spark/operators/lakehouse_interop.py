@@ -18,10 +18,10 @@ this batch closes the write half and adds a second public wire format:
   a range predicate prunes files by [min,max] intersection from PURE
   METADATA before any scan is planned — the data-skipping contract that
   makes needle queries cheap at 100 TB.
-- **Hudi CoW reader** (``scan_hudi_cow_snapshot``): the public Hudi
-  timeline layout (``.hoodie/{instant}.commit`` JSON, completed instants
-  only) names per-file-group base files; snapshot read = latest file
-  slice per file group, ignoring inflight instants and orphan files.
+- **Hudi CoW reader** (``scan_hudi_cow_snapshot``): the completed
+  instants of the Hudi timeline (``hudi_timeline``) name per-file-group
+  base files; snapshot read = latest file slice per file group, ignoring
+  inflight instants and orphan files.
 
 Scale notes: all four lanes keep metadata work driver-side and
 metadata-sized (actions / write-stats, never rows) and the data path an
@@ -45,6 +45,7 @@ from pyspark.sql import types as _T
 
 from ..catalog import load_table as t
 from ..registry import query
+from . import hudi_timeline as ht
 from .delta_reader import (
     _CHECKPOINT_SCHEMA,
     _NATION_SCHEMA_JSON,
@@ -363,42 +364,19 @@ def delta_stats_prune(
 # ---------------------------------------------------------- hudi reader
 
 
-def hudi_cow_state(base: str) -> dict[str, str]:
-    """Latest file slice per file group from the COMPLETED timeline.
-
-    Public Hudi layout: ``.hoodie/{instantTime}.commit`` (JSON, present
-    only once the instant completes; ``.inflight`` / ``.requested``
-    marker files are in-progress and must be invisible). Each commit's
-    ``partitionToWriteStats`` maps partition path → write stats naming
-    ``fileId`` (the file group) and ``path`` (the new base file). CoW
-    snapshot state = per fileId, the path written by the LATEST completed
-    instant — earlier slices and orphan data files never appear."""
-    tl_dir = os.path.join(base, ".hoodie")
-    instants = sorted(
-        f[: -len(".commit")]
-        for f in os.listdir(tl_dir)
-        if f.endswith(".commit")
-    )
-    groups: dict[str, str] = {}
-    for ts in instants:  # instant times sort lexicographically by design
-        with open(os.path.join(tl_dir, f"{ts}.commit")) as fh:
-            meta = json.load(fh)
-        for _part, stats in meta["partitionToWriteStats"].items():
-            for ws in stats:
-                groups[ws["fileId"]] = ws["path"]
-    return groups
-
-
-def hudi_cow_snapshot(spark: SparkSession, base: str) -> DataFrame:
-    """Distributed read of the latest file slices; Hudi meta columns
+def hudi_cow_snapshot(
+    spark: SparkSession, base: str, as_of: str | None = None
+) -> DataFrame:
+    """Distributed read of the latest file slices at ``as_of`` (None =
+    latest) from ``hudi_timeline``'s view; Hudi meta columns
     (``_hoodie_*``, populated by every CoW writer) are dropped so the
     caller sees the logical schema."""
-    groups = hudi_cow_state(base)
+    files = ht.base_files(base, as_of)
     # mergeSchema: slices written before an additive evolution lack the
     # new columns — the union schema serves typed NULLs for them (footer
     # reads only, bounded by live-slice count)
     df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(base, p) for p in sorted(groups.values())]
+        *[os.path.join(base, p) for p in sorted(files.values())]
     )
     keep = [c for c in df.columns if not c.startswith("_hoodie_")]
     return df.select(keep)
@@ -444,8 +422,8 @@ def _build_stats_fixture(spark: SparkSession, sf_dir: str) -> str:
 def _build_hudi_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Hudi CoW table over nation: instant 001 writes file groups fg-a
     ('-old' lo rows) + fg-b (hi rows); instant 002 REWRITES fg-a with the
-    clean lo rows (the CoW update path — same fileId, new slice); an
-    INFLIGHT instant 003 wrote a garbage file but never completed; plus an
+    clean lo rows (the CoW update path — same fileId, new slice); instant
+    003 stays INFLIGHT after its writer staged a garbage fg-c; plus an
     orphan parquet named by no instant. Latest slices = clean nation."""
 
     def build(base: str) -> None:
@@ -458,50 +436,20 @@ def _build_hudi_fixture(spark: SparkSession, sf_dir: str) -> str:
                 "*",
             )
 
-        files = {
-            "fg-a_0-0-0_001.parquet": _meta(
-                lo.withColumn("n_name", F.concat("n_name", F.lit("-old"))), "001"
-            ),
-            "fg-b_0-0-0_001.parquet": _meta(hi, "001"),
-            "fg-a_0-0-0_002.parquet": _meta(lo, "002"),
-            "fg-c_0-0-0_003.parquet": _meta(
-                n.limit(3).withColumn("n_name", F.lit("GARBAGE")), "003"
-            ),
-            "orphan_0-0-0_000.parquet": _meta(
-                n.limit(2).withColumn("n_name", F.lit("GARBAGE")), "000"
-            ),
-        }
-        for rel, df in files.items():
-            _stage_single_parquet(df, os.path.join(base, rel))
+        def stage(files: dict[str, DataFrame], instant: str) -> list[tuple[str, str]]:
+            writes = [(fid, f"{fid}_0-0-0_{instant}.parquet") for fid in files]
+            for fid, rel in writes:
+                _stage_single_parquet(_meta(files[fid], instant), os.path.join(base, rel))
+            return writes
 
-        tl = os.path.join(base, ".hoodie")
-        os.makedirs(tl, exist_ok=True)
-        with open(os.path.join(tl, "hoodie.properties"), "w") as fh:
-            fh.write("hoodie.table.name=fixture\nhoodie.table.type=COPY_ON_WRITE\n")
-
-        def _commit_meta(writes: list[tuple[str, str]]) -> dict:
-            return {
-                "partitionToWriteStats": {
-                    "": [
-                        {"fileId": fid, "path": path, "numWrites": 1}
-                        for fid, path in writes
-                    ]
-                },
-                "operation": "upsert",
-            }
-
-        with open(os.path.join(tl, "001.commit"), "w") as fh:
-            json.dump(
-                _commit_meta(
-                    [("fg-a", "fg-a_0-0-0_001.parquet"), ("fg-b", "fg-b_0-0-0_001.parquet")]
-                ),
-                fh,
-            )
-        with open(os.path.join(tl, "002.commit"), "w") as fh:
-            json.dump(_commit_meta([("fg-a", "fg-a_0-0-0_002.parquet")]), fh)
-        # inflight: marker only — a reader honoring the timeline never sees fg-c
-        with open(os.path.join(tl, "003.inflight"), "w") as fh:
-            fh.write("")
+        ht.create_table(base, "COPY_ON_WRITE")
+        old = lo.withColumn("n_name", F.concat("n_name", F.lit("-old")))
+        for instant, files in (("001", {"fg-a": old, "fg-b": hi}), ("002", {"fg-a": lo})):
+            write = partial(stage, files)
+            ht.commit(base, write, action="commit", operation="upsert", instant=instant)
+        garbage = n.limit(3).withColumn("n_name", F.lit("GARBAGE"))
+        stage({"fg-c": garbage}, ht.begin(base, "commit", instant="003"))
+        stage({"orphan": n.limit(2).withColumn("n_name", F.lit("GARBAGE"))}, "000")
 
     return built(sf_dir, "hudi_cow", build)
 

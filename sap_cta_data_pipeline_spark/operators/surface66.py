@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from . import hudi_timeline as ht
 from .sources import built, drain_to_memory
 from .surface63 import _commit_cow_swap
 
@@ -256,30 +257,20 @@ def iceberg_update_cow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def hudi_delete(
     spark: SparkSession, base: str, predicate: str
-) -> tuple[str, int]:
+) -> tuple[str | None, int]:
     """Predicate DELETE on the Hudi CoW table: rewrite every file group
     containing a matching row as a survivors-only new slice (a fully
     emptied group writes a zero-row slice — the group's latest version
     records the delete, Hudi's delete-as-empty-payload-upsert shape).
-    Returns (completed instant time, groups rewritten)."""
-    from .hudi_write import _complete_instant, _next_instant, _timeline_dir
-    from .lakehouse_interop import _stage_single_parquet, hudi_cow_state
+    Returns (completed instant, groups rewritten); a delete matching
+    nothing commits nothing and returns (None, 0)."""
+    from .hudi_write import _tag_file_groups
+    from .lakehouse_interop import _stage_single_parquet
 
-    tl = _timeline_dir(base)
-    groups = hudi_cow_state(base)
-    if not groups:
+    read, slices = ht.snapshot(base)
+    if not slices:
         raise ValueError(f"hudi_delete: no completed commits under {base}")
-    instant = _next_instant(tl)
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(base, p) for p in sorted(groups.values())]
-    ).withColumn(
-        "__file", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-    )
-    path_to_fid = {os.path.basename(p): fid for fid, p in groups.items()}
-    fid_map = F.create_map(
-        *[F.lit(x) for kv in sorted(path_to_fid.items()) for x in kv]
-    )
-    df = df.withColumn("__fid", fid_map[F.col("__file")])
+    df = _tag_file_groups(spark, base, slices)
     pred = F.expr(predicate)
     # distributed probe: DISTINCT fileIds with a match (bounded by
     # file-group count — same envelope as the upsert writer's probe)
@@ -287,20 +278,26 @@ def hudi_delete(
         r["__fid"]
         for r in df.filter(pred).select("__fid").distinct().collect()
     )
-    writes: list[tuple[str, str]] = []
-    for fid in hit_fids:
-        survivors = (
-            df.filter(F.col("__fid") == fid)
-            .filter(~F.coalesce(pred, F.lit(False)))
-            .drop("__file", "__fid")
-        )
-        rel = f"{fid}_0-0-0_{instant}.parquet"
-        _stage_single_parquet(survivors, os.path.join(base, rel))
-        writes.append((fid, rel))
-    if not writes:
-        return instant, 0  # no-match delete: nothing committed
-    _complete_instant(tl, instant, writes)
-    return instant, len(writes)
+    if not hit_fids:
+        return None, 0
+
+    def build(instant: str) -> list[tuple[str, str]]:
+        writes = []
+        for fid in hit_fids:
+            survivors = (
+                df.filter(F.col("__fid") == fid)
+                .filter(~F.coalesce(pred, F.lit(False)))
+                .drop("__fid")
+            )
+            rel = f"{fid}_0-0-0_{instant}.parquet"
+            _stage_single_parquet(survivors, os.path.join(base, rel))
+            writes.append((fid, rel))
+        return writes
+
+    instant = ht.commit(
+        base, build, action="commit", operation="delete", read_instant=read
+    )
+    return instant, len(hit_fids)
 
 
 def _build_hudi_delete_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -348,24 +345,11 @@ def _hudi_instant_files(base: str, instant: str) -> list[tuple]:
     (absolute slice path, instant) for every slice the commit metadata
     names. METADATA only (one commit JSON), never a data file; executors
     read the slices and apply the commit-time stamp filter."""
-    import json
-
-    with open(os.path.join(base, ".hoodie", f"{instant}.commit")) as fh:
-        meta = json.load(fh)
-    return [
-        (os.path.join(base, ws["path"]), instant)
-        for _part, stats in meta["partitionToWriteStats"].items()
-        for ws in stats
-    ]
+    return [(os.path.join(base, path), instant) for _, path in ht.writes(base, instant)]
 
 
 def _completed_instants(base: str, after: str) -> list[str]:
-    tl = os.path.join(base, ".hoodie")
-    return sorted(
-        f[: -len(".commit")]
-        for f in os.listdir(tl)
-        if f.endswith(".commit") and f[: -len(".commit")] > after
-    )
+    return [i for i in ht._completed_commits(ht._timeline_dir(base)) if i > after]
 
 
 def _hudi_latest_instant(base: str, _seen: str) -> str:

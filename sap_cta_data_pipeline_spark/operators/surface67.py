@@ -22,7 +22,7 @@ EVOLUTION for Iceberg.
 Scale: a MOR upsert's write cost is O(change batch) — per hit group
 one log block append; the deferred merge cost moves to readers and is
 reclaimed by compaction (hudi_mor_compact), the classic write-
-amplification trade. Round 14: the hit batch never reaches the driver —
+amplification trade. The hit batch never reaches the driver —
 it rides one groupBy(fileId) shuffle into an applyInArrow group writer
 that encodes and publishes each group's log block EXECUTOR-side
 (temp-then-replace, retry-idempotent because block content is
@@ -44,6 +44,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..registry import query
+from . import hudi_timeline as ht
 from .sources import built
 
 
@@ -53,36 +54,25 @@ def hudi_mor_upsert(
     df: DataFrame,
     key_col: str,
     delete_col: str | None = None,
-) -> str:
+) -> str | None:
     """Merge-on-read upsert of ``df`` keyed by ``key_col``; returns the
-    completed instant. Existing keys become log-block records on their
-    owning file group (tombstones where ``delete_col`` is true); new
-    keys start one fresh base file. The batch is deduped to one record
-    per key per block first; WHICH duplicate survives is arbitrary
-    (dropDuplicates keeps a nondeterministic row) — real Hudi resolves
-    intra-batch duplicates by the precombine field, so callers with
-    meaningful duplicates must pre-reduce the batch themselves (e.g. a
-    window max over their ordering column) before calling this."""
-    from .hudi_mor import (
-        _AVRO_DATA_BLOCK,
-        _H_INSTANT_TIME,
-        _H_SCHEMA,
-        _log_record_schema,
-        encode_avro_data_block,
-        hudi_mor_state,
-        write_log_block,
-    )
-    from .hudi_write import _complete_instant, _next_instant
+    completed instant (None for an empty batch). Existing keys become
+    log-block records on their owning file group (tombstones where
+    ``delete_col`` is true); new keys start one fresh base file. The
+    batch is deduped to one record per key per block first; WHICH
+    duplicate survives is arbitrary (dropDuplicates keeps a
+    nondeterministic row) — real Hudi resolves intra-batch duplicates by
+    the precombine field, so callers with meaningful duplicates must
+    pre-reduce the batch themselves (e.g. a window max over their
+    ordering column) before calling this. Raises ``CommitConflict`` when
+    a concurrent write to a hit group completed after this one read the
+    table."""
+    from .hudi_mor import _H_INSTANT_TIME, _H_SCHEMA, _log_record_schema
+    from .hudi_write import _tag_file_groups
     from .lakehouse_interop import _stage_single_parquet
 
-    tl = os.path.join(base, ".hoodie")
-    os.makedirs(tl, exist_ok=True)
-    props = os.path.join(tl, "hoodie.properties")
-    if not os.path.exists(props):
-        with open(props, "w") as fh:
-            fh.write(
-                "hoodie.table.name=written\nhoodie.table.type=MERGE_ON_READ\n"
-            )
+    ht.create_table(base, "MERGE_ON_READ")
+    read, slices = ht.snapshot(base)
     incoming = df.dropDuplicates([key_col])
     flag = (
         F.coalesce(F.col(delete_col).cast("boolean"), F.lit(False))
@@ -91,130 +81,113 @@ def hudi_mor_upsert(
     )
     data_cols = [c for c in incoming.columns if c != delete_col]
     incoming = incoming.select(*data_cols, flag.alias("__del"))
-    instant = _next_instant(tl)
-    slices = hudi_mor_state(base) if any(
-        f.endswith((".commit", ".deltacommit")) for f in os.listdir(tl)
-    ) else {}
-    writes: list[tuple[str, str]] = []
+    inserts = incoming.filter(~F.col("__del")).select(*data_cols)
     if slices:
         # key → owning group, from base files only (this writer's
         # inserts always start a fresh group, so base keys are complete)
-        bases = spark.read.parquet(
-            *[os.path.join(base, b) for b, _logs in slices.values() if b]
-        ).withColumn(
-            "__file",
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-        )
-        file_to_fid = spark.createDataFrame(
-            sorted(
-                (os.path.basename(b), fid)
-                for fid, (b, _logs) in slices.items()
-                if b
-            ),
-            "__file string, __fid string",
-        )
-        owner = bases.join(F.broadcast(file_to_fid), "__file").select(
+        owner = _tag_file_groups(spark, base, slices).select(
             F.col("_hoodie_record_key").alias("__k"), "__fid"
         )
         routed = incoming.join(
             owner, incoming[key_col].cast("string") == owner["__k"], "left"
         )
-        spark_schema = T.StructType(
-            [T.StructField("_hoodie_record_key", T.StringType(), True)]
-            + [
-                T.StructField(c, incoming.schema[c].dataType, True)
-                for c in data_cols
-            ]
-            + [T.StructField("_hoodie_is_deleted", T.BooleanType(), True)]
-        )
-        avro_schema = _log_record_schema(spark_schema)
-        hdr = {_H_INSTANT_TIME: instant, _H_SCHEMA: json.dumps(avro_schema)}
-        # per hit group: ONE log block with the group's records, written
-        # EXECUTOR-SIDE: the hit batch rides one groupBy(__fid) shuffle
-        # (change-sized) into applyInArrow — each group's task encodes
-        # and writes its own block under temp-then-replace atomicity
-        # (idempotent across task retries: the content is key-sorted, so
-        # every attempt produces identical bytes) and returns only
-        # (fid, log_rel) as its commit message; the driver collects just
-        # those commit messages for the deltacommit envelope. Group ids
-        # and log names reach the batch through broadcast-joined frames,
-        # so the plan's size does not grow with the file-group count.
-        log_rels = spark.createDataFrame(
-            sorted(
-                (fid, f"{fid}_0-0-0.log.{len(logs) + 1}_{instant}")
-                for fid, (_b, logs) in slices.items()
-            ),
-            "__fid string, __log_rel string",
-        )
-        hits = routed.filter(F.col("__fid").isNotNull()).join(
-            F.broadcast(log_rels), "__fid"
-        )
-
-        def _write_block(tbl):
-            # runs on Python workers; package import verified available
-            # there (workers start with the repo root on sys.path)
-            import os as _os
-            import uuid as _uuid
-
-            import pyarrow as _pa
-
-            from sap_cta_data_pipeline_spark.operators.hudi_mor import (
-                _AVRO_DATA_BLOCK as _BLK,
-                encode_avro_data_block as _enc,
-                write_log_block as _wlb,
-            )
-
-            rows = tbl.to_pylist()
-            fid, log_rel = rows[0]["__fid"], rows[0]["__log_rel"]
-            records = sorted(
-                (
-                    {
-                        "_hoodie_record_key": str(r[key_col]),
-                        **{
-                            c: (None if r["__del"] else r[c])
-                            for c in data_cols
-                        },
-                        **{key_col: r[key_col]},  # key survives tombstones
-                        "_hoodie_is_deleted": bool(r["__del"]),
-                    }
-                    for r in rows
-                ),
-                key=lambda d: d["_hoodie_record_key"],
-            )
-            final = _os.path.join(base, log_rel)
-            tmp = f"{final}.__tmp_{_uuid.uuid4().hex}"
-            with open(tmp, "wb") as fh:
-                _wlb(fh, _BLK, hdr, _enc(avro_schema, records))
-            _os.replace(tmp, final)  # atomic publish, retry-idempotent
-            return _pa.table(
-                {"fid": _pa.array([fid]), "log_rel": _pa.array([log_rel])}
-            )
-
-        commit_msgs = (
-            hits.groupBy("__fid")
-            .applyInArrow(_write_block, "fid string, log_rel string")
-            .collect()
-        )
-        writes.extend(
-            sorted((m.fid, m.log_rel) for m in commit_msgs)
-        )
         inserts = routed.filter(
             F.col("__fid").isNull() & ~F.col("__del")
         ).select(*data_cols)
-    else:
-        inserts = incoming.filter(~F.col("__del")).select(*data_cols)
-    if inserts.limit(1).count() > 0:
-        fid = f"fg-i{instant}"
-        rel = f"{fid}_0-0-0_{instant}.parquet"
-        with_meta = inserts.select(
-            F.lit(instant).alias("_hoodie_commit_time"),
-            F.col(key_col).cast("string").alias("_hoodie_record_key"),
-            *data_cols,
+        avro_schema = _log_record_schema(
+            T.StructType(
+                [T.StructField("_hoodie_record_key", T.StringType(), True)]
+                + [
+                    T.StructField(c, incoming.schema[c].dataType, True)
+                    for c in data_cols
+                ]
+                + [T.StructField("_hoodie_is_deleted", T.BooleanType(), True)]
+            )
         )
-        _stage_single_parquet(with_meta, os.path.join(base, rel))
-        writes.append((fid, rel))
-    _complete_instant(tl, instant, writes, kind="deltacommit")
-    return instant
+    has_inserts = inserts.limit(1).count() > 0
+
+    def build(instant: str) -> list[tuple[str, str]]:
+        writes: list[tuple[str, str]] = []
+        if slices:
+            # Per hit group, ONE log block with the group's records, written
+            # EXECUTOR-SIDE: the hit batch rides one groupBy(__fid) shuffle
+            # (change-sized) into applyInArrow — each group's task encodes
+            # and writes its own block under temp-then-replace atomicity
+            # (idempotent across task retries: the content is key-sorted, so
+            # every attempt produces identical bytes) and returns only
+            # (fid, log_rel) as its commit message. Log names reach the batch
+            # through a broadcast-joined frame, so the plan's size does not
+            # grow with the file-group count.
+            hdr = {_H_INSTANT_TIME: instant, _H_SCHEMA: json.dumps(avro_schema)}
+            log_rels = spark.createDataFrame(
+                sorted(
+                    (fid, f"{fid}_0-0-0.log.{len(logs) + 1}_{instant}")
+                    for fid, (_b, logs) in slices.items()
+                ),
+                "__fid string, __log_rel string",
+            )
+            hits = routed.filter(F.col("__fid").isNotNull()).join(
+                F.broadcast(log_rels), "__fid"
+            )
+
+            def _write_block(tbl):
+                # runs on Python workers; package import verified available
+                # there (workers start with the repo root on sys.path)
+                import os as _os
+                import uuid as _uuid
+
+                import pyarrow as _pa
+
+                from sap_cta_data_pipeline_spark.operators.hudi_mor import (
+                    _AVRO_DATA_BLOCK as _BLK,
+                    encode_avro_data_block as _enc,
+                    write_log_block as _wlb,
+                )
+
+                rows = tbl.to_pylist()
+                fid, log_rel = rows[0]["__fid"], rows[0]["__log_rel"]
+                records = sorted(
+                    (
+                        {
+                            "_hoodie_record_key": str(r[key_col]),
+                            **{c: None if r["__del"] else r[c] for c in data_cols},
+                            **{key_col: r[key_col]},  # key survives tombstones
+                            "_hoodie_is_deleted": bool(r["__del"]),
+                        }
+                        for r in rows
+                    ),
+                    key=lambda d: d["_hoodie_record_key"],
+                )
+                final = _os.path.join(base, log_rel)
+                tmp = f"{final}.__tmp_{_uuid.uuid4().hex}"
+                with open(tmp, "wb") as fh:
+                    _wlb(fh, _BLK, hdr, _enc(avro_schema, records))
+                _os.replace(tmp, final)  # atomic publish, retry-idempotent
+                return _pa.table(
+                    {"fid": _pa.array([fid]), "log_rel": _pa.array([log_rel])}
+                )
+
+            commit_msgs = (
+                hits.groupBy("__fid")
+                .applyInArrow(_write_block, "fid string, log_rel string")
+                .collect()
+            )
+            writes += sorted((m.fid, m.log_rel) for m in commit_msgs)
+        if has_inserts:
+            fid = f"fg-i{instant}"
+            rel = f"{fid}_0-0-0_{instant}.parquet"
+            with_meta = inserts.select(
+                F.lit(instant).alias("_hoodie_commit_time"),
+                F.col(key_col).cast("string").alias("_hoodie_record_key"),
+                *data_cols,
+            )
+            _stage_single_parquet(with_meta, os.path.join(base, rel))
+            writes.append((fid, rel))
+        return writes
+
+    return ht.commit(
+        base, build, action="deltacommit", operation="upsert", read_instant=read
+    )
 
 
 def _build_mor_upsert_fixture(spark: SparkSession, sf_dir: str) -> str:

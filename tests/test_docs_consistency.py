@@ -198,3 +198,27 @@ def test_snapshot_writer_lives_only_in_iceberg_reader():
         if rx.search(py.read_text())
     )
     assert not found, f"Iceberg snapshot writing outside iceberg_reader: {found}"
+
+
+def test_hudi_timeline_lives_only_in_hudi_timeline():
+    """Every Hudi reader, writer, table service and fixture lists
+    instants, views file slices and commits through ``hudi_timeline``.
+    No other package module lists ``.hoodie``, writes
+    ``hoodie.properties`` or holds a ``partitionToWriteStats`` literal."""
+    pkg = REPO / "sap_cta_data_pipeline_spark"
+    owner = pkg / "operators" / "hudi_timeline.py"
+    rules = {
+        "timeline listing": re.compile(
+            r"[\"']\.hoodie[\"']|listdir\(\s*tl(?:_dir)?\s*\)"
+        ),
+        "properties write": re.compile(r"hoodie\.table\.type="),
+        "write stats": re.compile(r"[\"']partitionToWriteStats[\"']"),
+    }
+    found = sorted(
+        f"{py.relative_to(pkg)}: {what}"
+        for py in pkg.rglob("*.py")
+        if py != owner
+        for what, rx in rules.items()
+        if rx.search(py.read_text())
+    )
+    assert not found, f"Hudi timeline code outside hudi_timeline: {found}"

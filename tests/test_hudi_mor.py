@@ -18,10 +18,10 @@ from sap_cta_data_pipeline_spark.operators.hudi_mor import (
     decode_avro_data_block,
     encode_avro_data_block,
     hudi_mor_snapshot,
-    hudi_mor_state,
     read_log_blocks,
     write_log_block,
 )
+from sap_cta_data_pipeline_spark.operators.hudi_timeline import file_slices
 
 _SCH = {
     "type": "record",
@@ -80,7 +80,7 @@ def test_torn_tail_ignored():
 
 def test_mor_state_slices(spark, sf_dir):
     base = _build_mor_fixture(spark, sf_dir)
-    slices = hudi_mor_state(base)
+    slices = file_slices(base)
     assert set(slices) == {"fg-a"}
     bp, logs = slices["fg-a"]
     assert bp == "fg-a_0-0-0_001.parquet"
@@ -121,7 +121,7 @@ def test_mor_compaction_resets_log_list(spark, sf_dir, tmp_path):
             },
             fh,
         )
-    bp, logs = hudi_mor_state(base)["fg-a"]
+    bp, logs = file_slices(base)["fg-a"]
     assert bp == "fg-a_0-0-0_004.parquet" and logs == []
     rows = hudi_mor_snapshot(spark, base).collect()
     assert sorted(r.n_nationkey for r in rows) == [
@@ -158,12 +158,12 @@ def test_mor_unsupported_block_type_raises(spark, sf_dir, tmp_path):
 def test_mor_time_travel_pre_history_raises(spark, sf_dir):
     base = _build_mor_fixture(spark, sf_dir)
     with pytest.raises(ValueError, match="no completed instant"):
-        hudi_mor_state(base, as_of="000")
+        file_slices(base, as_of="000")
 
 
 def test_mor_as_of_001_is_base_only(spark, sf_dir):
     base = _build_mor_fixture(spark, sf_dir)
-    bp, logs = hudi_mor_state(base, as_of="001")["fg-a"]
+    bp, logs = file_slices(base, as_of="001")["fg-a"]
     assert bp is not None and logs == []
     rows = hudi_mor_snapshot(spark, base, as_of="001").collect()
     assert len(rows) == 25

@@ -12,9 +12,12 @@ from sap_cta_data_pipeline_spark.operators.hudi_write import (
     hudi_cow_upsert,
     hudi_mor_compact,
 )
+from sap_cta_data_pipeline_spark.operators.hudi_timeline import (
+    base_files,
+    file_slices,
+)
 from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
     hudi_cow_snapshot,
-    hudi_cow_state,
 )
 
 
@@ -29,14 +32,14 @@ def test_cow_upsert_lifecycle_and_slices(spark, tmp_path):
     # lifecycle markers are cleaned up after completion
     assert not os.path.exists(os.path.join(tl, f"{i1}.requested"))
     assert not os.path.exists(os.path.join(tl, f"{i1}.inflight"))
-    g1 = hudi_cow_state(base)
+    g1 = base_files(base)
     assert len(g1) == 1  # one insert group
 
     # update k=1, insert k=3 → group 1 rewritten (same fileId, new
     # slice), one new group for the insert
     df2 = spark.createDataFrame([(1, "A"), (3, "c")], "k int, v string")
     i2 = hudi_cow_upsert(spark, base, df2, "k")
-    g2 = hudi_cow_state(base)
+    g2 = base_files(base)
     assert set(g2) > set(g1) and len(g2) == 2
     (fid1,) = g1
     assert g2[fid1].endswith(f"_{i2}.parquet"), "rewritten slice at new instant"
@@ -48,7 +51,7 @@ def test_cow_upsert_lifecycle_and_slices(spark, tmp_path):
     # a batch touching NO existing keys must not rewrite any group
     df3 = spark.createDataFrame([(9, "z")], "k int, v string")
     hudi_cow_upsert(spark, base, df3, "k")
-    g3 = hudi_cow_state(base)
+    g3 = base_files(base)
     assert g3[fid1] == g2[fid1], "untouched group keeps its slice"
     assert len(g3) == 3
 
@@ -61,7 +64,7 @@ def test_cow_upsert_meta_columns(spark, tmp_path):
         spark.createDataFrame([(7, "x")], "k int, v string"),
         "k",
     )
-    (rel,) = hudi_cow_state(base).values()
+    (rel,) = base_files(base).values()
     raw = spark.read.parquet(os.path.join(base, rel))
     assert raw.columns[:2] == ["_hoodie_commit_time", "_hoodie_record_key"]
     r = raw.collect()[0]
@@ -72,17 +75,16 @@ def test_mor_compaction_resets_logs_and_preserves_snapshot(spark, sf_dir, tmp_pa
     from sap_cta_data_pipeline_spark.operators.hudi_mor import (
         _build_mor_fixture,
         hudi_mor_snapshot,
-        hudi_mor_state,
     )
 
     src = _build_mor_fixture(spark, sf_dir)
     base = str(tmp_path / "mor")
     shutil.copytree(src, base)
     before = sorted(map(tuple, hudi_mor_snapshot(spark, base).collect()))
-    pre_state = hudi_mor_state(base)
+    pre_state = file_slices(base)
     assert any(logs for _, logs in pre_state.values()), "fixture has logs"
     instant = hudi_mor_compact(spark, base)
-    after_state = hudi_mor_state(base)
+    after_state = file_slices(base)
     assert all(not logs for _, logs in after_state.values()), "logs reset"
     assert all(
         p is not None and p.endswith(f"_{instant}.parquet")
@@ -91,7 +93,7 @@ def test_mor_compaction_resets_logs_and_preserves_snapshot(spark, sf_dir, tmp_pa
     after = sorted(map(tuple, hudi_mor_snapshot(spark, base).collect()))
     assert after == before, "compaction never changes the snapshot"
     # pre-compaction time travel still replays the log path
-    tt = hudi_mor_state(base, as_of="002")
+    tt = file_slices(base, as_of="002")
     assert any(logs for _, logs in tt.values())
     # tombstoned keys are physically gone from the compacted base
     (bp, _), = [v for v in after_state.values()]
@@ -102,7 +104,7 @@ def test_mor_compaction_resets_logs_and_preserves_snapshot(spark, sf_dir, tmp_pa
 def test_next_instant_width_discipline(tmp_path):
     import pytest
 
-    from sap_cta_data_pipeline_spark.operators.hudi_write import (
+    from sap_cta_data_pipeline_spark.operators.hudi_timeline import (
         _INSTANT_WIDTH,
         _next_instant,
     )
@@ -142,7 +144,6 @@ def test_mor_compaction_multi_group_no_duplication(spark, tmp_path):
         _log_record_schema,
         encode_avro_data_block,
         hudi_mor_snapshot,
-        hudi_mor_state,
         write_log_block,
     )
     from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
@@ -223,7 +224,7 @@ def test_mor_compaction_multi_group_no_duplication(spark, tmp_path):
     before = sorted(map(tuple, hudi_mor_snapshot(spark, base).collect()))
     assert before == [(1, "A"), (2, "b"), (11, "X"), (12, "y")]
     hudi_mor_compact(spark, base)
-    after_state = hudi_mor_state(base)
+    after_state = file_slices(base)
     assert set(after_state) == {"fg-a", "fg-b"}
     assert all(not logs for _, logs in after_state.values())
     after = sorted(map(tuple, hudi_mor_snapshot(spark, base).collect()))
@@ -237,3 +238,45 @@ def test_mor_compaction_multi_group_no_duplication(spark, tmp_path):
         for fid, (p, _) in after_state.items()
     }
     assert keys_by_fid == {"fg-a": [1, 2], "fg-b": [11, 12]}
+
+
+def test_each_instant_records_its_operation(spark, sf_dir, tmp_path, monkeypatch):
+    """Every completed instant records the operation that wrote it: the
+    MoR upserts' deltacommits say upsert, compaction's commit says
+    compact, and a CoW delete says delete."""
+    import json
+
+    import sap_cta_data_pipeline_spark.operators.sources as m
+    from sap_cta_data_pipeline_spark.catalog import load_table
+    from sap_cta_data_pipeline_spark.operators.surface66 import hudi_delete
+    from sap_cta_data_pipeline_spark.operators.surface67 import (
+        _build_mor_upsert_fixture,
+    )
+
+    def operations(base):
+        tl = os.path.join(base, ".hoodie")
+        out = {}
+        for f in sorted(os.listdir(tl)):
+            if f.endswith("commit"):
+                with open(os.path.join(tl, f)) as fh:
+                    out[f] = json.load(fh)["operation"]
+        return out
+
+    monkeypatch.setattr(m, "_scratch", lambda sf, name: str(tmp_path / name))
+    mor = _build_mor_upsert_fixture(spark, sf_dir)
+    compacted = hudi_mor_compact(spark, mor)
+    assert operations(mor) == {
+        "00000000000001.deltacommit": "upsert",
+        "00000000000002.deltacommit": "upsert",
+        f"{compacted}.commit": "compact",
+    }
+    cow = str(tmp_path / "cow")
+    n = load_table(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name", "n_regionkey"
+    )
+    hudi_cow_upsert(spark, cow, n, "n_nationkey")
+    deleted, _ = hudi_delete(spark, cow, "n_regionkey = 1")
+    assert operations(cow) == {
+        "00000000000001.commit": "upsert",
+        f"{deleted}.commit": "delete",
+    }

@@ -14,9 +14,9 @@ from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
     _build_stats_fixture,
     delta_stats_prune,
     hudi_cow_snapshot,
-    hudi_cow_state,
 )
 from sap_cta_data_pipeline_spark.operators.delta_reader import delta_state
+from sap_cta_data_pipeline_spark.operators.hudi_timeline import base_files
 
 
 @pytest.fixture(scope="module")
@@ -79,7 +79,7 @@ def test_stats_missing_stats_planned_conservatively(spark, stats_base, tmp_path)
 
 
 def test_hudi_latest_slice_per_group(hudi):
-    groups = hudi_cow_state(hudi)
+    groups = base_files(hudi)
     assert groups == {
         "fg-a": "fg-a_0-0-0_002.parquet",  # instant 002 rewrote fg-a
         "fg-b": "fg-b_0-0-0_001.parquet",

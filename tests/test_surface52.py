@@ -9,18 +9,20 @@ import os
 
 import pytest
 
-from sap_cta_data_pipeline_spark.operators.hudi_write import _timeline_dir
-from sap_cta_data_pipeline_spark.operators.surface52 import (
+from sap_cta_data_pipeline_spark.operators.hudi_timeline import (
     _archived_instants,
-    _build_cleaner_fixture,
     _completed_commits,
     _retention_fence,
-    _slices,
+    _timeline_dir,
+    base_files,
     hudi_archive_timeline,
     hudi_clean,
-    hudi_fs_snapshot,
-    hudi_fs_state,
+    slice_history,
 )
+from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
+    hudi_cow_snapshot,
+)
+from sap_cta_data_pipeline_spark.operators.surface52 import _build_cleaner_fixture
 
 SF = "/root/testdata/sf0.001"
 
@@ -39,17 +41,17 @@ def table(spark, tmp_path, monkeypatch):
 
 def test_clean_deletes_only_superseded_slices(spark, table):
     base, (i1, i2, i3, i4) = table
-    before = sorted(map(tuple, hudi_fs_snapshot(spark, base).collect()))
+    before = sorted(map(tuple, hudi_cow_snapshot(spark, base).collect()))
     meta = hudi_clean(base, retain_commits=2)
     assert meta["earliestCommitToRetain"] == i3
     # group A's slice@i1 deleted; A@i3, A@i4, B@i2 survive
     assert len(meta["deleted"]) == 1 and i1 in meta["deleted"][0]
     assert not os.path.exists(os.path.join(base, meta["deleted"][0]))
-    slices = _slices(base)
+    slices = slice_history(base)
     a_fid = f"fg-i{i1}"
     assert sorted(slices[a_fid]) == [i3, i4]
     assert sorted(slices[f"fg-i{i2}"]) == [i2]  # still serves every view
-    after = sorted(map(tuple, hudi_fs_snapshot(spark, base).collect()))
+    after = sorted(map(tuple, hudi_cow_snapshot(spark, base).collect()))
     assert before == after  # cleaning never changes the snapshot
 
 
@@ -57,12 +59,12 @@ def test_time_travel_before_fence_refuses(spark, table):
     base, (i1, i2, i3, i4) = table
     hudi_clean(base, retain_commits=2)
     # at/after the fence still serves
-    assert hudi_fs_snapshot(spark, base, as_of=i3).count() == 25
-    assert hudi_fs_snapshot(spark, base, as_of=i4).count() == 25
+    assert hudi_cow_snapshot(spark, base, as_of=i3).count() == 25
+    assert hudi_cow_snapshot(spark, base, as_of=i4).count() == 25
     with pytest.raises(ValueError, match="cleaner retained"):
-        hudi_fs_state(base, as_of=i2)
+        base_files(base, as_of=i2)
     with pytest.raises(ValueError, match="cleaner retained"):
-        hudi_fs_state(base, as_of=i1)
+        base_files(base, as_of=i1)
 
 
 def test_fence_view_is_the_pre_revert_state(spark, table):
@@ -71,7 +73,7 @@ def test_fence_view_is_the_pre_revert_state(spark, table):
     base, (i1, i2, i3, i4) = table
     hudi_clean(base, retain_commits=2)
     rows = {r.n_nationkey: r.n_name for r in
-            hudi_fs_snapshot(spark, base, as_of=i3).collect()}
+            hudi_cow_snapshot(spark, base, as_of=i3).collect()}
     assert all(v.endswith("-TMP") for k, v in rows.items() if k < 12)
     assert not any(v.endswith("-TMP") for k, v in rows.items() if k >= 12)
 
@@ -85,7 +87,7 @@ def test_archival_requires_prior_clean(spark, table):
 def test_archival_preserves_snapshot_and_bounds_timeline(spark, table):
     base, (i1, i2, i3, i4) = table
     hudi_clean(base, retain_commits=2)
-    before = sorted(map(tuple, hudi_fs_snapshot(spark, base).collect()))
+    before = sorted(map(tuple, hudi_cow_snapshot(spark, base).collect()))
     moved = hudi_archive_timeline(base)
     assert moved == [i1, i2]
     tl = _timeline_dir(base)
@@ -94,7 +96,7 @@ def test_archival_preserves_snapshot_and_bounds_timeline(spark, table):
     assert [a["instant"] for a in arch] == [i1, i2]
     # archived metadata is the full original commit JSON
     assert "partitionToWriteStats" in arch[0]["meta"]
-    after = sorted(map(tuple, hudi_fs_snapshot(spark, base).collect()))
+    after = sorted(map(tuple, hudi_cow_snapshot(spark, base).collect()))
     assert before == after
     # idempotent second archive: nothing left below the fence
     assert hudi_archive_timeline(base) == []
@@ -114,9 +116,9 @@ def test_inflight_slice_invisible(spark, table):
         os.path.join(base, f"fg-ghost_0-0-0_{ghost}.parquet"),
     )
     open(os.path.join(tl, f"{ghost}.inflight"), "w").close()
-    state = hudi_fs_state(base)
+    state = base_files(base)
     assert "fg-ghost" not in state
-    assert hudi_fs_snapshot(spark, base).count() == 25
+    assert hudi_cow_snapshot(spark, base).count() == 25
 
 
 def test_clean_ignores_inflight_slice(spark, table):
@@ -131,18 +133,18 @@ def test_clean_ignores_inflight_slice(spark, table):
     # ghost instant sorts BETWEEN i2 and the fence (i3) lexicographically
     ghost = i2 + "5"
     b_fid = f"fg-i{i2}"
-    b_slice = _slices(base)[b_fid][i2]
+    b_slice = slice_history(base)[b_fid][i2]
     ghost_slice = f"{b_fid}_0-0-0_{ghost}.parquet"
     shutil.copy(os.path.join(base, b_slice), os.path.join(base, ghost_slice))
     open(os.path.join(tl, f"{ghost}.inflight"), "w").close()
-    before = sorted(map(tuple, hudi_fs_snapshot(spark, base).collect()))
+    before = sorted(map(tuple, hudi_cow_snapshot(spark, base).collect()))
     meta = hudi_clean(base, retain_commits=2)
     # group B's completed slice survives; only A's superseded i1 goes
     assert os.path.exists(os.path.join(base, b_slice))
     assert len(meta["deleted"]) == 1 and i1 in meta["deleted"][0]
     # the ghost itself is untouched (its writer may still complete)
     assert os.path.exists(os.path.join(base, ghost_slice))
-    after = sorted(map(tuple, hudi_fs_snapshot(spark, base).collect()))
+    after = sorted(map(tuple, hudi_cow_snapshot(spark, base).collect()))
     assert before == after
 
 
@@ -165,3 +167,41 @@ def test_archival_crash_rerun_does_not_duplicate(spark, table):
     assert not os.path.exists(os.path.join(tl, f"{i1}.commit"))  # move done
     after = _archived_instants(tl)
     assert [a["instant"] for a in after] == [i1, i2]  # no duplicates
+
+
+def test_archived_instants_stay_in_the_view_and_the_instant_count(spark, table):
+    """Group B's only slice was written by i2, which archival moves out
+    of the active timeline: the CoW snapshot must still read it, and the
+    next upsert must take the instant after the clean's (not reuse it)
+    and update key 20 in place."""
+    from pyspark.sql import functions as F
+
+    from sap_cta_data_pipeline_spark.catalog import load_table
+    from sap_cta_data_pipeline_spark.operators.hudi_write import hudi_cow_upsert
+
+    base, (i1, i2, i3, i4) = table
+    before = sorted(map(tuple, hudi_cow_snapshot(spark, base).collect()))
+    hudi_clean(base, retain_commits=2)
+    hudi_archive_timeline(base)
+    after = sorted(map(tuple, hudi_cow_snapshot(spark, base).collect()))
+    assert len(after) == 25 and after == before
+    n = load_table(spark, SF, "nation").select("n_nationkey", "n_name", "n_regionkey")
+    upd = n.filter("n_nationkey = 20").withColumn("n_name", F.lit("TWENTY"))
+    assert hudi_cow_upsert(spark, base, upd, "n_nationkey") == "00000000000006"
+    rows = hudi_cow_snapshot(spark, base).collect()
+    assert len(rows) == 25
+    assert [r.n_name for r in rows if r.n_nationkey == 20] == ["TWENTY"]
+
+
+def test_reads_never_create_a_table(spark, tmp_path):
+    """A path without ``.hoodie`` is no table: reading it, or running a
+    table service on it, raises naming the path and creates nothing."""
+    missing = str(tmp_path / "absent")
+    for read in (
+        base_files,
+        lambda p: hudi_cow_snapshot(spark, p),
+        lambda p: hudi_clean(p, retain_commits=2),
+    ):
+        with pytest.raises(FileNotFoundError, match=missing):
+            read(missing)
+    assert not os.path.exists(missing)

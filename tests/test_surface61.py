@@ -8,10 +8,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from sap_cta_data_pipeline_spark.operators.hudi_timeline import base_files
 from sap_cta_data_pipeline_spark.operators.hudi_write import hudi_cow_upsert
 from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
     hudi_cow_snapshot,
-    hudi_cow_state,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -37,12 +37,12 @@ def _two_group_table(spark, tmp_path):
 
 def test_evolved_upsert_survivors_null_untouched_group_kept(spark, tmp_path):
     base, i1, i2 = _two_group_table(spark, tmp_path)
-    before = dict(hudi_cow_state(base))
+    before = dict(base_files(base))
     batch = _nation3(spark).filter("n_nationkey < 3").withColumn(
         "n_flag", F.lit(1).cast("int")
     )
     hudi_cow_upsert(spark, base, batch, "n_nationkey")
-    after = hudi_cow_state(base)
+    after = base_files(base)
     # group hi NEVER rewritten — its slice path is unchanged
     hi_fid = f"fg-i{i2}"
     assert after[hi_fid] == before[hi_fid]

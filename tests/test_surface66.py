@@ -12,6 +12,7 @@ import os
 import pytest
 
 from sap_cta_data_pipeline_spark.catalog import load_table
+from sap_cta_data_pipeline_spark.operators.hudi_timeline import base_files
 from sap_cta_data_pipeline_spark.operators.hudi_write import hudi_cow_upsert
 from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
     IcebergCommitConflict,
@@ -21,7 +22,6 @@ from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
 )
 from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
     hudi_cow_snapshot,
-    hudi_cow_state,
 )
 from sap_cta_data_pipeline_spark.operators.surface66 import (
     _hudi_instant_files,
@@ -165,11 +165,11 @@ def _hudi_two_groups(spark, base):
 def test_hudi_delete_rewrites_only_hit_groups(spark, tmp_path):
     base = str(tmp_path / "hbound")
     _hudi_two_groups(spark, base)
-    before = dict(hudi_cow_state(base))
+    before = dict(base_files(base))
     # keys 0..4 live only in the lo group
     instant, n_rw = hudi_delete(spark, base, "n_nationkey < 5")
     assert n_rw == 1
-    after = hudi_cow_state(base)
+    after = base_files(base)
     lo_fid = next(fid for fid, p in before.items() if "fg-i" in fid and p != after.get(fid))
     assert after[lo_fid] != before[lo_fid]  # lo slice advanced
     untouched = [fid for fid in before if fid != lo_fid]
@@ -185,7 +185,7 @@ def test_hudi_delete_emptied_group_writes_zero_row_slice(spark, tmp_path):
     _hudi_two_groups(spark, base)
     instant, n_rw = hudi_delete(spark, base, "n_nationkey < 12")
     assert n_rw == 1
-    groups = hudi_cow_state(base)
+    groups = base_files(base)
     # the emptied group's latest slice exists, carries zero rows
     import pyarrow.parquet as pq
 

@@ -11,10 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from sap_cta_data_pipeline_spark.catalog import load_table
-from sap_cta_data_pipeline_spark.operators.hudi_mor import (
-    hudi_mor_snapshot,
-    hudi_mor_state,
-)
+from sap_cta_data_pipeline_spark.operators.hudi_mor import hudi_mor_snapshot
+from sap_cta_data_pipeline_spark.operators.hudi_timeline import file_slices
 from sap_cta_data_pipeline_spark.operators.iceberg_reader import (
     _load_metadata,
     iceberg_append,
@@ -39,13 +37,13 @@ def test_mor_upsert_appends_log_never_rewrites_base(spark, tmp_path):
     base = str(tmp_path / "mor")
     n = _nation(spark)
     hudi_mor_upsert(spark, base, n, "n_nationkey")
-    (b0, logs0), = hudi_mor_state(base).values()
+    (b0, logs0), = file_slices(base).values()
     assert b0 is not None and logs0 == []
     upd = n.filter("n_nationkey < 4").withColumn(
         "n_name", F.concat(F.col("n_name"), F.lit("-MU"))
     )
     hudi_mor_upsert(spark, base, upd, "n_nationkey")
-    (b1, logs1), = hudi_mor_state(base).values()
+    (b1, logs1), = file_slices(base).values()
     assert b1 == b0  # base slice untouched — the MOR write bound
     assert len(logs1) == 1 and ".log.1_" in logs1[0]
     got = {r.n_nationkey: r.n_name for r in hudi_mor_snapshot(spark, base).collect()}
@@ -79,7 +77,7 @@ def test_mor_insert_routes_to_fresh_group(spark, tmp_path):
         "n_regionkey",
     )
     hudi_mor_upsert(spark, base, newbies, "n_nationkey")
-    slices = hudi_mor_state(base)
+    slices = file_slices(base)
     assert len(slices) == 2  # original group + one fresh insert group
     assert hudi_mor_snapshot(spark, base).count() == 27
 
@@ -100,7 +98,7 @@ def test_mor_compaction_folds_log(spark, tmp_path):
     hudi_mor_upsert(spark, base, upd, "n_nationkey", delete_col="__d")
     before = sorted(map(tuple, hudi_mor_snapshot(spark, base).collect()))
     hudi_mor_compact(spark, base)
-    after_state = hudi_mor_state(base)
+    after_state = file_slices(base)
     assert all(logs == [] for _b, logs in after_state.values())
     assert sorted(map(tuple, hudi_mor_snapshot(spark, base).collect())) == before
 
@@ -118,7 +116,7 @@ def test_mor_batch_latest_wins(spark, tmp_path):
     got = {r.n_nationkey: r.n_name for r in hudi_mor_snapshot(spark, base).collect()}
     assert got[1] in ("A", "B")  # deduped to ONE record in the block
     # the log block carries exactly one record for the key
-    (_b, logs), = hudi_mor_state(base).values()
+    (_b, logs), = file_slices(base).values()
     assert len(logs) == 1
 
 
