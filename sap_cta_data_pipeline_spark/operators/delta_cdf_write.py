@@ -36,46 +36,48 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import query
 from .delta_reader import (
+    LogState,
     _add,
+    _cdc,
     _commit,
-    _meta_action,
+    _metadata,
+    _protocol,
     _remove,
-    _tip,
+    _stage_single_parquet,
     commit,
-    delta_snapshot,
-    delta_state,
     delta_table_changes,
+    log_state,
 )
-from .lakehouse_interop import _stage_single_parquet
 from .sources import built
 
 
-def _cdc_action(rel: str) -> dict:
-    return {
-        "cdc": {
-            "path": rel,
-            "partitionValues": {},
-            "size": 1024,
-            "dataChange": False,
-        }
-    }
+def _cdf_state(spark: SparkSession, base: str) -> LogState:
+    """The tip state of a table that records its change data feed."""
+    st = log_state(spark, base)
+    assert (st.metadata.get("configuration") or {}).get(
+        "delta.enableChangeDataFeed"
+    ) == "true"
+    return st
+
+
+def _by_file_name(st: LogState) -> dict[str, dict]:
+    """file name -> live add (the writers tag rows by file name)."""
+    return {os.path.basename(p): a for p, a in st.adds.items()}
 
 
 def _rewrite_with_changes(
     spark: SparkSession,
     base: str,
-    read_tip: int,
+    st: LogState,
     predicate: str,
     change_frames: list[DataFrame],
     new_rows_of,
 ) -> int:
-    """Shared CoW body: find files hit by ``predicate`` in the snapshot at
-    ``read_tip``, rewrite each without/with transformed matches via
+    """Shared CoW body: find files hit by ``predicate`` in the snapshot
+    ``st``, rewrite each without/with transformed matches via
     ``new_rows_of``, stage the change frames under ``_change_data/``,
     commit removes+adds+cdc against that snapshot."""
-    live, schema_string, _, config, _ = delta_state(spark, base, read_tip)
-    assert config.get("delta.enableChangeDataFeed") == "true"
-    tagged = spark.read.parquet(*[os.path.join(base, p) for p in live]).select(
+    tagged = spark.read.parquet(*[os.path.join(base, p) for p in st.adds]).select(
         "*",
         F.element_at(
             F.split(F.col("_metadata.file_path"), "/"), -1
@@ -85,7 +87,8 @@ def _rewrite_with_changes(
         tagged.filter(predicate).select("__file").distinct().collect()
     )  # distinct file names only — file-count bounded
     hit_files = sorted(r["__file"] for r in hit)
-    version = read_tip + 1
+    version = st.version + 1
+    by_name = _by_file_name(st)
     actions = []
     for i, fname in enumerate(hit_files):
         old = tagged.filter(F.col("__file") == fname)
@@ -102,14 +105,14 @@ def _rewrite_with_changes(
             survivors.unionByName(new_rows) if new_rows is not None else survivors,
             os.path.join(base, rel),
         )
-        actions += [_remove(fname), _add(rel)]
+        actions += [_remove(by_name[fname]), _add(base, rel)]
     cdc_rel = f"_change_data/cdc-{version}.parquet"
     cdc = change_frames[0]
     for c in change_frames[1:]:
         cdc = cdc.unionByName(c)
     _stage_single_parquet(cdc, os.path.join(base, cdc_rel))
-    actions.append(_cdc_action(cdc_rel))
-    return commit(base, actions, read_tip)
+    actions.append(_cdc(base, cdc_rel))
+    return commit(base, actions, st.version)
 
 
 def delta_update_where_cdf(
@@ -119,9 +122,8 @@ def delta_update_where_cdf(
     cdc file twice (update_preimage, then update_postimage with the SET
     applied); the rewrite's remove+add carry dataChange true as usual.
     Returns the committed version."""
-    read_tip = _tip(base)
-    live, *_ = delta_state(spark, base, read_tip)
-    full = spark.read.parquet(*[os.path.join(base, p) for p in live])
+    st = _cdf_state(spark, base)
+    full = spark.read.parquet(*[os.path.join(base, p) for p in st.adds])
     matched = full.filter(predicate)
 
     def _apply(df: DataFrame) -> DataFrame:
@@ -137,9 +139,7 @@ def delta_update_where_cdf(
     post = _apply(matched).withColumn(
         "_change_type", F.lit("update_postimage")
     )
-    return _rewrite_with_changes(
-        spark, base, read_tip, predicate, [pre, post], _apply
-    )
+    return _rewrite_with_changes(spark, base, st, predicate, [pre, post], _apply)
 
 
 def delta_delete_where_cdf(
@@ -147,12 +147,28 @@ def delta_delete_where_cdf(
 ) -> int:
     """CoW DELETE emitting the change feed: matched rows appear once
     with _change_type = 'delete'."""
-    read_tip = _tip(base)
-    live, *_ = delta_state(spark, base, read_tip)
-    full = spark.read.parquet(*[os.path.join(base, p) for p in live])
+    st = _cdf_state(spark, base)
+    full = spark.read.parquet(*[os.path.join(base, p) for p in st.adds])
     dels = full.filter(predicate).withColumn("_change_type", F.lit("delete"))
     return _rewrite_with_changes(
-        spark, base, read_tip, predicate, [dels], lambda _matched: None
+        spark, base, st, predicate, [dels], lambda _matched: None
+    )
+
+
+def _create_cdf_table(base: str, o: DataFrame) -> None:
+    """Version 0 of a CDF-enabled table holding ``o`` as one file."""
+    _stage_single_parquet(o, os.path.join(base, "seed.parquet"))
+    _commit(
+        os.path.join(base, "_delta_log"),
+        0,
+        [
+            _protocol(1, 4),
+            _metadata(
+                schema_json=o.schema.jsonValue(),
+                configuration={"delta.enableChangeDataFeed": "true"},
+            ),
+            _add(base, "seed.parquet"),
+        ],
     )
 
 
@@ -170,20 +186,7 @@ def _cdf_table(spark: SparkSession, sf_dir: str) -> str:
             .filter(_SUBSET)
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
         )
-        _stage_single_parquet(o, os.path.join(base, "seed.parquet"))
-        _commit(
-            os.path.join(base, "_delta_log"),
-            0,
-            [
-                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 4}},
-                _meta_action(
-                    [],
-                    schema_json=o.schema.jsonValue(),
-                    configuration={"delta.enableChangeDataFeed": "true"},
-                ),
-                _add("seed.parquet"),
-            ],
-        )
+        _create_cdf_table(base, o)
         delta_update_where_cdf(
             spark,
             base,
@@ -297,19 +300,17 @@ def delta_merge_cdf(
     Scale: the same probe + per-hit-file rewrite envelope as the plain
     MERGE; the change frame adds one map-side pass over matched+inserted
     rows — O(changed), never O(table)."""
-    read_tip = _tip(base)
-    live, schema_string, _, config, _ = delta_state(spark, base, read_tip)
-    assert config.get("delta.enableChangeDataFeed") == "true"
+    st = _cdf_state(spark, base)
     if source.groupBy(on).count().filter("count > 1").limit(1).count() > 0:
         raise ValueError(
             f"MERGE source has duplicate rows on merge key {on!r}"
         )
     tgt_cols = [
         c
-        for c in spark.read.parquet(os.path.join(base, sorted(live)[0])).columns
+        for c in spark.read.parquet(os.path.join(base, sorted(st.adds)[0])).columns
     ]
     src = source.select(*tgt_cols)
-    tagged = spark.read.parquet(*[os.path.join(base, p) for p in live]).select(
+    tagged = spark.read.parquet(*[os.path.join(base, p) for p in st.adds]).select(
         "*",
         F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
             "__file"
@@ -357,7 +358,8 @@ def delta_merge_cdf(
     post = _apply(matched).withColumn("_change_type", F.lit("update_postimage"))
     ins_changes = inserts.withColumn("_change_type", F.lit("insert"))
 
-    version = read_tip + 1
+    version = st.version + 1
+    by_name = _by_file_name(st)
     actions: list[dict] = [
         {"commitInfo": {"operation": "MERGE", "predicate": f"{on} = source.{on}"}}
     ]
@@ -369,15 +371,15 @@ def delta_merge_cdf(
         )
         rel = f"mrgcdf-{version}-{i}.parquet"
         _stage_single_parquet(rewritten, os.path.join(base, rel))
-        actions += [_remove(fname), _add(rel)]
+        actions += [_remove(by_name[fname]), _add(base, rel)]
     ins_rel = f"mrgcdf-{version}-ins.parquet"
     _stage_single_parquet(inserts, os.path.join(base, ins_rel))
-    actions.append(_add(ins_rel))
+    actions.append(_add(base, ins_rel))
     cdc_rel = f"_change_data/cdc-{version}.parquet"
     cdc = pre.unionByName(post).unionByName(ins_changes)
     _stage_single_parquet(cdc, os.path.join(base, cdc_rel))
-    actions.append(_cdc_action(cdc_rel))
-    return commit(base, actions, read_tip)
+    actions.append(_cdc(base, cdc_rel))
+    return commit(base, actions, st.version)
 
 
 _MRG_SUBSET = "o_orderkey % 37 = 0"
@@ -423,20 +425,7 @@ def delta_merge_cdf_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(_MRG_SUBSET)
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
         )
-        _stage_single_parquet(o, os.path.join(base, "seed.parquet"))
-        _commit(
-            os.path.join(base, "_delta_log"),
-            0,
-            [
-                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 4}},
-                _meta_action(
-                    [],
-                    schema_json=o.schema.jsonValue(),
-                    configuration={"delta.enableChangeDataFeed": "true"},
-                ),
-                _add("seed.parquet"),
-            ],
-        )
+        _create_cdf_table(base, o)
         src = o.filter("o_orderkey % 2 = 0").withColumn(
             "o_totalprice", F.col("o_totalprice") + 5
         ).unionByName(

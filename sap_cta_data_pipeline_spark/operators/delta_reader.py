@@ -1,5 +1,6 @@
-"""Delta-protocol table reader, and the one commit path of every Delta
-writer in this package.
+"""Delta-protocol table reader, and the one owner of the Delta log: every
+Delta writer, reader, table service and fixture in this package builds
+its actions, replays the log and commits through this module.
 
 The open Delta Lake transaction-log protocol (delta.io PROTOCOL.md —
 public spec) is plain JSON commit files plus parquet checkpoints,
@@ -9,7 +10,8 @@ this module implements the PUBLIC WIRE FORMAT a user's existing Delta
 table actually has:
 
 - ``_delta_log/{version:020d}.json`` — newline-delimited action objects
-  (``protocol`` / ``metaData`` / ``add`` / ``remove`` / ``commitInfo``);
+  (``protocol`` / ``metaData`` / ``add`` / ``remove`` / ``txn`` /
+  ``domainMetadata`` / ``cdc`` / ``commitInfo``);
 - ``_delta_log/{version:020d}.checkpoint.parquet`` — a parquet snapshot
   of the reconciled state at that version (one row per action, nullable
   struct columns), named by ``_delta_log/_last_checkpoint``;
@@ -18,6 +20,19 @@ table actually has:
 - partition columns are NOT stored in data files — each ``add`` carries a
   ``partitionValues`` string map, and the reader both reconstructs the
   column and FILE-SKIPS on it (partition pruning from pure metadata).
+
+One replay: ``log_state`` reconstructs a version's protocol, metaData,
+live adds (whole actions), tombstones, SetTransaction versions and
+domain metadata from the checkpoint ``_last_checkpoint`` names plus the
+JSON commits after it; ``delta_state`` is its 5-tuple projection. One
+tip: ``_tip`` is the later of the last JSON commit and the checkpoint.
+One checkpoint writer: ``delta_checkpoint`` writes the replayed actions
+verbatim under ``_CHECKPOINT_SCHEMA``. Action builders: ``_add`` (size
+and modificationTime read from the file), ``_remove``, ``_protocol``,
+``_metadata`` and ``_cdc``; ``commitInfo`` stays a literal at each
+writer, because it is free-form provenance. Readers of per-commit
+history (DESCRIBE HISTORY, the CDF planners, in-commit timestamps,
+``commit``'s winner check) read the commits themselves.
 
 Scale notes: log replay is metadata-sized driver work (the same replay
 every Delta reader performs — actions, not rows); the checkpoint bounds
@@ -33,9 +48,9 @@ read_tip=None)``, a put-if-absent of the next ``{version:020d}.json``
 retries at the next one. A READ-DEPENDENT commit, planned against the
 snapshot at ``read_tip``, reads each commit that took its slot and
 aborts with ``ConcurrentMergeError`` if that commit changed data or
-removed a file this one removes. ``_versions`` is the one commit
-listing every replay shares. Fixture builders that plant an exact log
-in a directory they just created call ``_commit`` with fixed versions.
+removed a file this one removes. Fixture builders that plant an exact
+log in a directory they just created call ``_commit`` with fixed
+versions.
 """
 
 from __future__ import annotations
@@ -43,8 +58,12 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
+import time
 import urllib.parse
-from functools import partial
+from functools import partial, reduce
+from operator import or_
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,9 +78,9 @@ _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 # Reader feature set this module implements. PROTOCOL.md requires readers
 # to FAIL on tables demanding more (an unimplemented v3 feature — e.g.
 # timestampNtz type widening — would be silently misread by a plain log
-# replay). Reader v2 column mapping landed in round 6; reader v3
-# deletionVectors (roaring-bitmap DV decode + anti-join apply) in round 7;
-# v2Checkpoint (multi-part + UUID/sidecar checkpoint resolve) in round 8.
+# replay): column mapping (reader v2), deletion vectors (roaring-bitmap
+# decode + anti-join apply) and v2 checkpoints (multi-part and
+# UUID/sidecar resolve).
 _SUPPORTED_READER_VERSION = 2  # v2 = column mapping (implemented);
 # v3 tables readable iff their readerFeatures ⊆ the implemented set below
 _SUPPORTED_READER_FEATURES: frozenset[str] = frozenset(
@@ -105,12 +124,33 @@ def _versions(log_dir: str) -> list[int]:
     )
 
 
+def _last_checkpoint(log_dir: str) -> dict | None:
+    """The ``_last_checkpoint`` record (``version``, maybe ``parts``)."""
+    path = os.path.join(log_dir, "_last_checkpoint")
+    if not os.path.exists(path):
+        return None
+    with open(path) as fh:
+        return json.load(fh)
+
+
+def _retained_versions(base: str) -> list[int]:
+    """Every version a reader can still reconstruct a state at: the JSON
+    commits, plus the checkpoint version (reachable even when log
+    retention deleted its commit)."""
+    log_dir = os.path.join(base, "_delta_log")
+    lc = _last_checkpoint(log_dir)
+    return sorted(set(_versions(log_dir)) | ({int(lc["version"])} if lc else set()))
+
+
+def _tip_of(commits: list[int], lc: dict | None) -> int:
+    """The later of the last JSON commit and the checkpoint; -1 for none."""
+    return max(commits[-1:] + ([int(lc["version"])] if lc else []), default=-1)
+
+
 def _tip(base: str) -> int:
-    """The latest committed version of the table at ``base``."""
-    vs = _versions(os.path.join(base, "_delta_log"))
-    if not vs:
-        raise FileNotFoundError(f"no Delta commits under {base}/_delta_log")
-    return vs[-1]
+    """The latest version of the table at ``base`` (-1: no table yet)."""
+    log_dir = os.path.join(base, "_delta_log")
+    return _tip_of(_versions(log_dir), _last_checkpoint(log_dir))
 
 
 def _read_commit(log_dir: str, version: int) -> list[dict]:
@@ -118,55 +158,46 @@ def _read_commit(log_dir: str, version: int) -> list[dict]:
         return [json.loads(line) for line in fh if line.strip()]
 
 
-def _newest_action(base: str, kind: str) -> dict | None:
-    """The newest ``kind`` action (``protocol`` / ``metaData``) in the JSON
-    log, read newest commit first. Checkpoint-resident actions are
-    delta_state's business; every writer here consults it first."""
-    log_dir = os.path.join(base, "_delta_log")
-    for v in reversed(_versions(log_dir)):
-        for a in _read_commit(log_dir, v):
-            if kind in a:
-                return a[kind]
-    return None
+#: the action kinds a checkpoint carries, in the order it writes them
+_STATE_ACTIONS = ("protocol", "metaData", "txn", "domainMetadata", "add", "remove")
 
 
-def _protocol_action(base: str) -> dict:
-    """Newest protocol action; a log without one reads as 1/2."""
-    return _newest_action(base, "protocol") or {
-        "minReaderVersion": 1,
-        "minWriterVersion": 2,
+def _plain(action: dict) -> dict:
+    """A collected checkpoint struct as the JSON action it was written
+    from: fields absent from the action read back as nulls, so drop them
+    again (in the nested ``deletionVector`` and ``format`` structs too;
+    map values such as a null partition value are kept)."""
+    return {
+        k: _plain(v) if k in ("deletionVector", "format") else v
+        for k, v in action.items()
+        if v is not None
     }
 
 
-def _current_metadata_action(base: str) -> dict:
-    """Deep copy of the newest metaData action (callers edit it)."""
-    md = _newest_action(base, "metaData")
-    if md is None:
-        raise ValueError(f"no metaData action found under {base}/_delta_log")
-    return json.loads(json.dumps(md))
-
-
-def _collect_proto_meta(cp: DataFrame) -> list[dict]:
-    """Collect the ≤2 protocol/metaData rows of a checkpoint frame as
-    PLAIN dicts (uniform with json-manifest parsing)."""
-    return [
-        {
-            "protocol": r["protocol"].asDict(recursive=True) if r["protocol"] else None,
-            "metaData": r["metaData"].asDict(recursive=True) if r["metaData"] else None,
-        }
-        for r in cp.filter(
-            F.col("protocol").isNotNull() | F.col("metaData").isNotNull()
-        )
-        .select("protocol", "metaData")
+def _collect_actions(df: DataFrame) -> list[dict]:
+    """The state actions (and v2 ``sidecar`` pointers) of a checkpoint
+    frame as plain action dicts, in one collect. Rows carry one action
+    each; the filter drops every other column (commitInfo,
+    checkpointMetadata) executor-side."""
+    kinds = [k for k in (*_STATE_ACTIONS, "sidecar") if k in df.columns]
+    rows = (
+        df.filter(reduce(or_, [F.col(k).isNotNull() for k in kinds]))
+        .select(*kinds)
         .collect()
+    )
+    return [
+        {k: _plain(r[k].asDict(recursive=True))}
+        for r in rows
+        for k in kinds
+        if r[k] is not None
     ]
 
 
 def _checkpoint_actions(
     spark: SparkSession, log_dir: str, lc: dict
-) -> tuple[list[dict], DataFrame]:
-    """Resolve the checkpoint named by ``_last_checkpoint`` into
-    ``(protocol/metaData action dicts, distributed add-actions frame)``.
+) -> list[dict]:
+    """The reconciled actions of the checkpoint ``_last_checkpoint``
+    (``lc``) names.
 
     Three PUBLIC checkpoint layouts (delta.io PROTOCOL.md "Checkpoints"):
 
@@ -176,20 +207,18 @@ def _checkpoint_actions(
       ``{v:020d}.checkpoint.{i:010d}.{N:010d}.parquet`` (i = 1..N) —
       exactly the layout large production tables have (a 100-TB table's
       checkpoint is millions of add rows; writers shard it). The read is
-      the SAME distributed scan, just a union of N parts — round 8
-      replaces the round-7 refusal (delta_reader.py:159 then);
+      the SAME distributed scan, just a union of N parts;
     - **v2 (UUID-named)**: ``{v:020d}.checkpoint.{uuid}.parquet`` (or
-      ``.json``) — a TOP-LEVEL manifest holding protocol, metaData, a
-      ``checkpointMetadata`` action and ``sidecar`` actions pointing at
-      parquet files under ``_delta_log/_sidecars/`` that carry the
-      add/remove state (file actions may also sit inline in a parquet
-      manifest; a json manifest is driver-parsed — it is metadata-sized
-      by the spec).
+      ``.json``) — a TOP-LEVEL manifest holding protocol, metaData,
+      txn, domainMetadata, a ``checkpointMetadata`` action and
+      ``sidecar`` actions pointing at parquet files under
+      ``_delta_log/_sidecars/`` that carry the add/remove state (file
+      actions may also sit inline in a parquet manifest; a json manifest
+      is driver-parsed — it is metadata-sized by the spec).
 
-    Driver-side work stays file-list-bounded in every layout: protocol/
-    metaData rows and sidecar paths collect (≤ a handful + O(sidecars));
-    the add state itself stays a distributed frame that delta_state
-    filters executor-side before its live-file-bounded collect."""
+    The scan is distributed and filtered to action rows executor-side;
+    the driver collects the reconciled state (live adds, tombstones and
+    a handful of table-level actions) in one job per file set."""
     version = int(lc["version"])
     stem = f"{version:020d}.checkpoint"
     if lc.get("parts") is not None:
@@ -205,12 +234,10 @@ def _checkpoint_actions(
                 f"{len(missing)}/{parts} parts (e.g. {missing[0]}); an "
                 "incomplete checkpoint must not be read"
             )
-        cp = spark.read.parquet(*paths)
-        return _collect_proto_meta(cp), cp
+        return _collect_actions(spark.read.parquet(*paths))
     classic = os.path.join(log_dir, f"{stem}.parquet")
     if os.path.exists(classic):
-        cp = spark.read.parquet(classic)
-        return _collect_proto_meta(cp), cp
+        return _collect_actions(spark.read.parquet(classic))
     # v2 checkpoint: UUID-named manifest
     v2_cands = sorted(
         f
@@ -223,151 +250,92 @@ def _checkpoint_actions(
             f"file matching {stem}.* exists under {log_dir}"
         )
     top_path = os.path.join(log_dir, v2_cands[0])
-    pm: list[dict] = []
-    sidecars: list[str] = []
-    inline: DataFrame | None = None
     if top_path.endswith(".json"):
         with open(top_path) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "protocol" in a or "metaData" in a:
-                    pm.append(
-                        {"protocol": a.get("protocol"), "metaData": a.get("metaData")}
-                    )
-                elif "sidecar" in a:
-                    sidecars.append(a["sidecar"]["path"])
+            top = [json.loads(line) for line in fh if line.strip()]
+        inline = any("add" in a or "remove" in a for a in top)
     else:
-        top = spark.read.parquet(top_path)
-        cols = set(top.columns)
-        if {"protocol", "metaData"} & cols:
-            pm = _collect_proto_meta(top)
-        if "sidecar" in cols:
-            sidecars = [
-                r["path"]
-                for r in top.filter(F.col("sidecar").isNotNull())
-                .select("sidecar.path")
-                .collect()
-            ]
-        if "add" in cols:
-            inline = top
-    frames: list[DataFrame] = []
-    if sidecars:
-        frames.append(
-            spark.read.parquet(
-                *[os.path.join(log_dir, "_sidecars", p) for p in sidecars]
-            )
-        )
-    if inline is not None:
-        frames.append(inline.select(*(c for c in inline.columns if c == "add")))
-    if not frames:
+        top_df = spark.read.parquet(top_path)
+        top = _collect_actions(top_df)
+        inline = "add" in top_df.columns
+    sidecars = [a["sidecar"]["path"] for a in top if "sidecar" in a]
+    if not sidecars and not inline:
         raise ValueError(
             f"v2 checkpoint manifest {top_path} carries neither sidecar "
             "actions nor inline file actions"
         )
-    adds = frames[0]
-    for extra in frames[1:]:
-        adds = adds.unionByName(extra, allowMissingColumns=True)
-    return pm, adds
+    actions = [a for a in top if next(iter(a)) in _STATE_ACTIONS]
+    if sidecars:
+        actions += _collect_actions(
+            spark.read.parquet(
+                *[os.path.join(log_dir, "_sidecars", p) for p in sidecars]
+            )
+        )
+    return actions
 
 
-def delta_state(
+class LogState(NamedTuple):
+    """The reconciled state of one table version (see ``log_state``)."""
+
+    version: int
+    protocol: dict
+    metadata: dict
+    #: decoded path -> the whole live ``add`` action
+    adds: dict[str, dict]
+    #: decoded path -> the ``remove`` action of a file no longer live
+    tombstones: dict[str, dict]
+    #: appId -> the version of its latest ``txn`` action
+    txns: dict[str, int]
+    #: domain -> its latest ``domainMetadata`` action (removed ones dropped)
+    domains: dict[str, dict]
+
+
+def log_state(
     spark: SparkSession, base: str, version: int | None = None
-) -> tuple[dict[str, dict], str, list[str], dict, dict[str, dict]]:
-    """Reconstruct the live file set at ``version`` (None = latest).
+) -> LogState:
+    """Replay the log of the table at ``base`` to ``version`` (None = the
+    tip).
 
-    Returns (live: path -> partitionValues, schemaString, partitionColumns,
-    tableConfiguration — e.g. delta.columnMapping.mode, dvs: path ->
-    deletionVector descriptor for files carrying one).
-    Uses the ``_last_checkpoint`` → checkpoint-parquet fast path when the
+    Uses the ``_last_checkpoint`` → checkpoint fast path when the
     checkpoint version is ≤ the target, then replays only the JSON
     commits after it; a time-travel target BEFORE the checkpoint replays
     the retained JSON commits from 0 (same rule as Delta's own reader).
-    """
+    A table without ``_last_checkpoint`` is replayed without a Spark
+    job. Every ``protocol`` action replayed passes the reader gate."""
     log_dir = os.path.join(base, "_delta_log")
     commits = _versions(log_dir)
-    lc_path = os.path.join(log_dir, "_last_checkpoint")
-    if not commits:
-        # log retention can leave checkpoint-only tables: the checkpoint
-        # version IS the only reconstructable state
-        if not os.path.exists(lc_path):
-            raise FileNotFoundError(f"no Delta commits under {log_dir}")
-        with open(lc_path) as fh:
-            cp_only_version = json.load(fh)["version"]
-        target = cp_only_version if version is None else version
-        if target > cp_only_version:
-            # same wrong-version hazard as the commit-tip guard below:
-            # answering the checkpoint state AS IF it were `target` would
-            # hand callers a silently wrong version.
-            raise ValueError(
-                f"cannot time travel to version {target}: checkpoint-only "
-                f"log under {log_dir} ends at version {cp_only_version}"
-            )
-        if target < cp_only_version:
-            raise ValueError(
-                f"cannot reconstruct version {target}: commits before the "
-                f"checkpoint at version {cp_only_version} were retention-"
-                f"deleted under {log_dir}"
-            )
-    else:
-        target = commits[-1] if version is None else version
-    if commits and target > commits[-1]:
+    lc = _last_checkpoint(log_dir)
+    tip = _tip_of(commits, lc)
+    if tip < 0:
+        raise FileNotFoundError(f"no Delta commits under {log_dir}")
+    target = tip if version is None else version
+    if target > tip:
         # Delta's own reader errors on time travel past the last version;
         # silently returning the latest state AS IF it were `target` would
         # hand callers wrong-version data with no signal.
         raise ValueError(
-            f"cannot time travel to version {target}: latest commit under "
-            f"{log_dir} is {commits[-1]}"
+            f"cannot time travel to version {target}: "
+            + (
+                f"latest commit under {log_dir} is {tip}"
+                if commits
+                else f"checkpoint-only log under {log_dir} ends at version {tip}"
+            )
+        )
+    if not commits and target < tip:
+        # log retention can leave checkpoint-only tables: the checkpoint
+        # version IS the only reconstructable state
+        raise ValueError(
+            f"cannot reconstruct version {target}: commits before the "
+            f"checkpoint at version {tip} were retention-deleted under {log_dir}"
         )
 
-    live: dict[str, dict] = {}
-    dvs: dict[str, dict] = {}
-    schema_string: str | None = None
-    part_cols: list[str] = []
-    config: dict = {}
-    protocol_seen = False
+    sources: list[list[dict]] = []
     start = 0
-
-    if os.path.exists(lc_path):
-        with open(lc_path) as fh:
-            lc = json.load(fh)
-        cp_version = lc["version"]
-        if cp_version <= target:
-            # checkpoint rows are the RECONCILED state: non-null `add`s are
-            # the live set (checkpoint `remove`s are vacuum tombstones,
-            # already applied). _checkpoint_actions resolves any of the
-            # three public layouts (classic / multi-part / v2 sidecar)
-            # into one DISTRIBUTED frame; the driver collects only (a)
-            # the ≤2 protocol/metaData rows and (b) the live add entries
-            # — bounded by LIVE FILES, never by action count: a 100 TB
-            # table's checkpoint carries millions of rows (adds + vacuum
-            # tombstones), but the tombstones and any other action
-            # columns are filtered out executor-side before collect.
-            pm, cp = _checkpoint_actions(spark, log_dir, lc)
-            for r in pm:
-                if r["protocol"] is not None:
-                    _check_protocol(r["protocol"])
-                    protocol_seen = True
-                if r["metaData"] is not None:
-                    md = r["metaData"]
-                    schema_string = md["schemaString"]
-                    part_cols = list(md["partitionColumns"] or [])
-                    config = dict(md["configuration"] or {}) if "configuration" in md else {}
-            add_cols = ["add.path", "add.partitionValues"]
-            has_dv = "deletionVector" in [
-                f.name for f in cp.schema["add"].dataType.fields
-            ]
-            if has_dv:
-                add_cols.append("add.deletionVector")
-            for r in (
-                cp.filter(F.col("add").isNotNull()).select(*add_cols).collect()
-            ):
-                live[_decode_path(r["path"])] = dict(r["partitionValues"] or {})
-                if has_dv and r["deletionVector"] is not None:
-                    dvs[_decode_path(r["path"])] = r["deletionVector"].asDict()
-            start = cp_version + 1
-
+    if lc is not None and int(lc["version"]) <= target:
+        # checkpoint rows are the RECONCILED state: non-null `add`s are
+        # the live set, `remove`s the tombstones of files no longer live
+        sources.append(_checkpoint_actions(spark, log_dir, lc))
+        start = int(lc["version"]) + 1
     if start == 0 and commits and commits[0] > 0:
         # log retention removed commits 0..commits[0]-1 and no checkpoint
         # covers the gap — the state at `target` is not reconstructable.
@@ -375,41 +343,73 @@ def delta_state(
             f"retained log starts at commit {commits[0]} with no usable "
             f"checkpoint; cannot reconstruct version {target}"
         )
+    sources += [_read_commit(log_dir, v) for v in commits if start <= v <= target]
 
-    for v in commits:
-        if v < start or v > target:
-            continue
-        for a in _read_commit(log_dir, v):
-            if "protocol" in a:
-                _check_protocol(a["protocol"])
-                protocol_seen = True
-            elif "add" in a:
-                p = _decode_path(a["add"]["path"])
-                live[p] = dict(a["add"].get("partitionValues") or {})
-                # a DV'd file is committed as remove(old) + add(same path,
-                # new descriptor); a re-add WITHOUT a descriptor (e.g. a
-                # compaction rewrite) clears any previous one.
-                dv = a["add"].get("deletionVector")
-                if dv is not None:
-                    dvs[p] = dict(dv)
-                else:
-                    dvs.pop(p, None)
-            elif "remove" in a:
-                p = _decode_path(a["remove"]["path"])
-                live.pop(p, None)
-                dvs.pop(p, None)
-            elif "metaData" in a:
-                schema_string = a["metaData"]["schemaString"]
-                part_cols = list(a["metaData"].get("partitionColumns") or [])
-                config = dict(a["metaData"].get("configuration") or {})
-    if schema_string is None:
+    protocol = metadata = None
+    adds: dict[str, dict] = {}
+    tombstones: dict[str, dict] = {}
+    txns: dict[str, int] = {}
+    domains: dict[str, dict] = {}
+    for a in (a for actions in sources for a in actions):
+        if "add" in a:
+            # a DV'd file is committed as remove(old) + add(same path, new
+            # descriptor): the later add replaces the whole action
+            p = _decode_path(a["add"]["path"])
+            adds[p] = a["add"]
+            tombstones.pop(p, None)
+        elif "remove" in a:
+            p = _decode_path(a["remove"]["path"])
+            adds.pop(p, None)
+            tombstones[p] = a["remove"]
+        elif "metaData" in a:
+            metadata = a["metaData"]
+        elif "protocol" in a:
+            _check_protocol(a["protocol"])
+            protocol = a["protocol"]
+        elif "txn" in a:
+            txns[a["txn"]["appId"]] = int(a["txn"]["version"])
+        elif "domainMetadata" in a:
+            d = a["domainMetadata"]
+            if d.get("removed"):
+                domains.pop(d["domain"], None)
+            else:
+                domains[d["domain"]] = d
+    if metadata is None:
         raise ValueError(f"no metaData action found replaying {log_dir} to {target}")
-    if not protocol_seen:
+    if protocol is None:
         raise ValueError(
             f"no protocol action found replaying {log_dir} to {target}; "
             "a valid Delta log carries one and readers must check it"
         )
-    return live, schema_string, part_cols, config, {p: d for p, d in dvs.items() if p in live}
+    return LogState(target, protocol, metadata, adds, tombstones, txns, domains)
+
+
+def _project(
+    st: LogState,
+) -> tuple[dict[str, dict], str, list[str], dict, dict[str, dict]]:
+    """The projection of a ``LogState`` most readers need: (live: path ->
+    partitionValues, schemaString, partitionColumns, tableConfiguration —
+    e.g. delta.columnMapping.mode, dvs: path -> deletionVector descriptor
+    for files carrying one)."""
+    md = st.metadata
+    return (
+        {p: dict(a.get("partitionValues") or {}) for p, a in st.adds.items()},
+        md["schemaString"],
+        list(md.get("partitionColumns") or []),
+        dict(md.get("configuration") or {}),
+        {
+            p: dict(a["deletionVector"])
+            for p, a in st.adds.items()
+            if a.get("deletionVector")
+        },
+    )
+
+
+def delta_state(
+    spark: SparkSession, base: str, version: int | None = None
+) -> tuple[dict[str, dict], str, list[str], dict, dict[str, dict]]:
+    """``_project(log_state(spark, base, version))``."""
+    return _project(log_state(spark, base, version))
 
 
 def delta_snapshot(
@@ -550,6 +550,19 @@ def _write_parquet_file(src_schema, pdf, path: str) -> None:
     )
 
 
+def _stage_single_parquet(df: DataFrame, dest: str) -> None:
+    """Distributed write → one deterministic parquet FILE at ``dest``
+    (Delta add.path and checkpoint names are files). coalesce(1) is
+    metadata-staging only: real writers emit one add per task file; the
+    fixtures keep one per commit for pinning."""
+    stage = dest + ".stage"
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    os.makedirs(os.path.dirname(dest), exist_ok=True)
+    os.replace(os.path.join(stage, part), dest)
+    shutil.rmtree(stage)
+
+
 class CommitConflict(Exception):
     """Another writer already committed this version (the loser of the
     put-if-absent race), or ``commit`` lost ten slots in a row."""
@@ -589,7 +602,8 @@ def commit(base: str, actions: list[dict], read_tip: int | None = None) -> int:
     writer here goes through:
 
     - ``read_tip=None`` — a BLIND commit (an append): it starts after the
-      current tip and, on a lost put-if-absent slot, retries at the next
+      current tip (``_tip``: a checkpoint-only log continues after its
+      checkpoint) and, on a lost put-if-absent slot, retries at the next
       version; appends never semantically conflict.
     - ``read_tip=N`` — a READ-DEPENDENT commit, computed against the
       snapshot at version N: it starts at N + 1, and on each lost slot it
@@ -603,11 +617,7 @@ def commit(base: str, actions: list[dict], read_tip: int | None = None) -> int:
 
     After 10 lost slots it raises ``CommitConflict``."""
     log_dir = os.path.join(base, "_delta_log")
-    if read_tip is None:
-        vs = _versions(log_dir)
-        version = (vs[-1] + 1) if vs else 0
-    else:
-        version = read_tip + 1
+    version = (_tip(base) if read_tip is None else read_tip) + 1
     removes = {_decode_path(a["remove"]["path"]) for a in actions if "remove" in a}
     for _ in range(10):
         try:
@@ -630,24 +640,105 @@ def commit(base: str, actions: list[dict], read_tip: int | None = None) -> int:
     raise CommitConflict(f"gave up after 10 contended versions under {log_dir}")
 
 
-def _add(path: str, partition_values: dict | None = None) -> dict:
+# ----------------------------------------------------------------- actions
+
+
+def _add(
+    base: str,
+    rel: str,
+    *,
+    partition_values: dict | None = None,
+    stats: dict | None = None,
+    dv: dict | None = None,
+    data_change: bool = True,
+    **fields,
+) -> dict:
+    """An ``add`` action for the data file ``rel`` under ``base``. Its
+    ``size`` (bytes) and ``modificationTime`` (ms) are read from the
+    file, as PROTOCOL.md defines them; ``stats`` is serialized to the
+    JSON string the protocol stores; ``fields`` carries the optional
+    ones (``baseRowId``, ``defaultRowCommitVersion``,
+    ``clusteringProvider``, ``tags``)."""
+    st = os.stat(os.path.join(base, _decode_path(rel)))
+    add = {
+        "path": rel,
+        "partitionValues": dict(partition_values or {}),
+        "size": st.st_size,
+        "modificationTime": int(st.st_mtime * 1000),
+        "dataChange": data_change,
+        **fields,
+    }
+    if stats is not None:
+        add["stats"] = json.dumps(stats)
+    if dv is not None:
+        add["deletionVector"] = dv
+    return {"add": add}
+
+
+def _remove(add: dict, *, data_change: bool = True) -> dict:
+    """The ``remove`` action retiring ``add`` (an add action or its
+    body, e.g. a ``log_state`` live add): its path, partition values,
+    size and deletion vector, stamped with the current time."""
+    add = add.get("add", add)
+    rm = {
+        "path": add["path"],
+        "deletionTimestamp": int(time.time() * 1000),
+        "dataChange": data_change,
+        "partitionValues": dict(add.get("partitionValues") or {}),
+    }
+    for k in ("size", "deletionVector"):
+        if add.get(k) is not None:
+            rm[k] = add[k]
+    return {"remove": rm}
+
+
+def _protocol(
+    reader: int = 1,
+    writer: int = 2,
+    *,
+    reader_features: list[str] | None = None,
+    writer_features: list[str] | None = None,
+) -> dict:
+    """A ``protocol`` action; feature lists only for reader v3 / writer v7."""
+    p: dict = {"minReaderVersion": reader, "minWriterVersion": writer}
+    if reader_features is not None:
+        p["readerFeatures"] = list(reader_features)
+    if writer_features is not None:
+        p["writerFeatures"] = list(writer_features)
+    return {"protocol": p}
+
+
+def _metadata(
+    partition_columns: list[str] = (),
+    schema_json: dict | None = None,
+    configuration: dict | None = None,
+    **fields,
+) -> dict:
+    """A ``metaData`` action over ``schema_json`` (default: nation's).
+    ``fields`` sets any other key, or replaces a built one — a writer
+    editing the replayed metaData passes it whole
+    (``_metadata(**{**st.metadata, "schemaString": ...})``)."""
     return {
-        "add": {
-            "path": path,
-            "partitionValues": partition_values or {},
-            "size": 1024,
-            "modificationTime": 1700000000000,
-            "dataChange": True,
+        "metaData": {
+            "id": "fixture-table",
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": json.dumps(schema_json or _NATION_SCHEMA_JSON),
+            "partitionColumns": list(partition_columns),
+            "configuration": dict(configuration or {}),
+            **fields,
         }
     }
 
 
-def _remove(path: str) -> dict:
+def _cdc(base: str, rel: str) -> dict:
+    """A ``cdc`` action for the change-data file ``rel`` (size read from
+    the file); ``dataChange`` is false, as PROTOCOL.md requires."""
     return {
-        "remove": {
-            "path": path,
-            "deletionTimestamp": 1700000000000,
-            "dataChange": True,
+        "cdc": {
+            "path": rel,
+            "partitionValues": {},
+            "size": os.path.getsize(os.path.join(base, rel)),
+            "dataChange": False,
         }
     }
 
@@ -661,34 +752,140 @@ _NATION_SCHEMA_JSON = {
     ],
 }
 
-_CHECKPOINT_SCHEMA = (
-    "protocol struct<minReaderVersion:int,minWriterVersion:int,"
-    "readerFeatures:array<string>,writerFeatures:array<string>>, "
-    "metaData struct<id:string,format:struct<provider:string>,"
-    "schemaString:string,partitionColumns:array<string>,"
-    "configuration:map<string,string>>, "
-    "add struct<path:string,partitionValues:map<string,string>,size:bigint,"
-    "modificationTime:bigint,dataChange:boolean,"
-    "deletionVector:struct<storageType:string,pathOrInlineDv:string,"
-    "offset:int,sizeInBytes:int,cardinality:bigint>>, "
-    "remove struct<path:string,deletionTimestamp:bigint,dataChange:boolean>"
+
+# -------------------------------------------------------------- checkpoints
+
+_DV_DDL = (
+    "struct<storageType:string,pathOrInlineDv:string,offset:int,"
+    "sizeInBytes:int,cardinality:bigint>"
 )
 
+#: one nullable struct column per action kind a checkpoint carries
+_ACTION_DDL = {
+    "protocol": "struct<minReaderVersion:int,minWriterVersion:int,"
+    "readerFeatures:array<string>,writerFeatures:array<string>>",
+    "metaData": "struct<id:string,name:string,description:string,"
+    "format:struct<provider:string,options:map<string,string>>,"
+    "schemaString:string,partitionColumns:array<string>,"
+    "configuration:map<string,string>,createdTime:bigint>",
+    "txn": "struct<appId:string,version:bigint,lastUpdated:bigint>",
+    "domainMetadata": "struct<domain:string,configuration:string,removed:boolean>",
+    "add": "struct<path:string,partitionValues:map<string,string>,size:bigint,"
+    "modificationTime:bigint,dataChange:boolean,stats:string,"
+    f"tags:map<string,string>,deletionVector:{_DV_DDL},baseRowId:bigint,"
+    "defaultRowCommitVersion:bigint,clusteringProvider:string>",
+    "remove": "struct<path:string,deletionTimestamp:bigint,dataChange:boolean,"
+    f"partitionValues:map<string,string>,size:bigint,deletionVector:{_DV_DDL}>",
+}
 
-def _meta_action(
-    partition_columns: list[str],
-    schema_json: dict | None = None,
-    configuration: dict | None = None,
-) -> dict:
-    return {
-        "metaData": {
-            "id": "fixture-table",
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": json.dumps(schema_json or _NATION_SCHEMA_JSON),
-            "partitionColumns": partition_columns,
-            "configuration": configuration or {},
-        }
-    }
+
+def _action_schema(*kinds: str) -> str:
+    return ", ".join(f"{k} {_ACTION_DDL[k]}" for k in kinds)
+
+
+_CHECKPOINT_SCHEMA = _action_schema(*_STATE_ACTIONS)
+#: v2-checkpoint wire shapes (delta.io PROTOCOL.md "V2 Checkpoints"):
+#: sidecar files carry only file actions; the top-level manifest adds
+#: checkpointMetadata and sidecar pointer actions to the classic columns.
+_SIDECAR_SCHEMA = _action_schema("add", "remove")
+_V2_MANIFEST_SCHEMA = (
+    _CHECKPOINT_SCHEMA
+    + ", checkpointMetadata struct<version:bigint>"
+    + ", sidecar struct<path:string,sizeInBytes:bigint>"
+)
+
+#: action rows per checkpoint part before the writer shards the layout
+#: automatically: a 100-TB table's checkpoint is millions of add rows —
+#: one parquet file makes both the write and every reader's first scan
+#: a single-task bottleneck, so production writers cap actions-per-part
+#: (Delta's checkpoint.partSize knob). 100k rows ≈ tens of MB per part.
+_CHECKPOINT_PART_ROWS = 100_000
+
+
+def delta_checkpoint(
+    spark: SparkSession,
+    base: str,
+    parts: int | None = None,
+    v2: bool = False,
+    part_rows: int = _CHECKPOINT_PART_ROWS,
+) -> int:
+    """Checkpoint the table at its tip and point ``_last_checkpoint`` at
+    it; returns the version. Rows are ``log_state``'s replayed actions,
+    verbatim: protocol, metaData, the latest txn per appId, the live
+    domain metadata, every live add (stats, tags, deletion vector, row
+    ids and clustering provider included) and one tombstone per removed
+    file. A log that is already checkpoint-only checkpoints again from
+    that state.
+
+    Layouts (delta.io PROTOCOL.md "Checkpoints"):
+    - default: one classic ``{v:020d}.checkpoint.parquet`` — but when the
+      action-row count exceeds ``part_rows`` the writer AUTOMATICALLY
+      flips to the multi-part layout with ``ceil(rows/part_rows)`` parts
+      (write-side symmetry with the reader: a writer that always emits
+      classic single-file checkpoints cannot serve the tables whose
+      multi-part checkpoints the reader exists for);
+    - ``parts=N``: the v1 MULTI-PART layout forced — table-level actions
+      in part 1, file actions round-robined across
+      ``{v:020d}.checkpoint.{i:010d}.{N:010d}.parquet``, and
+      ``_last_checkpoint`` carrying ``parts``;
+    - ``v2=True``: the V2 layout — a UUID-named top-level manifest
+      (table-level actions + ``checkpointMetadata`` + ``sidecar``
+      pointer) with the file actions in a parquet sidecar under
+      ``_delta_log/_sidecars/``."""
+    st = log_state(spark, base)
+    log_dir = os.path.join(base, "_delta_log")
+    version = st.version
+    head = [
+        {"protocol": st.protocol},
+        {"metaData": st.metadata},
+        *({"txn": {"appId": a, "version": v}} for a, v in sorted(st.txns.items())),
+        *({"domainMetadata": st.domains[d]} for d in sorted(st.domains)),
+    ]
+    files = [{"add": st.adds[p]} for p in sorted(st.adds)] + [
+        {"remove": st.tombstones[p]} for p in sorted(st.tombstones)
+    ]
+
+    def write(actions: list[dict], schema: str, name: str) -> str:
+        dest = os.path.join(log_dir, name)
+        _stage_single_parquet(spark.createDataFrame(actions, schema), dest)
+        return dest
+
+    lc: dict = {"version": version, "size": len(head) + len(files)}
+    if parts is None and not v2 and lc["size"] > part_rows:
+        # automatic layout selection: shard once the reconciled state
+        # outgrows one part
+        parts = -(-lc["size"] // part_rows)
+    if parts is not None:
+        # v1 multi-part: table-level actions ride part 1; file actions
+        # round-robin across parts (the spec allows any distribution)
+        lc["parts"] = parts
+        for i in range(parts):
+            write(
+                (head if i == 0 else []) + files[i::parts],
+                _CHECKPOINT_SCHEMA,
+                f"{version:020d}.checkpoint.{i + 1:010d}.{parts:010d}.parquet",
+            )
+    elif v2:
+        # v2: a parquet sidecar carries the file actions; the UUID-named
+        # manifest the rest plus the sidecar pointer. The UUID is
+        # version-derived (deterministic fixtures rebuild identically).
+        sidecar_rel = f"{version:020d}-sidecar-0001.parquet"
+        sidecar = write(files, _SIDECAR_SCHEMA, os.path.join("_sidecars", sidecar_rel))
+        uuid = f"{version:08x}00-0000-4000-8000-000000000000"
+        write(
+            head
+            + [
+                {"checkpointMetadata": {"version": version}},
+                {"sidecar": {"path": sidecar_rel, "sizeInBytes": os.path.getsize(sidecar)}},
+            ],
+            _V2_MANIFEST_SCHEMA,
+            f"{version:020d}.checkpoint.{uuid}.parquet",
+        )
+    else:
+        write(head + files, _CHECKPOINT_SCHEMA, f"{version:020d}.checkpoint.parquet")
+    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
+        json.dump(lc, fh)
+    return version
 
 
 def _build_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
@@ -722,52 +919,14 @@ def _build_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         _write_parquet_file(tbl.schema, frame, os.path.join(base, rel))
 
     log_dir = os.path.join(base, "_delta_log")
-    _commit(
-        log_dir,
-        0,
-        [
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            _meta_action([]),
-            _add("part-a.parquet"),
-            _add("part-b.parquet"),
-        ],
-    )
-    _commit(log_dir, 1, [_remove("part-a.parquet"), _add("part-c.parquet")])
-    _commit(log_dir, 2, [_remove("part-b.parquet"), _add("part-d.parquet")])
-
+    add = {p: _add(base, f"part-{p}.parquet") for p in "abcde"}
+    _commit(log_dir, 0, [_protocol(), _metadata(), add["a"], add["b"]])
+    _commit(log_dir, 1, [_remove(add["a"]), add["c"]])
+    _commit(log_dir, 2, [_remove(add["b"]), add["d"]])
     # checkpoint at v2: reconciled state (live adds c + d, tombstoned
     # removes a + b, protocol, metaData) as one parquet file
-    cp_rows = [
-        ((1, 2, None, None), None, None, None),
-        (
-            None,
-            (
-                "fixture-table",
-                ("parquet",),
-                json.dumps(_NATION_SCHEMA_JSON),
-                [],
-                {},
-            ),
-            None,
-            None,
-        ),
-        (None, None, ("part-c.parquet", {}, 1024, 1700000000000, True, None), None),
-        (None, None, ("part-d.parquet", {}, 1024, 1700000000000, True, None), None),
-        (None, None, None, ("part-a.parquet", 1700000000000, True)),
-        (None, None, None, ("part-b.parquet", 1700000000000, True)),
-    ]
-    cp_df = spark.createDataFrame(cp_rows, schema=_CHECKPOINT_SCHEMA)
-    cp_tmp = os.path.join(base, "_cp_tmp")
-    cp_df.coalesce(1).write.mode("overwrite").parquet(cp_tmp)
-    part = next(f for f in os.listdir(cp_tmp) if f.endswith(".parquet"))
-    os.replace(
-        os.path.join(cp_tmp, part),
-        os.path.join(log_dir, f"{2:020d}.checkpoint.parquet"),
-    )
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
-        json.dump({"version": 2, "size": len(cp_rows)}, fh)
-
-    _commit(log_dir, 3, [_remove("part-d.parquet"), _add("part-e.parquet")])
+    delta_checkpoint(spark, base)
+    _commit(log_dir, 3, [_remove(add["d"]), add["e"]])
 
 
 def _build_partitioned_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
@@ -785,22 +944,14 @@ def _build_partitioned_fixture(spark: SparkSession, sf_dir: str, base: str) -> N
         rel = f"n_regionkey={rk}/part-0.parquet"
         sub = pdf[pdf.n_regionkey == rk][["n_nationkey", "n_name"]]
         _write_parquet_file(data_schema, sub, os.path.join(base, rel))
-        adds.append(_add(rel, {"n_regionkey": str(int(rk))}))
+        adds.append(_add(base, rel, partition_values={"n_regionkey": str(int(rk))}))
     _write_parquet_file(
         data_schema,
         pdf.head(2)[["n_nationkey", "n_name"]].assign(n_name="GARBAGE"),
         os.path.join(base, "n_regionkey=0/orphan.parquet"),
     )
     log_dir = os.path.join(base, "_delta_log")
-    _commit(
-        log_dir,
-        0,
-        [
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            _meta_action(["n_regionkey"]),
-            *adds,
-        ],
-    )
+    _commit(log_dir, 0, [_protocol(), _metadata(["n_regionkey"]), *adds])
 
 
 # ---------------------------------------------------------------- queries
@@ -907,43 +1058,31 @@ def _build_dv_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
     _write_parquet_file(tbl.schema, lo, os.path.join(base, "part-lo.parquet"))
     _write_parquet_file(tbl.schema, hi, os.path.join(base, "part-hi.parquet"))
     log_dir = os.path.join(base, "_delta_log")
-    _commit(
-        log_dir,
-        0,
-        [
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            _meta_action([]),
-            _add("part-lo.parquet"),
-            _add("part-hi.parquet"),
-        ],
-    )
+    lo_add = _add(base, "part-lo.parquet")
+    hi_add = _add(base, "part-hi.parquet")
+    _commit(log_dir, 0, [_protocol(), _metadata(), lo_add, hi_add])
     # DELETE is remove + re-add of the SAME path with a DV descriptor —
     # zero data rewritten (merge-on-read), exactly how DV-enabled writers
     # commit deletes. Remove precedes add so sequential replay keeps the
     # file live.
-    lo_add = _add("part-lo.parquet")
-    lo_add["add"]["deletionVector"] = make_dv_descriptor_inline([1, 3, 5])
     _commit(
         log_dir,
         1,
         [
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": ["deletionVectors"],
-                    "writerFeatures": ["deletionVectors"],
-                }
-            },
-            _remove("part-lo.parquet"),
-            lo_add,
+            _protocol(
+                3,
+                7,
+                reader_features=["deletionVectors"],
+                writer_features=["deletionVectors"],
+            ),
+            _remove(lo_add),
+            _add(base, "part-lo.parquet", dv=make_dv_descriptor_inline([1, 3, 5])),
         ],
     )
-    hi_add = _add("part-hi.parquet")
-    hi_add["add"]["deletionVector"] = make_dv_descriptor_file(
-        base, [0, 2], prefix="ab"
+    hi_dv = make_dv_descriptor_file(base, [0, 2], prefix="ab")
+    _commit(
+        log_dir, 2, [_remove(hi_add), _add(base, "part-hi.parquet", dv=hi_dv)]
     )
-    _commit(log_dir, 2, [_remove("part-hi.parquet"), hi_add])
 
 
 @query(
@@ -1112,35 +1251,28 @@ def _build_cdf_fixture(spark: SparkSession, sf_dir: str, base: str) -> None:
         cdc_schema, cdc, os.path.join(base, "_change_data", "cdc-0.parquet")
     )
     log_dir = os.path.join(base, "_delta_log")
+    all_add = _add(base, "part-all.parquet")
+    upd_add = _add(base, "part-upd.parquet")
     _commit(
         log_dir,
         0,
         [
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 4}},
-            _meta_action(
-                [], configuration={"delta.enableChangeDataFeed": "true"}
-            ),
-            _add("part-all.parquet"),
+            _protocol(1, 4),
+            _metadata(configuration={"delta.enableChangeDataFeed": "true"}),
+            all_add,
         ],
     )
     _commit(
         log_dir,
         1,
         [
-            _remove("part-all.parquet"),
-            _add("part-rest.parquet"),
-            _add("part-upd.parquet"),
-            {
-                "cdc": {
-                    "path": "_change_data/cdc-0.parquet",
-                    "partitionValues": {},
-                    "size": 1024,
-                    "dataChange": False,
-                }
-            },
+            _remove(all_add),
+            _add(base, "part-rest.parquet"),
+            upd_add,
+            _cdc(base, "_change_data/cdc-0.parquet"),
         ],
     )
-    _commit(log_dir, 2, [_remove("part-upd.parquet")])
+    _commit(log_dir, 2, [_remove(upd_add)])
 
 
 @query(
@@ -1213,8 +1345,7 @@ def _cdf_file_plan(base: str, v_from: int, v_to: int) -> list[tuple]:
 
 def _cdf_next_version(base: str, _seen: int) -> int:
     """The first version not yet committed: the tail's latest offset."""
-    vs = _versions(os.path.join(base, "_delta_log"))
-    return (vs[-1] + 1) if vs else 0
+    return _tip(base) + 1
 
 
 def _read_cdf_split(split):
@@ -1314,16 +1445,15 @@ def _commit_ict_ms(log_dir: str, version: int) -> int | None:
     return None
 
 
-def _ict_enablement(log_dir: str, versions: list[int]) -> tuple[int, int] | None:
+def _ict_enablement(
+    spark: SparkSession, base: str, versions: list[int]
+) -> tuple[int, int] | None:
     """(enablementVersion, enablementTimestampMs) when the table's tip
     metaData enables inCommitTimestamps, else None. Absent enablement
     properties on an enabled table mean 'enabled since creation'
     (version 0, first commit's ICT)."""
-    config: dict = {}
-    for v in versions:
-        for a in _read_commit(log_dir, v):
-            if "metaData" in a:
-                config = dict(a["metaData"].get("configuration") or {})
+    log_dir = os.path.join(base, "_delta_log")
+    config = log_state(spark, base).metadata.get("configuration") or {}
     if config.get("delta.enableInCommitTimestamps", "false").lower() != "true":
         return None
     ev = int(config.get("delta.inCommitTimestampEnablementVersion", versions[0]))
@@ -1338,7 +1468,7 @@ def _ict_enablement(log_dir: str, versions: list[int]) -> tuple[int, int] | None
     return ev, int(et)
 
 
-def delta_version_at_timestamp(base: str, ts: float) -> int:
+def delta_version_at_timestamp(spark: SparkSession, base: str, ts: float) -> int:
     """Resolve ``FOR TIMESTAMP AS OF`` (``ts`` in epoch SECONDS).
 
     Tables WITHOUT the inCommitTimestamp feature: the latest commit
@@ -1357,7 +1487,7 @@ def delta_version_at_timestamp(base: str, ts: float) -> int:
     versions = _versions(log_dir)
     if not versions:
         raise FileNotFoundError(f"no Delta commits under {log_dir}")
-    ict = _ict_enablement(log_dir, versions)
+    ict = _ict_enablement(spark, base, versions)
     if ict is not None:
         enable_v, enable_ts_ms = ict
         if ts * 1000 >= enable_ts_ms:
@@ -1370,9 +1500,8 @@ def delta_version_at_timestamp(base: str, ts: float) -> int:
                     # PROTOCOL.md requires EVERY post-enablement commit to
                     # carry an ICT; silently skipping one would resolve the
                     # target to a wrong earlier version on a corrupt log —
-                    # refuse loudly instead (round-10 ADVICE fix, the same
-                    # discipline _ict_enablement applies to the enablement
-                    # commit itself)
+                    # refuse loudly instead (the same discipline
+                    # _ict_enablement applies to the enablement commit)
                     raise ValueError(
                         f"commit {v} is at/after the inCommitTimestamp "
                         f"enablement version ({enable_v}) but carries no "
@@ -1433,7 +1562,7 @@ def scan_delta_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
             if os.path.exists(p):
                 os.utime(p, (t1 + v, t1 + v))
         t1 = os.path.getmtime(os.path.join(log_dir, f"{1:020d}.json"))
-    version = delta_version_at_timestamp(base, t1)
+    version = delta_version_at_timestamp(spark, base, t1)
     assert version == 1, f"timestamp resolution picked {version}"
     return delta_snapshot(spark, base, version=version).select(
         "n_nationkey", "n_name", "n_regionkey"

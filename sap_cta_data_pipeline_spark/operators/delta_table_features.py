@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-from .delta_reader import _meta_action, delta_snapshot, delta_state
+from .delta_reader import _commit, _metadata, _protocol, delta_snapshot, delta_state
 from .lakehouse_interop import delta_append_commit
 from .sources import built
 
@@ -59,22 +59,13 @@ def delta_create_featured(
         f"delta.constraints.{name}": expr
         for name, expr in (constraints or {}).items()
     }
-    log_dir = os.path.join(base, "_delta_log")
-    os.makedirs(log_dir, exist_ok=True)
-    from .delta_reader import _commit
-
     _commit(
-        log_dir,
+        os.path.join(base, "_delta_log"),
         0,
         [
-            {
-                "protocol": {
-                    "minReaderVersion": 1,
-                    # checkConstraints=3, generatedColumns=4 (PROTOCOL.md)
-                    "minWriterVersion": 4 if generated else 3,
-                }
-            },
-            _meta_action([], schema_json=schema_json, configuration=config),
+            # checkConstraints=3, generatedColumns=4 (PROTOCOL.md)
+            _protocol(1, 4 if generated else 3),
+            _metadata(schema_json=schema_json, configuration=config),
         ],
     )
 

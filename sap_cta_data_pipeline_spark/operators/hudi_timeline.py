@@ -19,10 +19,10 @@ file group's latest slice. A copy-on-write table is a merge-on-read
 table without logs.
 
 Concurrency (hudi.apache.org/docs/concurrency_control): a read-dependent
-write aborts when an instant it did not read completed and wrote one of
-its file groups. The check and the completing rename run under an
-``fcntl.flock`` on ``.hoodie/lock``, which the OS drops if the process
-dies.
+write aborts when an instant its read did not see completed (before or
+after the write claimed its own) and wrote one of its file groups. The
+check and the completing rename run under an ``fcntl.flock`` on
+``.hoodie/lock``, which the OS drops if the process dies.
 """
 
 from __future__ import annotations
@@ -219,14 +219,15 @@ def base_files(base: str, as_of: str | None = None) -> dict[str, str]:
     return {fid: b for fid, (b, _) in file_slices(base, as_of).items() if b is not None}
 
 
-def snapshot(base: str) -> tuple[str, Slices]:
-    """(read instant, latest file slices) from one listing: what a
-    read-dependent writer plans against and hands to ``commit``. The read
-    instant is the latest completed instant, "" on a table without one."""
+def snapshot(base: str) -> tuple[frozenset[str], Slices]:
+    """(read, latest file slices) from one listing: what a read-dependent
+    writer plans against and hands to ``commit``. The read is the set of
+    instants the listing saw completed — an instant pending at the read
+    is not in it, whenever it completes."""
     tl = _timeline_dir(base)
     listing = _instants(tl)
-    done = [i.ts for i in listing if i.state == "completed"]
-    return (done[-1] if done else ""), _view(tl, listing, None)
+    seen = frozenset(i.ts for i in listing if i.state == "completed")
+    return seen, _view(tl, listing, None)
 
 
 # ----------------------------------------------------------------- commit
@@ -253,11 +254,9 @@ def _release(tl: str, ts: str, action: str) -> None:
             os.remove(os.path.join(tl, name))
 
 
-def _claim(tl: str, instant: str | None) -> tuple[str, set[str]]:
+def _claim(tl: str, instant: str | None) -> str:
     """Claim ``instant`` (None: the next one) by exclusively creating its
-    ``.requested`` file; a taken name moves on to the next instant. Also
-    returns the instants pending at the claim: the writer's read saw none
-    of them."""
+    ``.requested`` file; a taken name moves on to the next instant."""
     while True:
         ts = instant or _next_instant(tl)
         try:
@@ -266,9 +265,8 @@ def _claim(tl: str, instant: str | None) -> tuple[str, set[str]]:
             if instant is not None:
                 raise CommitConflict(f"instant {ts} is taken under {tl}") from None
             continue
-        listing = _instants(tl)
-        if next(i for i in listing if i.ts == ts).state == "requested":
-            return ts, {i.ts for i in listing if i.state != "completed" and i.ts != ts}
+        if next(i for i in _instants(tl) if i.ts == ts).state == "requested":
+            return ts
         # another writer completed ts (dropping its claim) after we chose it
         os.remove(os.path.join(tl, f"{ts}.requested"))
         if instant is not None:
@@ -284,16 +282,16 @@ def _complete(tl: str, ts: str, action: str, meta: dict) -> None:
     _release(tl, ts, action)
 
 
-def _begin(tl: str, action: str, instant: str | None) -> tuple[str, set[str]]:
-    ts, pending = _claim(tl, instant)
+def _begin(tl: str, action: str, instant: str | None) -> str:
+    ts = _claim(tl, instant)
     open(os.path.join(tl, _inflight_name(ts, action)), "w").close()
-    return ts, pending
+    return ts
 
 
 def begin(base: str, action: str, instant: str | None = None) -> str:
     """Claim an instant for ``action`` and mark it inflight — the state a
     writer that died mid-write leaves behind."""
-    return _begin(_timeline_dir(base), action, instant)[0]
+    return _begin(_timeline_dir(base), action, instant)
 
 
 def commit(
@@ -302,7 +300,7 @@ def commit(
     *,
     action: str,
     operation: str,
-    read_instant: str | None = None,
+    read: frozenset[str] | None = None,
     instant: str | None = None,
 ) -> str | None:
     """Claim an instant (``instant`` pins it), mark it inflight, and let
@@ -310,12 +308,13 @@ def commit(
     (fileId, path) pairs written; then complete ``action`` under the
     timeline lock. Returns the instant, or None when nothing was written.
 
-    ``read_instant`` (``snapshot``'s) marks a read-dependent write: if an
-    instant it did not read completed and wrote one of the same file
-    groups, the write deletes its files and claim and raises
-    ``CommitConflict``."""
+    ``read`` (``snapshot``'s) marks a read-dependent write: if a data
+    instant the read did not see completed and wrote one of the same
+    file groups, the write deletes its files and claim and raises
+    ``CommitConflict``. That covers an instant completed after the read,
+    and one pending at the read that completed at any time after."""
     tl = _timeline_dir(base)
-    ts, pending = _begin(tl, action, instant)
+    ts = _begin(tl, action, instant)
     try:
         written = build(ts)
     except BaseException:
@@ -327,11 +326,11 @@ def commit(
     stats = [{"fileId": fid, "path": path} for fid, path in written]
     meta = {"partitionToWriteStats": {"": stats}, "operation": operation}
     with _locked(tl):
-        for ins in _instants(tl) if read_instant is not None else []:
+        for ins in _instants(tl) if read is not None else []:
             if (
                 ins.state == "completed"
                 and ins.action in _DATA_ACTIONS
-                and (ins.ts > read_instant or ins.ts in pending)
+                and ins.ts not in read
             ):
                 hit = {f for f, _ in written} & {f for f, _ in _writes(_meta(tl, ins))}
                 if hit:
@@ -341,8 +340,8 @@ def commit(
                     _release(tl, ts, action)
                     raise CommitConflict(
                         f"concurrent commit: instant {ins.ts} under {tl} wrote "
-                        f"file groups {sorted(hit)} after the read at "
-                        f"{read_instant or 'an empty timeline'}; recompute"
+                        f"file groups {sorted(hit)} that its read did not "
+                        "see; recompute"
                     )
         _complete(tl, ts, action, meta)
     return ts
@@ -388,7 +387,7 @@ def hudi_clean(base: str, retain_commits: int) -> dict:
         "earliestCommitToRetain": fence,
         "deleted": sorted(deleted),
     }
-    ts, _ = _claim(tl, None)
+    ts = _claim(tl, None)
     with _locked(tl):
         _complete(tl, ts, "clean", meta)
     return meta

@@ -130,7 +130,7 @@ def hudi_cow_upsert(
             writes.append((fid, rel))
         return writes
 
-    return ht.commit(base, build, action="commit", operation="upsert", read_instant=read)
+    return ht.commit(base, build, action="commit", operation="upsert", read=read)
 
 
 @query(
@@ -204,7 +204,7 @@ def hudi_mor_compact(spark: SparkSession, base: str) -> str:
             # the table — writing the whole-table snapshot into every
             # group's new base would duplicate all rows on ≥2-group tables.
             merged = hudi_mor_snapshot(
-                spark, base, as_of=read, fids={fid}, keep_key=True
+                spark, base, as_of=max(read), fids={fid}, keep_key=True
             )
             rel = f"{fid}_0-0-0_{instant}.parquet"
             out = merged.select(
@@ -217,7 +217,7 @@ def hudi_mor_compact(spark: SparkSession, base: str) -> str:
         return writes
 
     return ht.commit(
-        base, build, action="commit", operation="compact", read_instant=read
+        base, build, action="commit", operation="compact", read=read
     )
 
 

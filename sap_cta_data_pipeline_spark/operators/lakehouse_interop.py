@@ -9,10 +9,11 @@ this batch closes the write half and adds a second public wire format:
   JSON actions (protocol / metaData / add) — the same atomic
   rename-into-place contract Delta writers use. Certified by reading the
   table back through this repo's own spec reader (identity oracle).
-- **Checkpoint writer** (``delta_checkpoint_write``): reconcile the JSON
-  log into a checkpoint parquet + ``_last_checkpoint`` pointer, then PROVE
-  the fast path by deleting every pre-checkpoint commit from a clone and
-  reading again — if the checkpoint were wrong or unused the read fails.
+- **Checkpoint lanes** (``delta_checkpoint_write`` and the layout
+  twins): checkpoint the table through ``delta_reader.delta_checkpoint``,
+  then PROVE the fast path by deleting every pre-checkpoint commit from a
+  clone and reading again — if the checkpoint were wrong or unused the
+  read fails.
 - **Stats skipping** (``scan_delta_stats_skipping``): Delta ``add``
   actions carry per-file JSON stats (numRecords / minValues / maxValues);
   a range predicate prunes files by [min,max] intersection from PURE
@@ -35,7 +36,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid as _uuid
 from functools import partial
 
@@ -47,66 +47,37 @@ from ..catalog import load_table as t
 from ..registry import query
 from . import hudi_timeline as ht
 from .delta_reader import (
-    _CHECKPOINT_SCHEMA,
     _NATION_SCHEMA_JSON,
     _add,
     _commit,
-    _meta_action,
-    _protocol_action,
-    _read_commit,
+    _metadata,
+    _project,
+    _protocol,
     _remove,
-    _tip,
-    _versions,
+    _retained_versions,
+    _stage_single_parquet,
     commit,
+    delta_checkpoint,
     delta_snapshot,
     delta_state,
+    log_state,
 )
 from .sources import _scratch, built
-
-#: v2-checkpoint wire shapes (delta.io PROTOCOL.md "V2 Checkpoints"):
-#: sidecar files carry only file actions; the top-level manifest adds
-#: checkpointMetadata and sidecar pointer actions to the classic columns.
-_SIDECAR_SCHEMA = (
-    "add struct<path:string,partitionValues:map<string,string>,size:bigint,"
-    "modificationTime:bigint,dataChange:boolean,"
-    "deletionVector:struct<storageType:string,pathOrInlineDv:string,"
-    "offset:int,sizeInBytes:int,cardinality:bigint>>, "
-    "remove struct<path:string,deletionTimestamp:bigint,dataChange:boolean>"
-)
-_V2_MANIFEST_SCHEMA = (
-    _CHECKPOINT_SCHEMA
-    + ", checkpointMetadata struct<version:bigint>"
-    + ", sidecar struct<path:string,sizeInBytes:bigint>"
-)
 
 # ---------------------------------------------------------------- writer
 
 
-def _stage_single_parquet(df: DataFrame, dest: str) -> None:
-    """Distributed write → one deterministic data FILE (Delta add.path
-    names files). coalesce(1) is metadata-staging only: real writers emit
-    one add per task file; the fixture keeps one per commit for pinning."""
-    stage = dest + ".stage"
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
-    os.replace(os.path.join(stage, part), dest)
-    shutil.rmtree(stage)
-
-
-def _stats_json(df: DataFrame, col: str) -> str:
+def _stats(df: DataFrame, col: str) -> dict:
     """Per-file stats exactly as Delta writers embed them in add.stats."""
     r = df.agg(
         F.count(F.lit(1)).alias("n"), F.min(col).alias("lo"), F.max(col).alias("hi")
     ).collect()[0]
-    return json.dumps(
-        {
-            "numRecords": r.n,
-            "minValues": {col: r.lo},
-            "maxValues": {col: r.hi},
-            "nullCount": {col: 0},
-        }
-    )
+    return {
+        "numRecords": r.n,
+        "minValues": {col: r.lo},
+        "maxValues": {col: r.hi},
+        "nullCount": {col: 0},
+    }
 
 
 def delta_append_commit(
@@ -124,209 +95,18 @@ def delta_append_commit(
     version slot is contended, and appends never semantically conflict,
     so a lost slot retries at the next one (``delta_reader.commit``)."""
     _stage_single_parquet(df, os.path.join(base, file_name))
-    add = _add(file_name)
-    if stats_col is not None:
-        add["add"]["stats"] = _stats_json(df, stats_col)
+    stats = _stats(df, stats_col) if stats_col is not None else None
     actions = []
     if first:
         # metaData schemaString derives from df's ACTUAL schema
         # (StructType.jsonValue() is exactly the Delta schema-JSON shape) —
         # a hardcoded schema here would silently surface typed NULLs for
         # any non-nation frame on read-back.
-        actions += [
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            _meta_action([], schema_json=df.schema.jsonValue()),
-        ]
-    actions.append(add)
+        actions += [_protocol(), _metadata(schema_json=df.schema.jsonValue())]
+    actions.append(_add(base, file_name, stats=stats))
     if extra_actions:
         actions.extend(extra_actions)  # e.g. SetTransaction (txn) markers
     commit(base, actions)
-
-
-#: action rows per checkpoint part before the writer shards the layout
-#: automatically (round 9, write-what-you-read symmetry): a 100-TB
-#: table's checkpoint is millions of add rows — one parquet file makes
-#: both the write and every reader's first scan a single-task
-#: bottleneck, so production writers cap actions-per-part (Delta's
-#: checkpoint.partSize knob). 100k rows ≈ tens of MB per part.
-_CHECKPOINT_PART_ROWS = 100_000
-
-
-def delta_checkpoint(
-    spark: SparkSession,
-    base: str,
-    parts: int | None = None,
-    v2: bool = False,
-    part_rows: int = _CHECKPOINT_PART_ROWS,
-) -> int:
-    """Reconcile the JSON log into a checkpoint at the latest version and
-    point ``_last_checkpoint`` at it. Rows: protocol + metaData + one row
-    per LIVE add + one tombstone row per removed file (exactly the
-    reconciled-state shape delta_reader's fast path reads).
-
-    Layouts (delta.io PROTOCOL.md "Checkpoints" — round 8; automatic
-    selection round 9):
-    - default: one classic ``{v:020d}.checkpoint.parquet`` — but when the
-      action-row count exceeds ``part_rows`` the writer AUTOMATICALLY
-      flips to the multi-part layout with ``ceil(rows/part_rows)`` parts
-      (write-side symmetry with the reader: a writer that always emits
-      classic single-file checkpoints cannot serve the tables whose
-      multi-part checkpoints the reader exists for);
-    - ``parts=N``: the v1 MULTI-PART layout forced — protocol/metaData in
-      part 1, file actions round-robined across
-      ``{v:020d}.checkpoint.{i:010d}.{N:010d}.parquet``, and
-      ``_last_checkpoint`` carrying ``parts`` (how large production
-      tables shard million-row checkpoints);
-    - ``v2=True``: the V2 layout — a UUID-named top-level manifest
-      (protocol + metaData + ``checkpointMetadata`` + ``sidecar``
-      pointers) with the file actions in parquet sidecars under
-      ``_delta_log/_sidecars/``."""
-    log_dir = os.path.join(base, "_delta_log")
-    commits = _versions(log_dir)
-    version = commits[-1]
-    live: dict[str, dict] = {}
-    dvs: dict[str, dict] = {}
-    removed: list[str] = []
-    meta: dict | None = None
-    protocol: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
-    for v in commits:
-        for a in _read_commit(log_dir, v):
-            if "add" in a:
-                p = a["add"]["path"]
-                live[p] = dict(a["add"].get("partitionValues") or {})
-                dv = a["add"].get("deletionVector")
-                if dv is not None:
-                    dvs[p] = dict(dv)
-                else:
-                    dvs.pop(p, None)
-            elif "remove" in a:
-                if a["remove"]["path"] in live:
-                    del live[a["remove"]["path"]]
-                    dvs.pop(a["remove"]["path"], None)
-                    removed.append(a["remove"]["path"])
-            elif "metaData" in a:
-                meta = a["metaData"]
-            elif "protocol" in a:
-                protocol = a["protocol"]
-    # the checkpoint must persist the REPLAYED protocol and the FULL
-    # metaData (configuration included): dropping configuration loses
-    # delta.columnMapping.mode on the fast path (logical-name scans of
-    # physical-named parquet → silent all-NULL columns), and downgrading
-    # the protocol row bypasses the reader version gate.
-    assert meta is not None, f"no metaData action in log under {log_dir}"
-
-    def _dv_tuple(p: str):
-        if p not in dvs:
-            return None
-        d = dvs[p]
-        return (
-            d["storageType"],
-            d["pathOrInlineDv"],
-            d.get("offset"),
-            d["sizeInBytes"],
-            d["cardinality"],
-        )
-
-    rows = [
-        (
-            (
-                protocol.get("minReaderVersion", 1),
-                protocol.get("minWriterVersion", 2),
-                protocol.get("readerFeatures"),
-                protocol.get("writerFeatures"),
-            ),
-            None,
-            None,
-            None,
-        ),
-        (
-            None,
-            (
-                meta.get("id", "ckpt-table"),
-                (meta.get("format", {}).get("provider", "parquet"),),
-                meta["schemaString"],
-                list(meta.get("partitionColumns") or []),
-                dict(meta.get("configuration") or {}),
-            ),
-            None,
-            None,
-        ),
-    ]
-    for p in sorted(live):
-        rows.append(
-            (None, None, (p, live[p], 1024, 1700000000000, True, _dv_tuple(p)), None)
-        )
-    for p in removed:
-        rows.append((None, None, None, (p, 1700000000000, True)))
-    def _write_one(df: DataFrame, dest: str) -> None:
-        stage = os.path.join(base, "_cp_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        os.makedirs(os.path.dirname(dest), exist_ok=True)
-        os.replace(os.path.join(stage, part), dest)
-        shutil.rmtree(stage)
-
-    lc: dict = {"version": version, "size": len(rows)}
-    if parts is None and not v2 and len(rows) > part_rows:
-        # automatic layout selection: shard once the reconciled state
-        # outgrows one part — the writer-side twin of the reader's
-        # multi-part fast path
-        parts = -(-len(rows) // part_rows)
-    if parts is not None:
-        # v1 multi-part: protocol/metaData ride part 1; file actions
-        # round-robin across parts (the spec allows any distribution)
-        lc["parts"] = parts
-        buckets: list[list] = [[] for _ in range(parts)]
-        for i, r in enumerate(rows[2:]):
-            buckets[i % parts].append(r)
-        buckets[0] = rows[:2] + buckets[0]
-        for i, bucket in enumerate(buckets, start=1):
-            _write_one(
-                spark.createDataFrame(bucket, schema=_CHECKPOINT_SCHEMA),
-                os.path.join(
-                    log_dir,
-                    f"{version:020d}.checkpoint.{i:010d}.{parts:010d}.parquet",
-                ),
-            )
-    elif v2:
-        # v2: parquet sidecar carries the file actions; the UUID-named
-        # top-level manifest carries protocol/metaData/checkpointMetadata
-        # + the sidecar pointer. UUID is version-derived (deterministic
-        # fixtures rebuild identically).
-        sidecar_rel = f"{version:020d}-sidecar-0001.parquet"
-        sidecar_path = os.path.join(log_dir, "_sidecars", sidecar_rel)
-        _write_one(
-            spark.createDataFrame(
-                [(r[2], r[3]) for r in rows[2:]], schema=_SIDECAR_SCHEMA
-            ),
-            sidecar_path,
-        )
-        top_rows = [
-            rows[0] + (None, None),
-            rows[1] + (None, None),
-            (None, None, None, None, (version,), None),
-            (
-                None,
-                None,
-                None,
-                None,
-                None,
-                (sidecar_rel, os.path.getsize(sidecar_path)),
-            ),
-        ]
-        uuid = f"{version:08x}00-0000-4000-8000-000000000000"
-        _write_one(
-            spark.createDataFrame(top_rows, schema=_V2_MANIFEST_SCHEMA),
-            os.path.join(log_dir, f"{version:020d}.checkpoint.{uuid}.parquet"),
-        )
-    else:
-        _write_one(
-            spark.createDataFrame(rows, schema=_CHECKPOINT_SCHEMA),
-            os.path.join(log_dir, f"{version:020d}.checkpoint.parquet"),
-        )
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
-        json.dump(lc, fh)
-    return version
 
 
 # ------------------------------------------------------- stats skipping
@@ -339,15 +119,10 @@ def delta_stats_prune(
     [minValues, maxValues] interval does / does not intersect [lo, hi].
     Pure metadata — no footer read of any skipped file. Files without
     stats are conservatively planned (the Delta rule)."""
-    log_dir = os.path.join(base, "_delta_log")
-    live: dict[str, dict | None] = {}
-    for v in _versions(log_dir):
-        for a in _read_commit(log_dir, v):
-            if "add" in a:
-                s = a["add"].get("stats")
-                live[a["add"]["path"]] = json.loads(s) if s else None
-            elif "remove" in a:
-                live.pop(a["remove"]["path"], None)
+    live = {
+        p: json.loads(a["stats"]) if a.get("stats") else None
+        for p, a in log_state(spark, base).adds.items()
+    }
     planned, skipped = [], []
     for p, s in sorted(live.items()):
         if s is None:
@@ -465,25 +240,19 @@ def _build_evolve_fixture(spark: SparkSession, sf_dir: str) -> str:
         log_dir = os.path.join(base, "_delta_log")
 
         _stage_single_parquet(lo, os.path.join(base, "part-v0.parquet"))
-        _commit(
-            log_dir,
-            0,
-            [
-                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-                _meta_action([]),
-                _add("part-v0.parquet"),
-            ],
-        )
+        _commit(log_dir, 0, [_protocol(), _metadata(), _add(base, "part-v0.parquet")])
 
         evolved = json.loads(json.dumps(_NATION_SCHEMA_JSON))  # deep copy
         evolved["fields"].append(
             {"name": "n_flag", "type": "integer", "nullable": True, "metadata": {}}
         )
-        meta1 = _meta_action([])
-        meta1["metaData"]["schemaString"] = json.dumps(evolved)
         hi_flag = hi.withColumn("n_flag", (F.col("n_nationkey") % 2).cast("int"))
         _stage_single_parquet(hi_flag, os.path.join(base, "part-v1.parquet"))
-        _commit(log_dir, 1, [meta1, _add("part-v1.parquet")])
+        _commit(
+            log_dir,
+            1,
+            [_metadata(schema_json=evolved), _add(base, "part-v1.parquet")],
+        )
 
     return built(sf_dir, "delta_evolve", build)
 
@@ -501,7 +270,7 @@ def sink_delta_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     read back through this repo's own spec reader. The identity oracle
     certifies the whole write→log→replay loop; a writer bug anywhere
     (action shape, schemaString, path naming, commit numbering) breaks
-    the hash. Closes the write half of the round-4 interop gap."""
+    the hash."""
     base = _build_sink_fixture(spark, sf_dir)
     return delta_snapshot(spark, base).select("n_nationkey", "n_name", "n_regionkey")
 
@@ -548,11 +317,11 @@ def scan_delta_checkpoint_multipart(spark: SparkSession, sf_dir: str) -> DataFra
     """Multi-part (v1) checkpoint read, proven by destruction: the clone's
     state lives ONLY in three ``{v}.checkpoint.{i:010d}.{3:010d}.parquet``
     parts named by ``_last_checkpoint``'s ``parts`` field — every JSON
-    commit is deleted. Round 8 replaces the round-7 reader refusal: the
-    fast path unions the N parts into the SAME distributed scan, so a
-    100-TB table's sharded million-row checkpoint reads without any
-    driver-side concatenation (the live-set collect stays file-bounded).
-    An incomplete part set raises instead of silently under-reading."""
+    commit is deleted. The fast path unions the N parts into the SAME
+    distributed scan, so a 100-TB table's sharded million-row checkpoint
+    reads without any driver-side concatenation (the live-set collect
+    stays file-bounded). An incomplete part set raises instead of
+    silently under-reading."""
     clone = _checkpoint_destruction_fixture(
         spark, sf_dir, "delta_sink_ckpt_parts", parts=3
     )
@@ -588,8 +357,8 @@ def scan_delta_checkpoint_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
 )
 def delta_checkpoint_auto_multipart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AUTOMATIC checkpoint layout selection (round-8 verdict ask #5,
-    write-side symmetry): the writer is called with NO layout argument —
+    """AUTOMATIC checkpoint layout selection (write-side symmetry): the
+    writer is called with NO layout argument —
     only a row budget per part (2 here, production default 100k) — and
     must flip to the multi-part layout by itself once the reconciled
     state outgrows one part. Proven by destruction: every JSON commit is
@@ -699,18 +468,14 @@ def _build_colmap_fixture(spark: SparkSession, sf_dir: str) -> str:
             }
             for i, (logical, p) in enumerate(phys.items())
         ]
-        meta = {
-            "metaData": {
-                "id": "colmap-table",
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps({"type": "struct", "fields": fields}),
-                "partitionColumns": [],
-                "configuration": {
-                    "delta.columnMapping.mode": "name",
-                    "delta.columnMapping.maxColumnId": "3",
-                },
-            }
-        }
+        meta = _metadata(
+            schema_json={"type": "struct", "fields": fields},
+            configuration={
+                "delta.columnMapping.mode": "name",
+                "delta.columnMapping.maxColumnId": "3",
+            },
+            id="colmap-table",
+        )
         for rel, df in (("part-lo.parquet", lo), ("part-hi.parquet", hi)):
             renamed = df.select(
                 *[F.col(c).alias(phys[c]) for c in ("n_nationkey", "n_name", "n_regionkey")]
@@ -720,10 +485,10 @@ def _build_colmap_fixture(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(base, "_delta_log"),
             0,
             [
-                {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}},
+                _protocol(2, 5),
                 meta,
-                _add("part-lo.parquet"),
-                _add("part-hi.parquet"),
+                _add(base, "part-lo.parquet"),
+                _add(base, "part-hi.parquet"),
             ],
         )
 
@@ -784,8 +549,9 @@ def delta_delete_where(
         z85_encode,
     )
 
-    tip = _tip(base)
-    live, schema_string, part_cols, config, dvs = delta_state(spark, base, tip)
+    st = log_state(spark, base)
+    tip = st.version
+    live, schema_string, part_cols, config, dvs = _project(st)
     schema = _T.StructType.fromJson(json.loads(schema_string))
     data_schema = _T.StructType(
         [f for f in schema.fields if f.name not in part_cols]
@@ -832,45 +598,27 @@ def delta_delete_where(
     actions: list[dict] = [
         {"commitInfo": {"operation": "DELETE", "predicate": predicate}}
     ]
-    if "deletionVectors" not in (_protocol_action(base).get("readerFeatures") or []):
+    if "deletionVectors" not in (st.protocol.get("readerFeatures") or []):
         actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": ["deletionVectors"],
-                    "writerFeatures": ["deletionVectors"],
-                }
-            }
+            _protocol(
+                3,
+                7,
+                reader_features=["deletionVectors"],
+                writer_features=["deletionVectors"],
+            )
         )
+    # remove + re-add of the same file with the new descriptor; the
+    # re-add keeps the rest of the replayed add (stats, tags, row ids)
     for rel, (offset, size) in zip(rels, spans):
-        actions.append(
-            {
-                "remove": {
-                    "path": rel,
-                    "deletionTimestamp": 1700000000000,
-                    "dataChange": True,
-                }
-            }
-        )
-        actions.append(
-            {
-                "add": {
-                    "path": rel,
-                    "partitionValues": dict(live[rel]),
-                    "size": 1024,
-                    "modificationTime": 1700000000000,
-                    "dataChange": True,
-                    "deletionVector": {
-                        "storageType": "u",
-                        "pathOrInlineDv": z85_encode(uid.bytes),
-                        "offset": offset,
-                        "sizeInBytes": size,
-                        "cardinality": len(merged[rel]),
-                    },
-                }
-            }
-        )
+        dv = {
+            "storageType": "u",
+            "pathOrInlineDv": z85_encode(uid.bytes),
+            "offset": offset,
+            "sizeInBytes": size,
+            "cardinality": len(merged[rel]),
+        }
+        actions.append(_remove(st.adds[rel]))
+        actions.append({"add": dict(st.adds[rel], dataChange=True, deletionVector=dv)})
     return commit(base, actions, tip), n_new
 
 
@@ -924,21 +672,13 @@ def delta_vacuum(spark: SparkSession, base: str) -> tuple[list[str], list[str]]:
     makes; idempotent by construction (second run deletes nothing).
     Listing is driver-side metadata + one directory walk; deletion is
     O(dead files)."""
-    log_dir = os.path.join(base, "_delta_log")
-    commits = _versions(log_dir)
     # retained versions = JSON commits + the checkpoint version (it is
     # time-travel-reachable even when its own commit was retention-
     # deleted); a checkpoint-ONLY log must scan the checkpoint state or
     # vacuum would see an empty referenced set and delete the live table.
-    versions: list[int | None] = list(commits)
-    lc_path = os.path.join(log_dir, "_last_checkpoint")
-    if os.path.exists(lc_path):
-        with open(lc_path) as fh:
-            cpv = json.load(fh)["version"]
-        if cpv not in versions:
-            versions.insert(0, cpv)
+    versions = _retained_versions(base)
     referenced: set[str] = set()
-    for v in sorted(versions):
+    for v in versions:
         live, _, _, _, dvs = delta_state(spark, base, version=v)
         referenced |= set(live)
         # DV sidecar files are referenced metadata too
@@ -974,56 +714,38 @@ def delta_restore(spark: SparkSession, base: str, version: int) -> None:
     against the latest snapshot, so it commits read-dependent
     (``delta_reader.commit``): a concurrent data change aborts it.
 
-    The diff is over each path's FULL add metadata, not the path set: a
-    path live in both states whose
-    deletionVector or partitionValues differ is re-committed
-    (remove + add) carrying the TARGET version's descriptor — a
+    The diff is over each path's add metadata, not the path set: a
+    path live in both states whose deletionVector or partitionValues
+    differ is re-committed (remove + the TARGET version's add) — a
     path-set-only diff would leave a post-target DV in force (rows
     deleted after the target would stay deleted: a silently wrong
     snapshot) and would re-add files with the current DV instead of the
     target's. The target metaData is restored too (schema/configuration
     follow the restored version, Delta's own RESTORE semantics)."""
-    tip = _tip(base)
-    target_live, t_schema, t_parts, t_cfg, target_dvs = delta_state(
-        spark, base, version=version
-    )
-    cur_live, c_schema, c_parts, c_cfg, cur_dvs = delta_state(
-        spark, base, version=tip
-    )
+    cur = log_state(spark, base)
+    target = log_state(spark, base, version=version)
     actions: list[dict] = [{"commitInfo": {"operation": "RESTORE", "version": version}}]
-    if (t_schema, t_parts, t_cfg) != (c_schema, c_parts, c_cfg):
-        actions.append(
-            _meta_action(
-                list(t_parts),
-                schema_json=json.loads(t_schema),
-                configuration=dict(t_cfg),
-            )
-        )
+    table = ("schemaString", "partitionColumns", "configuration")
+    if any(target.metadata.get(k) != cur.metadata.get(k) for k in table):
+        actions.append(_metadata(**target.metadata))
 
-    def _target_add(p: str) -> dict:
-        a = {
-            "add": {
-                "path": p,
-                "partitionValues": dict(target_live[p]),
-                "size": 1024,
-                "modificationTime": 1700000000000,
-                "dataChange": True,
-            }
-        }
-        if p in target_dvs:
-            a["add"]["deletionVector"] = dict(target_dvs[p])
-        return a
+    def _key(add: dict) -> tuple:
+        return add.get("partitionValues") or {}, add.get("deletionVector")
 
-    for p in sorted(set(cur_live) - set(target_live)):
-        actions.append(_remove(p))
-    for p in sorted(set(target_live) - set(cur_live)):
-        actions.append(_target_add(p))
+    def _restore(p: str) -> dict:
+        # the target version's replayed add, re-emitted as a data change
+        return {"add": dict(target.adds[p], dataChange=True)}
+
+    for p in sorted(set(cur.adds) - set(target.adds)):
+        actions.append(_remove(cur.adds[p]))
+    for p in sorted(set(target.adds) - set(cur.adds)):
+        actions.append(_restore(p))
     # live in BOTH states: re-commit when the add metadata differs
-    for p in sorted(set(cur_live) & set(target_live)):
-        if (cur_live[p], cur_dvs.get(p)) != (target_live[p], target_dvs.get(p)):
-            actions.append(_remove(p))
-            actions.append(_target_add(p))
-    commit(base, actions, tip)
+    for p in sorted(set(cur.adds) & set(target.adds)):
+        if _key(cur.adds[p]) != _key(target.adds[p]):
+            actions.append(_remove(cur.adds[p]))
+            actions.append(_restore(p))
+    commit(base, actions, cur.version)
 
 
 @query(
@@ -1091,60 +813,37 @@ def delta_shallow_clone(spark: SparkSession, src: str, dst: str) -> None:
     """SHALLOW CLONE: a new Delta table whose commit 0 re-ADDS the
     source's live files by ABSOLUTE path — zero data copied, metadata
     only (the instant-fork primitive under dev/test sandboxes and
-    experiment branches). The clone carries the source's protocol +
-    metaData verbatim and evolves independently afterwards; the
+    experiment branches). The clone carries the source's protocol,
+    metaData and add actions verbatim (only the paths and sidecar DV
+    descriptors are rewritten) and evolves independently afterwards; the
     documented liability is shared-file lifetime — VACUUM on the source
     can delete files the clone still references (pinned in tests), which
     is exactly the trade Delta's own shallow clones make."""
-    from .delta_reader import _check_protocol
-
-    live, schema_string, part_cols, config, dvs = delta_state(spark, src, None)
-    protocol = _protocol_action(src)
-    _check_protocol(protocol)
+    st = log_state(spark, src)
     actions: list[dict] = [
-        {"protocol": protocol},
-        {
-            "metaData": {
-                "id": "shallow-clone",
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": schema_string,
-                "partitionColumns": part_cols,
-                "configuration": config,
-            }
-        },
+        {"protocol": dict(st.protocol)},
+        _metadata(**{**st.metadata, "id": "shallow-clone"}),
     ]
-    for p in sorted(live):
-        add = {
-            "add": {
-                "path": os.path.abspath(os.path.join(src, p)),
-                "partitionValues": live[p],
-                "size": 1024,
-                "modificationTime": 1700000000000,
-                "dataChange": True,
-            }
-        }
-        if p in dvs:
-            d = dict(dvs[p])
-            if d.get("storageType") == "u":
-                # ADVICE fix (round 8): a 'u' descriptor resolves its DV
-                # file RELATIVE TO THE TABLE ROOT — copied verbatim into
-                # the clone it would resolve against the CLONE root and
-                # fail with FileNotFoundError. Rewrite to storageType 'p'
-                # with the absolute source path, matching how shallow
-                # clones reference source DATA files absolutely.
-                from ..functions.deletion_vectors import dv_relative_path
+    for p in sorted(st.adds):
+        add = dict(
+            st.adds[p], path=os.path.abspath(os.path.join(src, p)), dataChange=True
+        )
+        d = add.get("deletionVector")
+        if d is not None and d.get("storageType") == "u":
+            # a 'u' descriptor resolves its DV file RELATIVE TO THE TABLE
+            # ROOT — copied verbatim into the clone it would resolve
+            # against the CLONE root and fail with FileNotFoundError.
+            # Rewrite to storageType 'p' with the absolute source path,
+            # matching how shallow clones reference source DATA files
+            # absolutely.
+            from ..functions.deletion_vectors import dv_relative_path
 
-                d = {
-                    "storageType": "p",
-                    "pathOrInlineDv": os.path.abspath(
-                        os.path.join(src, dv_relative_path(d))
-                    ),
-                    "offset": d.get("offset"),
-                    "sizeInBytes": d["sizeInBytes"],
-                    "cardinality": d["cardinality"],
-                }
-            add["add"]["deletionVector"] = d
-        actions.append(add)
+            add["deletionVector"] = dict(
+                d,
+                storageType="p",
+                pathOrInlineDv=os.path.abspath(os.path.join(src, dv_relative_path(d))),
+            )
+        actions.append({"add": add})
     _commit(os.path.join(dst, "_delta_log"), 0, actions)
 
 
@@ -1254,9 +953,9 @@ def delta_optimize_compact(spark: SparkSession, base: str) -> int:
     drops the versions referencing them. Returns the committed version;
     a concurrent data change, or a concurrent commit removing a file this
     one compacts, aborts it (``delta_reader.commit``)."""
-    tip = _tip(base)
-    live, schema_string, part_cols, config, dvs = delta_state(spark, base, tip)
-    if part_cols:
+    st = log_state(spark, base)
+    tip = st.version
+    if st.metadata.get("partitionColumns"):
         raise NotImplementedError(
             "delta_optimize_compact: partitioned bin-packing (per-partition "
             "groups) not implemented; fixture tables are unpartitioned"
@@ -1267,27 +966,8 @@ def delta_optimize_compact(spark: SparkSession, base: str) -> int:
     file_rel = f"part-optimized-{_uuid.uuid4().hex[:12]}.parquet"
     _stage_single_parquet(merged, os.path.join(base, file_rel))
     actions: list[dict] = [{"commitInfo": {"operation": "OPTIMIZE"}}]
-    for p in sorted(live):
-        actions.append(
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": 1700000000000,
-                    "dataChange": False,
-                }
-            }
-        )
-    actions.append(
-        {
-            "add": {
-                "path": file_rel,
-                "partitionValues": {},
-                "size": 1024,
-                "modificationTime": 1700000000000,
-                "dataChange": False,
-            }
-        }
-    )
+    actions += [_remove(st.adds[p], data_change=False) for p in sorted(st.adds)]
+    actions.append(_add(base, file_rel, data_change=False))
     return commit(base, actions, tip)
 
 
@@ -1340,8 +1020,8 @@ def delta_append_partitioned(
         r[0] for r in df.select(part_col).distinct().collect()
     )
     actions: list[dict] = [
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        _meta_action([part_col], schema_json=df.schema.jsonValue()),
+        _protocol(),
+        _metadata([part_col], schema_json=df.schema.jsonValue()),
     ]
     for v in vals:
         rel = f"{part_col}={v}/part-00000.parquet"
@@ -1349,8 +1029,7 @@ def delta_append_partitioned(
             df.where(F.col(part_col) == v).drop(part_col),
             os.path.join(base, rel),
         )
-        a = _add(rel, {part_col: str(v)})
-        actions.append(a)
+        actions.append(_add(base, rel, partition_values={part_col: str(v)}))
     _commit(os.path.join(base, "_delta_log"), 0, actions)
 
 
@@ -1385,9 +1064,8 @@ def delta_alter_add_column(
     schemaString appends the (nullable) column — zero file rewrites;
     files written before it surface typed NULLs under the new schema
     (the read contract scan_delta_schema_evolution certifies)."""
-    tip = _tip(base)
-    live, schema_string, part_cols, config, _dvs = delta_state(spark, base, tip)
-    schema_json = json.loads(schema_string)
+    st = log_state(spark, base)
+    schema_json = json.loads(st.metadata["schemaString"])
     if any(f["name"] == field_name for f in schema_json["fields"]):
         raise ValueError(f"column {field_name!r} already exists")
     schema_json["fields"].append(
@@ -1397,10 +1075,9 @@ def delta_alter_add_column(
         base,
         [
             {"commitInfo": {"operation": "ADD COLUMNS", "column": field_name}},
-            _meta_action(list(part_cols), schema_json=schema_json,
-                         configuration=dict(config)),
+            _metadata(**{**st.metadata, "schemaString": json.dumps(schema_json)}),
         ],
-        tip,
+        st.version,
     )
 
 

@@ -30,7 +30,6 @@ runs against.
 
 from __future__ import annotations
 
-import json
 import os
 import uuid as _uuid
 
@@ -40,11 +39,11 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.ranks import with_global_row_number
 from ..registry import query
-from .delta_reader import _tip as _delta_tip, delta_snapshot, delta_state
+from .delta_reader import _add, _remove, _stage_single_parquet, delta_snapshot, log_state
 from .delta_reader import commit as delta_commit
 from .iceberg_reader import _tip as _iceberg_tip, iceberg_append, iceberg_snapshot
 from .iceberg_reader import commit as iceberg_commit
-from .lakehouse_interop import _build_sink_fixture, _stage_single_parquet
+from .lakehouse_interop import _build_sink_fixture
 from .sources import built
 from .training_prep import _morton_sql
 
@@ -60,9 +59,9 @@ def delta_optimize_zorder(
     (``delta_reader.commit``): a concurrent data change, or a concurrent
     commit removing a file this one rewrites, aborts it. Returns the
     committed version."""
-    tip = _delta_tip(base)
-    live, schema_string, part_cols, config, dvs = delta_state(spark, base, tip)
-    if part_cols:
+    st = log_state(spark, base)
+    tip = st.version
+    if st.metadata.get("partitionColumns"):
         raise NotImplementedError(
             "delta_optimize_zorder: per-partition clustering not implemented"
         )
@@ -76,23 +75,14 @@ def delta_optimize_zorder(
     actions: list[dict] = [
         {"commitInfo": {"operation": "OPTIMIZE", "zOrderBy": [col_a, col_b]}}
     ]
-    for p in sorted(live):
-        actions.append(
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": 1700000000000,
-                    "dataChange": False,
-                }
-            }
-        )
+    actions += [_remove(st.adds[p], data_change=False) for p in sorted(st.adds)]
     # a fresh uid per rewrite: a fixed name would overwrite the file an
     # older version still references, breaking its time travel
     uid = _uuid.uuid4().hex[:12]
     for i in range(n_files):
         part = ranked.filter(F.col("__bucket") == i).orderBy("__rn")
         # per-file clustered-column stats: one 1-row aggregate per file
-        st = part.agg(
+        agg = part.agg(
             F.min(col_a).alias("a_min"),
             F.max(col_a).alias("a_max"),
             F.min(col_b).alias("b_min"),
@@ -104,24 +94,12 @@ def delta_optimize_zorder(
             part.drop("__z", "__rn", "__tot", "__bucket"),
             os.path.join(base, rel),
         )
-        actions.append(
-            {
-                "add": {
-                    "path": rel,
-                    "partitionValues": {},
-                    "size": 1024,
-                    "modificationTime": 1700000000000,
-                    "dataChange": False,
-                    "stats": json.dumps(
-                        {
-                            "numRecords": int(st["n"]),
-                            "minValues": {col_a: st["a_min"], col_b: st["b_min"]},
-                            "maxValues": {col_a: st["a_max"], col_b: st["b_max"]},
-                        }
-                    ),
-                }
-            }
-        )
+        stats = {
+            "numRecords": int(agg["n"]),
+            "minValues": {col_a: agg["a_min"], col_b: agg["b_min"]},
+            "maxValues": {col_a: agg["a_max"], col_b: agg["b_max"]},
+        }
+        actions.append(_add(base, rel, data_change=False, stats=stats))
     ranked.unpersist()
     return delta_commit(base, actions, tip)
 

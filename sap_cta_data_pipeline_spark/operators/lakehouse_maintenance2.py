@@ -31,13 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.avro_codec import read_container
 from ..registry import query
-from .delta_reader import (
-    _current_metadata_action,
-    _protocol_action,
-    delta_snapshot,
-    delta_state,
-)
-from .delta_reader import _tip as _delta_tip
+from .delta_reader import _metadata, _project, delta_snapshot, log_state
 from .delta_reader import commit as delta_commit
 from .iceberg_reader import (
     _manifest,
@@ -74,8 +68,8 @@ def delta_rename_column(
     field keeps its columnMapping id and physicalName, only the LOGICAL
     name changes, so every existing data file remains valid. Returns the
     committed version."""
-    tip = _delta_tip(base)
-    _, schema_string, _, config, _ = delta_state(spark, base, tip)
+    st = log_state(spark, base)
+    _, schema_string, _, config, _ = _project(st)
     _require_column_mapping(config, "RENAME COLUMN")
     sch = json.loads(schema_string)
     names = [f["name"] for f in sch["fields"]]
@@ -86,8 +80,6 @@ def delta_rename_column(
     for f in sch["fields"]:
         if f["name"] == old:
             f["name"] = new
-    meta = _current_metadata_action(base)
-    meta["schemaString"] = json.dumps(sch)
     return delta_commit(
         base,
         [
@@ -97,9 +89,9 @@ def delta_rename_column(
                     "operationParameters": {"from": old, "to": new},
                 }
             },
-            {"metaData": meta},
+            _metadata(**{**st.metadata, "schemaString": json.dumps(sch)}),
         ],
-        tip,
+        st.version,
     )
 
 
@@ -111,8 +103,8 @@ def delta_drop_column(spark: SparkSession, base: str, col: str) -> int:
     monotonic), so a future re-add of the same logical name maps to a
     FRESH physical column instead of resurrecting dropped data. Returns
     the committed version."""
-    tip = _delta_tip(base)
-    _, schema_string, part_cols, config, _ = delta_state(spark, base, tip)
+    st = log_state(spark, base)
+    _, schema_string, part_cols, config, _ = _project(st)
     _require_column_mapping(config, "DROP COLUMN")
     if col in (part_cols or []):
         raise ValueError(
@@ -126,8 +118,6 @@ def delta_drop_column(spark: SparkSession, base: str, col: str) -> int:
     if len(names) == 1:
         raise ValueError("DROP COLUMN: cannot drop the last column")
     sch["fields"] = [f for f in sch["fields"] if f["name"] != col]
-    meta = _current_metadata_action(base)
-    meta["schemaString"] = json.dumps(sch)
     return delta_commit(
         base,
         [
@@ -137,9 +127,9 @@ def delta_drop_column(spark: SparkSession, base: str, col: str) -> int:
                     "operationParameters": {"columns": [col]},
                 }
             },
-            {"metaData": meta},
+            _metadata(**{**st.metadata, "schemaString": json.dumps(sch)}),
         ],
-        tip,
+        st.version,
     )
 
 
@@ -347,8 +337,9 @@ def delta_describe_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .lakehouse_interop import _build_colmap_fixture
 
     base = _build_colmap_fixture(spark, sf_dir)
-    live, schema_string, part_cols, config, _ = delta_state(spark, base)
-    proto = _protocol_action(base)
+    st = log_state(spark, base)
+    live, schema_string, part_cols, config, _ = _project(st)
+    proto = st.protocol
     sch = json.loads(schema_string)
     return spark.createDataFrame(
         [

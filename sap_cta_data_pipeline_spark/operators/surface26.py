@@ -17,32 +17,28 @@ Iceberg named refs (branches/tags).
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
 from ..registry import query
-from .delta_reader import _read_commit, _versions, delta_snapshot
+from .delta_reader import _tip, delta_snapshot, log_state
 from .iceberg_reader import _load_metadata, iceberg_append, iceberg_snapshot
 from .iceberg_reader import commit as iceberg_commit
 from .lakehouse_interop import delta_append_commit
 from .sources import built
 
 
-def delta_last_txn_version(base: str, app_id: str) -> int | None:
-    """Highest ``txn.version`` recorded for ``app_id`` across the log —
-    the read half of the SetTransaction protocol (Delta PROTOCOL.md
-    'Transaction Identifiers'). O(commits) driver metadata."""
-    log_dir = os.path.join(base, "_delta_log")
-    best: int | None = None
-    for v in _versions(log_dir):
-        for a in _read_commit(log_dir, v):
-            txn = a.get("txn")
-            if txn and txn.get("appId") == app_id:
-                v = int(txn["version"])
-                best = v if best is None or v > best else best
-    return best
+def delta_last_txn_version(
+    spark: SparkSession, base: str, app_id: str
+) -> int | None:
+    """The latest ``txn.version`` recorded for ``app_id`` (None: none, or
+    no table yet) — the read half of the SetTransaction protocol (Delta
+    PROTOCOL.md 'Transaction Identifiers'); a checkpoint carries each
+    appId's latest txn, so the answer survives log retention."""
+    if _tip(base) < 0:
+        return None
+    return log_state(spark, base).txns.get(app_id)
 
 
 def delta_txn_write(
@@ -58,7 +54,7 @@ def delta_txn_write(
     ``app_id`` is already recorded; otherwise commit the data file WITH
     the txn action and return True. The version check + put-if-absent
     commit is the whole exactly-once story — no distributed state."""
-    last = delta_last_txn_version(base, app_id)
+    last = delta_last_txn_version(spark, base, app_id)
     if last is not None and last >= txn_version:
         return False
     delta_append_commit(

@@ -49,14 +49,18 @@ from pyspark.sql import DataFrame, SparkSession
 from ..catalog import load_table
 from ..registry import query
 from .delta_reader import (
+    _add,
     _commit,
     _commit_ict_ms,
-    _meta_action,
-    _protocol_action,
+    _metadata,
+    _protocol,
     _read_commit,
+    _remove,
+    _stage_single_parquet,
     _versions,
     delta_snapshot,
     delta_version_at_timestamp,
+    log_state,
 )
 from .sources import built
 
@@ -65,24 +69,9 @@ _ICT_V2_MS = 1700000200000
 _CLUSTER_DOMAIN = "delta.clustering"
 
 
-def _add_clustered(path: str) -> dict:
-    return {
-        "add": {
-            "path": path,
-            "partitionValues": {},
-            "size": 1024,
-            "modificationTime": 1700000000000,
-            "dataChange": True,
-            "clusteringProvider": "liquid",
-        }
-    }
-
-
 def _build_ict_clustered_fixture(
     spark: SparkSession, sf_dir: str, base: str
 ) -> None:
-    from .lakehouse_interop import _stage_single_parquet
-
     log_dir = os.path.join(base, "_delta_log")
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
@@ -93,20 +82,17 @@ def _build_ict_clustered_fixture(
     _stage_single_parquet(
         n.filter("n_nationkey >= 12"), os.path.join(base, "part-b.parquet")
     )
-    proto_v0 = {
-        "protocol": {
-            "minReaderVersion": 1,
-            "minWriterVersion": 7,
-            "writerFeatures": ["domainMetadata", "clusteredTable"],
-        }
-    }
+    add_a, add_b = (
+        _add(base, rel, clusteringProvider="liquid")
+        for rel in ("part-a.parquet", "part-b.parquet")
+    )
     _commit(
         log_dir,
         0,
         [
             {"commitInfo": {"operation": "WRITE"}},
-            proto_v0,
-            _meta_action([]),
+            _protocol(1, 7, writer_features=["domainMetadata", "clusteredTable"]),
+            _metadata(),
             {
                 "domainMetadata": {
                     "domain": _CLUSTER_DOMAIN,
@@ -116,8 +102,8 @@ def _build_ict_clustered_fixture(
                     "removed": False,
                 }
             },
-            _add_clustered("part-a.parquet"),
-            _add_clustered("part-b.parquet"),
+            add_a,
+            add_b,
         ],
     )
     _commit(
@@ -131,19 +117,12 @@ def _build_ict_clustered_fixture(
                     "inCommitTimestamp": _ICT_V1_MS,
                 }
             },
-            {
-                "protocol": {
-                    "minReaderVersion": 1,
-                    "minWriterVersion": 7,
-                    "writerFeatures": [
-                        "domainMetadata",
-                        "clusteredTable",
-                        "inCommitTimestamp",
-                    ],
-                }
-            },
-            _meta_action(
-                [],
+            _protocol(
+                1,
+                7,
+                writer_features=["domainMetadata", "clusteredTable", "inCommitTimestamp"],
+            ),
+            _metadata(
                 configuration={
                     "delta.enableInCommitTimestamps": "true",
                     "delta.inCommitTimestampEnablementVersion": "1",
@@ -162,13 +141,7 @@ def _build_ict_clustered_fixture(
                     "inCommitTimestamp": _ICT_V2_MS,
                 }
             },
-            {
-                "remove": {
-                    "path": "part-a.parquet",
-                    "deletionTimestamp": _ICT_V2_MS,
-                    "dataChange": True,
-                }
-            },
+            _remove(add_a),
         ],
     )
     # the restore/copy scenario: every commit file gets the SAME mtime,
@@ -178,20 +151,13 @@ def _build_ict_clustered_fixture(
         os.utime(os.path.join(log_dir, f"{v:020d}.json"), (mt, mt))
 
 
-def delta_clustering_domain(base: str) -> dict | None:
-    """Replay ``domainMetadata`` actions for ``delta.clustering``
-    (last-writer-wins per domain; a ``removed: true`` tombstone clears
-    it) — the reader-side surface for liquid clustering metadata."""
-    log_dir = os.path.join(base, "_delta_log")
-    state: dict | None = None
-    for v in _versions(log_dir):
-        for a in _read_commit(log_dir, v):
-            dm = a.get("domainMetadata")
-            if dm is not None and dm.get("domain") == _CLUSTER_DOMAIN:
-                state = None if dm.get("removed") else json.loads(
-                    dm["configuration"]
-                )
-    return state
+def delta_clustering_domain(spark: SparkSession, base: str) -> dict | None:
+    """The ``delta.clustering`` domain's configuration at the tip
+    (``log_state`` keeps the last writer's action per domain; a
+    ``removed: true`` tombstone clears it) — the reader-side surface for
+    liquid clustering metadata."""
+    dm = log_state(spark, base).domains.get(_CLUSTER_DOMAIN)
+    return None if dm is None else json.loads(dm["configuration"])
 
 
 @query(
@@ -214,28 +180,23 @@ def delta_clustered_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer v7; clustering and ICT are writer-only, so readers stay at
     v1). Metadata-only: O(log) driver work, no data file opened — the
     same cost shape as delta_describe_detail at any table size."""
-    from .delta_reader import delta_state
-
     base = built(
         sf_dir,
         "delta_ict_clustered",
         partial(_build_ict_clustered_fixture, spark, sf_dir),
     )
-    live, _, _, config, _ = delta_state(spark, base)
-    cluster = delta_clustering_domain(base) or {}
+    st = log_state(spark, base)
+    config = st.metadata.get("configuration") or {}
+    cluster = delta_clustering_domain(spark, base) or {}
     cols = [c[0] for c in cluster.get("clusteringColumns", [])]
-    log_dir = os.path.join(base, "_delta_log")
-    provider = None
-    for v in _versions(log_dir):
-        for a in _read_commit(log_dir, v):
-            if "add" in a and a["add"].get("clusteringProvider"):
-                provider = a["add"]["clusteringProvider"]
-    proto = _protocol_action(base)
+    providers = {a.get("clusteringProvider") for a in st.adds.values()} - {None}
+    provider = max(providers, default=None)
+    proto = st.protocol
     return spark.createDataFrame(
         [
             (
                 "parquet",
-                len(live),
+                len(st.adds),
                 provider,
                 ",".join(cols),
                 config.get("delta.enableInCommitTimestamps", "false") == "true",
@@ -314,7 +275,7 @@ def delta_time_travel_ict(spark: SparkSession, sf_dir: str) -> DataFrame:
         "delta_ict_clustered",
         partial(_build_ict_clustered_fixture, spark, sf_dir),
     )
-    version = delta_version_at_timestamp(base, _ICT_V1_MS / 1000)
+    version = delta_version_at_timestamp(spark, base, _ICT_V1_MS / 1000)
     if version != 1:
         raise AssertionError(f"ICT resolution picked {version}, expected 1")
     # sanity: the resolver really read ICT, not the (uniform) mtimes

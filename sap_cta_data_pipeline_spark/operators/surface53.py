@@ -42,12 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from .delta_reader import (
-    _commit,
-    _meta_action,
-    _read_commit,
-    _versions,
-)
+from .delta_reader import _add, _commit, _metadata, _protocol, _remove, log_state
 from .sources import built
 
 _ROW_ID_COL = "_tracked_row_id"
@@ -58,20 +53,6 @@ _RT_CONFIG = {
     "delta.rowTracking.materializedRowIdColumnName": _ROW_ID_COL,
     "delta.rowTracking.materializedRowCommitVersionColumnName": _RCV_COL,
 }
-
-
-def _rt_add(path: str, base_row_id: int, default_rcv: int) -> dict:
-    return {
-        "add": {
-            "path": path,
-            "partitionValues": {},
-            "size": 1024,
-            "modificationTime": 1700000000000,
-            "dataChange": True,
-            "baseRowId": base_row_id,
-            "defaultRowCommitVersion": default_rcv,
-        }
-    }
 
 
 def _build_row_tracking_fixture(
@@ -105,19 +86,14 @@ def _build_row_tracking_fixture(
     hi = pdf[pdf.n_nationkey >= 12].reset_index(drop=True)
     _write_lineage_parquet(lo, os.path.join(base, "rt-lo.parquet"))
     _write_lineage_parquet(hi, os.path.join(base, "rt-hi.parquet"))
+    lo_add = _add(base, "rt-lo.parquet", baseRowId=0, defaultRowCommitVersion=0)
     _commit(
         log_dir,
         0,
         [
             {"commitInfo": {"operation": "WRITE"}},
-            {
-                "protocol": {
-                    "minReaderVersion": 1,
-                    "minWriterVersion": 7,
-                    "writerFeatures": ["rowTracking", "domainMetadata"],
-                }
-            },
-            _meta_action([], configuration=dict(_RT_CONFIG)),
+            _protocol(1, 7, writer_features=["rowTracking", "domainMetadata"]),
+            _metadata(configuration=_RT_CONFIG),
             {
                 "domainMetadata": {
                     "domain": "delta.rowTracking",
@@ -125,8 +101,8 @@ def _build_row_tracking_fixture(
                     "removed": False,
                 }
             },
-            _rt_add("rt-lo.parquet", 0, 0),
-            _rt_add("rt-hi.parquet", 12, 0),
+            lo_add,
+            _add(base, "rt-hi.parquet", baseRowId=12, defaultRowCommitVersion=0),
         ],
     )
     lo2 = lo.copy()
@@ -141,14 +117,8 @@ def _build_row_tracking_fixture(
         1,
         [
             {"commitInfo": {"operation": "UPDATE"}},
-            {
-                "remove": {
-                    "path": "rt-lo.parquet",
-                    "deletionTimestamp": 1700000001000,
-                    "dataChange": True,
-                }
-            },
-            _rt_add("rt-lo2.parquet", 25, 1),
+            _remove(lo_add),
+            _add(base, "rt-lo2.parquet", baseRowId=25, defaultRowCommitVersion=1),
             {
                 "domainMetadata": {
                     "domain": "delta.rowTracking",
@@ -161,49 +131,31 @@ def _build_row_tracking_fixture(
 
 
 def row_tracking_files(
-    base: str, version: int | None = None
+    spark: SparkSession, base: str, version: int | None = None
 ) -> tuple[dict[str, tuple[int, int]], dict]:
-    """Replay the log to (live path -> (baseRowId, defaultRowCommitVersion),
-    table config). Refuses tables that enable row tracking but commit
-    an add WITHOUT baseRowId — silently inventing ids would collide
-    with real ones on the next writer."""
-    log_dir = os.path.join(base, "_delta_log")
-    versions = _versions(log_dir)
-    target = versions[-1] if version is None else version
-    # pass 1 — the enablement gate comes from table config, so resolve
-    # it BEFORE judging adds (a plain table's add legitimately carries
-    # no baseRowId; it must get the "not enabled" error, not the
-    # corrupt-log one)
-    config: dict = {}
-    for v in versions:
-        if v > target:
-            break
-        for a in _read_commit(log_dir, v):
-            if "metaData" in a:
-                config = dict(a["metaData"].get("configuration") or {})
+    """(live path -> (baseRowId, defaultRowCommitVersion), table config)
+    from ``log_state``. Refuses tables that enable row tracking but hold
+    a live add WITHOUT those fields — silently inventing ids would
+    collide with real ones on the next writer. The enablement gate
+    comes from table config and is judged first: a plain table's add
+    legitimately carries no baseRowId and gets the "not enabled" error,
+    not the corrupt-log one."""
+    st = log_state(spark, base, version)
+    config = dict(st.metadata.get("configuration") or {})
     if config.get("delta.enableRowTracking", "false") != "true":
         raise ValueError(
             "row tracking requires delta.enableRowTracking=true; this "
             "table does not enable it"
         )
     live: dict[str, tuple[int, int]] = {}
-    for v in versions:
-        if v > target:
-            break
-        for a in _read_commit(log_dir, v):
-            if "add" in a:
-                ad = a["add"]
-                if ad.get("baseRowId") is None:
-                    raise ValueError(
-                        f"add action for {ad['path']!r} carries no baseRowId "
-                        "on a row-tracking table — refusing to invent row ids"
-                    )
-                live[ad["path"]] = (
-                    ad["baseRowId"],
-                    ad.get("defaultRowCommitVersion", v),
+    for p, ad in st.adds.items():
+        for field in ("baseRowId", "defaultRowCommitVersion"):
+            if ad.get(field) is None:
+                raise ValueError(
+                    f"add action for {ad['path']!r} carries no {field} "
+                    "on a row-tracking table — refusing to invent row ids"
                 )
-            elif "remove" in a:
-                live.pop(a["remove"]["path"], None)
+        live[p] = (ad["baseRowId"], ad["defaultRowCommitVersion"])
     return live, config
 
 
@@ -215,7 +167,7 @@ def read_with_row_tracking(
     fresh-rule). Materialized column names come from table config."""
     import pyarrow.parquet as pq
 
-    live, config = row_tracking_files(base, version)
+    live, config = row_tracking_files(spark, base, version)
     id_col = config["delta.rowTracking.materializedRowIdColumnName"]
     rcv_col = config["delta.rowTracking.materializedRowCommitVersionColumnName"]
     fmap = spark.createDataFrame(

@@ -116,8 +116,8 @@ def delta_cdf_by_timestamp_ict(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_dir = os.path.join(base, "_delta_log")
     t1 = _commit_ict_ms(log_dir, 1) / 1000
     t2 = _commit_ict_ms(log_dir, 2) / 1000
-    v_from = delta_version_at_timestamp(base, t1)
-    v_to = delta_version_at_timestamp(base, t2)
+    v_from = delta_version_at_timestamp(spark, base, t1)
+    v_to = delta_version_at_timestamp(spark, base, t2)
     if (v_from, v_to) != (1, 2):
         raise AssertionError(f"ICT resolution picked [{v_from}, {v_to}]")
     return delta_table_changes(spark, base, v_from, v_to).select(

@@ -41,14 +41,17 @@ from pyspark.sql import types as T
 from ..catalog import load_table
 from ..registry import query
 from .delta_reader import (
+    _add,
     _commit,
-    _meta_action,
-    _tip,
+    _metadata,
+    _project,
+    _stage_single_parquet,
     commit,
     delta_snapshot,
     delta_state,
+    log_state,
 )
-from .lakehouse_interop import _stage_single_parquet, delta_append_commit
+from .lakehouse_interop import delta_append_commit
 from .sources import built
 
 
@@ -85,8 +88,8 @@ def delta_append_merge_schema(
     and unrelated changes still refuse; without the feature EVERY type
     change refuses. The commit is read-dependent on
     the snapshot whose schema it widened (``delta_reader.commit``)."""
-    tip = _tip(base)
-    live, schema_string, part_cols, config, _dvs = delta_state(spark, base, tip)
+    st = log_state(spark, base)
+    _live, schema_string, part_cols, config, _dvs = _project(st)
     if part_cols:
         raise NotImplementedError(
             "mergeSchema append on a partitioned table needs partition "
@@ -143,26 +146,15 @@ def delta_append_merge_schema(
             [widened.get(f.name, f) for f in schema.fields] + new_fields
         )
         actions.append(
-            _meta_action([], schema_json=schema.jsonValue(),
-                         configuration=config)
+            _metadata(**{**st.metadata, "schemaString": json.dumps(schema.jsonValue())})
         )
     # stage with the frame's own columns in evolved-schema order; table
     # columns the frame lacks are simply ABSENT from the file (the
     # reader's missing-column rule serves typed NULLs — no rewrite)
     out = df.select(*[f.name for f in schema.fields if f.name in df.columns])
     _stage_single_parquet(out, os.path.join(base, file_name))
-    actions.append(
-        {
-            "add": {
-                "path": file_name,
-                "partitionValues": {},
-                "size": os.path.getsize(os.path.join(base, file_name)),
-                "modificationTime": 1700000000000,
-                "dataChange": True,
-            }
-        }
-    )
-    commit(base, actions, tip)
+    actions.append(_add(base, file_name))
+    commit(base, actions, st.version)
 
 
 def _build_merge_schema_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -230,8 +222,7 @@ def _build_type_widen_fixture(spark: SparkSession, sf_dir: str) -> str:
             1,
             [
                 {"commitInfo": {"operation": "SET TBLPROPERTIES"}},
-                _meta_action(
-                    [],
+                _metadata(
                     schema_json=json.loads(ss),
                     configuration={"delta.enableTypeWidening": "true"},
                 ),

@@ -295,7 +295,7 @@ def hudi_delete(
         return writes
 
     instant = ht.commit(
-        base, build, action="commit", operation="delete", read_instant=read
+        base, build, action="commit", operation="delete", read=read
     )
     return instant, len(hit_fids)
 

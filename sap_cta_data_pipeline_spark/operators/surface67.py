@@ -186,7 +186,7 @@ def hudi_mor_upsert(
         return writes
 
     return ht.commit(
-        base, build, action="deltacommit", operation="upsert", read_instant=read
+        base, build, action="deltacommit", operation="upsert", read=read
     )
 
 

@@ -72,7 +72,7 @@ def delta_merge_batch_once(
     not-yet-existing table CREATES it from the batch's upsert rows
     (flagged deletes dropped — at bootstrap they can only reference
     keys that never existed, the SQL MERGE no-op rule)."""
-    last = delta_last_txn_version(base, app_id)
+    last = delta_last_txn_version(spark, base, app_id)
     if last is not None and last >= batch_id:
         return False  # replayed batch: already committed
     if not os.path.isdir(os.path.join(base, "_delta_log")):

@@ -335,6 +335,38 @@ def test_hudi_mor_upsert_and_compaction_conflict(
     assert (names[1] == "B") == (writer == "compact")
 
 
+def test_hudi_upsert_aborts_on_instant_pending_at_its_read(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Three writers. P claims instant 3 and writes the keys < 12 group;
+    before P completes, Q completes 4 (the other group) and W reads,
+    with P still pending. P then completes. W's rewrite of the group,
+    planned from a read that never saw P, would bring back the name P
+    replaced."""
+    base = _hudi_nation(spark, sf_dir, tmp_path, "hudi_three", hw.hudi_cow_upsert)
+    w_read: list = []
+
+    def q_then_w_reads():
+        landed = hw.hudi_cow_upsert(
+            spark, base, _renamed(spark, sf_dir, 20, "Q"), "n_nationkey"
+        )
+        w_read.append(ht.snapshot(base))
+        return landed
+
+    landed = _land_hudi_rival(monkeypatch, q_then_w_reads)
+    p = hw.hudi_cow_upsert(spark, base, _renamed(spark, sf_dir, 1, "P"), "n_nationkey")
+    monkeypatch.undo()
+    assert (p, landed) == ("00000000000003", ["00000000000004"])
+    monkeypatch.setattr(ht, "snapshot", lambda _base: w_read[0])
+    with pytest.raises(dr.CommitConflict, match="concurrent commit"):
+        hw.hudi_cow_upsert(spark, base, _renamed(spark, sf_dir, 2, "W"), "n_nationkey")
+    monkeypatch.undo()
+    names = _hudi_names(spark, base)
+    assert len(names) == 25 and names[1] == "P" and names[20] == "Q"
+    assert names[2] != "W"
+    assert _no_debris(base, "00000000000005")
+
+
 def test_hudi_concurrent_read_modify_writes_lose_no_update(tmp_path):
     """Eight threads each add one to a counter file group five times,
     each add a read-dependent commit retried on ``CommitConflict``: every
@@ -365,7 +397,7 @@ def test_hudi_concurrent_read_modify_writes_lose_no_update(tmp_path):
             try:
                 return ht.commit(
                     base, build, action="commit", operation="upsert",
-                    read_instant=read_instant,
+                    read=read_instant,
                 )
             except dr.CommitConflict:
                 continue

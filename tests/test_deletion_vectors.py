@@ -210,7 +210,7 @@ def test_dv_survives_checkpoint(spark, dvbase, tmp_path):
     """delta_checkpoint must persist DV descriptors (and the v3 protocol
     row): checkpoint the DV table, DELETE every pre-checkpoint commit,
     and re-read through the _last_checkpoint fast path."""
-    from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
+    from sap_cta_data_pipeline_spark.operators.delta_reader import (
         delta_checkpoint,
     )
 

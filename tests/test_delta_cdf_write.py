@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from sap_cta_data_pipeline_spark.operators.delta_cdf_write import (
     _cdf_table,
+    _create_cdf_table,
     delta_cdf_replicate,
     delta_delete_where_cdf,
     delta_update_where_cdf,
@@ -71,33 +72,11 @@ def test_replica_equals_snapshot(spark, sf_dir):
 
 
 def test_writers_on_fresh_table(spark, tmp_path, sf_dir):
-    from sap_cta_data_pipeline_spark.operators.delta_reader import (
-        _add,
-        _commit,
-        _meta_action,
-    )
-    from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
-        _stage_single_parquet,
-    )
-
     base = str(tmp_path / "t")
     df = spark.createDataFrame(
         [(1, 10.0), (2, 20.0), (3, 30.0)], "k long, v double"
     )
-    _stage_single_parquet(df, os.path.join(base, "seed.parquet"))
-    _commit(
-        os.path.join(base, "_delta_log"),
-        0,
-        [
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 4}},
-            _meta_action(
-                [],
-                schema_json=df.schema.jsonValue(),
-                configuration={"delta.enableChangeDataFeed": "true"},
-            ),
-            _add("seed.parquet"),
-        ],
-    )
+    _create_cdf_table(base, df)
     v = delta_update_where_cdf(spark, base, "k = 2", {"v": "v * 2"})
     assert v == 1
     v = delta_delete_where_cdf(spark, base, "k = 1")
@@ -110,29 +89,7 @@ def test_writers_on_fresh_table(spark, tmp_path, sf_dir):
 
 
 def _fresh_cdf(spark, base, df):
-    from sap_cta_data_pipeline_spark.operators.delta_reader import (
-        _add,
-        _commit,
-        _meta_action,
-    )
-    from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
-        _stage_single_parquet,
-    )
-
-    _stage_single_parquet(df, os.path.join(base, "seed.parquet"))
-    _commit(
-        os.path.join(base, "_delta_log"),
-        0,
-        [
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 4}},
-            _meta_action(
-                [],
-                schema_json=df.schema.jsonValue(),
-                configuration={"delta.enableChangeDataFeed": "true"},
-            ),
-            _add("seed.parquet"),
-        ],
-    )
+    _create_cdf_table(base, df)
 
 
 def test_delete_keeps_null_predicate_rows(spark, tmp_path):

@@ -222,3 +222,29 @@ def test_hudi_timeline_lives_only_in_hudi_timeline():
         if rx.search(py.read_text())
     )
     assert not found, f"Hudi timeline code outside hudi_timeline: {found}"
+
+
+def test_delta_log_lives_only_in_delta_reader():
+    """Every Delta writer, reader, table service and fixture builds its
+    actions, replays the log and checkpoints through ``delta_reader``
+    (``_add``, ``_remove``, ``_protocol``, ``_metadata``, ``_cdc``,
+    ``log_state``, ``delta_checkpoint``). No other package module holds
+    an action body literal or a fixed ``size``, opens
+    ``_last_checkpoint``, or names a checkpoint file it writes."""
+    pkg = REPO / "sap_cta_data_pipeline_spark"
+    owner = pkg / "operators" / "delta_reader.py"
+    rules = {
+        f"{kind} action": re.compile(rf"[\"']{kind}[\"']\s*:\s*\{{")
+        for kind in ("add", "remove", "protocol", "metaData")
+    }
+    rules["fixed size"] = re.compile(r"[\"']size[\"']\s*:\s*1024\b")
+    rules["checkpoint pointer"] = re.compile(r"[\"']_last_checkpoint[\"']")
+    rules["checkpoint file"] = re.compile(r"\bf[\"'][^\"'\n]*\.checkpoint\.")
+    found = sorted(
+        f"{py.relative_to(pkg)}: {what}"
+        for py in pkg.rglob("*.py")
+        if py != owner
+        for what, rx in rules.items()
+        if rx.search(py.read_text())
+    )
+    assert not found, f"Delta log code outside delta_reader: {found}"

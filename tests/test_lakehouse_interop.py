@@ -108,7 +108,7 @@ def test_checkpoint_only_table_readable(spark, sink, tmp_path):
     for the target version)."""
     import shutil
 
-    from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
+    from sap_cta_data_pipeline_spark.operators.delta_reader import (
         delta_checkpoint,
     )
     from sap_cta_data_pipeline_spark.operators.delta_reader import delta_snapshot
@@ -389,9 +389,9 @@ def test_delete_dv_vacuum_interaction(spark, sf_dir, tmp_path):
         _COMMIT_RE as _CRE,
         delta_snapshot,
     )
+    from sap_cta_data_pipeline_spark.operators.delta_reader import delta_checkpoint
     from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
         _build_sink_fixture,
-        delta_checkpoint,
         delta_delete_where,
         delta_vacuum,
     )
@@ -575,9 +575,9 @@ def test_checkpoint_auto_layout_selection(spark, sf_dir, tmp_path):
     import json as _json
     import shutil as _shutil
 
+    from sap_cta_data_pipeline_spark.operators.delta_reader import delta_checkpoint
     from sap_cta_data_pipeline_spark.operators.lakehouse_interop import (
         _build_sink_fixture,
-        delta_checkpoint,
     )
 
     base = _build_sink_fixture(spark, sf_dir)

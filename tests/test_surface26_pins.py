@@ -21,15 +21,15 @@ def test_txn_skip_and_cross_app_independence(spark, tmp_path):
     assert delta_txn_write(spark, base, df, "b0.parquet", "appA", 0, first=True)
     # same app, same version -> skip; LOWER version -> also skip
     assert not delta_txn_write(spark, base, df, "dup.parquet", "appA", 0)
-    assert delta_last_txn_version(base, "appA") == 0
+    assert delta_last_txn_version(spark, base, "appA") == 0
     # a DIFFERENT app with version 0 is independent -> writes
     assert delta_txn_write(spark, base, df, "b0b.parquet", "appB", 0)
     # appA progresses at version 1
     assert delta_txn_write(spark, base, df, "b1.parquet", "appA", 1)
     assert not delta_txn_write(spark, base, df, "b1r.parquet", "appA", 1)
-    assert delta_last_txn_version(base, "appA") == 1
-    assert delta_last_txn_version(base, "appB") == 0
-    assert delta_last_txn_version(base, "appC") is None
+    assert delta_last_txn_version(spark, base, "appA") == 1
+    assert delta_last_txn_version(spark, base, "appB") == 0
+    assert delta_last_txn_version(spark, base, "appC") is None
     # skipped writes never staged their files
     assert not os.path.exists(os.path.join(base, "dup.parquet"))
     from sap_cta_data_pipeline_spark.operators.delta_reader import (

@@ -11,7 +11,7 @@ import pytest
 
 from sap_cta_data_pipeline_spark.operators.delta_reader import (
     _commit,
-    _meta_action,
+    _metadata,
     delta_version_at_timestamp,
 )
 from sap_cta_data_pipeline_spark.operators.surface50 import (
@@ -38,10 +38,10 @@ def test_ict_resolution_is_mtime_blind(spark, tmp_path):
     log_dir = os.path.join(base, "_delta_log")
     mts = {os.path.getmtime(os.path.join(log_dir, f"{v:020d}.json")) for v in range(3)}
     assert len(mts) == 1, "precondition: uniform mtimes"
-    assert delta_version_at_timestamp(base, _ICT_V1_MS / 1000) == 1
-    assert delta_version_at_timestamp(base, (_ICT_V1_MS + 50_000) / 1000) == 1
-    assert delta_version_at_timestamp(base, _ICT_V2_MS / 1000) == 2
-    assert delta_version_at_timestamp(base, _ICT_V2_MS / 1000 + 9e9) == 2
+    assert delta_version_at_timestamp(spark, base, _ICT_V1_MS / 1000) == 1
+    assert delta_version_at_timestamp(spark, base, (_ICT_V1_MS + 50_000) / 1000) == 1
+    assert delta_version_at_timestamp(spark, base, _ICT_V2_MS / 1000) == 2
+    assert delta_version_at_timestamp(spark, base, _ICT_V2_MS / 1000 + 9e9) == 2
 
 
 def test_pre_enablement_falls_back_to_mtime_rule(spark, tmp_path):
@@ -52,14 +52,14 @@ def test_pre_enablement_falls_back_to_mtime_rule(spark, tmp_path):
     log_dir = os.path.join(base, "_delta_log")
     t0 = (_ICT_V1_MS - 100_000) / 1000
     os.utime(os.path.join(log_dir, f"{0:020d}.json"), (t0, t0))
-    assert delta_version_at_timestamp(base, t0 + 50) == 0
+    assert delta_version_at_timestamp(spark, base, t0 + 50) == 0
     with pytest.raises(ValueError, match="earliest commit"):
-        delta_version_at_timestamp(base, t0 - 50)
+        delta_version_at_timestamp(spark, base, t0 - 50)
 
 
 def test_clustering_domain_tombstone_clears(spark, tmp_path):
     base = _fixture(spark, tmp_path)
-    assert delta_clustering_domain(base) == {
+    assert delta_clustering_domain(spark, base) == {
         "clusteringColumns": [["n_regionkey"], ["n_nationkey"]]
     }
     _commit(
@@ -81,7 +81,7 @@ def test_clustering_domain_tombstone_clears(spark, tmp_path):
             },
         ],
     )
-    assert delta_clustering_domain(base) is None
+    assert delta_clustering_domain(spark, base) is None
 
 
 def test_enabled_table_missing_ict_refuses(spark, tmp_path):
@@ -98,13 +98,11 @@ def test_enabled_table_missing_ict_refuses(spark, tmp_path):
             {"commitInfo": {"operation": "WRITE"}},  # no inCommitTimestamp
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 7,
                           "writerFeatures": ["inCommitTimestamp"]}},
-            _meta_action(
-                [], configuration={"delta.enableInCommitTimestamps": "true"}
-            ),
+            _metadata(configuration={"delta.enableInCommitTimestamps": "true"}),
         ],
     )
     with pytest.raises(ValueError, match="inCommitTimestamp"):
-        delta_version_at_timestamp(base, 1e12)
+        delta_version_at_timestamp(spark, base, 1e12)
 
 
 def test_history_ict_sources(spark, tmp_path):
@@ -128,16 +126,16 @@ def test_legacy_tables_unchanged(spark, tmp_path):
     log_dir = os.path.join(base, "_delta_log")
     _commit(log_dir, 0, [
         {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        _meta_action([]),
+        _metadata(),
     ])
     _commit(log_dir, 1, [{"commitInfo": {"operation": "WRITE"}}])
     t0 = 1700000000.0
     os.utime(os.path.join(log_dir, f"{0:020d}.json"), (t0, t0))
     os.utime(os.path.join(log_dir, f"{1:020d}.json"), (t0 + 10, t0 + 10))
-    assert delta_version_at_timestamp(base, t0 + 5) == 0
-    assert delta_version_at_timestamp(base, t0 + 10) == 1
+    assert delta_version_at_timestamp(spark, base, t0 + 5) == 0
+    assert delta_version_at_timestamp(spark, base, t0 + 10) == 1
     with pytest.raises(ValueError, match="earliest commit"):
-        delta_version_at_timestamp(base, t0 - 5)
+        delta_version_at_timestamp(spark, base, t0 - 5)
 
 
 def test_post_enablement_commit_missing_ict_refuses(spark, tmp_path):
@@ -155,4 +153,4 @@ def test_post_enablement_commit_missing_ict_refuses(spark, tmp_path):
     # a target far past every ICT would, under the old filter, land on
     # v2 — the wrong earlier version; the fixed path refuses loudly
     with pytest.raises(ValueError, match="corrupt ICT history"):
-        delta_version_at_timestamp(base, (_ICT_V2_MS + 9_000_000) / 1000)
+        delta_version_at_timestamp(spark, base, (_ICT_V2_MS + 9_000_000) / 1000)

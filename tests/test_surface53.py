@@ -11,12 +11,11 @@ import pytest
 
 from sap_cta_data_pipeline_spark.operators.delta_reader import (
     _commit,
-    _meta_action,
+    _metadata,
 )
 from sap_cta_data_pipeline_spark.operators.surface53 import (
     _RT_CONFIG,
     _build_row_tracking_fixture,
-    _rt_add,
     read_with_row_tracking,
     row_tracking_files,
 )
@@ -72,7 +71,7 @@ def test_missing_base_row_id_refuses(spark, tmp_path):
         [
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 7,
                           "writerFeatures": ["rowTracking"]}},
-            _meta_action([], configuration=dict(_RT_CONFIG)),
+            _metadata(configuration=_RT_CONFIG),
             {
                 "add": {
                     "path": "x.parquet",
@@ -85,7 +84,7 @@ def test_missing_base_row_id_refuses(spark, tmp_path):
         ],
     )
     with pytest.raises(ValueError, match="baseRowId"):
-        row_tracking_files(base)
+        row_tracking_files(spark, base)
 
 
 def test_not_enabled_refuses(spark, tmp_path):
@@ -96,12 +95,22 @@ def test_not_enabled_refuses(spark, tmp_path):
         0,
         [
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            _meta_action([]),
-            _rt_add("y.parquet", 0, 0),
+            _metadata(),
+            {
+                "add": {
+                    "path": "y.parquet",
+                    "partitionValues": {},
+                    "size": 1,
+                    "modificationTime": 0,
+                    "dataChange": True,
+                    "baseRowId": 0,
+                    "defaultRowCommitVersion": 0,
+                }
+            },
         ],
     )
     with pytest.raises(ValueError, match="enableRowTracking"):
-        row_tracking_files(base)
+        row_tracking_files(spark, base)
 
 
 def test_plain_table_plain_add_gets_not_enabled_error(spark, tmp_path):
@@ -115,7 +124,7 @@ def test_plain_table_plain_add_gets_not_enabled_error(spark, tmp_path):
         0,
         [
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            _meta_action([]),
+            _metadata(),
             {
                 "add": {
                     "path": "z.parquet",
@@ -128,4 +137,4 @@ def test_plain_table_plain_add_gets_not_enabled_error(spark, tmp_path):
         ],
     )
     with pytest.raises(ValueError, match="enableRowTracking"):
-        row_tracking_files(base)
+        row_tracking_files(spark, base)

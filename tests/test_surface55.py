@@ -41,17 +41,17 @@ def test_uniform_mtimes_and_monotonic_ict(spark, tmp_path):
 
 def test_between_commit_timestamps_resolve_down(spark, tmp_path):
     base = _fixture(spark, tmp_path)
-    assert delta_version_at_timestamp(base, (_T0_MS + _STEP_MS // 2) / 1000) == 0
-    assert delta_version_at_timestamp(base, (_T0_MS + _STEP_MS) / 1000) == 1
+    assert delta_version_at_timestamp(spark, base, (_T0_MS + _STEP_MS // 2) / 1000) == 0
+    assert delta_version_at_timestamp(spark, base, (_T0_MS + _STEP_MS) / 1000) == 1
     assert (
-        delta_version_at_timestamp(base, (_T0_MS + 3 * _STEP_MS) / 1000) == 2
+        delta_version_at_timestamp(spark, base, (_T0_MS + 3 * _STEP_MS) / 1000) == 2
     )
 
 
 def test_pre_history_refuses(spark, tmp_path):
     base = _fixture(spark, tmp_path)
     with pytest.raises(ValueError, match="before the first ICT|before the ICT"):
-        delta_version_at_timestamp(base, (_T0_MS - 1000) / 1000)
+        delta_version_at_timestamp(spark, base, (_T0_MS - 1000) / 1000)
 
 
 def test_cdf_window_rows(spark, tmp_path):

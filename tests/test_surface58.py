@@ -69,13 +69,14 @@ def test_merge_column_mapping_refuses(spark, tmp_path):
 
     base = _fresh_table(spark, tmp_path)
 
-    orig = dml.delta_state
+    orig = dml.log_state
 
     def fake_state(spark_, base_, version=None):
-        live, ss, pc, config, dvs = orig(spark_, base_, version)
-        return live, ss, pc, {"delta.columnMapping.mode": "name"}, dvs
+        st = orig(spark_, base_, version)
+        config = {"delta.columnMapping.mode": "name"}
+        return st._replace(metadata={**st.metadata, "configuration": config})
 
-    dml.delta_state = fake_state
+    dml.log_state = fake_state
     try:
         with pytest.raises(ValueError, match="column-mapping"):
             delta_merge_into(
@@ -84,7 +85,7 @@ def test_merge_column_mapping_refuses(spark, tmp_path):
                 "n_nationkey", ["n_name"], schema_evolution=True,
             )
     finally:
-        dml.delta_state = orig
+        dml.log_state = orig
 
 
 def test_append_evolution_is_one_commit_no_rewrite(spark, tmp_path):
@@ -157,17 +158,17 @@ def test_append_partitioned_refuses(spark, tmp_path):
     import sap_cta_data_pipeline_spark.operators.surface58 as m
 
     base = _fresh_table(spark, tmp_path)
-    orig = m.delta_state
+    orig = m.log_state
 
     def fake_state(spark_, base_, version=None):
-        live, ss, _pc, config, dvs = orig(spark_, base_, version)
-        return live, ss, ["n_regionkey"], config, dvs
+        st = orig(spark_, base_, version)
+        return st._replace(metadata={**st.metadata, "partitionColumns": ["n_regionkey"]})
 
-    m.delta_state = fake_state
+    m.log_state = fake_state
     try:
         with pytest.raises(NotImplementedError, match="partitioned"):
             delta_append_merge_schema(
                 spark, base, _nation3(spark), "p.parquet"
             )
     finally:
-        m.delta_state = orig
+        m.log_state = orig

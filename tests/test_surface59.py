@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from sap_cta_data_pipeline_spark.operators.delta_reader import (
     _commit,
-    _meta_action,
+    _metadata,
     _read_commit,
     delta_snapshot,
     delta_state,
@@ -52,8 +52,7 @@ def _widening_table(spark, tmp_path):
         1,
         [
             {"commitInfo": {"operation": "SET TBLPROPERTIES"}},
-            _meta_action(
-                [],
+            _metadata(
                 schema_json=json.loads(ss),
                 configuration={"delta.enableTypeWidening": "true"},
             ),
@@ -123,8 +122,7 @@ def test_widen_float_to_double(spark, tmp_path):
         1,
         [
             {"commitInfo": {"operation": "SET TBLPROPERTIES"}},
-            _meta_action(
-                [],
+            _metadata(
                 schema_json=json.loads(ss),
                 configuration={"delta.enableTypeWidening": "true"},
             ),

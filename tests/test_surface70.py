@@ -85,7 +85,7 @@ def test_merge_sink_nonidempotent_replay_skipped(spark, tmp_path):
         )
         is False
     )
-    assert delta_last_txn_version(t, "app") == 2
+    assert delta_last_txn_version(spark, t, "app") == 2
 
 
 def test_merge_sink_txn_rides_the_merge_commit(spark, tmp_path):
@@ -173,7 +173,7 @@ def test_replicate_restart_drains_only_post_stop_windows(spark):
     stream_replicate_iceberg_to_delta(spark, SF)
     tgt = _scratch(SF, "delta_repl_tgt")
     assert len(_versions(tgt)) == 2
-    assert delta_last_txn_version(tgt, "repl-sink") == 1
+    assert delta_last_txn_version(spark, tgt, "repl-sink") == 1
     got = {
         r["n_nationkey"]: r["n_regionkey"]
         for r in delta_snapshot(spark, tgt).collect()
